@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, ShortType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver's parquet test tables (`TESTDATA.md`).
   *
@@ -10,10 +16,36 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * same code runs at any scale factor. Reads are plain parquet scans —
   * Catalyst pushes filters/projections into the scan (verify via
   * `PushedFilters`/`ReadSchema` in `.explain("formatted")`).
+  * The types reads dispatch on (ts, ids, embedding elements) come from the
+  * file's own footer, read on the driver on each call ([[parquetSchema]]).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, without the Spark job its
+    * inference runs even for one file: the same file choice as
+    * `ParquetUtils.inferSchema` (`_common_metadata`, else `_metadata`, else
+    * the first data file in path order), its footer read on the driver and
+    * converted by `readSchemaFromFooter` under the session's SQLConf. A
+    * missing or empty path falls back to Spark's read and its error. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !f.getPath.getName.matches("_(common_)?metadata")))
+      .map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+      .getOrElse(spark.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

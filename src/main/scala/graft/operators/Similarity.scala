@@ -1057,15 +1057,16 @@ object Similarity {
   /** The benchmark-suite-sized eval slice (vec_id < evalMaxVecId) with its
     * norm, checkpointed once (r21): the recall/sweep faces consume it as
     * BOTH the brute-force truth side and the probe-ranking input — two
-    * separate eval-filtered corpus scans before.
+    * separate eval-filtered corpus scans before. `face` keys the checkpoint,
+    * so building one face never frees the other's live slice.
     */
   private def contaminationEvalSlice(s: SparkSession, d: String,
-      evalMaxVecId: Long): DataFrame = {
+      evalMaxVecId: Long, face: String): DataFrame = {
     val (ev, ids) = IterCheckpoint.checkpoint(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         .withColumn("nrm", norm(col("embedding")))
         .filter(col("vec_id") < evalMaxVecId))
-    IterCheckpoint.supersede(s, "contamEvalSlice", ids)
+    IterCheckpoint.supersede(s, s"contamEvalSlice.$face", ids)
     ev
   }
 
@@ -1084,9 +1085,9 @@ object Similarity {
     * SemanticContaminationSweepSpec.
     */
   private def contaminationPairsRanked(s: SparkSession, d: String,
-      evalMaxVecId: Long, maxProbe: Int): DataFrame = {
+      evalMaxVecId: Long, maxProbe: Int, face: String): DataFrame = {
     val trained = trainedCentroids(s, d, IvfCentroids, iters = 3)
-    val evals = contaminationEvalSlice(s, d, evalMaxVecId)
+    val evals = contaminationEvalSlice(s, d, evalMaxVecId, face)
     val probes = contaminationEvalProbesRankedOver(evals, trained)
       .filter(col("rn") <= maxProbe)
       .select(col("centroid_id").as("p_cell"), col("eval_id").as("p_eval"),
@@ -1152,7 +1153,7 @@ object Similarity {
     // window over the (nprobe × band)-sized rollup; rows keep the r20
     // visibility rule (a band appears iff it has ≥1 truth pair, an nprobe
     // iff it scored ≥1 pair — the old inner cost join).
-    val pairs = contaminationPairsRanked(s, d, evalMaxVecId, nprobes.max)
+    val pairs = contaminationPairsRanked(s, d, evalMaxVecId, nprobes.max, "sweep")
     val spine = broadcast(nprobes.toDF("nprobe"))
     pairs.crossJoin(spine)
       .withColumn("band", contaminationBand(col("cosine")))
@@ -1199,7 +1200,7 @@ object Similarity {
     // A pair is found exactly when the screen at `nprobe` scores it (rn
     // non-NULL under the maxProbe = nprobe cut) — count(rn) is the old
     // count(hit) verbatim.
-    contaminationPairsRanked(s, d, evalMaxVecId, nprobe)
+    contaminationPairsRanked(s, d, evalMaxVecId, nprobe, "recall")
       .filter(col("cosine") >= threshold)
       .withColumn("band", contaminationBand(col("cosine")))
       .groupBy(col("band"))

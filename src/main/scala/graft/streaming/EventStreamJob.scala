@@ -41,10 +41,11 @@ object EventStreamJob extends Serializable {
     * `ts` is not ours to pin: landings are staged from driver-owned testdata
     * whose encoding has changed between rounds (INT64 TIMESTAMP(NANOS) →
     * `timestamp[us]`; see [[graft.Tables.events]]). So peek the ACTUAL type
-    * with a one-footer batch read, declare the stream schema around it, and
-    * normalize to a canonical TIMESTAMP `ts` — the same three-way dispatch as
-    * the batch reader, in lockstep by construction. The peek costs one
-    * parquet footer; the stream itself never re-reads it.
+    * from one footer ([[graft.Tables.parquetSchema]], read on the driver, no
+    * Spark job), declare the stream schema around it, and normalize to a
+    * canonical TIMESTAMP `ts` — the same three-way dispatch as the batch
+    * reader, in lockstep by construction. The peek costs one parquet footer;
+    * the stream itself never re-reads it.
     *
     * `maxFilesPerTrigger = Some(1)` forces one landed file per micro-batch
     * (files are taken oldest-mtime-first), which is how the harness drives
@@ -53,7 +54,7 @@ object EventStreamJob extends Serializable {
     */
   def readEventStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
+    val tsType = graft.Tables.parquetSchema(spark, dir)("ts").dataType
     val reader = spark.readStream.schema(eventsSchema(tsType))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val df = reader.parquet(dir)

@@ -10,6 +10,7 @@ import graft.Tables
   * subtrees (one frame feeding two consumers) only show up here.
   *
   * Usage: runMain graft.tools.PlanAudit <sfDir> [nameFilter] [--executed]
+  * (the filter and the flag in either order)
   * Output (stdout, one line per face):
   *   <name>  exch=<n> gen=<n> scans{table=count,...}  dup=<tables scanned >1>
   *
@@ -21,10 +22,12 @@ import graft.Tables
   * surfaces construction-time jobs (checkpoint materializations, gates).
   */
 object PlanAudit {
+  private[tools] def nameFilter(args: Array[String]): Option[String] =
+    args.drop(1).find(_ != "--executed")
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val executed = args.contains("--executed")
-    val filt = args.lift(1).filterNot(_ == "--executed")
+    val filt = nameFilter(args)
     val s = Tables.sessionBuilder("local[32]", "32").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

@@ -120,4 +120,12 @@ class SemanticContaminationSweepSpec extends SparkSpecBase {
     assert(fused == direct,
       s"fused recall diverged from the direct composition:\n$fused\nvs\n$direct")
   }
+
+  test("building the sweep face leaves the recall face's eval slice live") {
+    // both faces checkpoint an eval slice; one shared supersede key let the
+    // second build free the first face's blocks before it ran
+    val recall = Similarity.semanticContaminationRecall(spark, Sf)
+    Similarity.semanticContaminationSweep(spark, Sf)
+    assert(recall.collect().nonEmpty)
+  }
 }

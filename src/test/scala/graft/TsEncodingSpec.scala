@@ -89,6 +89,29 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(Tables.table(spark, dirs("ltz"), "events").schema("ts").dataType == TimestampType)
   }
 
+  test("Tables.table reads the schema Spark infers from every encoding fixture") {
+    val ids = tempDir("graft_footer_ids")
+    Seq((1, 7, "a b c")).toDF("doc_id", "n_chars", "text")
+      .coalesce(1).write.parquet(s"$ids/documents.parquet")
+    Seq((1, Array(1f, 2f))).toDF("vec_id", "embedding")
+      .coalesce(1).write.parquet(s"$ids/embeddings.parquet")
+    val dbl = tempDir("graft_footer_emb_double")
+    Seq((1L, Array(1.0, 2.0))).toDF("vec_id", "embedding")
+      .coalesce(1).write.parquet(s"$dbl/embeddings.parquet")
+    val dated = Seq(
+      "orders" -> Seq((1L, 1700000000123456789L)).toDF("o_orderkey", "o_orderdate"),
+      "lineitem" -> Seq((1L, 1700000000123456789L)).toDF("l_orderkey", "l_shipdate"))
+      .flatMap { case (t, df) =>
+        encodedDirs(t, df.columns(1), df).values.map(_ -> t) }
+    val fixtures = dirs.values.map(_ -> "events") ++ dated ++ Seq(
+      ids.toString -> "documents", ids.toString -> "embeddings",
+      dbl.toString -> "embeddings")
+    fixtures.foreach { case (d, t) =>
+      assert(Tables.table(spark, d, t).schema ==
+        spark.read.parquet(s"$d/$t.parquet").schema, s"$d/$t")
+    }
+  }
+
   test("Tables.events returns identical TIMESTAMP_NTZ values from every encoding") {
     val results = dirs.map { case (k, d) =>
       val df = Tables.events(spark, d)

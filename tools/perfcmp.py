@@ -22,18 +22,22 @@ prev = {k: v["now_sec"] for k, v in perf["per_query"].items()
         if v.get("now_sec") is not None}
 
 common = sorted(set(now) & set(prev))
-rows = []
-for q in common:
-    n = min(now[q], steady.get(q, now[q]))
-    p = prev[q]
-    rows.append((q, p, n, n / p if p > 0 else float("nan")))
+if not common:
+    sys.exit(f"no query is in both {bench_path} and {perf_path}")
+# a zero baseline time has no ratio; such rows are left out
+rows = [(q, prev[q], min(now[q], steady.get(q, now[q]))) for q in common
+        if prev[q] > 0]
+if not rows:
+    sys.exit(f"every common query has a zero baseline time in {perf_path}")
+rows = [(q, p, n, n / p) for q, p, n in rows]
 
-ratios = [r[3] for r in rows if r[3] > 0]
-ratios_sorted = sorted(ratios)
+ratios_sorted = sorted(r[3] for r in rows)
 median = ratios_sorted[len(ratios_sorted) // 2]
-geomean = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+ratios = [r for r in ratios_sorted if r > 0]
+geomean = (math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+           if ratios else float("nan"))
 
-print(f"common queries: {len(common)}")
+print(f"common queries: {len(common)}, compared: {len(rows)}")
 print(f"median now/prev ratio: {median:.3f}  geomean: {geomean:.3f}")
 print(f"total prev: {sum(r[1] for r in rows):.1f}s  total now(best): "
       f"{sum(r[2] for r in rows):.1f}s")
