@@ -460,10 +460,10 @@ object SparkEntry {
       val landing = stagedLanding("enrich_mb", d) { dir =>
         stageEventSlices(s, d, dir, StreamSlices)
       }
-      val (cohort, cohortIds) = graft.operators.IterCheckpoint.checkpoint(
-        Tables.events(s, d).groupBy(col("user_id"))
-          .agg(date_trunc("DAY", min(col("ts"))).as("cohort_day")))
-      graft.operators.IterCheckpoint.supersede(s, "streamEnrichCohort", cohortIds)
+      val cohort = Tables.events(s, d).groupBy(col("user_id"))
+        .agg(date_trunc("DAY", min(col("ts"))).as("cohort_day"))
+        .localCheckpoint()
+      graft.operators.IterCheckpoint.supersede(s, "streamEnrichCohort", cohort)
       settledStream(s,
         EventStreamJob.readEventStream(s, landing, maxFilesPerTrigger = Some(1))
           .repartition(col("user_id"))
@@ -865,9 +865,8 @@ object SparkEntry {
       // whole subtree — an embeddings eval scan + posexplode + rank window
       // — inside EVERY micro-batch's screen action. One checkpoint of the
       // evals×nprobe-row table pays it once per face invocation.
-      val (probes, probeIds) = graft.operators.IterCheckpoint.checkpoint(
-        Similarity.contaminationEvalProbes(s, d))
-      graft.operators.IterCheckpoint.supersede(s, "streamContamProbes", probeIds)
+      val probes = Similarity.contaminationEvalProbes(s, d).localCheckpoint()
+      graft.operators.IterCheckpoint.supersede(s, "streamContamProbes", probes)
       val root = stagedLanding("semcontam_mb", d) { dir =>
         java.nio.file.Files.createDirectory(dir.resolve("landing"))
         stageVecSlices(
@@ -1576,9 +1575,8 @@ object SparkEntry {
   private def scd2AsOf(s: SparkSession, d: String): DataFrame = {
     // r20: materialized once — the merged dimension fed both stateAt
     // branches, so the whole SCD2 merge ran twice per face
-    val (dim, dimIds) = graft.operators.IterCheckpoint.checkpoint(
-      scd2CustomersMerged(s, d))
-    graft.operators.IterCheckpoint.supersede(s, "scd2AsOf", dimIds)
+    val dim = scd2CustomersMerged(s, d).localCheckpoint()
+    graft.operators.IterCheckpoint.supersede(s, "scd2AsOf", dim)
     def stateAt(t: String): DataFrame = {
       val ts = lit(t).cast("timestamp_ntz")
       dim.filter(col("valid_from") <= ts &&

@@ -383,10 +383,11 @@ object Analytics {
     // the DAU aggregate, the day spine and the WAU range join, so the
     // events scan + distinct shuffle ran three times. The checkpoint IS
     // the canonical daily-active table a deployment stores.
-    val (ud, udIds) = IterCheckpoint.checkpoint(Tables.events(s, d)
+    val ud = Tables.events(s, d)
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
-      .distinct())
-    IterCheckpoint.supersede(s, "activeUsers", udIds)
+      .distinct()
+      .localCheckpoint()
+    IterCheckpoint.supersede(s, "activeUsers", ud)
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("n_dau"))
     val spine = ud.select(col("day")).distinct()
     val wau = broadcast(spine.select(col("day").as("d0")))
@@ -946,9 +947,8 @@ object Analytics {
     // so the full-fact scan + per-price aggregation ran twice. The
     // checkpoint is distinct-price-sized (one (double, double, long) row
     // per price level), the "decide with small rows" table.
-    val (perPrice, ppIds) =
-      IterCheckpoint.checkpoint(skylinePerPrice(s, d, cs))
-    IterCheckpoint.supersede(s, "skyline", ppIds)
+    val perPrice = skylinePerPrice(s, d, cs).localCheckpoint()
+    IterCheckpoint.supersede(s, "skyline", perPrice)
     val wIn = Window.partitionBy(col("_bkt")).orderBy(col("price"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = perPrice.withColumn("_runmax", max(col("pq")).over(wIn))

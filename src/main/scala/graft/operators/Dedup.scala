@@ -19,27 +19,19 @@ import org.apache.spark.sql.functions._
   * (higher-order array expressions, no shuffle); the LSH self-join shuffles on
   * (band, bandKey) — tiny keys, heavily reduced data — instead of the O(n²)
   * all-pairs join a naive design would need.
+  *
+  * Checkpoint lifetime: a pair pipeline `localCheckpoint`s the inputs its
+  * lazy result reads and registers those checkpointed frames under its own
+  * key with [[IterCheckpoint.supersede]]. A NEW invocation of the same
+  * pipeline on the same session frees the previous one's blocks, so a
+  * long-lived library caller pins at most one generation per pipeline
+  * instead of one per call. Calling a pipeline again invalidates the
+  * PREVIOUS call's returned frame (its checkpointed inputs are gone);
+  * callers that need overlapping lifetimes should go through
+  * Bench/Verify-style explicit sweeps of the session's persistent RDDs.
+  * `DedupLeakSpec` asserts the flat double-invocation count.
   */
 object Dedup {
-
-  /** Checkpoint ids pinned by the LAST invocation of each pair pipeline, per
-    * (session, pipeline): the returned frames are lazy, so their
-    * materialized inputs must stay alive until the caller's terminal action
-    * — no function-local point can free them. Instead a NEW invocation of
-    * the same pipeline supersedes the previous one's blocks (frees them by
-    * RDD id — `Dataset.unpersist` is a no-op on checkpoints, see
-    * [[IterCheckpoint]]), so a long-lived library caller running these
-    * repeatedly pins at most one generation of blocks per pipeline instead
-    * of accumulating one per call. Contract: calling a pipeline again
-    * invalidates the PREVIOUS call's returned frame (its checkpointed inputs
-    * are gone); callers that need overlapping lifetimes should go through
-    * Bench/Verify-style explicit sweeps of `getPersistentRDDs`.
-    * `DedupLeakSpec` asserts the flat double-invocation count.
-    */
-  private val liveCkpts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Set[Int]]
-  private def supersede(s: SparkSession, pipeline: String, ids: Set[Int]): Unit =
-    liveCkpts.put((s, pipeline), ids).foreach(old => IterCheckpoint.free(s, old))
 
   /** 60-bit hash from md5 — identical in DuckDB as
     * `CAST(concat('0x', substring(md5(s || '#' || k), 1, 15)) AS BIGINT)`.
@@ -134,8 +126,8 @@ object Dedup {
     * pairs are deduped before sets are joined back, so each distinct set
     * crosses the wire once per surviving pair side, not once per duplicate
     * document. Cleanup contract: a repeat invocation supersedes the previous
-    * call's checkpoint blocks (see [[supersede]]); Bench/Verify additionally
-    * sweep `getPersistentRDDs` between queries. Same contract for
+    * call's checkpoint blocks (see [[Dedup]]); Bench/Verify additionally
+    * sweep the session's persistent RDDs between queries. Same contract for
     * [[simhashPairs]] and [[ngramJaccardPairs]].
     *
     * Measured alternative (rejected): verifying via a candidate-restricted
@@ -235,41 +227,40 @@ object Dedup {
   private[graft] final case class MinhashRepGraph(
       keyed: DataFrame, reps: DataFrame, repPairs: DataFrame)
 
-  /** Build the rep-level graph; returns the checkpoint ids of the keyed /
-    * rep tables WITHOUT registering them — the caller composes them with
-    * its own checkpoints and [[supersede]]s once under its pipeline tag.
+  /** Build the rep-level graph. Its `keyed` and `reps` tables are
+    * checkpointed but NOT registered — the caller registers them with its
+    * own checkpoints, once, under its pipeline key.
     */
   private[graft] def minhashRepGraph(s: SparkSession, d: String,
-      hotBandCap: Int): (MinhashRepGraph, Set[Int]) = {
+      hotBandCap: Int): MinhashRepGraph = {
     // (doc_id, sset, skey): skey = exact set identity, order-normalized.
     // Shingles never contain NUL, so the join is collision-free up to md5.
     // shingle + representative build stamped: a bench record's face
     // decomposition then splits p_shingle_ckpt (corpus tokenize/collapse —
     // built once, read by banding AND member expansion) from the
     // consumer's own stamps (p_pairs_ckpt in clusterLabels)
-    val (keyed, keyedIds) = graft.BenchPhases.timed("p_shingle_ckpt")(
-      IterCheckpoint.checkpoint(
+    val keyed = graft.BenchPhases.timed("p_shingle_ckpt")(
       Tables.documents(s, d)
         .select(col("doc_id"), shingles3(col("text")).as("sset"))
         .filter(size(col("sset")) > 0)
-        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))))
-    val (g, ids) = minhashRepGraphKeyed(keyed, hotBandCap)
-    (g, keyedIds ++ ids)
+        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
+        .localCheckpoint())
+    minhashRepGraphKeyed(keyed, hotBandCap)
   }
 
   /** [[minhashRepGraph]] over a CHECKPOINTED (doc_id, sset, skey) keyed
     * table the caller already owns — r20 factoring so [[lshRecall]] feeds
     * BOTH its fronts from ONE corpus tokenize/shingle pass instead of
-    * running it twice (once per front).
+    * running it twice (once per front). Only `reps` is checkpointed here.
     */
   private[graft] def minhashRepGraphKeyed(keyed: DataFrame,
-      hotBandCap: Int): (MinhashRepGraph, Set[Int]) = {
+      hotBandCap: Int): MinhashRepGraph = {
     // one representative per distinct set (min doc_id for reproducibility;
     // Jaccard is order-independent so any member's array would do)
-    val (reps, repIds) = graft.BenchPhases.timed("p_shingle_ckpt")(
-      IterCheckpoint.checkpoint(
+    val reps = graft.BenchPhases.timed("p_shingle_ckpt")(
       keyed.groupBy(col("skey"))
-        .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))))
+        .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
+        .localCheckpoint())
     val banded = repBands(reps)
     val cand = cappedBandPairs(banded, hotBandCap)
     // verify on representative sets; carry rids for the label graph and
@@ -283,7 +274,7 @@ object Dedup {
         (size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
           size(array_union(col("set_a"), col("set_b")))).as("jaccard"))
       .filter(col("jaccard") >= 0.35)
-    (MinhashRepGraph(keyed, reps, repPairs), repIds)
+    MinhashRepGraph(keyed, reps, repPairs)
   }
 
   /** Doc-pair ENUMERATION face. The member expansion is Θ(Σ m_a·m_b +
@@ -305,22 +296,22 @@ object Dedup {
     */
   def minhashLshPairs(s: SparkSession, d: String,
       hotBandCap: Int = HotBandCap): DataFrame = {
-    val (g, frontIds) = minhashRepGraph(s, d, hotBandCap)
-    minhashLshPairsOver(s, g, frontIds)
+    val g = minhashRepGraph(s, d, hotBandCap)
+    minhashLshPairsOver(s, g, g.keyed, g.reps)
   }
 
   /** Gate + enumeration tail of [[minhashLshPairs]] over an already-built
     * rep graph — r20 factoring so [[lshRecall]] can feed it a front built
-    * from the shared shingle base. `frontIds` are the checkpoint ids this
-    * call should own (register/free); any ids the caller keeps (the shared
+    * from the shared shingle base. `front` are the checkpointed frames this
+    * call should own (register/free); any the caller keeps (the shared
     * base) must NOT be in it.
     */
   private[graft] def minhashLshPairsOver(s: SparkSession, g: MinhashRepGraph,
-      frontIds: Set[Int]): DataFrame = {
+      front: DataFrame*): DataFrame = {
     // materialize the verified rep pairs ONCE: the gate's sizing aggregate
     // and the member expansion both read them
-    val (repPairs, rpIds) = IterCheckpoint.checkpoint(g.repPairs)
-    supersede(s, "minhashLshPairs", frontIds ++ rpIds)
+    val repPairs = g.repPairs.localCheckpoint()
+    IterCheckpoint.supersede(s, "minhashLshPairs", front :+ repPairs: _*)
     val members = g.keyed.select(col("skey"), col("doc_id"))
     val sizes = g.keyed.groupBy(col("skey")).agg(count(lit(1)).as("m"))
     // EXACT predicted output: Σ m_a·m_b over verified cross-set rep pairs
@@ -342,7 +333,7 @@ object Dedup {
     if (predicted > budget) {
       // refusal leaves no pinned generation behind (the simhash/triangle
       // gate discipline): release the checkpoints before throwing
-      supersede(s, "minhashLshPairs", Set.empty)
+      IterCheckpoint.supersede(s, "minhashLshPairs")
       throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
         gate.getLong(3), "minhashLshPairs")
     }
@@ -388,17 +379,18 @@ object Dedup {
   def incrementalNearDup(s: SparkSession, d: String, threshold: Double = 0.35,
       hotBandCap: Int = HotBandCap): DataFrame = {
     val isBatch = col("doc_id") % 5 === 0
-    val (keyed, keyedIds) = IterCheckpoint.checkpoint(
-      Tables.documents(s, d)
-        .select(col("doc_id"), shingles3(col("text")).as("sset"), isBatch.as("in_batch"))
-        .filter(size(col("sset")) > 0)
-        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset"))))))
+    val keyed = Tables.documents(s, d)
+      .select(col("doc_id"), shingles3(col("text")).as("sset"), isBatch.as("in_batch"))
+      .filter(size(col("sset")) > 0)
+      .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
+      .localCheckpoint()
     def repsOf(side: Boolean) = keyed.filter(col("in_batch") === side)
       .groupBy(col("skey"))
       .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
-    val (bReps, bIds) = IterCheckpoint.checkpoint(repsOf(true))
-    val (cReps, cIds) = IterCheckpoint.checkpoint(repsOf(false))
-    supersede(s, "incrementalNearDup", keyedIds ++ bIds ++ cIds)
+      .localCheckpoint()
+    val bReps = repsOf(true)
+    val cReps = repsOf(false)
+    IterCheckpoint.supersede(s, "incrementalNearDup", keyed, bReps, cReps)
     val banded = repBands(bReps).withColumn("probe", lit(true))
       .unionByName(repBands(cReps).withColumn("probe", lit(false)))
     val popln = Window.partitionBy(col("band"), col("band_key"))
@@ -448,13 +440,12 @@ object Dedup {
       storePath: String, threshold: Double = 0.35,
       hotBandCap: Int = HotBandCap): DataFrame = {
     val idx = s.read.parquet(storePath)
-    val (bKeyed, bkIds) = IterCheckpoint.checkpoint(
-      keyedShingles(Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))))
-    val (bReps, bIds) = IterCheckpoint.checkpoint(
-      bKeyed.groupBy(col("skey"))
-        .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset")))
-    supersede(s, "incrementalNearDupProbeIndex", bkIds ++ bIds)
+    val bKeyed = keyedShingles(Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id"), col("text"))).localCheckpoint()
+    val bReps = bKeyed.groupBy(col("skey"))
+      .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
+      .localCheckpoint()
+    IterCheckpoint.supersede(s, "incrementalNearDupProbeIndex", bKeyed, bReps)
     // rep-level corpus rows from the stored index: min member per distinct
     // set (all members of a skey carry identical band rows)
     val cIdx = idx.groupBy(col("skey"), col("band"), col("band_key"))
@@ -542,39 +533,41 @@ object Dedup {
     // The set key includes lang because the blocking does — two identical
     // texts under different langs are never compared, so they must not
     // share a group.
-    val (keyed, keyedIds) = IterCheckpoint.checkpoint(
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-        .filter(size(col("sset")) > 0)
-        .withColumn("skey",
-          md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset"))))))
-    val (repPairs, repIds) = ngramRepPairsKeyed(keyed, threshold,
+    val keyed = Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
+      .filter(size(col("sset")) > 0)
+      .withColumn("skey",
+        md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
+      .localCheckpoint()
+    // the rep table is read by postings + (maxDf only) the verify join and
+    // the drop count; only that path materializes it
+    val repsCk = maxDf.map(_ => ngramReps(keyed).localCheckpoint())
+    val repPairs = ngramRepPairs(repsCk.getOrElse(ngramReps(keyed)), threshold,
       hotShingleCap, maxDf)
-    supersede(s, "ngramJaccardPairs", keyedIds ++ repIds)
+    IterCheckpoint.supersede(s, "ngramJaccardPairs", keyed +: repsCk.toSeq: _*)
     ngramExpandPairs(keyed, repPairs)
   }
 
-  /** Rep-level verified pairs (skey_a, skey_b, jaccard) over a CHECKPOINTED
-    * (doc_id, lang, sset, skey) keyed table — the exact inverted-index front
-    * of [[ngramJaccardPairs]] WITHOUT the member expansion (r20 factoring:
+  /** One representative per distinct set of a CHECKPOINTED (doc_id, lang,
+    * sset, skey) keyed table: (skey, sset, lang, n). Off the keyed
+    * checkpoint this is one narrow agg.
+    */
+  private def ngramReps(keyed: DataFrame): DataFrame =
+    keyed.groupBy(col("skey"))
+      .agg(min_by(col("sset"), col("doc_id")).as("sset"), first(col("lang")).as("lang"))
+      .withColumn("n", size(col("sset")))
+
+  /** Rep-level verified pairs (skey_a, skey_b, jaccard) over an
+    * [[ngramReps]] table — the exact inverted-index front of
+    * [[ngramJaccardPairs]] WITHOUT the member expansion (r20 factoring:
     * [[lshRecall]] shares one corpus shingle pass between this front and the
     * MinHash front, and [[lshBandingSweep]] consumes truth at REP level, so
     * neither re-runs the shingle pass nor, for the sweep, the doc-pair
-    * expansion). Caller owns the keyed checkpoint's lifetime; the returned
-    * ids are the maxDf path's rep checkpoint (empty otherwise) and must be
-    * registered by the caller.
+    * expansion). The caller owns every checkpoint's lifetime.
     */
-  private[graft] def ngramRepPairsKeyed(keyed: DataFrame, threshold: Double,
-      hotShingleCap: Int, maxDf: Option[Long]): (DataFrame, Set[Int]) = {
-    val needReps = maxDf.isDefined
-    // the rep table is read by postings + (maxDf only) the verify join — at
-    // most twice; off the keyed checkpoint both reads are one narrow agg
-    val reps = keyed.groupBy(col("skey"))
-      .agg(min_by(col("sset"), col("doc_id")).as("sset"), first(col("lang")).as("lang"))
-      .withColumn("n", size(col("sset")))
-    val (repsCk, repIds) =
-      if (needReps) IterCheckpoint.checkpoint(reps) else (reps, Set.empty[Int])
-    val postings = repsCk.select(col("lang"), col("skey"), col("n"),
+  private[graft] def ngramRepPairs(reps: DataFrame, threshold: Double,
+      hotShingleCap: Int, maxDf: Option[Long]): DataFrame = {
+    val postings = reps.select(col("lang"), col("skey"), col("n"),
       explode(col("sset")).as("shingle"))
     // per-(lang, shingle) document frequency — the population the cap and the
     // opt-in drop both key off. The window shuffles on the same key as the
@@ -608,7 +601,7 @@ object Dedup {
     val matched = a.join(b, Seq("lang", "shingle", "ba"))
       .filter(col("skey_a") < col("skey_b") &&
         col("n_a") * 5 >= col("n_b") * 4 && col("n_b") * 5 >= col("n_a") * 4)
-    val repPairs = maxDf match {
+    maxDf match {
       case None =>
         // exact count path: every shared shingle contributes exactly one row
         matched
@@ -622,14 +615,13 @@ object Dedup {
         // candidate signal — re-verify each candidate pair against the FULL
         // sets so the emitted Jaccard is exact over every shingle
         matched.select(col("skey_a"), col("skey_b")).distinct()
-          .join(repsCk.select(col("skey").as("skey_a"), col("sset").as("set_a")), Seq("skey_a"))
-          .join(repsCk.select(col("skey").as("skey_b"), col("sset").as("set_b")), Seq("skey_b"))
+          .join(reps.select(col("skey").as("skey_a"), col("sset").as("set_a")), Seq("skey_a"))
+          .join(reps.select(col("skey").as("skey_b"), col("sset").as("set_b")), Seq("skey_b"))
           .select(col("skey_a"), col("skey_b"),
             (size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
               size(array_union(col("set_a"), col("set_b")))).as("jaccard"))
           .filter(col("jaccard") >= threshold)
     }
-    (repPairs, repIds)
   }
 
   /** Doc-pair member expansion (cross + intra) of rep-level pairs over the
@@ -674,23 +666,22 @@ object Dedup {
     // shared base carries BOTH set-identity keys; each front reads the
     // checkpoint narrowly. Downstream expressions are verbatim the
     // standalone faces', so both sides' outputs are bit-identical.
-    val (base, baseIds) = graft.BenchPhases.timed("p_shingle_ckpt")(
-      IterCheckpoint.checkpoint(
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-          .filter(size(col("sset")) > 0)
-          .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-          .withColumn("skey_lang",
-            md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))))
+    val base = graft.BenchPhases.timed("p_shingle_ckpt")(
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
+        .filter(size(col("sset")) > 0)
+        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
+        .withColumn("skey_lang",
+          md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
+        .localCheckpoint())
     val nKeyed = base.select(col("doc_id"), col("lang"), col("sset"),
       col("skey_lang").as("skey"))
-    val (truthPairs, truthIds) =
-      ngramRepPairsKeyed(nKeyed, threshold = 0.35, HotBandCap, None)
+    val truthPairs = ngramRepPairs(ngramReps(nKeyed), threshold = 0.35, HotBandCap, None)
     val truth = ngramExpandPairs(nKeyed, truthPairs)
-    val (g, mIds) = minhashRepGraphKeyed(
+    val g = minhashRepGraphKeyed(
       base.select(col("doc_id"), col("sset"), col("skey")), HotBandCap)
-    supersede(s, "lshRecall", baseIds ++ truthIds ++ mIds)
-    val found = minhashLshPairsOver(s, g, Set.empty)
+    IterCheckpoint.supersede(s, "lshRecall", base, g.reps)
+    val found = minhashLshPairsOver(s, g)
       .select(col("doc_a"), col("doc_b"), lit(1).as("hit"))
     truth
       .withColumn("jband",
@@ -751,36 +742,35 @@ object Dedup {
     // timed so the committed record itself shows where they go
     // (p_signatures = shingle/rep/minhash build, p_candidates = the four
     // band self-joins, p_truth = the exact inverted-index baseline)
-    val ((base, baseIds), (reps, repIds), (sigs, sigIds)) =
+    val (base, reps, sigs) =
       graft.BenchPhases.timed("p_signatures") {
         // ONE corpus tokenize/shingle pass (r20): the base carries both the
         // plain set key (minhash/banding front) and the lang-blocked key
         // (the exact truth front) — the old shape tokenized the corpus a
         // second time inside ngramJaccardPairs
-        val k0 = IterCheckpoint.checkpoint(
-          Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-            .filter(size(col("sset")) > 0)
-            .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-            .withColumn("skey_lang",
-              md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset"))))))
-        val r0 = IterCheckpoint.checkpoint(
-          k0._1.groupBy(col("skey"))
-            .agg(min(col("doc_id")).as("rid"),
-              min_by(col("sset"), col("doc_id")).as("sset")))
-        val postings = r0._1.select(col("rid"), explode(col("sset")).as("shingle"))
+        val k0 = Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
+          .filter(size(col("sset")) > 0)
+          .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
+          .withColumn("skey_lang",
+            md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
+          .localCheckpoint()
+        val r0 = k0.groupBy(col("skey"))
+          .agg(min(col("doc_id")).as("rid"),
+            min_by(col("sset"), col("doc_id")).as("sset"))
+          .localCheckpoint()
+        val postings = r0.select(col("rid"), explode(col("sset")).as("shingle"))
           .repartition(col("rid"))
         val minsAgg = (0 until NumHashes).map(k =>
           min(md5Hash60(col("shingle"), lit(k))).as(s"h$k"))
-        val s0 = IterCheckpoint.checkpoint(
-          postings.groupBy(col("rid")).agg(minsAgg.head, minsAgg.tail: _*))
+        val s0 = postings.groupBy(col("rid")).agg(minsAgg.head, minsAgg.tail: _*)
+          .localCheckpoint()
         (k0, r0, s0)
       }
     // candAll feeds two consumers (the cost aggregate and the truth join);
     // checkpointed so the four band self-joins run once, not twice (r14
     // review) — candidate pairs are rep-level and tiny
-    val (candAll, candIds) = graft.BenchPhases.timed("p_candidates")(
-      IterCheckpoint.checkpoint(
+    val candAll = graft.BenchPhases.timed("p_candidates")(
       configs.map { case (b, r) =>
         val banded = sigs.select(col("rid"),
           posexplode(array((0 until b).map(i =>
@@ -790,7 +780,7 @@ object Dedup {
           .withColumnRenamed("col", "band_key")
         cappedBandPairs(banded, HotBandCap)
           .withColumn("bands", lit(b)).withColumn("rows_per_band", lit(r))
-      }.reduce(_.unionByName(_))))
+      }.reduce(_.unionByName(_)).localCheckpoint())
     val cost = candAll.groupBy(col("bands"), col("rows_per_band"))
       .agg(count(lit(1)).as("n_cand_pairs"))
     // the truth baseline is the face's dominant term at 100× — checkpointed
@@ -804,24 +794,23 @@ object Dedup {
     // any duplication density, and a second corpus tokenize to boot.
     val nKeyed = base.select(col("doc_id"), col("lang"), col("sset"),
       col("skey_lang").as("skey"))
-    val (truthRep, truthIds) = graft.BenchPhases.timed("p_truth") {
-      val (tp, tpIds) = ngramRepPairsKeyed(nKeyed, threshold, HotBandCap, None)
+    val truthRep = graft.BenchPhases.timed("p_truth") {
+      val tp = ngramRepPairs(ngramReps(nKeyed), threshold, HotBandCap, None)
       val langMap = base.groupBy(col("skey_lang"))
         .agg(min(col("skey")).as("skey"))
         .join(reps.select(col("skey"), col("rid")), Seq("skey"))
         .select(col("skey_lang"), col("rid"))
-      val (ck, ckIds) = IterCheckpoint.checkpoint(
-        tp.join(langMap.select(col("skey_lang").as("skey_a"),
-            col("rid").as("ra")), Seq("skey_a"))
-          .join(langMap.select(col("skey_lang").as("skey_b"),
-            col("rid").as("rb")), Seq("skey_b"))
-          .filter(col("ra") =!= col("rb"))
-          .select(least(col("ra"), col("rb")).as("rid_a"),
-            greatest(col("ra"), col("rb")).as("rid_b"), col("jaccard"))
-          .distinct())
-      (ck, tpIds ++ ckIds)
+      tp.join(langMap.select(col("skey_lang").as("skey_a"),
+          col("rid").as("ra")), Seq("skey_a"))
+        .join(langMap.select(col("skey_lang").as("skey_b"),
+          col("rid").as("rb")), Seq("skey_b"))
+        .filter(col("ra") =!= col("rb"))
+        .select(least(col("ra"), col("rb")).as("rid_a"),
+          greatest(col("ra"), col("rb")).as("rid_b"), col("jaccard"))
+        .distinct()
+        .localCheckpoint()
     }
-    supersede(s, "lshBandingSweep", baseIds ++ repIds ++ sigIds ++ candIds ++ truthIds)
+    IterCheckpoint.supersede(s, "lshBandingSweep", base, reps, sigs, candAll, truthRep)
     import s.implicits._
     truthRep.crossJoin(broadcast(configs.toDF("bands", "rows_per_band")))
       .join(candAll.withColumn("hit", lit(1)),
@@ -1022,11 +1011,11 @@ object Dedup {
   private[graft] def simhashNearDupPairs(fps: DataFrame, pipeline: String,
       maxHamming: Int = 6, hotBandCap: Int = HotBandCap): DataFrame = {
     val s = fps.sparkSession
-    val (groups, gIds) = IterCheckpoint.checkpoint(
-      fps.groupBy(col("h")).agg(collect_list(col("id")).as("ids")))
-    val (fpairs, fIds) = IterCheckpoint.checkpoint(
-      simhashFingerprintPairs(groups.select(col("h")), maxHamming, hotBandCap))
-    supersede(s, pipeline, gIds ++ fIds)
+    val groups = fps.groupBy(col("h")).agg(collect_list(col("id")).as("ids"))
+      .localCheckpoint()
+    val fpairs = simhashFingerprintPairs(groups.select(col("h")), maxHamming, hotBandCap)
+      .localCheckpoint()
+    IterCheckpoint.supersede(s, pipeline, groups, fpairs)
     val sizes = groups.select(col("h"), size(col("ids")).cast("long").as("m"))
     // both sizing aggregates in ONE action (r20): each is a 1-row frame off
     // the same checkpointed inputs, and two head() calls paid two full
@@ -1045,7 +1034,7 @@ object Dedup {
     if (predicted > budget) {
       // refusal leaves no pinned generation behind (the triangle gate's
       // clean-free discipline): release both checkpoints before throwing
-      supersede(s, pipeline, Set.empty)
+      IterCheckpoint.supersede(s, pipeline)
       throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
         gate.getLong(3), pipeline)
     }
@@ -1190,8 +1179,7 @@ object Dedup {
     */
   def simhashPairStats(s: SparkSession, d: String, maxHamming: Int = 6,
       hotBandCap: Int = HotBandCap): DataFrame = {
-    val (fps, fIds) = IterCheckpoint.checkpoint(
-      simhashLong(s, d).withColumnRenamed("doc_id", "id"))
+    val fps = simhashLong(s, d).withColumnRenamed("doc_id", "id").localCheckpoint()
     val base = fps.groupBy(col("h"))
       .agg(count(lit(1)).as("m"), min(col("id")).as("id1"))
     // second-smallest member, array-free: re-aggregate the rows above the
@@ -1199,9 +1187,8 @@ object Dedup {
     val second = fps.join(base.select(col("h"), col("id1")), Seq("h"))
       .filter(col("id") > col("id1"))
       .groupBy(col("h")).agg(min(col("id")).as("id2"))
-    val (stats, sIds) = IterCheckpoint.checkpoint(
-      base.join(second, Seq("h"), "left"))
-    supersede(s, "simhashPairStats", fIds ++ sIds)
+    val stats = base.join(second, Seq("h"), "left").localCheckpoint()
+    IterCheckpoint.supersede(s, "simhashPairStats", fps, stats)
     // packed nonnegative 60-bit long -> the q_simhash bit-string form; two
     // builtins, not 60 when/concat branches (r13 review simplification)
     def bits(c: Column): Column = lpad(bin(c), SimHashBits, "0")
@@ -1246,9 +1233,8 @@ object Dedup {
     */
   def simhashRecall(s: SparkSession, d: String): DataFrame = {
     // one tokenize+majority-vote pass, reused by truth (twice) and found
-    val (fps, fIds) = IterCheckpoint.checkpoint(
-      simhashLong(s, d).select(col("h")).distinct())
-    supersede(s, "simhashRecall", fIds)
+    val fps = simhashLong(s, d).select(col("h")).distinct().localCheckpoint()
+    IterCheckpoint.supersede(s, "simhashRecall", fps)
     val xor = col("h_a").bitwiseXOR(col("h_b"))
     val truth = fps.select(col("h").as("h_a"))
       .crossJoin(broadcast(fps.select(col("h").as("h_b"))))
@@ -1315,8 +1301,7 @@ object Dedup {
     // checkpoint-bounded log-rounds work, not re-derivation (r18 verdict
     // task 4: the record, not prose, should show the pair table is built
     // ONCE and every round reads materialized rows)
-    val (p, pIds) = graft.BenchPhases.timed("p_pairs_ckpt")(
-      IterCheckpoint.checkpoint(pairs))
+    val p = graft.BenchPhases.timed("p_pairs_ckpt")(pairs.localCheckpoint())
     // symmetric adjacency — the min label must flow both directions; off the
     // checkpoint this is a trivial narrow scan, no cache needed
     val edges = p.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -1329,10 +1314,10 @@ object Dedup {
     // fixed scheduling cost over partitions holding a handful of rows
     // (measured ~70s of pure overhead at sf0.1).
     val obs0 = Observation()
-    val (labels0, ids0) = IterCheckpoint.checkpoint(
-      edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("label"))
-        .observe(obs0, count(lit(1)).as("n"), sum(col("label")).as("lsum")))
+    val labels0 = edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
+      .select(col("u"), least(col("u"), col("mv")).as("label"))
+      .observe(obs0, count(lit(1)).as("n"), sum(col("label")).as("lsum"))
+      .localCheckpoint()
     val n0 = obs0.get("n").asInstanceOf[Long]
     dbg(s"round 0 done, n=$n0")
     // ~4M (long,long) rows per partition ≈ a few hundred MB working set;
@@ -1340,7 +1325,6 @@ object Dedup {
     // parallelism while sf0.1's hundreds of rows collapse to one task
     val parts = math.max(1L, math.min(10000L, n0 / 4000000L)).toInt
     var labels = labels0
-    var ids = ids0
     var prevSum = Option(obs0.get("lsum")).map(_.asInstanceOf[Long]).getOrElse(0L)
     var converged = n0 == 0L
     var round = 0
@@ -1358,19 +1342,18 @@ object Dedup {
       // and the NEXT round's task count — proportional to the label table,
       // not to the session's shuffle-partition default
       val obs = Observation()
-      val (next, nextIds) = IterCheckpoint.checkpoint(
-        viaNeighbor.union(viaJump).union(labels)
-          .groupBy(col("u")).agg(min(col("label")).as("label"))
-          .observe(obs, sum(col("label")).as("lsum"))
-          .coalesce(parts))
+      val next = viaNeighbor.union(viaJump).union(labels)
+        .groupBy(col("u")).agg(min(col("label")).as("label"))
+        .observe(obs, sum(col("label")).as("lsum"))
+        .coalesce(parts)
+        .localCheckpoint()
       val s = obs.get("lsum").asInstanceOf[Long]
       converged = s == prevSum
       prevSum = s
-      // release the superseded round's checkpoint blocks NOW (by RDD id —
-      // Dataset.unpersist is a no-op on checkpoints, see [[IterCheckpoint]])
-      IterCheckpoint.free(sess, ids)
+      // release the superseded round's checkpoint blocks NOW (through
+      // IterCheckpoint — Dataset.unpersist is a no-op on checkpoints)
+      IterCheckpoint.free(labels)
       labels = next
-      ids = nextIds
       round += 1
       // per-iteration attribution in the bench record (no-op elsewhere):
       // bounded by maxRounds keys, and the sum of p_labels_r* vs
@@ -1380,11 +1363,11 @@ object Dedup {
       dbg(f"round $round sum $s converged $converged ${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     graft.BenchPhases.add("n_label_rounds", round.toDouble)
-    IterCheckpoint.free(sess, pIds)
+    IterCheckpoint.free(p)
     // the FINAL round's checkpoint must outlive this call (the returned
     // frame reads it); register it so the next clusterLabels invocation on
     // this session supersedes it — same contract as the pair pipelines
-    supersede(sess, "clusterLabels", ids)
+    IterCheckpoint.supersede(sess, "clusterLabels", labels)
     dbg("iteration complete, returning labels")
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
@@ -1424,8 +1407,8 @@ object Dedup {
     */
   def dedupClustersRep(s: SparkSession, d: String, maxRounds: Int = 16,
       hotBandCap: Int = HotBandCap): DataFrame = {
-    val (g, frontIds) = minhashRepGraph(s, d, hotBandCap)
-    supersede(s, "dedupClustersRep", frontIds)
+    val g = minhashRepGraph(s, d, hotBandCap)
+    IterCheckpoint.supersede(s, "dedupClustersRep", g.keyed, g.reps)
     val repLabels = clusterLabels(
       g.repPairs.select(col("rid_a").as("doc_a"), col("rid_b").as("doc_b")),
       maxRounds)

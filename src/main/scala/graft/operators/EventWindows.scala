@@ -159,14 +159,15 @@ object EventWindows {
     // upstream of the production face is the full sessionize pass
     // (scan + session-merge aggregation), which ran twice, one per
     // consumer. The checkpoint is 2 (long, long, long) rows per session.
-    val (pts, ptsIds) = IterCheckpoint.checkpoint(ses.select(explode(array(
+    val pts = ses.select(explode(array(
         struct(unix_micros(col("session_start").cast("timestamp")).as("t"),
           lit(1L).as("d")),
         struct(unix_micros(col("session_end").cast("timestamp")).as("t"),
           lit(-1L).as("d")))).as("p"))
       .select(col("p.t").as("t"), col("p.d").as("d"))
-      .withColumn("_bkt", RangeBuckets.bucketByCuts(col("t"), cs)))
-    IterCheckpoint.supersede(ses.sparkSession, "maxConcurrency", ptsIds)
+      .withColumn("_bkt", RangeBuckets.bucketByCuts(col("t"), cs))
+      .localCheckpoint()
+    IterCheckpoint.supersede(ses.sparkSession, "maxConcurrency", pts)
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_bkt")).orderBy(col("t"), col("d"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -312,26 +313,23 @@ object EventWindows {
     // stage, and the stage computation is linear instead of quadratic).
     // The checkpoints are user-keyed — one row per surviving user, the
     // funnel's own shrinking decision table, safe to pin at any scale.
-    var allIds = Set.empty[Int]
-    def ckpt(df: DataFrame): DataFrame = {
-      val (c, ids) = IterCheckpoint.checkpoint(df); allIds ++= ids; c
-    }
-    val first = ckpt(ev.filter(col("event_type") === "signup")
+    val first = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("us")).as("t"))
-      .withColumn("lag_us", lit(0L)))
+      .withColumn("lag_us", lit(0L))
+      .localCheckpoint()
     val rest = Seq("view", "click", "purchase")
     val chain = rest.scanLeft(first) { (prev, name) =>
-      ckpt(ev.filter(col("event_type") === name)
+      ev.filter(col("event_type") === name)
         .join(prev.select(col("user_id"), col("t").as("pt")), Seq("user_id"))
         .filter(col("us") >= col("pt") &&
           boundUs.map(b => col("us") <= col("pt") + lit(b)).getOrElse(lit(true)))
         .groupBy(col("user_id"))
         // pt is constant per user; min() re-attaches it through the agg
         .agg(min(col("us")).as("t"), min(col("pt")).as("pt"))
-        .select(col("user_id"), col("t"), (col("t") - col("pt")).as("lag_us")))
+        .select(col("user_id"), col("t"), (col("t") - col("pt")).as("lag_us"))
+        .localCheckpoint()
     }
-    IterCheckpoint.supersede(ev.sparkSession,
-      s"funnelChain-${boundUs.isDefined}", allIds)
+    IterCheckpoint.supersede(ev.sparkSession, s"funnelChain-${boundUs.isDefined}", chain: _*)
     chain.zip("signup" +: rest).zipWithIndex.map { case ((df, name), i) =>
       df.agg(count(lit(1)).as("n_users"), sum(col("lag_us")).as("sum_lag_us"))
         .select(lit((i + 1).toLong).as("stage"), lit(name).as("event_type"),

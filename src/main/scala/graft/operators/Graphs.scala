@@ -289,9 +289,8 @@ object Graphs {
     // BOTH sides of the self-join, so the full lineitem scan + filter +
     // distinct shuffle ran twice (two corpus passes at any scale for the
     // one table the probe actually needs)
-    val (inc, incIds) =
-      IterCheckpoint.checkpoint(heavyPairIncidence(s, d, partKeys))
-    IterCheckpoint.supersede(s, "coOrderHeavyTopK", incIds)
+    val inc = heavyPairIncidence(s, d, partKeys).localCheckpoint()
+    IterCheckpoint.supersede(s, "coOrderHeavyTopK", inc)
     // pair membership via a broadcast join on BOTH key columns, not a
     // packed (u << 32) | v long: partkeys exceed 2^32 at the 100 TB
     // target, where packing stops being injective and a colliding
@@ -369,10 +368,11 @@ object Graphs {
     // + the oracle pin it), and the final probe join.
     val sampleCols = mods.filter(_ != 1).map(m =>
       sum(when(col("ok") % m === 0, 1L).otherwise(0L)).as(s"ns_$m"))
-    val (stats, exactIds) = timed("heavy_recall", "truth_ckpt")(
-      IterCheckpoint.checkpoint(coOrderPairsWithOrder(Tables.lineitem(s, d))
+    val stats = timed("heavy_recall", "truth_ckpt")(
+      coOrderPairsWithOrder(Tables.lineitem(s, d))
         .groupBy(col("u"), col("v"))
-        .agg(count(lit(1)).as("n_orders"), sampleCols: _*)))
+        .agg(count(lit(1)).as("n_orders"), sampleCols: _*)
+        .localCheckpoint())
     val exact = stats.select(col("u"), col("v"), col("n_orders"))
     val cands = mods.map { m =>
       val pool =
@@ -387,7 +387,7 @@ object Graphs {
       .groupBy(col("sample_mod"), col("n_orders"))
       .agg(count(lit(1)).as("n_pairs"), count(col("hit")).as("n_cand"),
         (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
-    IterCheckpoint.supersede(s, "coOrderHeavyRecall", exactIds)
+    IterCheckpoint.supersede(s, "coOrderHeavyRecall", stats)
     out
   }
 
@@ -598,41 +598,40 @@ object Graphs {
     * shape): there the per-round join shuffles 2m rows regardless, and
     * paying one adjacency checkpoint beats re-shuffling the degree join
     * every round — the correct 100 TB plan.
-    * Leak contract: a repeat invocation supersedes the previous call's
-    * blocks ([[IterCheckpoint.supersede]]); each round frees its
-    * predecessor's rank blocks as soon as the successor is materialized.
+    * Leak contract: the checkpointed edges, degrees, adjacency (shuffle
+    * path only) and last rank table are registered under "pageRank"
+    * ([[IterCheckpoint.supersede]]), so a repeat invocation frees the
+    * previous call's; each round frees its predecessor's rank checkpoint
+    * as soon as the successor is materialized.
     */
   def pageRankEdges(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
-    val (edg, edgIds) = timed("pagerank", "edge_ckpt")(
-      IterCheckpoint.checkpoint(edges.select(col("u"), col("v"))))
+    val edg = timed("pagerank", "edge_ckpt")(
+      edges.select(col("u"), col("v")).localCheckpoint())
     def dir = edg.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edg.select(col("v").as("src"), col("u").as("dst")))
-    val (deg, degIds) = timed("pagerank", "degree_ckpt")(
-      IterCheckpoint.checkpoint(
-        dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))))
+    val deg = timed("pagerank", "degree_ckpt")(
+      dir.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint())
     val nNodes = deg.count()
     val scale = pageRankScale(nNodes)
     val bc = nNodes <= BroadcastRowCap
-    val (adj, adjIds) =
-      if (bc) (dir.join(broadcast(deg), Seq("src")), Set.empty[Int]) // lazy
-      else timed("pagerank", "adj_ckpt")(
-        IterCheckpoint.checkpoint(dir.join(deg, Seq("src"))))
+    val adjCk = if (bc) None // lazy
+      else Some(timed("pagerank", "adj_ckpt")(dir.join(deg, Seq("src")).localCheckpoint()))
+    val adj = adjCk.getOrElse(dir.join(broadcast(deg), Seq("src")))
     val rankSide: DataFrame => DataFrame = if (bc) broadcast else identity
     val r0 = deg.select(col("src").as("node"), lit(scale).as("rank_scaled"))
-    var rankIds = Set.empty[Int]
     val result = (1 to iters).foldLeft(r0) { (rank, i) =>
       val next = adj.join(rankSide(rank), col("src") === col("node"))
         .select(col("dst"), expr("rank_scaled div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
         .select(col("dst").as("node"),
           (lit(scale * 15L / 100L) + expr("(17 * sc) div 20")).as("rank_scaled"))
-      val (ck, ids) = timed("pagerank", s"round_$i")(IterCheckpoint.checkpoint(next))
-      IterCheckpoint.free(s, rankIds) // predecessor dead once successor lives
-      rankIds = ids
+      val ck = timed("pagerank", s"round_$i")(next.localCheckpoint())
+      if (i > 1) IterCheckpoint.free(rank) // predecessor dead once successor lives
       ck
     }
-    IterCheckpoint.supersede(s, "pageRank", edgIds ++ degIds ++ adjIds ++ rankIds)
+    val lastRank = if (iters > 0) Some(result) else None
+    IterCheckpoint.supersede(s, "pageRank", Seq(edg, deg) ++ adjCk ++ lastRank: _*)
     result
   }
 
@@ -843,25 +842,23 @@ object Graphs {
     // below be EXPLICITLY broadcast (checkpoint leaves carry no stats, so
     // without the measured count Catalyst would shuffle 2m rows through
     // both joins — ~2 s of the r7 edge-build time at sf0.1)
-    val (edg, edgIds) = timed("triangle", "edge_ckpt")(
-      IterCheckpoint.checkpoint(edges))
+    val edg = timed("triangle", "edge_ckpt")(edges.localCheckpoint())
     val nEdges = edg.count()
     if (nEdges == 0) {
-      IterCheckpoint.supersede(s, "triangleCount", edgIds)
+      IterCheckpoint.supersede(s, "triangleCount", edg)
       return s.range(1).select(lit(0L).as("n_triangles"))
     }
     val bc = nEdges <= broadcastMaxEdges
-    val (ori, oriIds) = timed("triangle", "orient_ckpt")(
-      IterCheckpoint.checkpoint(orientByDegree(edg, bc)))
+    val ori = timed("triangle", "orient_ckpt")(orientByDegree(edg, bc).localCheckpoint())
     // broadcast path: the result plan reads only `ori` (the adjacency and
     // both join sides derive from it), so edg's blocks are dead once ori is
     // materialized — free them NOW instead of leaving them to the GC-driven
     // cleaner (DedupLeakSpec pins the flat-pinned-RDD contract). The
     // shuffle paths keep edg: it IS the closing probe set.
     if (bc) {
-      IterCheckpoint.free(s, edgIds)
-      IterCheckpoint.supersede(s, "triangleCount", oriIds)
-    } else IterCheckpoint.supersede(s, "triangleCount", edgIds ++ oriIds)
+      IterCheckpoint.free(edg)
+      IterCheckpoint.supersede(s, "triangleCount", ori)
+    } else IterCheckpoint.supersede(s, "triangleCount", edg, ori)
     // the gate job: exact wedge volume Σ C(outdeg, 2) in one aggregate over
     // the checkpointed DAG (n-row shuffle of longs) — or the memoized
     // per-dataset measurement when a prior face already ran it
@@ -876,7 +873,7 @@ object Graphs {
     // exact count's work on EITHER path, so past the budget the face
     // refuses with the sizing — before the intersect/shuffle starts
     if (nWedges > maxWedges) {
-      IterCheckpoint.free(s, edgIds ++ oriIds) // refuse cleanly: no leaks
+      IterCheckpoint.free(edg, ori) // refuse cleanly: no leaks
       throw TriangleWedgeBudgetExceeded(nWedges, maxWedges, nEdges)
     }
     System.err.println(s"[graft.graphs] triangle path=" +
@@ -893,7 +890,7 @@ object Graphs {
       val predicted = predictedWedgeSpillBytes(nEdges, nWedges, bloomPruned)
       val available = availableScratchBytes(s)
       if (predicted > available * ScratchFraction) {
-        IterCheckpoint.free(s, edgIds ++ oriIds) // refuse cleanly: no leaks
+        IterCheckpoint.free(edg, ori) // refuse cleanly: no leaks
         throw WedgeSpillBudgetExceeded(predicted, available, nEdges, nWedges,
           if (bloomPruned) "bloom-pruned" else "plain-shuffle")
       }
@@ -932,10 +929,10 @@ object Graphs {
       // (13)-(16)). One checkpoint materializes it once; its size is the
       // broadcast relation the admission gate already admitted (n rows,
       // m longs total), so the pin stays inside the same memory class.
-      val (adjArr, adjIds) = IterCheckpoint.checkpoint(
-        ori.groupBy(col("s"))
-          .agg(array_sort(collect_list(col("t"))).as("nbr")))
-      IterCheckpoint.supersede(s, "triangleCountAdj", adjIds)
+      val adjArr = ori.groupBy(col("s"))
+        .agg(array_sort(collect_list(col("t"))).as("nbr"))
+        .localCheckpoint()
+      IterCheckpoint.supersede(s, "triangleCountAdj", adjArr)
       // counting is graft_sorted_intersect_n — a codegen'd two-pointer
       // merge over the sorted adjacency arrays (r12): the old
       // size(array_intersect) built a per-ROW hash set of n1 (Σ od(s)
@@ -1086,8 +1083,7 @@ object Graphs {
   def triangleCountAutoEdges(edges: DataFrame, cap: Long,
       maxExact: Long, statsKey: Option[String] = None): DataFrame = {
     val s = edges.sparkSession
-    val (edg, edgIds) = timed("tri_auto", "edge_ckpt")(
-      IterCheckpoint.checkpoint(edges))
+    val edg = timed("tri_auto", "edge_ckpt")(edges.localCheckpoint())
     val nEdges = edg.count()
     val bc = nEdges <= cap
     // The probe STREAMS the orientation into the wedge aggregate (no
@@ -1109,7 +1105,7 @@ object Graphs {
     graft.BenchPhases.add("tri_regime_ip", ip.toDouble)
     System.err.println(s"[graft.graphs] tri_auto wedges=$wedges budget=" +
       s"$maxExact ip=$ip" + (if (ip == 0) " (exact)" else " (DOULION)"))
-    var oriIds = Set.empty[Int]
+    var exactOri = Option.empty[DataFrame]
     val (nTri, nSampled, sampleOk) =
       if (nEdges == 0) (0L, 0L, true)
       else if (ip == 0) {
@@ -1120,14 +1116,13 @@ object Graphs {
           val predicted = predictedWedgeSpillBytes(nEdges, wedges, bloomPruned)
           val available = availableScratchBytes(s)
           if (predicted > available * ScratchFraction) {
-            IterCheckpoint.free(s, edgIds) // refuse cleanly
+            IterCheckpoint.free(edg) // refuse cleanly
             throw WedgeSpillBudgetExceeded(predicted, available, nEdges,
               wedges, if (bloomPruned) "bloom-pruned" else "plain-shuffle")
           }
         }
-        val (ori, ids) = timed("tri_auto", "orient_ckpt")(
-          IterCheckpoint.checkpoint(orientByDegree(edg, bc)))
-        oriIds = ids
+        val ori = timed("tri_auto", "orient_ckpt")(orientByDegree(edg, bc).localCheckpoint())
+        exactOri = Some(ori)
         System.err.println(s"[graft.graphs] triangle path=" +
           (if (bc) "broadcast"
            else if (wedges > SketchWedgeFactor * nEdges) "bloom-pruned"
@@ -1139,7 +1134,7 @@ object Graphs {
         val r = triangleCountApproxEdges(edg, ip, maxRaises = 0).head()
         (r.getLong(0), r.getLong(1), r.getBoolean(2))
       }
-    IterCheckpoint.supersede(s, "triangleAuto", edgIds ++ oriIds)
+    IterCheckpoint.supersede(s, "triangleAuto", edg +: exactOri.toSeq: _*)
     s.range(1).select(
       lit(wedges).as("n_wedges"),
       lit(if (ip == 0) "exact" else "sampled").as("regime"),

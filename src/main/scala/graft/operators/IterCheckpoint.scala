@@ -1,63 +1,68 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lineage truncation for iterative dataflows (label propagation, pointer
-  * doubling): each round's state must be `localCheckpoint`ed — otherwise
-  * round k's plan embeds two copies of round k−1's and the base work
-  * re-executes ~2^rounds times — and each *superseded* round's blocks must
-  * actually be released.
+/** Release of eager `localCheckpoint`s.
+  *
+  * Iterative dataflows (label propagation, pointer doubling) checkpoint each
+  * round's state — otherwise round k's plan embeds two copies of round
+  * k−1's and the base work re-executes ~2^rounds times — and one-shot
+  * pipelines checkpoint an input several consumers read. Call sites call
+  * `df.localCheckpoint()` themselves; this object only releases.
   *
   * The release is the subtle part: `Dataset.unpersist()` on a checkpointed
   * frame is a NO-OP — it routes through `CacheManager.uncacheQuery`, which
   * never registered the checkpoint's RDD, so a long iteration silently pins
-  * rounds × |state| blocks for the rest of the session. The working lever is
-  * the underlying RDD id: diff `sparkContext.getPersistentRDDs` around the
-  * eager checkpoint, and unpersist the superseded ids once the next round's
-  * checkpoint exists.
+  * rounds × |state| blocks for the rest of the session. The working lever
+  * is the checkpoint's RDD, and the checkpointed frame names it: its
+  * logical plan is a `LogicalRDD` over exactly the RDD the checkpoint
+  * persisted (`IterCheckpointSpec` pins this against the installed Spark).
+  * So the frame `localCheckpoint()` returned is its own release handle.
+  * Any other frame — one derived from a checkpoint, or never checkpointed —
+  * is refused with an `IllegalArgumentException`, so a caller cannot
+  * release blocks that belong to another pipeline.
   */
 private[graft] object IterCheckpoint {
 
-  /** Eagerly localCheckpoints `df`; returns the truncated frame plus the ids
-    * of the RDDs the checkpoint registered (to pass to [[free]] when this
-    * round is superseded).
-    *
-    * The before/diff window is serialized on a JVM-wide lock (r20 ADVICE):
-    * two frames checkpointed concurrently on one SparkContext would
-    * cross-attribute each other's RDD ids, and a later supersede would then
-    * unpersist another pipeline's LIVE localCheckpoint blocks — an
-    * unrecoverable "checkpoint block not found", since truncated lineage
-    * cannot recompute. Bench/Verify drive faces serially today, so the lock
-    * is uncontended there; it turns the latent concurrent-construction
-    * hazard into a correct (serialized) execution instead of a corruption.
+  private def rddId(df: DataFrame): Int = df.queryExecution.logical match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.id
+    case p => throw new IllegalArgumentException(
+      s"not a localCheckpoint()ed frame (plan root ${p.nodeName}): " +
+        "pass the frame localCheckpoint() returned, not one derived from it")
+  }
+
+  private def release(s: SparkSession, id: Int): Unit =
+    s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false))
+
+  /** Release checkpointed frames' blocks (non-blocking). Every frame is
+    * checked before any is released, so a refused call releases nothing.
     */
-  private val attributionLock = new Object
-  def checkpoint(df: DataFrame): (DataFrame, Set[Int]) =
-    attributionLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val ck = df.localCheckpoint()
-      (ck, sc.getPersistentRDDs.keySet.diff(before).toSet)
-    }
+  def free(frames: DataFrame*): Unit =
+    frames.map(f => (f.sparkSession, rddId(f))).foreach { case (s, id) => release(s, id) }
 
-  /** Release a superseded round's checkpoint blocks (non-blocking). */
-  def free(s: SparkSession, ids: Set[Int]): Unit =
-    ids.foreach(id => s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-
-  /** Library-caller leak guard for one-shot (non-round-based) checkpoints:
-    * registering a NEW invocation's ids under the same (session, key) frees
-    * the previous invocation's blocks, so at most one generation stays
-    * pinned per pipeline. Contract: re-invoking a pipeline invalidates the
-    * frame a previous call returned ([[graft.operators.Dedup]] established
-    * the pattern; Bench/Verify additionally sweep `getPersistentRDDs`).
+  /** Library-caller leak guard for one-shot (non-round-based) checkpoints.
+    * A pipeline's returned frame is lazy, so its checkpointed inputs must
+    * stay alive until the caller's terminal action; no point inside the
+    * pipeline can free them. Instead the pipeline registers them under its
+    * (session, key), and the NEXT registration under the same key frees
+    * the previous one, so at most one generation stays pinned per pipeline.
+    * Contract: re-invoking a pipeline invalidates the frame a previous call
+    * returned. `supersede(s, key)` with no frames just frees the previous
+    * generation (a pipeline that refuses its input after checkpointing).
+    * Bench/Verify additionally sweep `getPersistentRDDs` between faces.
+    *
+    * The registry keeps RDD ids, not frames: the ContextCleaner may still
+    * release a generation whose frames became unreachable.
     */
   private val live =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Set[Int]]
-  def supersede(s: SparkSession, key: String, ids: Set[Int]): Unit = {
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Int]]
+  def supersede(s: SparkSession, key: String, frames: DataFrame*): Unit = {
+    val ids = frames.map(rddId)
     // drop entries whose session is gone — otherwise the map retains every
     // stopped SparkSession for the JVM lifetime (r6 ADVICE); their blocks
     // died with the session, only the map entries linger
     live.keys.filter(_._1.sparkContext.isStopped).foreach(live.remove)
-    live.put((s, key), ids).foreach(old => free(s, old))
+    live.put((s, key), ids).foreach(_.foreach(release(s, _)))
   }
 }

@@ -180,10 +180,9 @@ object Retrieval {
     // r21: dl checkpointed once, like the single bm25 face — it feeds the
     // stats aggregate AND the scoring join, which re-ran the full-corpus
     // tokenize pass behind it
-    val (dl, dlIds) = IterCheckpoint.checkpoint(
-      docs.select(col("doc_id"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")))
-    IterCheckpoint.supersede(s, "hybridBatchDocLen", dlIds)
+    val dl = docs.select(col("doc_id"),
+      size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")).localCheckpoint()
+    IterCheckpoint.supersede(s, "hybridBatchDocLen", dl)
     val post = TextAnalysis.postings(s, d)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

@@ -608,17 +608,14 @@ object Similarity {
     // p_pq_scored — the materializing checkpoints, timed). AnnSweepSpec
     // pins row-set equality against the direct per-knob composition.
     import graft.BenchPhases
-    val (exact, exactIds) = BenchPhases.timed("p_truth")(
-      IterCheckpoint.checkpoint(
-        bruteForceTopK(s, d, k).select(col("query_id"), col("neighbor_id"))))
-    val (mp, mpIds) = BenchPhases.timed("p_mp_scored")(
-      IterCheckpoint.checkpoint(multiProbeScoredTagged(s, d)))
-    val (ivf, ivfIds) = BenchPhases.timed("p_ivf_scored")(
-      IterCheckpoint.checkpoint(ivfScoredTagged(s, d, maxProbe = 8)))
-    val (pq, pqIds) = BenchPhases.timed("p_pq_scored")(
-      IterCheckpoint.checkpoint(pqRerankScoredTagged(s, d, maxShortlist = 100)))
-    IterCheckpoint.supersede(s, "annRecallSweep",
-      exactIds ++ mpIds ++ ivfIds ++ pqIds)
+    val exact = BenchPhases.timed("p_truth")(
+      bruteForceTopK(s, d, k).select(col("query_id"), col("neighbor_id")).localCheckpoint())
+    val mp = BenchPhases.timed("p_mp_scored")(multiProbeScoredTagged(s, d).localCheckpoint())
+    val ivf = BenchPhases.timed("p_ivf_scored")(
+      ivfScoredTagged(s, d, maxProbe = 8).localCheckpoint())
+    val pq = BenchPhases.timed("p_pq_scored")(
+      pqRerankScoredTagged(s, d, maxShortlist = 100).localCheckpoint())
+    IterCheckpoint.supersede(s, "annRecallSweep", exact, mp, ivf, pq)
     val methods =
       Seq(4, 6, 8).map(f => s"multiprobe_f$f" ->
         topKPerQuery(mp.filter(col("min_fp") <= f), k)) ++
@@ -831,10 +828,10 @@ object Similarity {
     // r20: materialized once — the groups subtree (a full-vector shuffle)
     // fed both the rep pipeline and the member expansion, so the distinct-
     // vector collapse ran twice
-    val (groups, gIds) = IterCheckpoint.checkpoint(
-      e0.groupBy(col("embedding"))
-        .agg(min(col("vec_id")).as("rep_id"), collect_list(col("vec_id")).as("ids")))
-    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupGroups", gIds)
+    val groups = e0.groupBy(col("embedding"))
+      .agg(min(col("vec_id")).as("rep_id"), collect_list(col("vec_id")).as("ids"))
+      .localCheckpoint()
+    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupGroups", groups)
     val repOut = semanticDedupAllPairs(
       groups.select(col("rep_id").as("vec_id"), col("embedding")),
       centroids, threshold)
@@ -868,8 +865,8 @@ object Similarity {
     // centroid argmax and the embedding scan ran three times (two extra
     // corpus passes at any scale). The (id, vec, nrm, cell) table is
     // exactly the index a deployment stores next to the corpus.
-    val (m, mIds) = IterCheckpoint.checkpoint(e.join(assign, Seq("vec_id")))
-    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupAllPairs", mIds)
+    val m = e.join(assign, Seq("vec_id")).localCheckpoint()
+    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupAllPairs", m)
     val a = m.select(col("centroid_id"), col("vec_id").as("vec_a"),
       col("embedding").as("va"), col("nrm").as("na"))
     val b = m.select(col("centroid_id"), col("vec_id").as("vec_b"),
@@ -1062,11 +1059,11 @@ object Similarity {
     */
   private def contaminationEvalSlice(s: SparkSession, d: String,
       evalMaxVecId: Long, face: String): DataFrame = {
-    val (ev, ids) = IterCheckpoint.checkpoint(
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", norm(col("embedding")))
-        .filter(col("vec_id") < evalMaxVecId))
-    IterCheckpoint.supersede(s, s"contamEvalSlice.$face", ids)
+    val ev = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      .withColumn("nrm", norm(col("embedding")))
+      .filter(col("vec_id") < evalMaxVecId)
+      .localCheckpoint()
+    IterCheckpoint.supersede(s, s"contamEvalSlice.$face", ev)
     ev
   }
 

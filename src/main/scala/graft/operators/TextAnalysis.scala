@@ -634,10 +634,9 @@ object TextAnalysis {
     // (two longs per doc — the textbook second component of a BM25 index
     // next to the postings), so one checkpoint replaces a whole
     // tokenize+scan pass at any scale (guide §2.4/§5).
-    val (dl, dlIds) = graft.operators.IterCheckpoint.checkpoint(
-      docs.select(col("doc_id"),
-        size(tokens(col("text"))).cast("long").as("dl")))
-    graft.operators.IterCheckpoint.supersede(s, "bm25DocLen", dlIds)
+    val dl = docs.select(col("doc_id"),
+      size(tokens(col("text"))).cast("long").as("dl")).localCheckpoint()
+    graft.operators.IterCheckpoint.supersede(s, "bm25DocLen", dl)
     val post = postings(s, d)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

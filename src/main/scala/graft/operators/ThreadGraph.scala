@@ -32,8 +32,7 @@ object ThreadGraph {
       coalesce(col("parent"), col("id")).as("ptr"),
       when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("dist"))
     val rounds = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, maxDepth - 1)))
-    var ids = Set.empty[Int]
-    (1 to rounds).foreach { _ =>
+    (1 to rounds).foreach { round =>
       val hop = state.select(col("id").as("h_id"), col("ptr").as("h_ptr"),
         col("dist").as("h_dist"))
       // dangling parent (h_id missing) → pointer stays put, flagged below
@@ -43,18 +42,17 @@ object ThreadGraph {
       // with the checkpoint). localCheckpoint materializes the (id, ptr,
       // dist) triples — on a resilient cluster prefer
       // `spark.sparkContext.setCheckpointDir` + `.checkpoint()`, same shape.
-      val (next, nextIds) = IterCheckpoint.checkpoint(
-        state.join(hop, state("ptr") === hop("h_id"), "left_outer")
-          .select(
-            col("id"),
-            coalesce(col("h_ptr"), col("ptr")).as("ptr"),
-            (col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist")))
+      val next = state.join(hop, state("ptr") === hop("h_id"), "left_outer")
+        .select(
+          col("id"),
+          coalesce(col("h_ptr"), col("ptr")).as("ptr"),
+          (col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist"))
+        .localCheckpoint()
       // the superseded round's blocks are dead the moment the new checkpoint
-      // exists — release them by RDD id (Dataset.unpersist is a no-op on
-      // checkpoints, see [[IterCheckpoint]])
-      IterCheckpoint.free(next.sparkSession, ids)
+      // exists — release them (Dataset.unpersist is a no-op on checkpoints,
+      // see [[IterCheckpoint]]); round 1's input is the uncheckpointed seed
+      if (round > 1) IterCheckpoint.free(state)
       state = next
-      ids = nextIds
     }
     val roots = comments.filter(col("parent").isNull)
       .select(col("id").as("r_id"))

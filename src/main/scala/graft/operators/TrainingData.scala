@@ -75,10 +75,10 @@ object TrainingData {
     // checkpoint) for both join sides — in a bench record the stamp plus
     // the closure's p_pairs_ckpt/p_labels_r* decompose q_contamination_
     // closure's seconds into its three real terms (r18 verdict task 4)
-    val (grams, _) = graft.BenchPhases.timed("p_grams_ckpt")(
-      IterCheckpoint.checkpoint(
+    val grams = graft.BenchPhases.timed("p_grams_ckpt")(
       docs.select(col("doc_id"), explode(gramStrings).as("g"))
-        .select(col("doc_id"), Dedup.md5Hash60(col("g"), lit(0)).as("gh"))))
+        .select(col("doc_id"), Dedup.md5Hash60(col("g"), lit(0)).as("gh"))
+        .localCheckpoint())
     val evalGrams = grams.filter(col("doc_id") < evalMaxDocId)
       .select(col("gh"), col("doc_id").as("eval_id"))
     val trainGrams = grams.filter(col("doc_id") >= evalMaxDocId)
@@ -346,17 +346,18 @@ object TrainingData {
     // up to 9× per face. Both checkpoints are metadata-width ((doc_id,
     // lang, rk_key, u) / plus n_g) — the §8 "decide with small rows"
     // tables, never the document payloads.
-    val (docs, dIds) = IterCheckpoint.checkpoint(Tables.documents(s, d)
+    val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"))
       .withColumn("rk_key", md5(concat(lit("seed42:"), col("doc_id").cast("string"))))
       .withColumn("u", call_function("graft_hex15", col("rk_key")).cast("double")
-        / lit((1L << 60).toDouble)))
+        / lit((1L << 60).toDouble))
+      .localCheckpoint()
     val sizes = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_g"))
     val bound = least(lit(1.0), lit(pruneFactor.toDouble * k) / col("n_g"))
-    val (candidates, cIds) = IterCheckpoint.checkpoint(
-      docs.join(broadcast(sizes), Seq("lang"))
-        .filter(col("u") <= bound))
-    IterCheckpoint.supersede(s, "sampleTopKPerGroup", dIds ++ cIds)
+    val candidates = docs.join(broadcast(sizes), Seq("lang"))
+      .filter(col("u") <= bound)
+      .localCheckpoint()
+    IterCheckpoint.supersede(s, "sampleTopKPerGroup", docs, candidates)
     // safety net: a group whose survivor count fell below min(k, n_g) is
     // ranked in full (languages-sized frames; empty in practice)
     val deficient = candidates.groupBy(col("lang")).agg(count(lit(1)).as("n_surv"))

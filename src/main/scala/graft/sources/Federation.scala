@@ -38,8 +38,8 @@ object Federation {
   /** Each staged database is a full in-heap copy of its source slice, and a
     * TrieMap keyed by session would otherwise retain it for the JVM lifetime
     * even after the session stops (r8 ADVICE) — sweep stopped sessions'
-    * entries and drop their Derby dbs before staging a new one (mirroring
-    * IterCheckpoint.supersede's eager-release discipline).
+    * entries and drop their Derby dbs before staging a new one (the same
+    * stopped-session sweep IterCheckpoint.supersede runs on its registry).
     */
   private def evictStopped(): Unit =
     Seq(staged, stagedFact).foreach { cache =>

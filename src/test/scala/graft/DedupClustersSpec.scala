@@ -10,7 +10,7 @@ class DedupClustersSpec extends SparkSpecBase {
   import spark.implicits._
 
   /** Eagerly collected multiset of a pair frame's rows. The pair pipelines'
-    * checkpoint contract (Dedup.supersede) invalidates the PREVIOUS call's
+    * checkpoint contract (IterCheckpoint.supersede) invalidates the PREVIOUS call's
     * lazy frame on a repeat invocation, so adversarial A-vs-B comparisons
     * must land each result before requesting the next.
     */

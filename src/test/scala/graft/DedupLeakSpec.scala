@@ -80,6 +80,24 @@ class DedupLeakSpec extends SparkSpecBase {
     }
   }
 
+  test("lshRecall double invocation keeps pinned-RDD count flat") {
+    assertFlat("lshRecall") {
+      val f = Dedup.lshRecall(spark, Sf); (f, f.count())
+    }
+  }
+
+  test("lshBandingSweep double invocation keeps pinned-RDD count flat") {
+    assertFlat("lshBandingSweep") {
+      val f = Dedup.lshBandingSweep(spark, Sf); (f, f.count())
+    }
+  }
+
+  test("annRecallSweep double invocation keeps pinned-RDD count flat") {
+    assertFlat("annRecallSweep") {
+      val f = graft.operators.Similarity.annRecallSweep(spark, Sf); (f, f.count())
+    }
+  }
+
   test("pageRank double invocation keeps pinned-RDD count flat") {
     assertFlat("pageRank") {
       val f = graft.operators.Graphs.pageRank(spark, Sf); (f, f.count())

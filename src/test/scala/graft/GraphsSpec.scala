@@ -205,9 +205,9 @@ class GraphsSpec extends SparkSpecBase {
     assert(!planStr.contains("scalar-subquery"),
       s"sketch must not ride a driver-collected scalar subquery:\n$planStr")
     // and the file-backed prune still yields the exact count (vs broadcast
-    // path). Materialize BEFORE the second invocation: supersede frees the
-    // first call's checkpoint blocks (the documented repeat-invocation
-    // contract).
+    // path). Materialize BEFORE the second invocation: IterCheckpoint.
+    // supersede frees the first call's checkpoint blocks (the documented
+    // repeat-invocation contract).
     val got = df.head().getLong(0)
     val expected = Graphs.triangleCountEdges(edges).head().getLong(0)
     assert(got == expected && expected > 0L)

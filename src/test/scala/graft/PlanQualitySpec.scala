@@ -111,7 +111,7 @@ class PlanQualitySpec extends SparkSpecBase {
     val allowed = Set("sset", "set_a", "set_b")
     def offenders(df: DataFrame) = shuffleOutputs(df).filter(out =>
       arrayCols(out).nonEmpty && !out.exists(a => allowed.contains(a.name)))
-    val (g, ids) = graft.operators.Dedup.minhashRepGraph(
+    val g = graft.operators.Dedup.minhashRepGraph(
       spark, Sf, graft.operators.Dedup.HotBandCap)
     try {
       assert(shuffleOutputs(g.repPairs).nonEmpty)
@@ -121,7 +121,7 @@ class PlanQualitySpec extends SparkSpecBase {
       val enumOff = offenders(q("q_dedup_minhash_lsh"))
       assert(enumOff.isEmpty,
         s"array outside the verify set joins (enumeration): ${enumOff.map(arrayCols)}")
-    } finally graft.operators.IterCheckpoint.free(spark, ids)
+    } finally graft.operators.IterCheckpoint.free(g.keyed, g.reps)
   }
 
   test("simhash pairs move arrays only in the grouped-expansion exchanges") {
