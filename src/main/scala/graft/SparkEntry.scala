@@ -270,7 +270,10 @@ object SparkEntry {
     //    days, final files) flush every real window: the first advances the
     //    watermark past all real window ends, the second's batch performs
     //    the emission that advance unlocked (watermark updates bind from the
-    //    NEXT batch, and AvailableNow runs no trailing no-data batch).
+    //    NEXT batch). Spark 4.1 does end AvailableNow with one no-data batch
+    //    once the watermark moved (MultiBatchStreamSpec pins it), but only
+    //    while `spark.sql.streaming.noDataMicroBatches.enabled` holds; the
+    //    second sentinel keeps the flush independent of that conf.
     //    Sentinel windows never emit (the watermark stops 1 h short of the
     //    last one) and their event_type is filtered out regardless.
     //    Settled append output = exactly the batch tumbling aggregation.
@@ -1388,9 +1391,11 @@ object SparkEntry {
     *  - `extraLast`: frames written as the final (newest-mtime) files, in
     *    order — per-user or global sentinels that close sessions / push the
     *    watermark past the last real window. Watermark updates take effect
-    *    for the NEXT batch and AvailableNow runs no trailing no-data batch,
-    *    so a sentinel whose advance must itself be emitted needs a second,
-    *    later sentinel behind it.
+    *    for the NEXT batch, and the trailing no-data batch AvailableNow runs
+    *    after a watermark move exists only while
+    *    `spark.sql.streaming.noDataMicroBatches.enabled` holds, so a
+    *    sentinel whose advance must itself be emitted gets a second, later
+    *    sentinel behind it.
     *
     * Read via [[Tables.eventsRawNanos]]: ts is canonicalized to BIGINT
     * nanos whatever the testdata's physical encoding, so the range math
@@ -1454,21 +1459,27 @@ object SparkEntry {
     * directions, so no constant serves both scales — the r11 phase
     * attribution measured both regimes:
     *
-    *  - small batches are COMMIT-I/O-bound: every micro-batch pays
+    *  - small batches are COMMIT-bound: every micro-batch pays
     *    per-partition state-store open/commit on every stateful operator
-    *    (a stream-stream join keeps four stores per partition), ~66 ms per
-    *    commit of KILOBYTE state at sf0.1 — q_stream_left_join summed
-    *    14.8 s of commits at 8 partitions; 4 cut that 3.5× with addBatch
-    *    flat, and fewer partitions also shrink the surface exposed to
-    *    co-tenant disk stalls (the r10 driver-window inflation,
-    *    q_stream_tumbling 4.3 → 25.0 s with unchanged code);
+    *    (a stream-stream join keeps four stores per partition). r11 put it
+    *    at ~66 ms per commit of KILOBYTE state at sf0.1 (q_stream_left_join
+    *    summed 14.8 s of commits at 8 partitions; 4 cut that 3.5× with
+    *    addBatch flat), but that was mostly Hadoop's `file:` forking
+    *    `chmod`/`readlink` per checkpoint file, not I/O. With
+    *    [[graft.sources.NioRawLocalFileSystem]] a traced perfbench
+    *    `llm_ingest` run (q_stream_dedup, 5 batches × 4 partitions, sf0.01,
+    *    4 vCPUs) sums `streaming.state_commit_s` 0.11 s, down from 1.53 s:
+    *    ~6 ms per commit, down from ~76 ms. Fewer partitions still mean
+    *    fewer commits and a smaller surface for co-tenant disk stalls (the
+    *    r10 driver-window inflation, q_stream_tumbling 4.3 → 25.0 s with
+    *    unchanged code);
     *  - bulk batches are STATE-UPDATE-bound: at the 100× replica the join
     *    faces summed ~1,225 s of state-update task time per query, and a
     *    fixed 4 funneled it through 4 tasks (q_stream_join 179 s at 8 →
     *    357 s at 4) while commit I/O was trivial (2.8 s).
     *
     * Hence ~4 MB of staged landing per partition, clamped to [4, 32]:
-    * sf0.1 landings (≈2 MB) sit at the commit-I/O floor, the 100× landings
+    * sf0.1 landings (≈2 MB) sit at the commit floor, the 100× landings
     * (≈180–400 MB) get the session's full width. A production cluster
     * sizes this knob to ITS batch volume the same way — deliberately, per
     * stream, not from the batch-side default. Deterministic per staging

@@ -146,6 +146,10 @@ object Tables {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // `file:` through java.nio instead of forked chmod/readlink
+      // (graft.sources.LocalFs), for FileSystem and FileContext callers alike
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
   /** Apply `SPARK_GRAFT_CONF` ("k=v,k=v") session-conf overrides — shared
     * by Bench AND Verify so a gate-branch demo (e.g. an overridden

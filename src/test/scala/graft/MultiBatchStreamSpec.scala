@@ -69,6 +69,32 @@ class MultiBatchStreamSpec extends SparkSpecBase {
     spark.catalog.dropTempView("mb_dedup")
   }
 
+  test("AvailableNow runs one trailing no-data batch after the dedup slices") {
+    // the last slice's batch advances the watermark, so Spark runs one more
+    // batch, with no input, to evict state under it; without no-data
+    // batches the run is exactly one batch per slice
+    val dir = java.nio.file.Files.createTempDirectory("graft_mb_nodata")
+    SparkEntry.stageEventSlices(spark, Sf, dir, SparkEntry.StreamSlices,
+      dupWithinFile = true, overlapDupHours = 1.0)
+    def batches(s: org.apache.spark.sql.SparkSession, sink: String) = {
+      val q = EventStreamJob.runAvailableNow(
+        EventStreamJob.dedupStream(EventStreamJob.readEventStream(
+          s, dir.toString, maxFilesPerTrigger = Some(1))).select(col("event_id")),
+        sink, "append")
+      q.stop()
+      s.catalog.dropTempView(sink)
+      q.recentProgress.toSeq
+    }
+    val on = batches(spark, "mb_nodata_on")
+    assert(on.length == SparkEntry.StreamSlices + 1, on.map(_.numInputRows))
+    assert(on.last.numInputRows == 0)
+    assert(on.init.forall(_.numInputRows > 0), on.map(_.numInputRows))
+    val noNoData = spark.newSession()
+    noNoData.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val off = batches(noNoData, "mb_nodata_off")
+    assert(off.length == SparkEntry.StreamSlices, off.map(_.numInputRows))
+  }
+
   test("sessions spanning slice boundaries continue from state; timeouts close the rest") {
     val streamed = SparkEntry.queries("q_stream_sessions")(spark, Sf)
     def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String, Long, Double)] =
