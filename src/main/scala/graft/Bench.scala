@@ -45,20 +45,6 @@ object Bench {
     val globalBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "3000").toLong
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // deployment-sized graph knob (Graphs.broadcastMaxEdgesFor): the 100×
-    // replica run raises the triangle edge-iterator admission cap to what
-    // this single 128 GiB JVM affords; the artifact records the value
-    sys.env.get("SPARK_GRAFT_TRI_BCAST_EDGES").foreach { v =>
-      spark.conf.set("spark.graft.triangle.broadcastMaxEdges", v)
-      System.err.println(s"[bench] triangle broadcastMaxEdges=$v")
-    }
-    // wedge-shuffle scratch budget (Graphs.availableScratchBytes): probes
-    // use it to run the spill gate against a deployment-sized scratch
-    // instead of this host's whole free disk — the 300× gate demo's knob
-    sys.env.get("SPARK_GRAFT_TRI_SCRATCH_BYTES").foreach { v =>
-      spark.conf.set(graft.operators.Graphs.ScratchConfKey, v)
-      System.err.println(s"[bench] triangle scratchBytes=$v")
-    }
     // generic session-conf overrides ("k=v,k=v") so gate-branch demos and
     // deployment-sized budgets don't each need a bespoke env knob; shared
     // with Verify ([[Tables.applyEnvConfOverrides]] — key validation and
@@ -175,8 +161,7 @@ object Bench {
       // window; leaving those blocks behind would pollute every later
       // query's session and compound over a 50-query run)
       try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.operators.IterCheckpoint.releaseAll(spark)
         // ContextCleaner only reclaims broadcast/shuffle state when weak
         // references are processed — i.e. when a GC runs. Under the 32g heap
         // full GCs essentially never happen on their own, so ~50 queries of

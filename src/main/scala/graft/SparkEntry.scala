@@ -466,7 +466,6 @@ object SparkEntry {
       val cohort = Tables.events(s, d).groupBy(col("user_id"))
         .agg(date_trunc("DAY", min(col("ts"))).as("cohort_day"))
         .localCheckpoint()
-      graft.operators.IterCheckpoint.supersede(s, "streamEnrichCohort", cohort)
       settledStream(s,
         EventStreamJob.readEventStream(s, landing, maxFilesPerTrigger = Some(1))
           .repartition(col("user_id"))
@@ -869,7 +868,6 @@ object SparkEntry {
       // — inside EVERY micro-batch's screen action. One checkpoint of the
       // evals×nprobe-row table pays it once per face invocation.
       val probes = Similarity.contaminationEvalProbes(s, d).localCheckpoint()
-      graft.operators.IterCheckpoint.supersede(s, "streamContamProbes", probes)
       val root = stagedLanding("semcontam_mb", d) { dir =>
         java.nio.file.Files.createDirectory(dir.resolve("landing"))
         stageVecSlices(
@@ -1587,7 +1585,6 @@ object SparkEntry {
     // r20: materialized once — the merged dimension fed both stateAt
     // branches, so the whole SCD2 merge ran twice per face
     val dim = scd2CustomersMerged(s, d).localCheckpoint()
-    graft.operators.IterCheckpoint.supersede(s, "scd2AsOf", dim)
     def stateAt(t: String): DataFrame = {
       val ts = lit(t).cast("timestamp_ntz")
       dim.filter(col("valid_from") <= ts &&

@@ -49,10 +49,8 @@ object Verify {
       }
       // same query isolation as Bench: a query's internal persists /
       // checkpoints must not linger into the next query's run
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
+      try graft.operators.IterCheckpoint.releaseAll(spark)
+      catch { case _: Throwable => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

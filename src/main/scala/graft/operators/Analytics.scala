@@ -387,7 +387,6 @@ object Analytics {
       .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .distinct()
       .localCheckpoint()
-    IterCheckpoint.supersede(s, "activeUsers", ud)
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("n_dau"))
     val spine = ud.select(col("day")).distinct()
     val wau = broadcast(spine.select(col("day").as("d0")))
@@ -948,7 +947,6 @@ object Analytics {
     // checkpoint is distinct-price-sized (one (double, double, long) row
     // per price level), the "decide with small rows" table.
     val perPrice = skylinePerPrice(s, d, cs).localCheckpoint()
-    IterCheckpoint.supersede(s, "skyline", perPrice)
     val wIn = Window.partitionBy(col("_bkt")).orderBy(col("price"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = perPrice.withColumn("_runmax", max(col("pq")).over(wIn))

@@ -21,15 +21,12 @@ import org.apache.spark.sql.functions._
   * all-pairs join a naive design would need.
   *
   * Checkpoint lifetime: a pair pipeline `localCheckpoint`s the inputs its
-  * lazy result reads and registers those checkpointed frames under its own
-  * key with [[IterCheckpoint.supersede]]. A NEW invocation of the same
-  * pipeline on the same session frees the previous one's blocks, so a
-  * long-lived library caller pins at most one generation per pipeline
-  * instead of one per call. Calling a pipeline again invalidates the
-  * PREVIOUS call's returned frame (its checkpointed inputs are gone);
-  * callers that need overlapping lifetimes should go through
-  * Bench/Verify-style explicit sweeps of the session's persistent RDDs.
-  * `DedupLeakSpec` asserts the flat double-invocation count.
+  * lazy result reads; they live until the face boundary
+  * ([[IterCheckpoint.releaseAll]]) or until the ContextCleaner reclaims
+  * them once the returned frame is unreachable. Calling a pipeline again
+  * never invalidates an earlier call's frame; a pipeline that refuses its
+  * input frees what it checkpointed before it throws (`DedupLeakSpec` and
+  * `IterCheckpointSpec` pin each).
   */
 object Dedup {
 
@@ -125,9 +122,7 @@ object Dedup {
     * expansions; the band join carries only (band_key, rep_id); candidate
     * pairs are deduped before sets are joined back, so each distinct set
     * crosses the wire once per surviving pair side, not once per duplicate
-    * document. Cleanup contract: a repeat invocation supersedes the previous
-    * call's checkpoint blocks (see [[Dedup]]); Bench/Verify additionally
-    * sweep the session's persistent RDDs between queries. Same contract for
+    * document. Checkpoint lifetime as in [[Dedup]]; same for
     * [[simhashPairs]] and [[ngramJaccardPairs]].
     *
     * Measured alternative (rejected): verifying via a candidate-restricted
@@ -302,16 +297,15 @@ object Dedup {
 
   /** Gate + enumeration tail of [[minhashLshPairs]] over an already-built
     * rep graph — r20 factoring so [[lshRecall]] can feed it a front built
-    * from the shared shingle base. `front` are the checkpointed frames this
-    * call should own (register/free); any the caller keeps (the shared
-    * base) must NOT be in it.
+    * from the shared shingle base. `front` are the checkpointed frames a
+    * refusal frees along with the rep pairs; any the caller keeps (the
+    * shared base) must NOT be in it.
     */
   private[graft] def minhashLshPairsOver(s: SparkSession, g: MinhashRepGraph,
       front: DataFrame*): DataFrame = {
     // materialize the verified rep pairs ONCE: the gate's sizing aggregate
     // and the member expansion both read them
     val repPairs = g.repPairs.localCheckpoint()
-    IterCheckpoint.supersede(s, "minhashLshPairs", front :+ repPairs: _*)
     val members = g.keyed.select(col("skey"), col("doc_id"))
     val sizes = g.keyed.groupBy(col("skey")).agg(count(lit(1)).as("m"))
     // EXACT predicted output: Σ m_a·m_b over verified cross-set rep pairs
@@ -333,7 +327,7 @@ object Dedup {
     if (predicted > budget) {
       // refusal leaves no pinned generation behind (the simhash/triangle
       // gate discipline): release the checkpoints before throwing
-      IterCheckpoint.supersede(s, "minhashLshPairs")
+      IterCheckpoint.free(front :+ repPairs: _*)
       throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
         gate.getLong(3), "minhashLshPairs")
     }
@@ -390,7 +384,6 @@ object Dedup {
       .localCheckpoint()
     val bReps = repsOf(true)
     val cReps = repsOf(false)
-    IterCheckpoint.supersede(s, "incrementalNearDup", keyed, bReps, cReps)
     val banded = repBands(bReps).withColumn("probe", lit(true))
       .unionByName(repBands(cReps).withColumn("probe", lit(false)))
     val popln = Window.partitionBy(col("band"), col("band_key"))
@@ -445,7 +438,6 @@ object Dedup {
     val bReps = bKeyed.groupBy(col("skey"))
       .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
       .localCheckpoint()
-    IterCheckpoint.supersede(s, "incrementalNearDupProbeIndex", bKeyed, bReps)
     // rep-level corpus rows from the stored index: min member per distinct
     // set (all members of a skey carry identical band rows)
     val cIdx = idx.groupBy(col("skey"), col("band"), col("band_key"))
@@ -544,7 +536,6 @@ object Dedup {
     val repsCk = maxDf.map(_ => ngramReps(keyed).localCheckpoint())
     val repPairs = ngramRepPairs(repsCk.getOrElse(ngramReps(keyed)), threshold,
       hotShingleCap, maxDf)
-    IterCheckpoint.supersede(s, "ngramJaccardPairs", keyed +: repsCk.toSeq: _*)
     ngramExpandPairs(keyed, repPairs)
   }
 
@@ -680,7 +671,6 @@ object Dedup {
     val truth = ngramExpandPairs(nKeyed, truthPairs)
     val g = minhashRepGraphKeyed(
       base.select(col("doc_id"), col("sset"), col("skey")), HotBandCap)
-    IterCheckpoint.supersede(s, "lshRecall", base, g.reps)
     val found = minhashLshPairsOver(s, g)
       .select(col("doc_a"), col("doc_b"), lit(1).as("hit"))
     truth
@@ -810,7 +800,6 @@ object Dedup {
         .distinct()
         .localCheckpoint()
     }
-    IterCheckpoint.supersede(s, "lshBandingSweep", base, reps, sigs, candAll, truthRep)
     import s.implicits._
     truthRep.crossJoin(broadcast(configs.toDF("bands", "rows_per_band")))
       .join(candAll.withColumn("hit", lit(1)),
@@ -1015,7 +1004,6 @@ object Dedup {
       .localCheckpoint()
     val fpairs = simhashFingerprintPairs(groups.select(col("h")), maxHamming, hotBandCap)
       .localCheckpoint()
-    IterCheckpoint.supersede(s, pipeline, groups, fpairs)
     val sizes = groups.select(col("h"), size(col("ids")).cast("long").as("m"))
     // both sizing aggregates in ONE action (r20): each is a 1-row frame off
     // the same checkpointed inputs, and two head() calls paid two full
@@ -1034,7 +1022,7 @@ object Dedup {
     if (predicted > budget) {
       // refusal leaves no pinned generation behind (the triangle gate's
       // clean-free discipline): release both checkpoints before throwing
-      IterCheckpoint.supersede(s, pipeline)
+      IterCheckpoint.free(groups, fpairs)
       throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
         gate.getLong(3), pipeline)
     }
@@ -1188,7 +1176,6 @@ object Dedup {
       .filter(col("id") > col("id1"))
       .groupBy(col("h")).agg(min(col("id")).as("id2"))
     val stats = base.join(second, Seq("h"), "left").localCheckpoint()
-    IterCheckpoint.supersede(s, "simhashPairStats", fps, stats)
     // packed nonnegative 60-bit long -> the q_simhash bit-string form; two
     // builtins, not 60 when/concat branches (r13 review simplification)
     def bits(c: Column): Column = lpad(bin(c), SimHashBits, "0")
@@ -1234,7 +1221,6 @@ object Dedup {
   def simhashRecall(s: SparkSession, d: String): DataFrame = {
     // one tokenize+majority-vote pass, reused by truth (twice) and found
     val fps = simhashLong(s, d).select(col("h")).distinct().localCheckpoint()
-    IterCheckpoint.supersede(s, "simhashRecall", fps)
     val xor = col("h_a").bitwiseXOR(col("h_b"))
     val truth = fps.select(col("h").as("h_a"))
       .crossJoin(broadcast(fps.select(col("h").as("h_b"))))
@@ -1282,7 +1268,6 @@ object Dedup {
     * only move existing labels — so the pointer-jump inner join is total.)
     */
   def clusterLabels(pairs: DataFrame, maxRounds: Int = 16): DataFrame = {
-    val sess = pairs.sparkSession
     val tStart = System.nanoTime()
     def dbg(msg: => String): Unit = if (sys.env.contains("GRAFT_DEBUG"))
       System.err.println(f"[clusterLabels] ${(System.nanoTime() - tStart) / 1e9}%7.2fs $msg")
@@ -1350,7 +1335,7 @@ object Dedup {
       val s = obs.get("lsum").asInstanceOf[Long]
       converged = s == prevSum
       prevSum = s
-      // release the superseded round's checkpoint blocks NOW (through
+      // release the previous round's checkpoint blocks NOW (through
       // IterCheckpoint — Dataset.unpersist is a no-op on checkpoints)
       IterCheckpoint.free(labels)
       labels = next
@@ -1363,11 +1348,9 @@ object Dedup {
       dbg(f"round $round sum $s converged $converged ${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     graft.BenchPhases.add("n_label_rounds", round.toDouble)
+    // the FINAL round's checkpoint outlives this call: the returned frame
+    // reads it
     IterCheckpoint.free(p)
-    // the FINAL round's checkpoint must outlive this call (the returned
-    // frame reads it); register it so the next clusterLabels invocation on
-    // this session supersedes it — same contract as the pair pipelines
-    IterCheckpoint.supersede(sess, "clusterLabels", labels)
     dbg("iteration complete, returning labels")
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
@@ -1408,7 +1391,6 @@ object Dedup {
   def dedupClustersRep(s: SparkSession, d: String, maxRounds: Int = 16,
       hotBandCap: Int = HotBandCap): DataFrame = {
     val g = minhashRepGraph(s, d, hotBandCap)
-    IterCheckpoint.supersede(s, "dedupClustersRep", g.keyed, g.reps)
     val repLabels = clusterLabels(
       g.repPairs.select(col("rid_a").as("doc_a"), col("rid_b").as("doc_b")),
       maxRounds)

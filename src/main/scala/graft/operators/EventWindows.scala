@@ -167,7 +167,6 @@ object EventWindows {
       .select(col("p.t").as("t"), col("p.d").as("d"))
       .withColumn("_bkt", RangeBuckets.bucketByCuts(col("t"), cs))
       .localCheckpoint()
-    IterCheckpoint.supersede(ses.sparkSession, "maxConcurrency", pts)
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_bkt")).orderBy(col("t"), col("d"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -329,7 +328,6 @@ object EventWindows {
         .select(col("user_id"), col("t"), (col("t") - col("pt")).as("lag_us"))
         .localCheckpoint()
     }
-    IterCheckpoint.supersede(ev.sparkSession, s"funnelChain-${boundUs.isDefined}", chain: _*)
     chain.zip("signup" +: rest).zipWithIndex.map { case ((df, name), i) =>
       df.agg(count(lit(1)).as("n_users"), sum(col("lag_us")).as("sum_lag_us"))
         .select(lit((i + 1).toLong).as("stage"), lit(name).as("event_type"),

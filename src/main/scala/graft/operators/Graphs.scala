@@ -290,7 +290,6 @@ object Graphs {
     // distinct shuffle ran twice (two corpus passes at any scale for the
     // one table the probe actually needs)
     val inc = heavyPairIncidence(s, d, partKeys).localCheckpoint()
-    IterCheckpoint.supersede(s, "coOrderHeavyTopK", inc)
     // pair membership via a broadcast join on BOTH key columns, not a
     // packed (u << 32) | v long: partkeys exceed 2^32 at the 100 TB
     // target, where packing stops being injective and a colliding
@@ -387,7 +386,6 @@ object Graphs {
       .groupBy(col("sample_mod"), col("n_orders"))
       .agg(count(lit(1)).as("n_pairs"), count(col("hit")).as("n_cand"),
         (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
-    IterCheckpoint.supersede(s, "coOrderHeavyRecall", stats)
     out
   }
 
@@ -598,14 +596,12 @@ object Graphs {
     * shape): there the per-round join shuffles 2m rows regardless, and
     * paying one adjacency checkpoint beats re-shuffling the degree join
     * every round — the correct 100 TB plan.
-    * Leak contract: the checkpointed edges, degrees, adjacency (shuffle
-    * path only) and last rank table are registered under "pageRank"
-    * ([[IterCheckpoint.supersede]]), so a repeat invocation frees the
-    * previous call's; each round frees its predecessor's rank checkpoint
-    * as soon as the successor is materialized.
+    * Checkpoint lifetimes: each round frees its predecessor's rank
+    * checkpoint as soon as the successor is materialized; the edges,
+    * degrees, adjacency (shuffle path only) and last rank table live until
+    * the face boundary ([[IterCheckpoint]]).
     */
   def pageRankEdges(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
     val edg = timed("pagerank", "edge_ckpt")(
       edges.select(col("u"), col("v")).localCheckpoint())
     def dir = edg.select(col("u").as("src"), col("v").as("dst"))
@@ -630,8 +626,6 @@ object Graphs {
       if (i > 1) IterCheckpoint.free(rank) // predecessor dead once successor lives
       ck
     }
-    val lastRank = if (iters > 0) Some(result) else None
-    IterCheckpoint.supersede(s, "pageRank", Seq(edg, deg) ++ adjCk ++ lastRank: _*)
     result
   }
 
@@ -845,7 +839,7 @@ object Graphs {
     val edg = timed("triangle", "edge_ckpt")(edges.localCheckpoint())
     val nEdges = edg.count()
     if (nEdges == 0) {
-      IterCheckpoint.supersede(s, "triangleCount", edg)
+      IterCheckpoint.free(edg) // the result below reads no checkpoint
       return s.range(1).select(lit(0L).as("n_triangles"))
     }
     val bc = nEdges <= broadcastMaxEdges
@@ -853,12 +847,8 @@ object Graphs {
     // broadcast path: the result plan reads only `ori` (the adjacency and
     // both join sides derive from it), so edg's blocks are dead once ori is
     // materialized — free them NOW instead of leaving them to the GC-driven
-    // cleaner (DedupLeakSpec pins the flat-pinned-RDD contract). The
-    // shuffle paths keep edg: it IS the closing probe set.
-    if (bc) {
-      IterCheckpoint.free(edg)
-      IterCheckpoint.supersede(s, "triangleCount", ori)
-    } else IterCheckpoint.supersede(s, "triangleCount", edg, ori)
+    // cleaner. The shuffle paths keep edg: it IS the closing probe set.
+    if (bc) IterCheckpoint.free(edg)
     // the gate job: exact wedge volume Σ C(outdeg, 2) in one aggregate over
     // the checkpointed DAG (n-row shuffle of longs) — or the memoized
     // per-dataset measurement when a prior face already ran it
@@ -932,7 +922,6 @@ object Graphs {
       val adjArr = ori.groupBy(col("s"))
         .agg(array_sort(collect_list(col("t"))).as("nbr"))
         .localCheckpoint()
-      IterCheckpoint.supersede(s, "triangleCountAdj", adjArr)
       // counting is graft_sorted_intersect_n — a codegen'd two-pointer
       // merge over the sorted adjacency arrays (r12): the old
       // size(array_intersect) built a per-ROW hash set of n1 (Σ od(s)
@@ -1134,7 +1123,8 @@ object Graphs {
         val r = triangleCountApproxEdges(edg, ip, maxRaises = 0).head()
         (r.getLong(0), r.getLong(1), r.getBoolean(2))
       }
-    IterCheckpoint.supersede(s, "triangleAuto", edg +: exactOri.toSeq: _*)
+    // the result is literals: no checkpoint outlives this call
+    IterCheckpoint.free(edg +: exactOri.toSeq: _*)
     s.range(1).select(
       lit(wedges).as("n_wedges"),
       lit(if (ip == 0) "exact" else "sampled").as("regime"),

@@ -22,6 +22,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Any other frame — one derived from a checkpoint, or never checkpointed —
   * is refused with an `IllegalArgumentException`, so a caller cannot
   * release blocks that belong to another pipeline.
+  *
+  * Lifetimes. A round-based dataflow frees each round's checkpoint with
+  * [[free]] once its successor is materialized. A one-shot checkpoint — an
+  * input a pipeline's lazy result still reads — lives until the face
+  * boundary calls [[releaseAll]]; a library caller that never calls it
+  * leaves it to the ContextCleaner, which unpersists the checkpoint's RDD
+  * once its frames are unreachable (`spark.cleaner.periodicGC.interval`,
+  * set in `Tables.sessionBuilder`). Re-invoking a pipeline never
+  * invalidates a frame an earlier call returned (`DedupLeakSpec`).
   */
 private[graft] object IterCheckpoint {
 
@@ -41,28 +50,13 @@ private[graft] object IterCheckpoint {
   def free(frames: DataFrame*): Unit =
     frames.map(f => (f.sparkSession, rddId(f))).foreach { case (s, id) => release(s, id) }
 
-  /** Library-caller leak guard for one-shot (non-round-based) checkpoints.
-    * A pipeline's returned frame is lazy, so its checkpointed inputs must
-    * stay alive until the caller's terminal action; no point inside the
-    * pipeline can free them. Instead the pipeline registers them under its
-    * (session, key), and the NEXT registration under the same key frees
-    * the previous one, so at most one generation stays pinned per pipeline.
-    * Contract: re-invoking a pipeline invalidates the frame a previous call
-    * returned. `supersede(s, key)` with no frames just frees the previous
-    * generation (a pipeline that refuses its input after checkpointing).
-    * Bench/Verify additionally sweep `getPersistentRDDs` between faces.
-    *
-    * The registry keeps RDD ids, not frames: the ContextCleaner may still
-    * release a generation whose frames became unreachable.
+  /** Release everything the session holds persistent: the cache manager's
+    * entries and every persisted RDD, checkpoints included (non-blocking).
+    * This is the face boundary Bench, Verify and DeterminismSweep run
+    * between faces.
     */
-  private val live =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Int]]
-  def supersede(s: SparkSession, key: String, frames: DataFrame*): Unit = {
-    val ids = frames.map(rddId)
-    // drop entries whose session is gone — otherwise the map retains every
-    // stopped SparkSession for the JVM lifetime (r6 ADVICE); their blocks
-    // died with the session, only the map entries linger
-    live.keys.filter(_._1.sparkContext.isStopped).foreach(live.remove)
-    live.put((s, key), ids).foreach(_.foreach(release(s, _)))
+  def releaseAll(s: SparkSession): Unit = {
+    s.catalog.clearCache()
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 }

@@ -182,7 +182,6 @@ object Retrieval {
     // tokenize pass behind it
     val dl = docs.select(col("doc_id"),
       size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")).localCheckpoint()
-    IterCheckpoint.supersede(s, "hybridBatchDocLen", dl)
     val post = TextAnalysis.postings(s, d)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

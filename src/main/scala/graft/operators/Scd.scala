@@ -64,8 +64,7 @@ object Scd {
     // key emits its closed and reopened rows from one joined row; every
     // full-outer row satisfies at least one branch, so nothing is dropped.
     // Row multiset identical to the old three-branch union (no checkpoint:
-    // a chained re-merge consumes the returned frame, so pinned blocks
-    // would not survive the IterCheckpoint supersede discipline).
+    // the joined row is read once).
     def rowStruct(keyC: Column, trackedC: Seq[Column], vf: Column,
         vt: Column, ic: Column): Column =
       struct((keyC.as(key) +: tracked.zip(trackedC).map { case (n, c) => c.as(n) }

@@ -615,7 +615,6 @@ object Similarity {
       ivfScoredTagged(s, d, maxProbe = 8).localCheckpoint())
     val pq = BenchPhases.timed("p_pq_scored")(
       pqRerankScoredTagged(s, d, maxShortlist = 100).localCheckpoint())
-    IterCheckpoint.supersede(s, "annRecallSweep", exact, mp, ivf, pq)
     val methods =
       Seq(4, 6, 8).map(f => s"multiprobe_f$f" ->
         topKPerQuery(mp.filter(col("min_fp") <= f), k)) ++
@@ -831,7 +830,6 @@ object Similarity {
     val groups = e0.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("rep_id"), collect_list(col("vec_id")).as("ids"))
       .localCheckpoint()
-    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupGroups", groups)
     val repOut = semanticDedupAllPairs(
       groups.select(col("rep_id").as("vec_id"), col("embedding")),
       centroids, threshold)
@@ -866,7 +864,6 @@ object Similarity {
     // corpus passes at any scale). The (id, vec, nrm, cell) table is
     // exactly the index a deployment stores next to the corpus.
     val m = e.join(assign, Seq("vec_id")).localCheckpoint()
-    IterCheckpoint.supersede(emb.sparkSession, "semanticDedupAllPairs", m)
     val a = m.select(col("centroid_id"), col("vec_id").as("vec_a"),
       col("embedding").as("va"), col("nrm").as("na"))
     val b = m.select(col("centroid_id"), col("vec_id").as("vec_b"),
@@ -1054,18 +1051,15 @@ object Similarity {
   /** The benchmark-suite-sized eval slice (vec_id < evalMaxVecId) with its
     * norm, checkpointed once (r21): the recall/sweep faces consume it as
     * BOTH the brute-force truth side and the probe-ranking input — two
-    * separate eval-filtered corpus scans before. `face` keys the checkpoint,
-    * so building one face never frees the other's live slice.
+    * separate eval-filtered corpus scans before. Each call checkpoints its
+    * own slice, so building one face never touches another face's.
     */
   private def contaminationEvalSlice(s: SparkSession, d: String,
-      evalMaxVecId: Long, face: String): DataFrame = {
-    val ev = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      evalMaxVecId: Long): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .withColumn("nrm", norm(col("embedding")))
       .filter(col("vec_id") < evalMaxVecId)
       .localCheckpoint()
-    IterCheckpoint.supersede(s, s"contamEvalSlice.$face", ev)
-    ev
-  }
 
   /** ONE corpus pass serving truth AND screen for the recall/sweep faces
     * (r21, VERDICT r20 task 4 — the embeddings ×4/×6 scans): every corpus
@@ -1082,9 +1076,9 @@ object Similarity {
     * SemanticContaminationSweepSpec.
     */
   private def contaminationPairsRanked(s: SparkSession, d: String,
-      evalMaxVecId: Long, maxProbe: Int, face: String): DataFrame = {
+      evalMaxVecId: Long, maxProbe: Int): DataFrame = {
     val trained = trainedCentroids(s, d, IvfCentroids, iters = 3)
-    val evals = contaminationEvalSlice(s, d, evalMaxVecId, face)
+    val evals = contaminationEvalSlice(s, d, evalMaxVecId)
     val probes = contaminationEvalProbesRankedOver(evals, trained)
       .filter(col("rn") <= maxProbe)
       .select(col("centroid_id").as("p_cell"), col("eval_id").as("p_eval"),
@@ -1150,7 +1144,7 @@ object Similarity {
     // window over the (nprobe × band)-sized rollup; rows keep the r20
     // visibility rule (a band appears iff it has ≥1 truth pair, an nprobe
     // iff it scored ≥1 pair — the old inner cost join).
-    val pairs = contaminationPairsRanked(s, d, evalMaxVecId, nprobes.max, "sweep")
+    val pairs = contaminationPairsRanked(s, d, evalMaxVecId, nprobes.max)
     val spine = broadcast(nprobes.toDF("nprobe"))
     pairs.crossJoin(spine)
       .withColumn("band", contaminationBand(col("cosine")))
@@ -1197,7 +1191,7 @@ object Similarity {
     // A pair is found exactly when the screen at `nprobe` scores it (rn
     // non-NULL under the maxProbe = nprobe cut) — count(rn) is the old
     // count(hit) verbatim.
-    contaminationPairsRanked(s, d, evalMaxVecId, nprobe, "recall")
+    contaminationPairsRanked(s, d, evalMaxVecId, nprobe)
       .filter(col("cosine") >= threshold)
       .withColumn("band", contaminationBand(col("cosine")))
       .groupBy(col("band"))

@@ -636,7 +636,6 @@ object TextAnalysis {
     // tokenize+scan pass at any scale (guide §2.4/§5).
     val dl = docs.select(col("doc_id"),
       size(tokens(col("text"))).cast("long").as("dl")).localCheckpoint()
-    graft.operators.IterCheckpoint.supersede(s, "bm25DocLen", dl)
     val post = postings(s, d)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

@@ -48,7 +48,7 @@ object ThreadGraph {
           coalesce(col("h_ptr"), col("ptr")).as("ptr"),
           (col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist"))
         .localCheckpoint()
-      // the superseded round's blocks are dead the moment the new checkpoint
+      // the previous round's blocks are dead the moment the new checkpoint
       // exists — release them (Dataset.unpersist is a no-op on checkpoints,
       // see [[IterCheckpoint]]); round 1's input is the uncheckpointed seed
       if (round > 1) IterCheckpoint.free(state)

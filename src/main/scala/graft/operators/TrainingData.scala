@@ -357,7 +357,6 @@ object TrainingData {
     val candidates = docs.join(broadcast(sizes), Seq("lang"))
       .filter(col("u") <= bound)
       .localCheckpoint()
-    IterCheckpoint.supersede(s, "sampleTopKPerGroup", docs, candidates)
     // safety net: a group whose survivor count fell below min(k, n_g) is
     // ranked in full (languages-sized frames; empty in practice)
     val deficient = candidates.groupBy(col("lang")).agg(count(lit(1)).as("n_surv"))

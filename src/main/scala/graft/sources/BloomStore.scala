@@ -29,7 +29,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * In the sandbox the store is a local temp path; on a cluster the same
   * calls run against shared storage (the [[graft.functions.BloomFileCache]]
-  * contract). Old versions are GC fodder — each is superseded by the next,
+  * contract). Old versions are GC fodder — each is replaced by the next,
   * and nothing ever reads two.
   */
 private[graft] object BloomStore {

@@ -252,13 +252,9 @@ object Sinks {
         // the current sizing — and the driver never materializes
         // batch-scale hash sets (the r11 100× probe measured the collect
         // shape at 2× the plain anti-join's wall on 5M-row batches).
-        def tNow = System.nanoTime()
-        val dbg = sys.env.contains("SPARK_GRAFT_SKETCH_DEBUG")
-        val t0 = tNow
         val hashDf = incoming.select(xxhash64(col(key)).as("h"))
         val hashArr = hashDf.limit(smallMax + 1)
           .collect().map(_.getLong(0))
-        val t1 = tNow
         if (hashArr.length > smallMax) {
           // ONE distributed agg over the batch's hashes: approx key count
           // (sizing/accounting only — see the bulk first-batch note),
@@ -277,7 +273,6 @@ object Sinks {
               lit(cur.capacity), lit(cur.nBits)).as("bf")).head()
           val (nBatchKeys, nCand) =
             (math.max(1L, (st.getLong(0) * 1.05).toLong), st.getLong(1))
-          val tStats = tNow
           if (cur.nKeys + nBatchKeys > cur.capacity)
             // discard the built bytes — the rare rebuild resizes anyway
             exactAndRebuild(incoming,
@@ -289,7 +284,6 @@ object Sinks {
             BloomStore.publishMerged(targetPath, Some(cur),
               st.getAs[Array[Byte]]("bf"),
               cur.capacity, cur.nBits, cur.nKeys + nBatchKeys)
-            val tMerge = tNow
             val base = if (dedupBatch) incoming.dropDuplicates(key) else incoming
             val novel =
               if (nCand == 0L) base // zero candidates: NO history read
@@ -310,11 +304,6 @@ object Sinks {
                 novelAgainst(base, spark.read.parquet(targetPath).select(key))
               }
             expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
-            if (dbg) System.err.println(f"[sketch-large] keys~$nBatchKeys " +
-              f"cand=$nCand stats=${(tStats - t1) / 1e9}%.2f " +
-              f"merge=${(tMerge - tStats) / 1e9}%.2f " +
-              f"resolve+write=${(tNow - tMerge) / 1e9}%.2f " +
-              f"wall=${(tNow - t0) / 1e9}%.2f")
           }
           return
         }
@@ -332,16 +321,13 @@ object Sinks {
             recordKeys = cur.nKeys + nBatchKeys, minCapacity = cur.capacity * 4)
         else {
           val bf = BloomStore.load(cur)
-          val t2 = tNow
           // probe the PRE-merge sketch: rejected keys are definitely
           // absent from the target (superset invariant)
           val candHashes = distinct.filter(bf.mightContainLong)
           // then merge batch keys into the NEXT sketch version BEFORE the
           // append — the invariant holds at every crash point
           distinct.foreach(bf.putLong)
-          val t3 = tNow
           BloomStore.publish(targetPath, cur, bf, cur.nKeys + nBatchKeys)
-          val t4 = tNow
           val base =
             if (!dedupBatch || noInBatchDups) incoming
             else incoming.dropDuplicates(key)
@@ -371,10 +357,6 @@ object Sinks {
               novelAgainst(base, spark.read.parquet(targetPath).select(key))
             }
           expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
-          if (dbg) System.err.println(f"[sketch] collect=${(t1 - t0) / 1e9}%.2f " +
-            f"load=${(t2 - t1) / 1e9}%.2f probe+put=${(t3 - t2) / 1e9}%.2f " +
-            f"publish=${(t4 - t3) / 1e9}%.2f write=${(tNow - t4) / 1e9}%.2f " +
-            f"cand=${candHashes.size}")
         }
     }
   }

@@ -44,12 +44,9 @@ object DeterminismSweep {
       (agg.getLong(0), agg.getLong(1))
     }
 
-    def isolate(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
-    }
+    def isolate(): Unit =
+      try graft.operators.IterCheckpoint.releaseAll(spark)
+      catch { case _: Throwable => () }
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     var mismatches = List.empty[String]

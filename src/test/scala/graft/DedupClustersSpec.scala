@@ -9,10 +9,9 @@ import org.apache.spark.sql.{functions, Row}
 class DedupClustersSpec extends SparkSpecBase {
   import spark.implicits._
 
-  /** Eagerly collected multiset of a pair frame's rows. The pair pipelines'
-    * checkpoint contract (IterCheckpoint.supersede) invalidates the PREVIOUS call's
-    * lazy frame on a repeat invocation, so adversarial A-vs-B comparisons
-    * must land each result before requesting the next.
+  /** Eagerly collected multiset of a pair frame's rows, so an A-vs-B
+    * comparison is a plain `Map` equality (a duplicate emission changes a
+    * count and fails it too).
     */
   private def landed(df: org.apache.spark.sql.DataFrame): Map[Row, Int] = {
     val rows = df.collect().toSeq

@@ -1,25 +1,20 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, IterCheckpoint}
 import org.apache.spark.sql.DataFrame
 
-/** Round-4 VERDICT item 6: the pair pipelines used to discard their
-  * checkpoint RDD ids, so every invocation pinned a fresh generation of
-  * blocks for the life of the session (Bench/Verify sweep between queries,
-  * but a plain library caller does not). A repeat invocation now supersedes
-  * the previous call's blocks — double invocation must leave the session's
-  * persistent-RDD count flat.
+/** Checkpoint lifetimes of the one-shot pipelines ([[IterCheckpoint]]):
+  * invoking a pipeline twice and holding both frames, the FIRST frame
+  * still evaluates to its result after the second invocation (a repeat
+  * call never frees blocks an earlier frame reads), and the face-boundary
+  * sweep [[IterCheckpoint.releaseAll]] takes the session's pinned-RDD
+  * count back to its pre-test baseline.
   *
   * Sampling discipline (round-8 lesson): `getPersistentRDDs` has WEAK
   * values, and the GC-driven ContextCleaner unpersists localCheckpointed
   * RDDs whose frames became unreachable — so a raw sample races the
-  * cleaner (a post-cleanup trough at the first sample + a pre-cleanup peak
-  * at the second reads as spurious "growth"; flaked exactly once in a full
-  * suite run). Both samples are therefore taken SETTLED (force GC, let the
-  * cleaner drain), and the returned frames are held strongly across the
-  * test: a generation the operator failed to supersede stays pinned through
-  * any GC (its RDD is strongly reachable via the held frame), so the real
-  * leak class is still detected deterministically.
+  * cleaner. Both samples are therefore taken SETTLED (force GC, let the
+  * cleaner drain).
   */
 class DedupLeakSpec extends SparkSpecBase {
 
@@ -40,74 +35,56 @@ class DedupLeakSpec extends SparkSpecBase {
     prev
   }
 
-  private def assertFlat(name: String)(run: => (DataFrame, Long)): Unit = {
-    val (f1, r1) = run
-    val afterFirst = pinnedSettled
-    val (f2, r2) = run
-    assert(r2 == r1, s"$name: repeat invocation changed the result count")
-    // the leak contract is NO GROWTH; strictly fewer is fine (pre-test
-    // garbage may still be draining)
-    val afterSecond = pinnedSettled
-    assert(afterSecond <= afterFirst,
-      s"$name: second invocation grew pinned RDDs $afterFirst -> $afterSecond")
-    // keep both frames strongly reachable until after the final sample —
-    // this reference is what makes an unsuperseded generation visible
-    assert(f1 ne f2)
+  private def assertFlat(name: String, eval: DataFrame => Long = _.count())(
+      run: => DataFrame): Unit = {
+    val baseline = pinnedSettled
+    val f1 = run
+    val r1 = eval(f1)
+    val f2 = run
+    assert(eval(f2) == r1, s"$name: repeat invocation changed the result")
+    assert(eval(f1) == r1, s"$name: the repeat invocation changed the first frame")
+    IterCheckpoint.releaseAll(spark)
+    // strictly fewer is fine: pre-test garbage may still have been pinned
+    val after = pinnedSettled
+    assert(after <= baseline,
+      s"$name: pinned RDDs $baseline -> $after after the face-boundary sweep")
   }
 
   test("minhashLshPairs double invocation keeps pinned-RDD count flat") {
-    assertFlat("minhashLshPairs") {
-      val f = Dedup.minhashLshPairs(spark, Sf); (f, f.count())
-    }
+    assertFlat("minhashLshPairs")(Dedup.minhashLshPairs(spark, Sf))
   }
 
   test("ngramJaccardPairs double invocation keeps pinned-RDD count flat") {
-    assertFlat("ngramJaccardPairs") {
-      val f = Dedup.ngramJaccardPairs(spark, Sf); (f, f.count())
-    }
+    assertFlat("ngramJaccardPairs")(Dedup.ngramJaccardPairs(spark, Sf))
   }
 
   test("simhashPairs double invocation keeps pinned-RDD count flat") {
-    assertFlat("simhashPairs") {
-      val f = Dedup.simhashPairs(spark, Sf); (f, f.count())
-    }
+    assertFlat("simhashPairs")(Dedup.simhashPairs(spark, Sf))
   }
 
   test("clusterLabels double invocation keeps pinned-RDD count flat") {
-    assertFlat("dedupClusters") {
-      val f = Dedup.dedupClusters(spark, Sf, Dedup.minhashLshPairs(spark, Sf))
-      (f, f.count())
-    }
+    assertFlat("dedupClusters")(
+      Dedup.dedupClusters(spark, Sf, Dedup.minhashLshPairs(spark, Sf)))
   }
 
   test("lshRecall double invocation keeps pinned-RDD count flat") {
-    assertFlat("lshRecall") {
-      val f = Dedup.lshRecall(spark, Sf); (f, f.count())
-    }
+    assertFlat("lshRecall")(Dedup.lshRecall(spark, Sf))
   }
 
   test("lshBandingSweep double invocation keeps pinned-RDD count flat") {
-    assertFlat("lshBandingSweep") {
-      val f = Dedup.lshBandingSweep(spark, Sf); (f, f.count())
-    }
+    assertFlat("lshBandingSweep")(Dedup.lshBandingSweep(spark, Sf))
   }
 
   test("annRecallSweep double invocation keeps pinned-RDD count flat") {
-    assertFlat("annRecallSweep") {
-      val f = graft.operators.Similarity.annRecallSweep(spark, Sf); (f, f.count())
-    }
+    assertFlat("annRecallSweep")(graft.operators.Similarity.annRecallSweep(spark, Sf))
   }
 
   test("pageRank double invocation keeps pinned-RDD count flat") {
-    assertFlat("pageRank") {
-      val f = graft.operators.Graphs.pageRank(spark, Sf); (f, f.count())
-    }
+    assertFlat("pageRank")(graft.operators.Graphs.pageRank(spark, Sf))
   }
 
   test("triangleCount double invocation keeps pinned-RDD count flat") {
-    assertFlat("triangleCount") {
-      val f = graft.operators.Graphs.triangleCount(spark, Sf)
-      (f, f.head().getLong(0))
-    }
+    assertFlat("triangleCount", _.head().getLong(0))(
+      graft.operators.Graphs.triangleCount(spark, Sf))
   }
 }

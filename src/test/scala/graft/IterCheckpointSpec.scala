@@ -4,6 +4,7 @@ import graft.operators.{Dedup, IterCheckpoint}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** [[IterCheckpoint]] releases a checkpoint through the frame
   * `localCheckpoint()` returned: it reads the RDD id off the frame's root
@@ -33,7 +34,7 @@ class IterCheckpointSpec extends SparkSpecBase {
     IterCheckpoint.free(ck)
   }
 
-  test("free and supersede refuse derived and uncheckpointed frames, releasing nothing") {
+  test("free refuses derived and uncheckpointed frames, releasing nothing") {
     val (ck, id) = checkpointed()
     val rddBacked = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(1L))),
@@ -44,37 +45,12 @@ class IterCheckpointSpec extends SparkSpecBase {
       "uncheckpointed RDD" -> rddBacked)
     try refused.foreach { case (what, bad) =>
       intercept[IllegalArgumentException](IterCheckpoint.free(ck, bad))
-      intercept[IllegalArgumentException](
-        IterCheckpoint.supersede(spark, "iterCheckpointSpec.refuse", ck, bad))
       assert(persisted.contains(id), s"$what: the valid frame's blocks were released")
     } finally IterCheckpoint.free(ck)
     assert(!persisted.contains(id))
   }
 
-  test("superseding one key leaves another key's blocks live") {
-    val (a1, a1Id) = checkpointed()
-    val (b, bId) = checkpointed(50)
-    val (a2, a2Id) = checkpointed()
-    try {
-      IterCheckpoint.supersede(spark, "iterCheckpointSpec.A", a1)
-      IterCheckpoint.supersede(spark, "iterCheckpointSpec.B", b)
-      IterCheckpoint.supersede(spark, "iterCheckpointSpec.A", a2)
-      assert(!persisted.contains(a1Id), "superseded generation still pinned")
-      assert(persisted.contains(a2Id) && persisted.contains(bId))
-      assert(b.count() == 50)
-    } finally {
-      IterCheckpoint.supersede(spark, "iterCheckpointSpec.A")
-      IterCheckpoint.supersede(spark, "iterCheckpointSpec.B")
-    }
-    assert(!persisted.contains(a2Id) && !persisted.contains(bId))
-  }
-
-  test("supersede with no frames frees the previous generation") {
-    val (ck, id) = checkpointed()
-    IterCheckpoint.supersede(spark, "iterCheckpointSpec.refusal", ck)
-    IterCheckpoint.supersede(spark, "iterCheckpointSpec.refusal")
-    assert(!persisted.contains(id))
-    // the operator refusal paths built on it leave nothing pinned
+  test("pair-volume refusals free the checkpoints they made") {
     Seq[(String, () => DataFrame)](
       "minhashLshPairs" -> (() => Dedup.minhashLshPairs(spark, Sf)),
       "simhashPairs" -> (() => Dedup.simhashPairs(spark, Sf))).foreach { case (name, run) =>
@@ -84,5 +60,15 @@ class IterCheckpointSpec extends SparkSpecBase {
       finally spark.conf.unset(Dedup.PairRowsConfKey)
       assert((persisted -- before).isEmpty, s"$name refusal left checkpoints pinned")
     }
+  }
+
+  test("releaseAll drops checkpoints and cached frames") {
+    val (ck, id) = checkpointed()
+    val cached = spark.range(10).toDF().cache()
+    assert(cached.count() == 10 && cached.storageLevel != StorageLevel.NONE)
+    IterCheckpoint.releaseAll(spark)
+    assert(!persisted.contains(id), "the checkpoint is still pinned")
+    assert(cached.storageLevel == StorageLevel.NONE, "the cached frame is still cached")
+    assert(persisted.isEmpty, s"still persisted: $persisted")
   }
 }
