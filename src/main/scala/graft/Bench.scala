@@ -21,7 +21,7 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 object Bench {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — same contract as Verify's writer. Found live at a 300× probe
+    * — every artifact writer's (Verify's too). Found live at a 300× probe
     * (r14): a disk-full SparkException carries newlines and tabs, and the
     * old backslash+quote-only escape emitted an unparseable artifact —
     * the one failure mode an `errors` field exists to record. Extracted
@@ -45,30 +45,16 @@ object Bench {
     val globalBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "3000").toLong
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // generic session-conf overrides ("k=v,k=v") so gate-branch demos and
-    // deployment-sized budgets don't each need a bespoke env knob; shared
-    // with Verify ([[Tables.applyEnvConfOverrides]] — key validation and
-    // the no-commas-in-values limitation documented there, r17 ADVICE)
-    Tables.applyEnvConfOverrides(spark, "bench")
-    // streaming state-store provider A/B (r12 verdict task 2): the 100×
-    // phase fields put 834–890 s of summed p_stateUpdates behind the
-    // stream-join faces on the default HDFS-backed store; RocksDB is the
-    // standard production lever for update-bound state. `rocksdb`/`hdfs`
-    // select the built-in providers; any other value passes through as a
-    // provider class name. Session conf — every streaming query started in
-    // this run picks it up at planning time.
-    val stateStore = sys.env.get("SPARK_GRAFT_STATE_STORE").map { v =>
-      val cls = v.toLowerCase match {
-        case "rocksdb" =>
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        case "hdfs" =>
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        case _ => v
-      }
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-      System.err.println(s"[bench] stateStore=$cls")
-      cls
-    }
+    // generic session-conf overrides ("k=v,k=v") so gate-branch demos,
+    // deployment-sized budgets and the streaming state-store provider
+    // don't each need a bespoke env knob; shared with Verify
+    // ([[Tables.applyConfOverrides]] — key validation and the
+    // no-commas-in-values limitation documented there, r17 ADVICE)
+    val confApplied = Tables.applyConfOverrides(spark,
+      sys.env.getOrElse("SPARK_GRAFT_CONF", ""), "bench")
+    // the streaming state-store provider, stamped into the artifact when
+    // the run overrode it (`state_store`; null = Spark's default store)
+    val stateStore = confApplied.collect { case (StateStoreConf, cls) => cls }.lastOption
     // warm the session once before timing: executor threads, codegen
     // compiler, parquet footer cache — otherwise the alphabetically-first
     // query absorbs ~5s of one-time JVM cost and distorts its number.
@@ -85,22 +71,8 @@ object Bench {
 
     // SPARK_GRAFT_ONLY=q_a,q_b — run a subset in an otherwise-identical
     // session (clean-session attribution of queries that are slow only in
-    // full runs; not used by the driver)
+    // full runs, or one face in a fresh JVM; not used by the driver)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // SPARK_GRAFT_FORK_FACES=q_a,q_b — run these faces in DEDICATED child
-    // JVMs (serially, after the in-process loop) instead of this session.
-    // Why (r15 verdict task 1): the known session-damage-prone faces (the
-    // co_order family, q_pagerank) measured 3× their dedicated-JVM time
-    // inside a 194-face record for three rounds running — block-manager /
-    // page-cache damage the per-query cleanup cannot fully undo — so their
-    // in-record numbers needed prose adjudication against separate probes.
-    // A forked child runs ONE face in a fresh JVM with this process's
-    // exact JVM args and classpath, reports through a properties file, and
-    // the parent merges the numbers into the single artifact, stamped in
-    // `dedicated_jvm`. The record then carries trustworthy numbers itself.
-    val forkFaces: Set[String] = sys.env.get("SPARK_GRAFT_FORK_FACES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String], Boolean, Option[Map[String, Double]]) = {
       val budget = math.min(perQueryTimeout, math.max(remainingSec, 0L))
@@ -180,7 +152,7 @@ object Bench {
       (secs, err, refused, BenchPhases.snapshot(name))
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) && !forkFaces(n) }
+      .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         val (secs, err, refused, ph) = runOne(name, fn)
         System.err.println(f"[bench] $name%-30s ${secs}%8.2fs " +
@@ -202,34 +174,20 @@ object Bench {
     // rerun at the end of the run; a query is flagged only if BOTH runs
     // breach, and the minimum is reported (the best observed = the bound
     // on what the code itself needs).
-    val ceiling = sys.env.getOrElse("SPARK_GRAFT_BUDGET_CEILING_SEC", "30").toDouble
-    // SPARK_GRAFT_RERUN=q_a,q_b — faces that get an unconditional second
-    // timed run, with min-of-runs landing in `steady` exactly like ceiling
-    // retries. Why (r13 verdict task 2): sub-ceiling faces get a single
-    // cold run per session, so a 1.5–1.7× round-over-round swing in the
-    // committed artifact is indistinguishable from co-tenant noise. The
-    // launcher passes the faces whose cold time moved >1.5× against the
-    // previous round's artifact (tools/swing.py computes the list; the
-    // policy is written in BENCH_BUDGET.md) and the artifact then carries
-    // its own noise floor for exactly the faces a reader would question.
-    // Every retry starts from a WarmState.resetForColdRerun(): staged
-    // landings, settled checkpoints, Derby dbs, bucketed tables and trained
-    // models are all dropped, so the second run re-stages/replays/re-trains
-    // inside its own timed window. That gives `steady` ONE semantics — the
-    // min of two cold-equivalent runs — for every face class (r14 verdict
-    // task 5: staged faces used to rerun WARM, making their steady a lower
-    // bound that swing.py had to annotate); the artifact stamps the policy
-    // in `rerun_staging`.
-    val rerun = sys.env.get("SPARK_GRAFT_RERUN")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
+    val ceiling = CeilingSec
     // r16 verdict task 2: the sf0.1 reference run gets the 100× record's
-    // noise discipline AUTOMATICALLY — the slowest N error-free in-process
-    // faces are rerun cold-reset regardless of env, so every round's
-    // driver-written artifact carries its own noise floor (steady map +
-    // steady_total) for exactly the faces that dominate the headline.
-    // SPARK_GRAFT_RERUN_SLOWEST overrides N (0 disables — the 100× record
-    // passes its swing list explicitly and must not pay N extra 60 s faces).
+    // noise discipline AUTOMATICALLY — the slowest N error-free faces are
+    // rerun cold-reset, so every round's driver-written artifact carries
+    // its own noise floor (steady map + steady_total) for exactly the
+    // faces that dominate the headline. SPARK_GRAFT_RERUN_SLOWEST
+    // overrides N (0 disables — a 100× replica run must not pay N extra
+    // 60 s faces). Every retry starts from a WarmState.resetForColdRerun():
+    // staged landings, settled checkpoints, Derby dbs, bucketed tables and
+    // trained models are all dropped, so the second run re-stages/replays/
+    // re-trains inside its own timed window. That gives `steady` ONE
+    // semantics — the min of two cold-equivalent runs — for every face
+    // class (r14 verdict task 5); the artifact stamps the policy in
+    // `rerun_staging`.
     val rerunSlowest = sys.env.getOrElse("SPARK_GRAFT_RERUN_SLOWEST", "5").toInt
     val autoSlow: Set[String] = results
       .collect { case (n, v, None, _, _, _) => (n, v) }
@@ -237,9 +195,9 @@ object Bench {
     if (autoSlow.nonEmpty) System.err.println(
       s"[bench] auto-rerun of slowest $rerunSlowest: ${autoSlow.toSeq.sorted.mkString(",")}")
     val retried = results.collect {
-      case (name, v, None, _, fn, _) if v > ceiling || rerun(name) || autoSlow(name) =>
+      case (name, v, None, _, fn, _) if v > ceiling || autoSlow(name) =>
         val why = if (v > ceiling) f"first ${v}%.1fs > ${ceiling}%.0fs"
-          else if (rerun(name)) "rerun-requested" else "auto-slowest"
+          else "auto-slowest"
         try WarmState.resetForColdRerun()
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm-state reset failed (rerun may be warm): $e") }
@@ -250,57 +208,10 @@ object Bench {
     }
     pool.shutdownNow()
 
-    // ---- dedicated-JVM faces (serial, full machine each; see forkFaces) ----
-    // Release the parent's session FIRST: nothing after the in-process loop
-    // needs Spark, and a 3000-s record session holds a ~32 GB heap plus the
-    // page-cache working set the children would otherwise compete with
-    // (measured: forked q_co_order_heavy_recall read 103 s beside the live
-    // parent vs 57–74 s truly standalone). spark.stop() + an explicit GC
-    // lets G1 uncommit before the first child starts; stop() is idempotent
-    // so the no-fork path's closing stop is unaffected.
-    if (forkFaces.nonEmpty) {
-      spark.stop()
-      System.gc()
-    }
-    val forked: Seq[Forked] = forkFaces.toSeq.sorted
-      .filter { f =>
-        val known = SparkEntry.queries.contains(f) && only.forall(_.contains(f))
-        if (!SparkEntry.queries.contains(f)) System.err.println(
-          s"[bench] WARNING: SPARK_GRAFT_FORK_FACES name unknown, skipped: $f")
-        known
-      }
-      .map { face =>
-        if (remainingSec <= 0)
-          Forked(face, 0.0, Some("skipped: global budget exhausted"), false, None, None)
-        else runForkedFace(face, rerun(face), perQueryTimeout, remainingSec)
-      }
-    forked.foreach { f =>
-      System.err.println(f"[bench] FORKED ${f.name}%-30s ${f.cold}%8.2fs " +
-        f"${f.err.getOrElse("ok")}${f.second.map(s => f" second=${s._1}%.2fs").getOrElse("")}")
-    }
-    // a misspelled SPARK_GRAFT_RERUN name, a face that errored on its first
-    // run, or a forked face whose child died before producing a second run
-    // is silently absent from the steady map — without this diff an operator
-    // can believe a steady number was recorded when it was not (r14 ADVICE;
-    // r16 ADVICE: fork faces used to be subtracted unconditionally, hiding
-    // exactly the dead-child case)
-    val forkAccounted = forked.collect {
-      case f if f.second.nonEmpty || f.err.nonEmpty => f.name }.toSet
-    val notRetried = rerun -- retried.map(_._1).toSet -- forkAccounted
-    if (notRetried.nonEmpty) System.err.println(
-      s"[bench] WARNING: SPARK_GRAFT_RERUN faces NOT retried (unknown name, " +
-        s"filtered out, errored on first run, or fork produced no second " +
-        s"run): ${notRetried.toSeq.sorted.mkString(",")}")
-
-    // merge the dedicated-JVM outcomes with the in-process loop's: ONE
-    // artifact carries every face, the forked ones listed in dedicated_jvm
     val allCold: Seq[(String, Double, Option[String], Boolean)] =
-      (results.map { case (k, v, e, r, _, _) => (k, v, e, r) } ++
-        forked.map(f => (f.name, f.cold, f.err, f.refused))).sortBy(_._1)
+      results.map { case (k, v, e, r, _, _) => (k, v, e, r) }
     val retriedAll: Seq[(String, Double, Double, Option[String])] =
-      retried.map { case (n, f0, s2, e2, _) => (n, f0, s2, e2) } ++
-        forked.collect { case f if f.second.isDefined =>
-          (f.name, f.cold, f.second.get._1, f.second.get._2) }
+      retried.map { case (n, f0, s2, e2, _) => (n, f0, s2, e2) }
     val retryBySecond = retriedAll.map { case (n, _, s2, e2) => n -> (s2, e2) }.toMap
     // The acceptance WINDOW can sit above the contract ceiling (the 100×
     // replica runs accept 420 s where the sf0.1 contract is 30 s). r12
@@ -336,13 +247,9 @@ object Bench {
     def stagingIn(ph: Option[Map[String, Double]]): Option[Double] =
       ph.flatMap(_.get("staging"))
     val stagingOf: Map[String, Double] =
-      (results.flatMap { case (k, _, _, _, _, ph) =>
-        stagingIn(ph).map(k -> _) } ++
-       forked.flatMap(f => f.phasesRaw.flatMap(stagingFromRawPhases).map(f.name -> _)))
-        .toMap
+      results.flatMap { case (k, _, _, _, _, ph) => stagingIn(ph).map(k -> _) }.toMap
     val stagingRetryOf: Map[String, Double] =
-      (retried.flatMap { case (n, _, _, _, ph2) => stagingIn(ph2).map(n -> _) } ++
-       forked.flatMap(f => f.secondStaging.map(f.name -> _))).toMap
+      retried.flatMap { case (n, _, _, _, ph2) => stagingIn(ph2).map(n -> _) }.toMap
     val qs = allCold.map { case (k, v, _, _) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     // designed refusals (admission gates firing as specified, sizing string
     // preserved) live in `refused`; `errors` is real failures ONLY — an
@@ -402,17 +309,13 @@ object Bench {
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
     def phMap(ph: Map[String, Double]): String = ph.toSeq.sortBy(_._1)
       .map { case (p, v) => jstr(p) + ":" + r3(v) }.mkString("{", ",", "}")
-    val phasesJson = (results.flatMap { case (k, _, _, _, _, ph) =>
+    val phasesJson = results.flatMap { case (k, _, _, _, _, ph) =>
       ph.map(m => jstr(k) + ":" + phMap(m))
-    } ++ forked.flatMap(f => f.phasesRaw.map(raw => jstr(f.name) + ":" + raw)))
-      .mkString("{", ",", "}")
-    val phasesRetryJson = (retried.flatMap { case (n, _, _, _, ph2) =>
+    }.mkString("{", ",", "}")
+    val phasesRetryJson = retried.flatMap { case (n, _, _, _, ph2) =>
       ph2.map(m => jstr(n) + ":" + phMap(m))
-    } ++ forked.flatMap(f =>
-      f.secondPhasesRaw.map(raw => jstr(f.name) + ":" + raw)))
-      .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val storeJson = stateStore.map(jstr).getOrElse("null")
-    val dedicatedJson = forked.map(f => jstr(f.name)).mkString("[", ",", "]")
     // staging reported once, artifact-level, per face that drew it —
     // `staging` is the COLD run's stamp, `staging_retry` the cold-reset
     // retry's own re-staging (per-run capture) — and the staging-net clock
@@ -434,49 +337,16 @@ object Bench {
     val steadyTotal = allCold.map { case (k, v, _, _) =>
       steadyByBest.getOrElse(k, v) }.sum
     val artifactPath = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT", "bench_last.json")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","steady_total":${r3(steadyTotal)},"queries":$qs,"query_secs":$querySecsJson,"staging":$stagingJson,"staging_retry":$stagingRetryJson,"errors":$errs,"refused":$refusedJson,"ceiling_sec":$ceiling,"window_sec":$windowSec,"budget_exceeded":$overJson,"over_contract":$contractJson,"budget_retries":$retriesJson,"steady":$steadyJson,"phases":$phasesJson,"phases_retry":$phasesRetryJson,"state_store":$storeJson,"rerun_staging":"cold-reset","rerun_slowest":$rerunSlowest,"dedicated_jvm":$dedicatedJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","steady_total":${r3(steadyTotal)},"queries":$qs,"query_secs":$querySecsJson,"staging":$stagingJson,"staging_retry":$stagingRetryJson,"errors":$errs,"refused":$refusedJson,"ceiling_sec":$ceiling,"window_sec":$windowSec,"budget_exceeded":$overJson,"over_contract":$contractJson,"budget_retries":$retriesJson,"steady":$steadyJson,"phases":$phasesJson,"phases_retry":$phasesRetryJson,"state_store":$storeJson,"rerun_staging":"cold-reset","rerun_slowest":$rerunSlowest,"dedicated_jvm":[],"sf":"$sfDir"}"""
     println(line)
     // the round-7 driver artifact captured only a 2000-char TAIL of this
     // output, losing the per-query map and most of the error entries
     // (ADVICE r7) — also land the full line on disk so every bench run
     // leaves a self-sufficient artifact regardless of how stdout is captured.
-    // SPARK_GRAFT_ARTIFACT overrides the path (a forked child must not
-    // clobber its parent's artifact).
+    // SPARK_GRAFT_ARTIFACT overrides the path.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(artifactPath), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: $e") }
-    // forked-child contract: land this face's numbers in a properties file
-    // the parent can read without a JSON parser (messages may carry any
-    // characters; Properties escaping is the JDK's problem, not a regex)
-    sys.env.get("SPARK_GRAFT_FORK_OUT").foreach { path =>
-      val props = new java.util.Properties()
-      allCold.headOption.foreach { case (name, cold, err, refused) =>
-        props.setProperty("name", name)
-        props.setProperty("cold", cold.toString)
-        if (refused) props.setProperty("refused", "true")
-        err.foreach(e => props.setProperty("error", e))
-        retryBySecond.get(name).foreach { case (s2, e2) =>
-          props.setProperty("second", s2.toString)
-          e2.foreach(e => props.setProperty("second_error", e))
-        }
-        // per-run capture crosses the fork boundary too: `phases` is the
-        // child's COLD-run map (feeds the parent's `phases`/`staging`),
-        // `second_staging` the retry's own stamp (feeds per-run netting),
-        // and `second_phases` the retry's full decomposition — without it
-        // a forked face's retry could not be told apart from "retried but
-        // decomposition dropped" in the merged artifact (r19 ADVICE)
-        results.headOption.flatMap(_._6).foreach { ph =>
-          props.setProperty("phases", phMap(ph))
-        }
-        retried.collectFirst { case (`name`, _, _, _, Some(ph2)) => ph2 }
-          .foreach(ph2 => props.setProperty("second_phases", phMap(ph2)))
-        stagingRetryOf.get(name).foreach(v =>
-          props.setProperty("second_staging", v.toString))
-      }
-      val out = new java.io.FileOutputStream(path)
-      try props.store(out, "graft.Bench forked-face result")
-      finally out.close()
-    }
     // compact SECOND line (see compactLine) — printed LAST so any stdout
     // tail window ends with a complete, parseable JSON line.
     // slowest-3 ranks by each face's BEST observation (min of first run and
@@ -499,18 +369,10 @@ object Bench {
     spark.stop()
   }
 
-  /** Outcome of one dedicated-JVM face: cold seconds, error, optional
-    * second run (when the face was on the rerun list or breached the
-    * ceiling inside the child), the child's COLD-run phase map as a raw
-    * JSON object string, and the retry's own staging stamp (per-run
-    * capture across the fork boundary).
-    */
-  private[graft] final case class Forked(name: String, cold: Double,
-      err: Option[String], refused: Boolean,
-      second: Option[(Double, Option[String])],
-      phasesRaw: Option[String],
-      secondStaging: Option[Double] = None,
-      secondPhasesRaw: Option[String] = None)
+  /** The per-query contract ceiling (BENCH_BUDGET.md), seconds. */
+  private[graft] val CeilingSec = 30.0
+
+  private val StateStoreConf = "spark.sql.streaming.stateStore.providerClass"
 
   /** A face's contract clock net of its one-time dataset staging, clamped
     * at zero (a staging stamp can exceed a retried face's best wall when
@@ -539,14 +401,6 @@ object Bench {
     if (nets.forall(_ > ceiling)) Some(nets.min) else None
   }
 
-  /** Pull the `staging` stamp out of a forked child's raw phases JSON — a
-    * string THIS process's own writer produced (sorted keys, r3-rounded
-    * values), so a targeted scan is reliable without a JSON parser.
-    */
-  private[graft] def stagingFromRawPhases(raw: String): Option[Double] =
-    """"staging":([0-9.Ee+-]+)""".r.findFirstMatchIn(raw)
-      .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
-
   /** True when any cause in the chain is a [[DesignedRefusal]] — the gate
     * exceptions are thrown driver-side (sized BEFORE work starts) so they
     * usually surface unwrapped, but a cause-chain walk keeps the
@@ -562,85 +416,6 @@ object Bench {
       n += 1
     }
     false
-  }
-
-  /** Run ONE face in a dedicated child JVM: same java binary, same JVM
-    * args (add-opens, heap, -D props — read from this process's
-    * RuntimeMXBean), same classpath; `SPARK_GRAFT_ONLY` narrows the child
-    * to the face, `SPARK_GRAFT_FORK_OUT` is the properties file it reports
-    * through, and `SPARK_GRAFT_FORK_FACES` is removed so a child never
-    * forks again. The child's own timer semantics apply unchanged — warmup
-    * outside the timed window, cold-reset rerun when requested — so the
-    * number that comes back is exactly the dedicated-probe number the
-    * adjudications of r13–r15 produced by hand.
-    */
-  private def runForkedFace(face: String, rerunFace: Boolean,
-      perQueryTimeout: Long, remainingSec: Long): Forked = {
-    import scala.jdk.CollectionConverters._
-    val out = java.nio.file.Files.createTempFile(s"bench_fork_$face", ".properties")
-    val art = java.nio.file.Files.createTempFile(s"bench_fork_$face", ".json")
-    java.nio.file.Files.deleteIfExists(out)
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-    val pb = new ProcessBuilder(cmd: _*)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_ONLY", face)
-    env.put("SPARK_GRAFT_FORK_OUT", out.toString)
-    env.put("SPARK_GRAFT_ARTIFACT", art.toString)
-    env.remove("SPARK_GRAFT_FORK_FACES")
-    if (rerunFace) env.put("SPARK_GRAFT_RERUN", face)
-    else env.remove("SPARK_GRAFT_RERUN")
-    // wall budget: the face's query windows (×2 when rerunning) plus JVM
-    // start, session build, warmup and any staging — all outside the
-    // child's per-query timer but inside this wall clock
-    val wallSec = math.min(remainingSec,
-      perQueryTimeout * (if (rerunFace) 2 else 1) + 420)
-    env.put("SPARK_GRAFT_BENCH_BUDGET_SEC", wallSec.toString)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-    System.err.println(s"[bench] forking dedicated JVM for $face (wall ${wallSec}s)")
-    try {
-      val p = pb.start()
-      val done = p.waitFor(wallSec, TimeUnit.SECONDS)
-      if (!done) {
-        p.destroyForcibly()
-        // record the child's QUERY-window budget, not the wall allowance:
-        // wallSec includes JVM start, session build, staging and warmup —
-        // summing it into the headline would let one forked timeout carry
-        // 1000+s of non-query time, where in-process timeouts deliberately
-        // record only elapsed-at-budget-fire (r16 ADVICE)
-        return Forked(face, math.min(perQueryTimeout, wallSec).toDouble,
-          Some(s"fork wall-clock timeout after ${wallSec}s (recorded secs = " +
-            s"child query-window budget)"), false, None, None)
-      }
-      if (!java.nio.file.Files.exists(out))
-        return Forked(face, 0.0,
-          Some(s"fork produced no result (exit=${p.exitValue()})"), false, None, None)
-      val props = new java.util.Properties()
-      val in = new java.io.FileInputStream(out.toFile)
-      try props.load(in) finally in.close()
-      val cold = Option(props.getProperty("cold")).map(_.toDouble).getOrElse(
-        return Forked(face, 0.0, Some("fork result missing cold time"), false, None, None))
-      Forked(face, cold,
-        Option(props.getProperty("error")),
-        props.getProperty("refused") == "true",
-        Option(props.getProperty("second")).map(s =>
-          (s.toDouble, Option(props.getProperty("second_error")))),
-        Option(props.getProperty("phases")),
-        Option(props.getProperty("second_staging"))
-          .flatMap(s => scala.util.Try(s.toDouble).toOption),
-        Option(props.getProperty("second_phases")))
-    } catch {
-      case e: Throwable =>
-        Forked(face, 0.0, Some(s"fork failed: $e".take(300)), false, None, None)
-    } finally {
-      java.nio.file.Files.deleteIfExists(out)
-      java.nio.file.Files.deleteIfExists(art)
-    }
   }
 
   /** The driver-facing compact summary line, kept well under ~500 chars:

@@ -67,28 +67,6 @@ object BenchPhases {
     try body finally add(phase, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Fold a finished streaming query's own progress telemetry into the
-    * current scope (micro-batch count + per-metric duration sums).
-    * `p_stateRows` is the PEAK state volume — max across batches of the
-    * total rows maintained over all state operators — the machine-readable
-    * sizing the stream-join over_contract adjudication reads together with
-    * `p_stateUpdates` (state rows × per-row cost; r17 verdict task 3). A
-    * face settling several streams sums their peaks — total state the face
-    * maintained.
-    *
-    * Bounded-buffer caveat: `recentProgress` retains only the last
-    * `spark.sql.streaming.numRecentProgressUpdates` (default 100) entries,
-    * so this one-shot fold under-reports faces with >100 micro-batches —
-    * [[settle]] folds the buffer INCREMENTALLY while awaiting instead
-    * (r18 ADVICE) and only falls back to the same arithmetic through
-    * [[ProgressFold]]; this entry point stays for short-lived queries.
-    */
-  def attribute(q: StreamingQuery): Unit = {
-    val f = new ProgressFold
-    f.fold(q.recentProgress)
-    f.stamp()
-  }
-
   /** Incremental, batch-deduplicated accumulator over a query's progress
     * telemetry: folding the bounded `recentProgress` buffer repeatedly
     * while the query runs sees every batch exactly once (keyed on
@@ -140,6 +118,12 @@ object BenchPhases {
     * too; progress is folded incrementally every 500 ms so a face with
     * more micro-batches than the progress buffer retains still reports
     * true sums and the true state-row peak (r18 ADVICE).
+    *
+    * Stamps the micro-batch count and per-metric duration sums.
+    * `p_stateRows` is the PEAK state volume — max across batches of the
+    * total rows maintained over all state operators — read together with
+    * `p_stateUpdates` (state rows × per-row cost); a face settling several
+    * streams sums their peaks.
     */
   def settle(query: => StreamingQuery): Unit = {
     val f = new ProgressFold

@@ -1174,7 +1174,7 @@ object SparkEntry {
     * so a rerun re-stages, replays every micro-batch, and re-settles from
     * nothing: cold-equivalent (r14 verdict task 5 — a settled checkpoint
     * made stream-face reruns replay ZERO batches, giving `steady` a second,
-    * warm-lower-bound semantics that swing.py had to annotate away).
+    * warm-lower-bound semantics).
     * Called by [[graft.WarmState.resetForColdRerun]] from Bench only.
     */
   private[graft] def resetStagedLandings(): Unit =
@@ -1182,12 +1182,6 @@ object SparkEntry {
       stagedLandings.remove(k).foreach(
         graft.sources.WarmDirs.deleteRecursively))
 
-  /** Symlink a parquet table into a landing dir. The driver's testdata
-    * tables are single files, but Spark-written tables (e.g. `ScaleUp`
-    * replicas) are DIRECTORIES of part files — and the file-stream source
-    * does not follow a symlink to a directory, so staging one would silently
-    * produce an empty stream. Link the part files individually instead.
-    */
   /** `Files.list`/`Files.walk` return a Stream holding an OPEN directory
     * handle until closed — the try/finally is the leak fix (r6 ADVICE: one
     * leaked handle per staged table).
@@ -1196,22 +1190,6 @@ object SparkEntry {
       f: java.util.stream.Stream[java.nio.file.Path] => T): T =
     try f(st) finally st.close()
 
-  private def linkTable(dir: java.nio.file.Path, prefix: String, table: String): Unit = {
-    val src = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.isDirectory(src)) {
-      withPathStream(java.nio.file.Files.list(src)) { st =>
-        val it = st.iterator()
-        var i = 0
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.endsWith(".parquet")) {
-            java.nio.file.Files.createSymbolicLink(dir.resolve(f"${prefix}_$i%05d.parquet"), p)
-            i += 1
-          }
-        }
-      }
-    } else java.nio.file.Files.createSymbolicLink(dir.resolve(s"$prefix.parquet"), src)
-  }
   /** Collect a BOUNDED aggregate (≤ a handful of rows), read the codec
     * accumulators into the bench phase map, and hand the rows back as a
     * literal frame — the only way executor-side CPU attribution can land
@@ -1288,9 +1266,9 @@ object SparkEntry {
     * 32 landing files pack into few scan splits under the 128 MB default
     * while everything downstream (orientation joins, checkpoint blocks)
     * inherits the read's partitioning. The co_order_* and pagerank faces
-    * do NOT read it: their weighted pair/rank dataflows differ, and the
-    * record runs them in dedicated JVMs where a single-use staging is
-    * build-plus-write — strictly worse than building.
+    * do NOT read it: their weighted pair/rank dataflows differ, so a
+    * landing would be read once — build-plus-write, strictly worse than
+    * building.
     */
   private def coOrderEdgeLanding(s: SparkSession, d: String): DataFrame = {
     val root = stagedLanding("co_order_edges", d) { dir =>

@@ -151,26 +151,29 @@ object Tables {
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
-  /** Apply `SPARK_GRAFT_CONF` ("k=v,k=v") session-conf overrides — shared
-    * by Bench AND Verify so a gate-branch demo (e.g. an overridden
-    * `spark.graft.triangle.maxExactWedges`) runs its queries and generates
-    * its oracles under the SAME budget; before r18 only Bench honored the
-    * knob and a budget-overridden verify replayed the default regime (r17
-    * ADVICE). LIMITATION: bare-comma separator — a conf VALUE containing
-    * commas cannot ride this knob; an empty key ("=v") is rejected loudly.
+  /** Apply session-conf overrides from a "k=v,k=v" spec — Bench AND
+    * Verify pass `SPARK_GRAFT_CONF`, so a gate-branch demo (e.g. an
+    * overridden `spark.graft.triangle.maxExactWedges`) runs its queries and
+    * generates its oracles under the SAME budget; before r18 only Bench
+    * honored the knob and a budget-overridden verify replayed the default
+    * regime (r17 ADVICE). A value keeps everything after the first `=`.
+    * LIMITATION: bare-comma separator — a conf VALUE containing commas
+    * cannot ride this spec; an empty key ("=v") is rejected loudly.
+    * Returns the (key, value) pairs applied, in order.
     */
-  def applyEnvConfOverrides(s: SparkSession, tag: String): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        if (k.isEmpty)
-          System.err.println(s"[$tag] SPARK_GRAFT_CONF entry '$kv' has an " +
-            "empty key — skipped (commas inside values are not supported)")
-        else {
-          s.conf.set(k, v)
-          System.err.println(s"[$tag] conf $k=$v")
-        }
-      })
+  def applyConfOverrides(s: SparkSession, spec: String, tag: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map(_.trim).filter(_.contains("=")).flatMap { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      if (k.isEmpty) {
+        System.err.println(s"[$tag] SPARK_GRAFT_CONF entry '$kv' has an " +
+          "empty key — skipped (commas inside values are not supported)")
+        None
+      } else {
+        s.conf.set(k, v)
+        System.err.println(s"[$tag] conf $k=$v")
+        Some(k -> v)
+      }
+    }
   /** Integer-id dispatch for the LLM-pipeline tables (r12 verdict task 7 —
     * the same driver-owned-encoding drift class as `tsAsNtz`): the media
     * synthesis and the streaming band/vector index fixtures STAGE slices of

@@ -27,7 +27,7 @@ object Verify {
     // triangle wedge budget) must drive the QUERIES and the GENERATED
     // oracles from one session conf, or the oracle replays the wrong
     // regime (r17 ADVICE)
-    Tables.applyEnvConfOverrides(spark, "verify")
+    Tables.applyConfOverrides(spark, sys.env.getOrElse("SPARK_GRAFT_CONF", ""), "verify")
     new java.io.File(outDir).mkdirs()
     // A failed query must leave an explicit error record, never a silent gap
     // (round-1 lesson: q_window_lag vanished from the correctness report).
@@ -52,18 +52,6 @@ object Verify {
       try graft.operators.IterCheckpoint.releaseAll(spark)
       catch { case _: Throwable => () }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // static oracles + run-time-generated ones (e.g. the trained-IVF oracle
     // embeds this run's fitted centroid matrix as literals). Each generator
     // group runs under its own try inside oracleSqlDynamicSafe: a failure
@@ -74,6 +62,10 @@ object Verify {
       System.err.println(s"[verify] $k generation FAILED: $v")
       errors(k) = v
     }
+    // Bench's JSON escape: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    def q(s: String): String = Bench.jsonString(s)
     val json = (SparkEntry.oracleSql ++ dynamic)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

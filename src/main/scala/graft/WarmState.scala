@@ -4,9 +4,9 @@ package graft
   * `steady` (min-of-2) entry is the min of two COLD-equivalent runs for
   * EVERY face class — the r14 artifact had two steady semantics (staged
   * stream/JDBC faces rerun warm: settled checkpoints replay zero batches,
-  * Derby stays loaded, trained models stay memoized) and swing.py had to
-  * annotate which class a reader was looking at (r14 verdict task 5; the
-  * re-stage option was named as the preferred fix).
+  * Derby stays loaded, trained models stay memoized), so a reader had to
+  * know which class a face belonged to (r14 verdict task 5; the re-stage
+  * option was named as the preferred fix).
   *
   * What gets dropped, and what re-paying it means:
   *  - streaming landings + checkpoints + settled targets

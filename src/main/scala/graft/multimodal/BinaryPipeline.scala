@@ -922,19 +922,15 @@ object BinaryPipeline {
       Mp4Headers.build(w, h, durationMs = frameCount(id) * 100L, content)
     }
 
-    /** JPEG SOI leads the content — the MJPEG dispatch test. Safe against
-      * the text/GRFT fixtures: 0xFF is not a valid UTF-8 lead byte.
-      */
-    def looksLikeMjpeg(content: Array[Byte]): Boolean =
-      looksLikeMjpegAt(content, 0, content.length)
-
-    /** The same dispatch test against a slice in place — so callers that
-      * only need the verdict (extractFeatures' sampled-frames count) don't
-      * copy the content out of the payload first. Requires the WHOLE slice
-      * to lie inside the payload (r18 ADVICE): callers copyOfRange the
-      * extent next, and copyOfRange zero-PADS past the array end — a
-      * corrupt contentLength would otherwise split frames over fabricated
-      * zero bytes instead of falling back to the chunk path.
+    /** JPEG SOI leads the content slice — the MJPEG dispatch test, safe
+      * against the text/GRFT fixtures (0xFF is not a valid UTF-8 lead
+      * byte). Tested in place, so callers that only need the verdict
+      * (extractFeatures' sampled-frames count) don't copy the content out
+      * of the payload first. Requires the WHOLE slice to lie inside the
+      * payload (r18 ADVICE): callers copyOfRange the extent next, and
+      * copyOfRange zero-PADS past the array end — a corrupt contentLength
+      * would otherwise split frames over fabricated zero bytes instead of
+      * falling back to the chunk path.
       */
     def looksLikeMjpegAt(payload: Array[Byte], off: Int, len: Int): Boolean =
       len >= 4 && off >= 0 && len <= payload.length - off &&

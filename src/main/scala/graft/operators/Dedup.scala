@@ -1268,9 +1268,6 @@ object Dedup {
     * only move existing labels — so the pointer-jump inner join is total.)
     */
   def clusterLabels(pairs: DataFrame, maxRounds: Int = 16): DataFrame = {
-    val tStart = System.nanoTime()
-    def dbg(msg: => String): Unit = if (sys.env.contains("GRAFT_DEBUG"))
-      System.err.println(f"[clusterLabels] ${(System.nanoTime() - tStart) / 1e9}%7.2fs $msg")
     // Materialize the pair list FIRST — via localCheckpoint, NOT persist():
     // a persist() compiles the (possibly expensive) pair-producing plan into
     // an InMemoryRelation, and cached plans don't get AQE's runtime
@@ -1304,7 +1301,6 @@ object Dedup {
       .observe(obs0, count(lit(1)).as("n"), sum(col("label")).as("lsum"))
       .localCheckpoint()
     val n0 = obs0.get("n").asInstanceOf[Long]
-    dbg(s"round 0 done, n=$n0")
     // ~4M (long,long) rows per partition ≈ a few hundred MB working set;
     // grows with the graph, so a 1B-node label table still gets ~250-way
     // parallelism while sf0.1's hundreds of rows collapse to one task
@@ -1345,13 +1341,11 @@ object Dedup {
       // p_pairs_ckpt is the closure face's build-vs-propagate split
       graft.BenchPhases.add(f"p_labels_r$round%02d",
         (System.nanoTime() - tRound) / 1e9)
-      dbg(f"round $round sum $s converged $converged ${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     graft.BenchPhases.add("n_label_rounds", round.toDouble)
     // the FINAL round's checkpoint outlives this call: the returned frame
     // reads it
     IterCheckpoint.free(p)
-    dbg("iteration complete, returning labels")
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
 

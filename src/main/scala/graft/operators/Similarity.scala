@@ -23,10 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Left-fold sum of an array<double> column, starting at 0.0. */
-  private def foldSum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, v) => acc + v)
-
   /** Dot product via the native codegen'd expression
     * ([[graft.functions.DotProductFloat]], registered by
     * [[graft.Tables.sessionBuilder]] through SparkSessionExtensions) —
@@ -102,7 +98,7 @@ object Similarity {
 
   /** Drop every corpus-derived memo (trained IVF centroids, PQ codebooks,
     * corpus-size counts) so the next call re-trains from the data. Bench
-    * calls this before each requested rerun ([[graft.WarmState]]): a
+    * calls this before each cold-reset rerun ([[graft.WarmState]]): a
     * `steady` min-of-2 entry must be the min of two COLD-equivalent runs —
     * r14's artifact had two steady semantics by face class (r15 verdict
     * task 5). Training is order-deterministic, so a re-trained model is

@@ -89,7 +89,7 @@ object Federation {
     * the one cost a federated read exists to avoid).
     */
   private def jdbcRowCount(url: String, table: String,
-      props: java.util.Properties = new java.util.Properties()): Long = {
+      props: java.util.Properties): Long = {
     // same Properties the spark.read.jdbc path uses — the embedded Derby URL
     // carries no credentials, but the moment the federated store does, the
     // count connection must not silently diverge from the read connection

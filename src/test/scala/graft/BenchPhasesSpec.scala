@@ -160,10 +160,22 @@ class BenchPhasesSpec extends AnyFunSuite {
     // retry staged nothing, so its wall stands un-netted
     assert(Bench.overContractNet(99.5, 49.0, Some((40.0, None, 0.0)), 30.0)
       === Some(40.0))
-    // forked-child staging rides the raw phases JSON this process wrote
-    assert(Bench.stagingFromRawPhases(
-      """{"p_x":1.5,"staging":12.345,"stream_wall":3.0}""") === Some(12.345))
-    assert(Bench.stagingFromRawPhases("""{"p_x":1.5}""") === None)
+  }
+
+  test("SPARK_GRAFT_CONF spec: keys reach the session conf, empty keys are skipped") {
+    // a fresh SQL conf on the shared context, so nothing leaks into other suites
+    val s = SparkSpecBase.session.newSession()
+    val provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val applied = Tables.applyConfOverrides(s,
+      s"spark.sql.streaming.stateStore.providerClass=$provider, =orphan," +
+        "spark.graft.test.spec=a=b,no-equals", "spec")
+    assert(applied === Seq(
+      "spark.sql.streaming.stateStore.providerClass" -> provider,
+      "spark.graft.test.spec" -> "a=b"))
+    assert(s.conf.get("spark.sql.streaming.stateStore.providerClass") === provider)
+    // a value keeps everything after the FIRST '='
+    assert(s.conf.get("spark.graft.test.spec") === "a=b")
+    assert(Tables.applyConfOverrides(s, "", "spec").isEmpty)
   }
 
 }

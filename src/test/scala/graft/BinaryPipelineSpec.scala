@@ -558,7 +558,7 @@ class BinaryPipelineSpec extends SparkSpecBase {
       .select("doc_id", "text").as[(Long, String)].collect()
     val dupPairs = texts.groupBy(_._2).values.filter(_.length > 1)
       .flatMap(g => g.map(_._1).sorted.combinations(2).map(p => (p(0), p(1))))
-      .filter { case (a, b) => texts.collectFirst {
+      .filter { case (a, _) => texts.collectFirst {
         case (`a`, t) => t.length / BinaryPipeline.SpectralWindow >= 4 }.getOrElse(false) }
       .toSeq
     dupPairs.foreach { p =>

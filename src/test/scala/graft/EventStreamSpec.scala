@@ -103,7 +103,7 @@ class EventStreamSpec extends SparkSpecBase {
   test("q_stream_join settles to the batch interval join") {
     // run under a BenchPhases scope so the face's machine-readable sizing
     // (r17 verdict task 3) can be asserted end-to-end: the volume_bound
-    // marker plus p_stateRows, the peak state volume attribute() extracts
+    // marker plus p_stateRows, the peak state volume settle() extracts
     // from the stream's own progress telemetry
     graft.BenchPhases.begin("q_stream_join_spec")
     val streamed =
