@@ -563,7 +563,7 @@ object SparkEntry {
       Similarity.ivfTopK(s, d).withColumn("rnk", col("rnk").cast("long"))
         .select(col("query_id"), col("neighbor_id"), col("rnk"), col("cosine"))),
     // hash-checked since round 4: the fitted k-means model is serialized
-    // into a GENERATED oracle (centroid literals — see oracleSqlDynamic),
+    // into a GENERATED oracle (centroid literals — see oracleSqlDynamicSafe),
     // which mirrors the exact q_ann_ivf search dataflow over them
     "q_ann_ivf_trained" -> ((s, d) =>
       Similarity.ivfTopKTrained(s, d).withColumn("rnk", col("rnk").cast("long"))
@@ -571,7 +571,7 @@ object SparkEntry {
     // product quantization (Jégou et al. 2011): corpus vectors scored from
     // 4-byte PQ codes via asymmetric distance — the 64× memory-compressed
     // scan. Oracle is generated (fitted codebook literals — see
-    // oracleSqlDynamic); recall measured as method "pq" in q_ann_recall.
+    // oracleSqlDynamicSafe); recall measured as method "pq" in q_ann_recall.
     "q_ann_pq" -> ((s, d) =>
       Similarity.pqTopK(s, d).withColumn("rnk", col("rnk").cast("long"))),
     // the production PQ recipe: ADC shortlist (50) + exact rerank — the
@@ -596,14 +596,14 @@ object SparkEntry {
     "q_embed_neardup" -> ((s, d) => Similarity.embeddingNearDupPairs(s, d, 0.2)),
     // SemDeDup-style semantic dedup: trained-quantizer clustering as the
     // blocking, drop-by-any-smaller-id within a cluster at cosine ≥ 0.2.
-    // Oracle is generated (centroid literals) — see oracleSqlDynamic.
+    // Oracle is generated (centroid literals) — see oracleSqlDynamicSafe.
     "q_semantic_dedup" -> ((s, d) => Similarity.semanticDedup(s, d, 0.2)),
     // embedding-space decontamination: training vectors within tau of an
     // eval vector (the paraphrase leak q_contamination's exact n-grams
     // cannot see), candidates bounded by the trained-IVF cells — eval
     // probes ContamProbe cells (default justified by the sweep face),
     // never corpus x eval brute force. Oracle is generated (centroid
-    // literals) — see oracleSqlDynamic.
+    // literals) — see oracleSqlDynamicSafe.
     "q_semantic_contamination" -> ((s, d) =>
       Similarity.semanticContamination(s, d)),
     // measured recall of that screen's cell blocking vs brute-force truth,
@@ -1160,28 +1160,6 @@ object SparkEntry {
 
   // ----------------------------------------------- streaming harness plumbing
 
-  /** Landing dirs, staged once per (query, dataset): the file-stream source
-    * consumes a directory, so repeated in-session runs must reuse the staged
-    * one instead of accumulating temp dirs (round-4 ADVICE). Contents are
-    * registered for JVM-exit deletion — children after the dir, since
-    * `deleteOnExit` deletes in reverse registration order.
-    */
-  private val stagedLandings =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  /** Delete every staged streaming landing — including its checkpoint and
-    * settled target dirs, which live INSIDE the staged dir — and forget it,
-    * so a rerun re-stages, replays every micro-batch, and re-settles from
-    * nothing: cold-equivalent (r14 verdict task 5 — a settled checkpoint
-    * made stream-face reruns replay ZERO batches, giving `steady` a second,
-    * warm-lower-bound semantics).
-    * Called by [[graft.WarmState.resetForColdRerun]] from Bench only.
-    */
-  private[graft] def resetStagedLandings(): Unit =
-    stagedLandings.keys.foreach(k =>
-      stagedLandings.remove(k).foreach(
-        graft.sources.WarmDirs.deleteRecursively))
-
   /** `Files.list`/`Files.walk` return a Stream holding an OPEN directory
     * handle until closed — the try/finally is the leak fix (r6 ADVICE: one
     * leaked handle per staged table).
@@ -1279,16 +1257,15 @@ object SparkEntry {
       .repartition(s.sparkContext.defaultParallelism)
   }
 
+  /** A streaming landing, staged once per (query, dataset) — not per
+    * session, so a second session over the dataset reuses it. Its checkpoint
+    * and settled targets live inside the dir, so a release makes the rerun
+    * re-stage, replay every micro-batch and re-settle from nothing. The
+    * staging is stamped `staging`.
+    */
   private def stagedLanding(key: String, d: String)(
       stage: java.nio.file.Path => Unit): String =
-    stagedLandings.getOrElseUpdate((key, d), {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_$key")
-      BenchPhases.timed("staging")(stage(dir))
-      dir.toFile.deleteOnExit()
-      withPathStream(java.nio.file.Files.list(dir))(
-        _.forEach(p => p.toFile.deleteOnExit()))
-      dir.toString
-    })
+    WarmState.stagedDir((s"stream_$key", d))(dir => BenchPhases.timed("staging")(stage(dir)))
 
   /** Number of time-slice files each streaming landing is staged as. */
   private[graft] val StreamSlices = 4
@@ -1748,7 +1725,7 @@ object SparkEntry {
 
   /** Mirror of Similarity.lshBucket: `planes` sign-random-projection bits.
     * The plane count is corpus-derived (Similarity.lshPlanes), so the two
-    * queries that bucket are generated oracles (oracleSqlDynamic) — the
+    * queries that bucket are generated oracles (oracleSqlDynamicSafe) — the
     * generator and the query share one memoized count.
     */
   private def sqlLshBucket(planes: Int): String = {
@@ -4462,11 +4439,6 @@ object SparkEntry {
         }
     }
   }
-
-  def oracleSqlDynamic(s: SparkSession, d: String): Map[String, String] =
-    pageRankOracle(s, d) ++ lshOracles(s, d) ++ centroidOracles(s, d) ++
-      pqOracles(s, d) ++ annRecallOracle(s, d) ++ annRecallSweepOracle(s, d) ++
-      mjpegOracle() ++ triangleAutoOracle(s)
 
   /** q_triangle_auto, generated: the triangle regime gate replayed
     * end-to-end — the SAME wedge volume (degree-oriented DAG,

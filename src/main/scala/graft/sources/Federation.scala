@@ -22,11 +22,10 @@ import org.apache.spark.sql.functions._
   */
 object Federation {
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private val dbSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Drop an in-memory Derby database. Derby signals a successful drop with
+  /** Drop an in-memory Derby database — the release of a staged db in
+    * [[graft.WarmState]]. Derby signals a successful drop with
     * SQLException 08006 ("shutdown"), so the catch IS the success path.
     */
   private def dropDb(url: String): Unit = {
@@ -34,26 +33,6 @@ object Federation {
     try { java.sql.DriverManager.getConnection(s"$base;drop=true"); () }
     catch { case _: java.sql.SQLException => () }
   }
-
-  /** Each staged database is a full in-heap copy of its source slice, and a
-    * TrieMap keyed by session would otherwise retain it for the JVM lifetime
-    * even after the session stops (r8 ADVICE) — sweep stopped sessions'
-    * entries and drop their Derby dbs before staging a new one.
-    */
-  private def evictStopped(): Unit =
-    Seq(staged, stagedFact).foreach { cache =>
-      cache.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(k => cache.remove(k).foreach(dropDb))
-    }
-
-  /** Drop EVERY staged Derby db and forget it, so the next federated face
-    * re-stages inside its own timed window — cold-rerun uniformity, see
-    * [[graft.WarmState]] (r14 verdict task 5: the JDBC landings were one of
-    * the two face classes whose in-JVM rerun was warm). */
-  private[graft] def resetStaged(): Unit =
-    Seq(staged, stagedFact).foreach { cache =>
-      cache.keys.foreach(k => cache.remove(k).foreach(dropDb))
-    }
 
   /** The federated dimension table name inside the staged database. */
   val DimTable = "orders_dim"
@@ -63,9 +42,8 @@ object Federation {
     * JDBC url — the sandbox's Postgres stand-in (same `df.write.jdbc` /
     * `spark.read.jdbc` call shape, see README's migration section).
     */
-  private[graft] def ordersDimUrl(s: SparkSession, d: String): String = {
-    evictStopped()
-    staged.getOrElseUpdate((s, d), graft.BenchPhases.timed("staging") {
+  private[graft] def ordersDimUrl(s: SparkSession, d: String): String =
+    graft.WarmState.once(("derby_dim", s, d))(graft.BenchPhases.timed("staging") {
       val url = s"jdbc:derby:memory:graft_fed_${dbSeq.incrementAndGet()};create=true"
       Tables.orders(s, d)
         .filter(col("o_orderkey") % 100 === 0)
@@ -74,8 +52,7 @@ object Federation {
         .write.option("batchsize", "10000")
         .jdbc(url, DimTable, new java.util.Properties())
       url
-    })
-  }
+    })(dropDb)
 
   /** Ask the DATABASE for a relation's cardinality — one `COUNT(*)` over
     * one connection, the number the broadcast decision needs. A JDBC
@@ -147,9 +124,6 @@ object Federation {
     */
   val FactScanPartitions = 8
 
-  private val stagedFact =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** Stage the FULL orders table (the history a migration actually strands
     * in the database — not the every-100th dimension slice) into Derby once
     * per (session, dataset). Only the columns the fact queries touch are
@@ -163,9 +137,8 @@ object Federation {
     * database's load (r15: the cold-reset rerun made this cost visible in
     * `steady`, where the r14 warm rerun had hidden it).
     */
-  private[graft] def ordersFactUrl(s: SparkSession, d: String): String = {
-    evictStopped()
-    stagedFact.getOrElseUpdate((s, d), graft.BenchPhases.timed("staging") {
+  private[graft] def ordersFactUrl(s: SparkSession, d: String): String =
+    graft.WarmState.once(("derby_fact", s, d))(graft.BenchPhases.timed("staging") {
       val url = s"jdbc:derby:memory:graft_fedfact_${dbSeq.incrementAndGet()};create=true"
       // SINGLE writer connection, measured (tools/ProfJdbcStage, r16): the
       // source-partitioned write (32 concurrent embedded-Derby connections)
@@ -182,8 +155,7 @@ object Federation {
         .write.option("batchsize", "10000")
         .jdbc(url, FactTable, new java.util.Properties())
       url
-    })
-  }
+    })(dropDb)
 
   /** Partitioned range read of the JDBC fact table: `partitionColumn` +
     * key bounds split the scan into [[FactScanPartitions]] concurrent range

@@ -28,7 +28,7 @@ object Formats {
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
 
   private def stagedDirs(s: SparkSession, d: String): (String, String) = {
-    val root = StagedDirs.once(s, d, "csv_orc") { dir =>
+    val root = graft.WarmState.stagedDir(("csv_orc", s, d)) { dir =>
       Tables.nation(s, d)
         .write.option("header", "true").mode("overwrite").csv(s"$dir/csv_nation")
       Tables.events(s, d)
@@ -70,7 +70,7 @@ object Formats {
     * evolution without reading the staged files.
     */
   private def stagedEvolutionDir(s: SparkSession, d: String): String =
-    StagedDirs.once(s, d, "schema_evolution") { dir =>
+    graft.WarmState.stagedDir(("schema_evolution", s, d)) { dir =>
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

@@ -70,13 +70,13 @@ object JsonLanding {
     * records are bad without parsing anything.
     */
   private def stagedCorruptDir(s: SparkSession, d: String): String =
-    StagedDirs.once(s, d, "json_quarantine") { dir =>
+    graft.WarmState.stagedDir(("json_quarantine", s, d)) { dir =>
       val j = to_json(struct(col("doc_id"), col("lang"), col("n_chars")))
       Tables.documents(s, d)
         .select(when(col("doc_id") % 7 === 3,
             concat(j.substr(lit(1), length(j) - 1), lit("!")))
           .otherwise(j).as("line"))
-        .write.mode("overwrite").text(dir)
+        .write.mode("overwrite").text(dir.toString)
     }
 
   /** Corrupt-record quarantine — the malformed-batch discipline every JSON
@@ -111,7 +111,7 @@ object JsonLanding {
     */
   def streamQuarantineReport(s: SparkSession, d: String): DataFrame = {
     val src = stagedCorruptDir(s, d)
-    val root = StagedDirs.once(s, d, "stream_quarantine") { dir =>
+    val root = graft.WarmState.stagedDir(("stream_quarantine", s, d)) { dir =>
       graft.BenchPhases.settle(graft.sources.Sinks.streamQuarantine(
         s.readStream.option("maxFilesPerTrigger", "1").text(src),
         "doc_id LONG, lang STRING, n_chars LONG", "doc_id",

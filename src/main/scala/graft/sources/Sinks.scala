@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import java.util.Properties
 
 /** Write-side surface of the engine (SURVEY.md §2.1 S6/S7 generalized).
@@ -57,19 +57,32 @@ object Sinks {
       .format("parquet")
       .saveAsTable(table)
 
+  /** The parquet data at `path`, or None before its first load: no such
+    * path, or only names Spark's listing skips (`_…` unless it holds `=`,
+    * as a partition dir does, and `.…`). Probed on the filesystem, because
+    * a read that fails is a failed query every execution listener sees.
+    */
+  private[graft] def landedParquet(spark: SparkSession, path: String): Option[DataFrame] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listed(p: Path) = { val n = p.getName; !(n.startsWith(".") || n.startsWith("_") && !n.contains("=")) }
+    def hasData(p: Path): Boolean = fs.listStatus(p).exists(st =>
+      listed(st.getPath) && (st.isFile || hasData(st.getPath)))
+    if (fs.exists(root) && hasData(root)) Some(spark.read.parquet(path)) else None
+  }
+
   /** Idempotent append: only rows whose `key` is absent from `target`'s
     * current content are written. Re-running the same batch appends nothing.
     */
-  def appendInsertIgnore(incoming: DataFrame, targetPath: String, key: String): Unit = {
-    val spark = incoming.sparkSession
-    val existing =
-      try spark.read.parquet(targetPath).select(key)
-      catch { case _: org.apache.spark.sql.AnalysisException => // first load
-        return incoming.dropDuplicates(key).write.mode(SaveMode.Append).parquet(targetPath)
-      }
-    graft.operators.IngestTransforms.insertIgnore(incoming, existing, key)
-      .write.mode(SaveMode.Append).parquet(targetPath)
-  }
+  def appendInsertIgnore(incoming: DataFrame, targetPath: String, key: String): Unit =
+    landedParquet(incoming.sparkSession, targetPath) match {
+      case Some(target) =>
+        graft.operators.IngestTransforms.insertIgnore(incoming, target.select(key), key)
+          .write.mode(SaveMode.Append).parquet(targetPath)
+      case None => // first load
+        incoming.dropDuplicates(key).write.mode(SaveMode.Append).parquet(targetPath)
+    }
 
   /** [[appendInsertIgnore]] with a MAINTAINED cross-batch Bloom sketch — the
     * cure for the one O(n²) shape in the streaming tier (SURVEY §13.12a):
@@ -157,9 +170,7 @@ object Sinks {
     // read the (test-adjustable) gate ONCE per batch so both the limit
     // plan and the comparison see one value
     val smallMax = SmallBatchMaxRows
-    val targetExists =
-      try { spark.read.parquet(targetPath).schema; true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    val targetExists = landedParquet(spark, targetPath).isDefined
     val latest = if (targetExists) BloomStore.latest(targetPath) else None
 
     // key-exact anti-join honoring the row-shape contract: dedup-within-
@@ -500,16 +511,14 @@ object Sinks {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val current =
-          try spark.read.parquet(targetPath)
-          catch { case _: org.apache.spark.sql.AnalysisException => // first load
-            import org.apache.spark.sql.functions._
-            batch.limit(0).select(
-              (col(key) +: tracked.map(col)
-                :+ col(effCol).cast("timestamp_ntz").as("valid_from")
-                :+ lit(null).cast("timestamp_ntz").as("valid_to")
-                :+ lit(true).as("is_current")): _*)
-          }
+        val current = landedParquet(spark, targetPath).getOrElse { // first load
+          import org.apache.spark.sql.functions._
+          batch.limit(0).select(
+            (col(key) +: tracked.map(col)
+              :+ col(effCol).cast("timestamp_ntz").as("valid_from")
+              :+ lit(null).cast("timestamp_ntz").as("valid_to")
+              :+ lit(true).as("is_current")): _*)
+        }
         val merged = graft.operators.Scd
           .scd2Merge(current, batch, key, tracked, effCol)
           .localCheckpoint() // sever the lineage from the files being replaced
@@ -548,9 +557,7 @@ object Sinks {
         val delta = batch
           .groupBy(to_date(col("ts")).as("day"), col("event_type"))
           .agg(hll_sketch_agg(col("user_id"), lgK).as("user_sketch"))
-        val current =
-          try spark.read.parquet(storePath)
-          catch { case _: org.apache.spark.sql.AnalysisException => delta.limit(0) }
+        val current = landedParquet(spark, storePath).getOrElse(delta.limit(0))
         val merged = current.unionByName(delta)
           .groupBy(col("day"), col("event_type"))
           .agg(hll_union_agg(col("user_sketch"), allowDifferentLgConfigK = false)
@@ -612,15 +619,14 @@ object Sinks {
         // re-offer IDENTICAL rows (same ts ⇒ same day partition), so keys
         // outside the batch's days cannot collide — without the prune this
         // read grows O(total landing) per batch, defeating the layout
-        val novel =
-          try {
-            val existing = spark.read.parquet(landingPath)
+        val novel = landedParquet(spark, landingPath) match {
+          case Some(landed) =>
+            val existing = landed
               .filter(col("event_date").isInCollection(days))
               .select("event_id")
             graft.operators.IngestTransforms.insertIgnore(withDate, existing, "event_id")
-          } catch { case _: org.apache.spark.sql.AnalysisException => // first load
-            withDate.dropDuplicates("event_id")
-          }
+          case None => withDate.dropDuplicates("event_id") // first load
+        }
         novel.write.mode(SaveMode.Append)
           .partitionBy("event_date").parquet(landingPath)
         // refresh reads the landing and writes the ROLLUP — disjoint paths,

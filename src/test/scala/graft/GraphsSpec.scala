@@ -455,7 +455,7 @@ class GraphsSpec extends SparkSpecBase {
       graft.WarmState.resetForColdRerun()
       assert(Graphs.triangleCountEdges(k4.toDF("u", "v"), maxWedges = 4L,
         statsKey = Some(key)).head().getLong(0) === 4L)
-    } finally graft.operators.Graphs.resetWedgeStats()
+    } finally graft.WarmState.resetForColdRerun()
   }
 
   test("auto path runs the chooser's rate with escalation OFF: spill refusal surfaces, sized") {

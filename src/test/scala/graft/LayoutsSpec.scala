@@ -132,7 +132,7 @@ class LayoutsSpec extends SparkSpecBase {
     val second = graft.BenchPhases.snapshot("q_zorder_spec_b").getOrElse(Map.empty)
     // either this test staged the layout (stamp here) or an earlier test
     // already did (no stamp anywhere) — in both cases the SECOND call must
-    // not stamp, which is the fires-once property under the StagedDirs memo
+    // not stamp, which is the fires-once property under the WarmState memo
     assert(!second.contains("p_layout_build"),
       s"memoized second call re-stamped the layout build: $second")
     if (first.contains("p_layout_build"))

@@ -116,6 +116,43 @@ class SinksSpec extends SparkSpecBase {
     assert(hashes.forall(bf.mightContainLong), "sketch must be a superset of target keys")
   }
 
+  test("first loads probe the target without a failed query") {
+    // a failed read reaches every QueryExecutionListener's onFailure (and
+    // Spark's own ObservationManager listener logs it as an ERROR); the
+    // marker action drains the in-order listener queue before counting
+    val failures = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = spark.range(1).toDF()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) markerSeen.countDown()
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = {
+        failures.incrementAndGet(); ()
+      }
+    }
+    val batch = Seq((1L, "a"), (2L, "b"), (2L, "b2")).toDF("id", "v")
+    val root = Files.createTempDirectory("graft_probe")
+    val missing = root.resolve("missing").toString
+    val empty = Files.createDirectory(root.resolve("empty"))
+    Files.writeString(empty.resolve("_SUCCESS"), "") // a dir without data files
+    val sketched = root.resolve("sketched").toString
+    try {
+      spark.listenerManager.register(listener)
+      try {
+        Sinks.appendInsertIgnore(batch, missing, "id")
+        Sinks.appendInsertIgnore(batch, empty.toString, "id")
+        Sinks.appendInsertIgnoreSketched(batch, sketched, "id")
+        marker.collect()
+        assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(listener)
+      assert(failures.get === 0, "an existence probe ran a failing query")
+      Seq(missing, empty.toString, sketched)
+        .foreach(p => assert(spark.read.parquet(p).count() === 2))
+    } finally graft.sources.WarmDirs.deleteRecursively(root.toString)
+  }
+
   test("appendInsertIgnoreSketched: both torn-window crash points stay exact") {
     import graft.sources.BloomStore
     // window A — sketch published, append LOST: the replayed batch probes a
