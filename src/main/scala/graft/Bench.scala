@@ -90,12 +90,13 @@ object Bench {
           def run(): Unit = {
             // job group set on the worker thread so cancelJobGroup can reach
             // every job this query submits; BenchPhases scope so the query's
-            // instrumented phases (staging/stream_wall/per-batch metrics)
-            // land in this run's artifact — begin() also discards a prior
-            // run's phases, so a budget retry reports its own
+            // instrumented phases (staging/stream_wall/per-batch metrics,
+            // codegen compiles) land in this run's artifact — begin() also
+            // discards a prior run's phases, so a budget retry reports its own
             spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
             BenchPhases.begin(name)
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            try BenchPhases.codegen(
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save())
             finally {
               spark.sparkContext.clearJobGroup()
               BenchPhases.end()

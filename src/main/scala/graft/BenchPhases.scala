@@ -15,6 +15,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * phases as it executes, and the final bench JSON carries a
   * `"phases":{query:{phase:secs}}` map alongside the per-query totals.
   *
+  * Every face Bench runs carries `codegen_compiles` and `codegen_s`
+  * ([[codegen]]): how many classes Spark's code generator compiled for it,
+  * and for how long — the cost a warm codegen cache saves on a rerun.
+  *
   * Phase vocabulary for a streaming face:
   *  - `staging`      — one-time landing construction (slice writes); absent
   *                     on a cached-landing rerun, so a retry's phase map
@@ -65,6 +69,25 @@ object BenchPhases {
   def timed[T](phase: String)(body: => T): T = {
     val t0 = System.nanoTime()
     try body finally add(phase, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Runs `body` and stamps what Spark's code generator did meanwhile:
+    * `codegen_compiles`, the classes it compiled (codegen-cache misses),
+    * and `codegen_s`, its compile time. Both counters are JVM-wide, so the
+    * deltas are one face's only while faces run one at a time, as Bench
+    * runs them. Touches `CodeGenerator` only here: its cache takes its
+    * capacity from the session conf when first used, so callers must have
+    * built their session first.
+    */
+  def codegen[T](body: => T): T = {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val (n0, ns0) = (METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    try body
+    finally {
+      add("codegen_compiles", (METRIC_COMPILATION_TIME.getCount - n0).toDouble)
+      add("codegen_s", (CodeGenerator.compileTime - ns0) / 1e9)
+    }
   }
 
   /** Incremental, batch-deduplicated accumulator over a query's progress

@@ -34,6 +34,9 @@ import org.apache.spark.sql.SparkSession
   *    and a dead session can never hit its key again);
   *  - JVM exit releases what is left, after Spark's own shutdown hook has
   *    stopped the session, so no staged dir outlives the process.
+  *
+  * A dir that must live as long as the JVM, whatever the resets (a
+  * session's warehouse), is handed to [[deleteAtExit]] instead.
   */
 object WarmState {
 
@@ -44,8 +47,18 @@ object WarmState {
   /** Runs after Spark's shutdown hook (Hadoop priority 40) and before
     * Hadoop closes its cached filesystems (10). */
   private val ExitPriority = 20
-  org.apache.hadoop.util.ShutdownHookManager.get()
-    .addShutdownHook(() => resetForColdRerun(), ExitPriority)
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+    resetForColdRerun()
+    exitDirs.forEach(graft.sources.WarmDirs.deleteRecursively)
+  }, ExitPriority)
+
+  /** `dir`, deleted with everything in it at JVM exit and not before: no
+    * reset releases it. Must carry the `graft_` temp prefix. */
+  def deleteAtExit(dir: java.nio.file.Path): java.nio.file.Path = {
+    exitDirs.add(dir.toString)
+    dir
+  }
 
   /** The value registered under `key`, built by `build` on the key's first
     * call; `release` frees it when the entry is released. Two threads racing

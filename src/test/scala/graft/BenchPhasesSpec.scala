@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench-artifact attribution registry: thread-scoped recording,
-  * retry-reset semantics, and no-op outside a begin/end scope (the Verify
-  * and unit-test paths run the same instrumented code with zero
-  * bookkeeping).
+  * retry-reset semantics, codegen stamps, and no-op outside a begin/end
+  * scope (the Verify and unit-test paths run the same instrumented code
+  * with zero bookkeeping).
   */
 class BenchPhasesSpec extends AnyFunSuite {
 
@@ -57,6 +60,22 @@ class BenchPhasesSpec extends AnyFunSuite {
     } finally BenchPhases.end()
     assert(BenchPhases.snapshot("q_spec_worker").get("staging") == 3.0)
     assert(BenchPhases.snapshot("q_spec_main").get("staging") == 7.0)
+  }
+
+  test("codegen stamps: the classes compiled inside the scope, 0 on a cache hit") {
+    SparkSpecBase.session // the codegen cache takes its capacity from the session
+    val c = Literal(System.nanoTime())
+    def project() = GenerateUnsafeProjection.generate(
+      Seq(Add(BoundReference(0, LongType, nullable = false), c)))
+    for (q <- Seq("q_spec_codegen_cold", "q_spec_codegen_warm")) {
+      BenchPhases.begin(q)
+      try BenchPhases.codegen(project())
+      finally BenchPhases.end()
+    }
+    val cold = BenchPhases.snapshot("q_spec_codegen_cold").get
+    assert(cold("codegen_compiles") === 1.0 && cold("codegen_s") > 0.0)
+    val warm = BenchPhases.snapshot("q_spec_codegen_warm").get
+    assert(warm("codegen_compiles") === 0.0 && warm("codegen_s") === 0.0)
   }
 
   test("bench JSON strings survive control characters (the disk-full exception class)") {

@@ -154,7 +154,7 @@ class DedupClustersSpec extends SparkSpecBase {
       (6L, "hi there"),              // < 3 tokens: no shingles
       (7L, "apple banana cherry date elderberry fig grape honeydew"),
       (8L, "apple banana cherry date elderberry fig grape honeydew")) // intra-only set
-    val dir = java.nio.file.Files.createTempDirectory("graft_handcorpus")
+    val dir = tempDir("handcorpus")
     val df = docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -15,7 +15,7 @@ class EventStreamSpec extends SparkSpecBase {
 
   /** File-stream sources need a directory; stage the events parquet into one. */
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft_events_stream")
+    val dir = tempDir("events_stream")
     Files.copy(Paths.get(s"$Sf/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -54,7 +54,7 @@ class EventStreamSpec extends SparkSpecBase {
       (8L, "2024-03-20 00:00:00", 2L, 9.0))
       .map { case (id, t, u, v) =>
         (id, java.sql.Timestamp.valueOf(t), u, "click", v, "{}") }
-    val dir = Files.createTempDirectory("graft_sess_stream")
+    val dir = tempDir("sess_stream")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", expr("unix_micros(ts) * 1000")) // raw nanos like the table
       .coalesce(1).write.mode("overwrite")
@@ -187,7 +187,7 @@ class EventStreamSpec extends SparkSpecBase {
       (2L, base + 2L * 1000000000L, 11L, "view", 2.0, """{"k":2}"""),
       (3L, base + 3L * 1000000000L, 10L, "click", 3.0, """{"k":3}"""),
       (2L, base + 4L * 1000000000L, 11L, "view", 2.5, """{"k":4}""")) // dup id
-    val dir = Files.createTempDirectory("graft_dedup_stream")
+    val dir = tempDir("dedup_stream")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
 
@@ -204,7 +204,7 @@ class EventStreamSpec extends SparkSpecBase {
     // AvailableNow batch, must dedup exhaustively regardless of watermark
     // age. The production q_stream_dedup staging is the adversarial
     // multi-batch form — see MultiBatchStreamSpec.
-    val dir = Files.createTempDirectory("graft_dedup_doubled")
+    val dir = tempDir("dedup_doubled")
     for (name <- Seq("a.parquet", "b.parquet"))
       Files.createSymbolicLink(dir.resolve(name), Paths.get(s"$Sf/events.parquet"))
     val deduped = EventStreamJob.dedupStream(

@@ -22,7 +22,7 @@ class FooterSchemaSpec extends SparkSpecBase {
   }
 
   test("a staged stream landing peeks the inferred schema") {
-    val dir = Files.createTempDirectory("graft_footer_landing")
+    val dir = tempDir("footer_landing")
     try {
       SparkEntry.stageEventSlices(spark, Sf, dir, 3)
       val inferred = spark.read.parquet(dir.toString).schema

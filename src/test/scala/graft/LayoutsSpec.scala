@@ -162,8 +162,8 @@ class LayoutsSpec extends SparkSpecBase {
     val total = base.count()
     val nf = Layouts.zFilesFor(total)
     val rowsPerFile = math.max(1L, (total + nf - 1) / nf)
-    val zDir = java.nio.file.Files.createTempDirectory("graft_z_test")
-    val xDir = java.nio.file.Files.createTempDirectory("graft_x_test")
+    val zDir = tempDir("z_test")
+    val xDir = tempDir("x_test")
     try {
       graft.sources.Sinks.writeCompacted(
         base.withColumn("zv", Layouts.zValue(col("zx"), col("zy"))),
@@ -222,7 +222,7 @@ class LayoutsSpec extends SparkSpecBase {
 
   test("purge: a sole-writer partition is deleted, not silently left behind") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_purge_sole")
+    val dir = tempDir("purge_sole")
     try {
       // day1: users 7+8 (rewrite), day2: ONLY user 7 (must be deleted —
       // a dynamic overwrite cannot express an empty partition), day3:

@@ -39,7 +39,7 @@ class LocalFsSpec extends SparkSpecBase {
     try {
       SparkEntry.queries("q_stream_dedup")(spark, Sf)
         .write.format("noop").mode("overwrite").save()
-      val dir = Files.createTempDirectory("graft_fork_guard")
+      val dir = tempDir("fork_guard")
       SparkEntry.writeSliceFile(spark.range(100).toDF("event_id"), dir, "s.parquet",
         System.currentTimeMillis())
       val fm = new FileContextBasedCheckpointFileManager(new Path(dir.toUri),
@@ -83,7 +83,7 @@ class LocalFsSpec extends SparkSpecBase {
   for ((label, nio) <- Seq("RawLocalFileSystem" -> false, "NioRawLocalFileSystem" -> true)) {
     test(s"$label: default umask gives 0644 files and 0755 dirs; setPermission reads back") {
       val fs = rawFs(nio)
-      val root = Files.createTempDirectory("graft_localfs")
+      val root = tempDir("localfs")
       val file = new Path(root.resolve("f").toString)
       val dir = new Path(root.resolve("d").toString)
       fs.create(file).close()
@@ -106,7 +106,7 @@ class LocalFsSpec extends SparkSpecBase {
 
     test(s"$label: symlinks report their target; missing paths throw FileNotFoundException") {
       val fs = rawFs(nio)
-      val root = Files.createTempDirectory("graft_localfs")
+      val root = tempDir("localfs")
       val target = Files.write(root.resolve("target"), "x".getBytes(UTF_8))
       val link = Files.createSymbolicLink(root.resolve("link"), target)
       val ls = fs.getFileLinkStatus(new Path(link.toString))
@@ -123,7 +123,7 @@ class LocalFsSpec extends SparkSpecBase {
 
     test(s"$label: FileContext.rename with OVERWRITE replaces the target") {
       val fc = fileContext(nio)
-      val root = Files.createTempDirectory("graft_localfs")
+      val root = tempDir("localfs")
       val src = Files.write(root.resolve("src"), "new".getBytes(UTF_8))
       val dst = Files.write(root.resolve("dst"), "old".getBytes(UTF_8))
       fc.rename(new Path(src.toUri), new Path(dst.toUri), Options.Rename.OVERWRITE)

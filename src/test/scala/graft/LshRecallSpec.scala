@@ -2,9 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 /** Pins the MEASURED MinHash-LSH recall curve (q_dedup_recall /
   * [[Dedup.lshRecall]]) against the 1-(1-J²)⁸ banding theory on a corpus
@@ -19,7 +17,7 @@ import scala.jdk.CollectionConverters._
   * Everything is md5-deterministic, so the measured recalls are exactly
   * reproducible run to run — the floors are tight.
   */
-class LshRecallSpec extends SparkSpecBase with BeforeAndAfterAll {
+class LshRecallSpec extends SparkSpecBase {
 
   private var dir: Path = _
 
@@ -36,7 +34,7 @@ class LshRecallSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    dir = Files.createTempDirectory("graft_lsh_recall")
+    dir = tempDir("lsh_recall")
     import spark.implicits._
     val rows = for {
       ((_, p), bi) <- Targets.zipWithIndex
@@ -53,12 +51,6 @@ class LshRecallSpec extends SparkSpecBase with BeforeAndAfterAll {
     }
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-  }
-
-  override def afterAll(): Unit = {
-    if (dir != null)
-      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    super.afterAll()
   }
 
   test("recall per band matches the 1-(1-J²)⁸ banding theory on controlled pairs") {

@@ -15,7 +15,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
   private def raw = Tables.eventsRawNanos(spark, Sf)
 
   test("tumbling agg settles to the batch face across K slice batches + sentinel flush") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_tum")
+    val dir = tempDir("mb_tum")
     val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
     def sentinel(days: Long) = spark.range(1).select(lit(-1L).as("event_id"),
       lit(maxTs + days * 86400L * 1000000000L).as("ts"), lit(0L).as("user_id"),
@@ -53,7 +53,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
     // dupWithinFile doubles every event in its own batch; overlapDupHours
     // REPLAYS the previous slice's last hour one batch later — those rows
     // can only be deduped by the operator's cross-batch key state
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_dedup")
+    val dir = tempDir("mb_dedup")
     SparkEntry.stageEventSlices(spark, Sf, dir, SparkEntry.StreamSlices,
       dupWithinFile = true, overlapDupHours = 1.0)
     val q = EventStreamJob.runAvailableNow(
@@ -73,7 +73,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
     // the last slice's batch advances the watermark, so Spark runs one more
     // batch, with no input, to evict state under it; without no-data
     // batches the run is exactly one batch per slice
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_nodata")
+    val dir = tempDir("mb_nodata")
     SparkEntry.stageEventSlices(spark, Sf, dir, SparkEntry.StreamSlices,
       dupWithinFile = true, overlapDupHours = 1.0)
     def batches(s: org.apache.spark.sql.SparkSession, sink: String) = {
@@ -135,7 +135,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
         .select(col("event_id"), col("ts"),
           lit(7L).as("user_id"), lit("view").as("event_type"),
           lit(1.0).as("value"), lit(null).cast("string").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_late")
+    val dir = tempDir("mb_late")
     val base = System.currentTimeMillis()
     // batch 0: events on June 2 up to 11:30 → watermark after it = 10:30,
     // which is PAST the end of June 1's day window (00:00) — that window
@@ -186,7 +186,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
         .select(col("event_id"), col("ts"), lit(7L).as("user_id"),
           col("event_type"), lit(1.0).as("value"),
           lit(null).cast("string").as("props"))
-    val jdir = java.nio.file.Files.createTempDirectory("graft_mb_late_j")
+    val jdir = tempDir("mb_late_j")
     SparkEntry.writeSliceFile(pev(Seq(
       (1L, "2024-06-01 08:30:00", "view"),       // would match the late purchase
       (10L, "2024-06-02 10:00:00", "view"),
@@ -218,7 +218,7 @@ class MultiBatchStreamSpec extends SparkSpecBase {
   }
 
   test("anomaly stream equals the batch window face; baselines span batch boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb_anom")
+    val dir = tempDir("mb_anom")
     SparkEntry.stageEventSlices(spark, Sf, dir, SparkEntry.StreamSlices)
     val q = EventStreamJob.runAvailableNow(
       EventStreamJob.anomalyStream(EventStreamJob.readEventStream(

@@ -1,7 +1,6 @@
 package graft
 
 import graft.jobs.PipelineJobs
-import java.nio.file.Files
 
 /** End-to-end runs of the reference's two DAG shapes over the API-shaped
   * fixtures: load counts, target contents, re-run idempotency, and the
@@ -11,7 +10,7 @@ class PipelineJobsSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("posts job: land -> transform -> insert-ignore, idempotent re-run") {
-    val target = Files.createTempDirectory("graft_posts_t").toString + "/posts"
+    val target = tempDir("posts_t").toString + "/posts"
     val landing = Seq(fixture("/fixtures/posts/posts_batch.json"))
     assert(PipelineJobs.runPostsJob(spark, landing, target) == 3)
     val loaded = spark.read.parquet(target)
@@ -25,7 +24,7 @@ class PipelineJobsSpec extends SparkSpecBase {
   }
 
   test("comments job: day-window posts scan drives the fan-out join") {
-    val base = Files.createTempDirectory("graft_comments_t").toString
+    val base = tempDir("comments_t").toString
     val postsTarget = base + "/posts"
     val commentsTarget = base + "/comments"
     PipelineJobs.runPostsJob(spark,
@@ -50,7 +49,7 @@ class PipelineJobsSpec extends SparkSpecBase {
     // day has passed is MISSED FOREVER (SURVEY.md §2.8). Because this
     // engine's window is a query parameter, backfill = run the same job over
     // the historical window — and insert-ignore makes doing so idempotent.
-    val base = Files.createTempDirectory("graft_backfill_t").toString
+    val base = tempDir("backfill_t").toString
     val postsTarget = base + "/posts"
     val commentsTarget = base + "/comments"
     PipelineJobs.runPostsJob(spark,
@@ -70,7 +69,7 @@ class PipelineJobsSpec extends SparkSpecBase {
   }
 
   test("posts job refuses a missing landing batch (sensor precondition)") {
-    val target = Files.createTempDirectory("graft_posts_m").toString + "/posts"
+    val target = tempDir("posts_m").toString + "/posts"
     intercept[IllegalArgumentException] {
       PipelineJobs.runPostsJob(spark, Seq("/nonexistent/batch.json"), target)
     }

@@ -60,9 +60,9 @@ class ScdSpec extends SparkSpecBase {
 
   test("streamScd2: versions across micro-batches; torn-batch replay is a no-op") {
     import java.nio.file.Files
-    val landing = Files.createTempDirectory("graft_scd_src")
-    val target = Files.createTempDirectory("graft_scd_tgt").toString + "/dim"
-    val ckpt = Files.createTempDirectory("graft_scd_ck").toString
+    val landing = tempDir("scd_src")
+    val target = tempDir("scd_tgt").toString + "/dim"
+    val ckpt = tempDir("scd_ck").toString
     def batchDf(rows: Seq[(Long, String, String)], eff: String) =
       rows.toDF("k", "name", "seg")
         .withColumn("eff", lit(eff).cast("timestamp_ntz"))

@@ -11,7 +11,7 @@ class SinksSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("partitioned write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/orders"
+    val dir = tempDir("part").toString + "/orders"
     val orders = Tables.orders(spark, Sf)
       .withColumn("o_year", year(col("o_orderdate")))
     Sinks.writePartitioned(orders, dir, Seq("o_year"))
@@ -54,7 +54,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("writeCompacted: sized file count, per-file cap, disjoint key ranges") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/li"
+    val dir = tempDir("compact").toString + "/li"
     val li = Tables.lineitem(spark, Sf).select("l_orderkey", "l_quantity")
     val total = li.count()
     val per = 1000L
@@ -84,7 +84,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("appendInsertIgnore is idempotent across re-runs") {
-    val dir = Files.createTempDirectory("graft_append").toString + "/t"
+    val dir = tempDir("append").toString + "/t"
     val batch = Seq((1L, "a"), (2L, "b"), (2L, "b2")).toDF("id", "v")
     Sinks.appendInsertIgnore(batch, dir, "id")
     assert(spark.read.parquet(dir).count() == 2) // within-batch dedup
@@ -97,7 +97,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("appendInsertIgnoreSketched matches plain semantics; sketch supersets target") {
-    val dir = Files.createTempDirectory("graft_sk_append").toString + "/t"
+    val dir = tempDir("sk_append").toString + "/t"
     val batch = Seq((1L, "a"), (2L, "b"), (2L, "b2")).toDF("id", "v")
     Sinks.appendInsertIgnoreSketched(batch, dir, "id")
     assert(spark.read.parquet(dir).count() == 2) // within-batch dedup
@@ -133,7 +133,7 @@ class SinksSpec extends SparkSpecBase {
       }
     }
     val batch = Seq((1L, "a"), (2L, "b"), (2L, "b2")).toDF("id", "v")
-    val root = Files.createTempDirectory("graft_probe")
+    val root = tempDir("probe")
     val missing = root.resolve("missing").toString
     val empty = Files.createDirectory(root.resolve("empty"))
     Files.writeString(empty.resolve("_SUCCESS"), "") // a dir without data files
@@ -158,7 +158,7 @@ class SinksSpec extends SparkSpecBase {
     // window A — sketch published, append LOST: the replayed batch probes a
     // sketch that already knows its keys, so every row is a candidate and
     // the exact anti-join must re-admit them (rows must not be lost)
-    val dirA = Files.createTempDirectory("graft_sk_tornA").toString + "/t"
+    val dirA = tempDir("sk_tornA").toString + "/t"
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     Sinks.appendInsertIgnoreSketched(b0, dirA, "id")
     val b1 = Seq((3L, "c"), (4L, "d")).toDF("id", "v")
@@ -187,7 +187,7 @@ class SinksSpec extends SparkSpecBase {
     val saved = Sinks.SmallBatchMaxRows
     Sinks.SmallBatchMaxRows = 8
     try {
-      val dir = Files.createTempDirectory("graft_sk_large").toString + "/t"
+      val dir = tempDir("sk_large").toString + "/t"
       val b0 = spark.range(0, 40).select(col("id"), lit("x").as("v"))
       Sinks.appendInsertIgnoreSketched(b0, dir, "id")
       assert(spark.read.parquet(dir).count() == 40)
@@ -209,7 +209,7 @@ class SinksSpec extends SparkSpecBase {
       val hashes = spark.read.parquet(dir).select(xxhash64(col("id"))).as[Long].collect()
       assert(hashes.forall(bf.mightContainLong), "sketch must be a superset of target keys")
       // within-batch dedup holds on the large shape too
-      val dirD = Files.createTempDirectory("graft_sk_large_dup").toString + "/t"
+      val dirD = tempDir("sk_large_dup").toString + "/t"
       val dup = spark.range(0, 20).select((col("id") % 10).as("id"), lit("d").as("v"))
       Sinks.appendInsertIgnoreSketched(dup, dirD, "id")
       assert(spark.read.parquet(dirD).count() == 10)
@@ -219,7 +219,7 @@ class SinksSpec extends SparkSpecBase {
   test("appendInsertIgnoreSketched: legacy bootstrap and capacity rebuild stay exact") {
     // target created by the PLAIN append (no sketch) — first sketched batch
     // must bootstrap from the target's true keys
-    val dir = Files.createTempDirectory("graft_sk_legacy").toString + "/t"
+    val dir = tempDir("sk_legacy").toString + "/t"
     Sinks.appendInsertIgnore(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir, "id")
     Sinks.appendInsertIgnoreSketched(
       Seq((2L, "dup"), (3L, "c")).toDF("id", "v"), dir, "id")
@@ -227,7 +227,7 @@ class SinksSpec extends SparkSpecBase {
       == Seq(1L, 2L, 3L))
     // tiny capacityHint forces the outgrown-rebuild branch on batch 2; the
     // rebuilt sketch carries 4x capacity and results stay exact
-    val dir2 = Files.createTempDirectory("graft_sk_grow").toString + "/t"
+    val dir2 = tempDir("sk_grow").toString + "/t"
     Sinks.appendInsertIgnoreSketched(
       spark.range(3).select(col("id"), lit("x").as("v")), dir2, "id",
       capacityHint = 4)
@@ -244,13 +244,13 @@ class SinksSpec extends SparkSpecBase {
     // landing dir with duplicate keys in the arriving data — the
     // at-least-once shape (part files sit directly in the dir: the file
     // stream source does not recurse)
-    val landing = Files.createTempDirectory("graft_stream_sink_src")
+    val landing = tempDir("stream_sink_src")
     Seq((1L, "a"), (2L, "b"), (2L, "b_dup"), (3L, "c")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(landing.toString)
-    val target = Files.createTempDirectory("graft_stream_sink_tgt").toString + "/t"
+    val target = tempDir("stream_sink_tgt").toString + "/t"
     def run(): Unit = {
       // fresh checkpoint per run = full replay, the worst-case redelivery
-      val ckpt = Files.createTempDirectory("graft_stream_sink_ck").toString
+      val ckpt = tempDir("stream_sink_ck").toString
       val stream = spark.readStream
         .schema("id LONG, v STRING").parquet(landing.toString)
       Sinks.streamInsertIgnore(stream, target, "id", ckpt).awaitTermination()
@@ -269,12 +269,12 @@ class SinksSpec extends SparkSpecBase {
     // commit. The restart replays the batch whose rows already landed, and
     // the anti-join must turn the at-least-once redelivery into zero
     // duplicates — the exactly-once claim proven under failure.
-    val landing = Files.createTempDirectory("graft_torn_src")
+    val landing = tempDir("torn_src")
     Seq((1L, "a"), (2L, "b"), (3L, "c"), (2L, "dup")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(landing.toString)
-    val target = Files.createTempDirectory("graft_torn_tgt").toString + "/t"
+    val target = tempDir("torn_tgt").toString + "/t"
     // ONE checkpoint dir across both runs — the restart resumes it
-    val ckpt = Files.createTempDirectory("graft_torn_ck").toString
+    val ckpt = tempDir("torn_ck").toString
     def start() = Sinks.streamInsertIgnore(
       spark.readStream.schema("id LONG, v STRING").parquet(landing.toString),
       target, "id", ckpt)
@@ -297,7 +297,7 @@ class SinksSpec extends SparkSpecBase {
     // register-wise max (idempotent) — prove it under the torn-batch shape:
     // crash AFTER batch 1's merged store landed but BEFORE its checkpoint
     // commit, restart, and the re-merge must change nothing.
-    val landing = Files.createTempDirectory("graft_sksrc")
+    val landing = tempDir("sksrc")
     Seq(("2024-01-01 10:00:00", 1L, "view"), ("2024-01-01 11:00:00", 2L, "view"),
         ("2024-01-02 10:00:00", 1L, "buy"), ("2024-01-02 11:00:00", 3L, "view"),
         ("2024-01-02 12:00:00", 1L, "view"))
@@ -305,8 +305,8 @@ class SinksSpec extends SparkSpecBase {
       .select(col("ts_s").cast("timestamp_ntz").as("ts"), col("user_id"),
         col("event_type"))
       .repartition(2).write.mode("overwrite").parquet(landing.toString)
-    val store = Files.createTempDirectory("graft_sktgt").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_skck").toString
+    val store = tempDir("sktgt").toString + "/store"
+    val ckpt = tempDir("skck").toString
     def start() = Sinks.streamSketchStore(
       spark.readStream.schema("ts TIMESTAMP_NTZ, user_id LONG, event_type STRING")
         .option("maxFilesPerTrigger", "1").parquet(landing.toString),
@@ -340,7 +340,7 @@ class SinksSpec extends SparkSpecBase {
     // refresh. Crash AFTER batch 1's refresh landed but BEFORE its commit;
     // the restart must replay into the identical rollup. File B re-offers
     // id 2 (duplicate delivery) — the landing anti-join must drop it.
-    val landing = Files.createTempDirectory("graft_mvsrc")
+    val landing = tempDir("mvsrc")
     val base = System.currentTimeMillis()
     def slice(rows: Seq[(Long, String, String, Double)], name: String, mtime: Long): Unit = {
       val p = s"$landing/_stage_$name"
@@ -358,9 +358,9 @@ class SinksSpec extends SparkSpecBase {
       (2L, "2024-01-01 11:00:00", "buy", 20.0)), "a.parquet", base)
     slice(Seq((2L, "2024-01-01 11:00:00", "buy", 20.0), // duplicate delivery
       (3L, "2024-01-02 10:00:00", "view", 5.0)), "b.parquet", base + 2000L)
-    val mvLanding = Files.createTempDirectory("graft_mvland").toString + "/l"
-    val rollup = Files.createTempDirectory("graft_mvtgt").toString + "/r"
-    val ckpt = Files.createTempDirectory("graft_mvck").toString
+    val mvLanding = tempDir("mvland").toString + "/l"
+    val rollup = tempDir("mvtgt").toString + "/r"
+    val ckpt = tempDir("mvck").toString
     def start() = Sinks.streamDailyRollup(
       spark.readStream
         .schema("event_id LONG, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE")
@@ -390,7 +390,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("streamQuarantine: parsed/DLQ split is replay-safe under a torn batch") {
-    val landing = Files.createTempDirectory("graft_dlqsrc")
+    val landing = tempDir("dlqsrc")
     def lines(name: String, mtime: Long, ls: String*): Unit = {
       val f = new java.io.File(s"$landing/$name")
       java.nio.file.Files.write(f.toPath, ls.mkString("\n").getBytes)
@@ -404,8 +404,8 @@ class SinksSpec extends SparkSpecBase {
     lines("b.txt", base + 2000L,
       """{"doc_id":1,"lang":"en","n_chars":5}""", // duplicate id — dropped
       """not json at all""")                      // DLQ
-    val root = Files.createTempDirectory("graft_dlqtgt")
-    val ckpt = Files.createTempDirectory("graft_dlqck").toString
+    val root = tempDir("dlqtgt")
+    val ckpt = tempDir("dlqck").toString
     def start() = Sinks.streamQuarantine(
       spark.readStream.option("maxFilesPerTrigger", "1").text(landing.toString),
       "doc_id LONG, lang STRING, n_chars LONG", "doc_id",
@@ -430,7 +430,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("streamVectorIndex: torn batch replays to an identical index; assignment frozen-model") {
-    val landing = Files.createTempDirectory("graft_vecsrc")
+    val landing = tempDir("vecsrc")
     val base = System.currentTimeMillis()
     def slice(rows: Seq[(Long, Array[Float])], name: String, mtime: Long): Unit = {
       val p = s"$landing/_stage_$name"
@@ -446,8 +446,8 @@ class SinksSpec extends SparkSpecBase {
     slice(Seq((1L, Array(0.9f, 0.1f)), (2L, Array(0.2f, 0.8f))), "a.parquet", base)
     slice(Seq((2L, Array(0.2f, 0.8f)), // duplicate delivery — dropped
       (3L, Array(0.7f, 0.7f))), "b.parquet", base + 2000L) // tie -> cell 0
-    val store = Files.createTempDirectory("graft_vectgt").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_vecck").toString
+    val store = tempDir("vectgt").toString + "/store"
+    val ckpt = tempDir("vecck").toString
     def start() = Sinks.streamVectorIndex(
       spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", "1").parquet(landing.toString),
@@ -474,7 +474,7 @@ class SinksSpec extends SparkSpecBase {
     val probes = Similarity.contaminationEvalProbes(spark, Sf)
     val corpus = Tables.embeddings(spark, Sf)
       .select(col("vec_id"), col("embedding")).filter(col("vec_id") >= 50)
-    val landing = Files.createTempDirectory("graft_scsrc")
+    val landing = tempDir("scsrc")
     val base = System.currentTimeMillis()
     // two slices + a duplicate-delivery sliver of slice 0 inside slice 1 —
     // the anti-join must drop the re-offer, not double-count its hits
@@ -484,8 +484,8 @@ class SinksSpec extends SparkSpecBase {
       corpus.filter(col("vec_id") % 2 === 1)
         .unionByName(corpus.filter(col("vec_id") % 16 === 0)),
       landing, "b01.parquet", base + 2000L)
-    val store = Files.createTempDirectory("graft_sctgt").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_scck").toString
+    val store = tempDir("sctgt").toString + "/store"
+    val ckpt = tempDir("scck").toString
     def start() = Sinks.streamSemanticContamination(
       spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", "1").parquet(landing.toString),
@@ -514,7 +514,7 @@ class SinksSpec extends SparkSpecBase {
 
   test("streamBandIndex: torn batch replays to an identical index; probe equals batch face") {
     import graft.operators.Dedup
-    val landing = Files.createTempDirectory("graft_bisrc")
+    val landing = tempDir("bisrc")
     val corpus = Tables.documents(spark, Sf)
       .filter(col("doc_id") % 5 =!= 0)
       .select(col("doc_id"), col("text"))
@@ -523,7 +523,7 @@ class SinksSpec extends SparkSpecBase {
       .write.mode("overwrite").parquet(landing.toString + "/s0")
     corpus.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(landing.toString + "/s1")
-    val flat = Files.createTempDirectory("graft_biland")
+    val flat = tempDir("biland")
     var t = System.currentTimeMillis()
     for (i <- 0 to 1) {
       val part = Files.list(java.nio.file.Paths.get(s"$landing/s$i"))
@@ -535,8 +535,8 @@ class SinksSpec extends SparkSpecBase {
         java.nio.file.attribute.FileTime.fromMillis(t))
       t += 2000
     }
-    val store = Files.createTempDirectory("graft_bitgt").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_bick").toString
+    val store = tempDir("bitgt").toString + "/store"
+    val ckpt = tempDir("bick").toString
     def start() = Sinks.streamBandIndex(
       spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1").parquet(flat.toString),
@@ -581,7 +581,7 @@ class SinksSpec extends SparkSpecBase {
   }
 
   test("overwritePartitionsDynamic replaces only the touched partition; siblings' files untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dynover")
+    val dir = tempDir("dynover")
     try {
       val init = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 0.0), (4L, "c", 40.0))
         .toDF("id", "p", "v")

@@ -1,14 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs. One session per test JVM
   * (`Test / fork := true`), built with the same configuration as
   * Bench/Verify ([[Tables.sessionBuilder]]) so test behavior matches the
-  * driver's runs (UTC, NTZ parquet timestamps, nanosAsLong, AQE).
+  * driver's runs (UTC, NTZ parquet timestamps, nanosAsLong, AQE, a
+  * throwaway warehouse for the managed-table tests).
   */
-trait SparkSpecBase extends AnyFunSuite {
+trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   /** Smallest driver-generated scale factor — fast enough for unit tests. */
   val Sf = "/root/testdata/sf0.001"
@@ -19,16 +21,25 @@ trait SparkSpecBase extends AnyFunSuite {
     require(url != null, s"missing test fixture $path")
     url.getPath
   }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** A fresh temp dir `graft_<name>…`, deleted with everything in it when
+    * the suite ends. */
+  def tempDir(name: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name")
+    tempDirs.add(dir.toString)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(graft.sources.WarmDirs.deleteRecursively)
+    finally super.afterAll()
 }
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = Tables.sessionBuilder("local[4]", "4")
-      // managed-table tests (bucketing) need a throwaway warehouse;
-      // static conf, so it must be set at build time
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
+    val s = Tables.sessionBuilder("local[4]", "4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -50,7 +50,7 @@ class TemporalJoinsSpec extends SparkSpecBase {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
     // route through a parquet dir so the query's Tables.events nanos path runs
-    val dir = java.nio.file.Files.createTempDirectory("graft_range_join")
+    val dir = tempDir("range_join")
     events.withColumn("ts", expr("unix_micros(ts) * 1000")) // fake nanos column
       .coalesce(1).write.mode("overwrite")
       .parquet(dir.resolve("events.parquet").toString)

@@ -1,11 +1,9 @@
 package graft
 
 import graft.streaming.EventStreamJob
-import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the round-7 breakage class forever: the physical encoding of
   * `events.ts` is driver-owned and CHANGED between rounds (TIMESTAMP(NANOS)
@@ -26,26 +24,8 @@ import org.scalatest.BeforeAndAfterAll
   *  - TIMESTAMP (LTZ) — `timestamp[us]` adjusted to UTC, the third way a
   *    future regeneration could plausibly encode the same instants.
   */
-class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
+class TsEncodingSpec extends SparkSpecBase {
   import spark.implicits._
-
-  // fixture temp dirs used to accumulate across runs (r8 ADVICE) — track
-  // every created dir and remove them recursively after the suite
-  private val createdDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
-  private def tempDir(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    createdDirs.synchronized { createdDirs += p }
-    p
-  }
-  override def afterAll(): Unit = {
-    createdDirs.foreach { dir =>
-      val st = Files.walk(dir)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally st.close()
-    }
-    super.afterAll()
-  }
 
   // sub-micro digits in the nanos fixture prove micros-truncation parity
   private val rowsNanos = Seq(
@@ -62,7 +42,7 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
   private def encodedDirs(table: String, tsCol: String, df: DataFrame)
       : Map[String, String] = {
     def write(suffix: String, enc: DataFrame => DataFrame): String = {
-      val dir = tempDir(s"graft_ts_${table}_$suffix")
+      val dir = tempDir(s"ts_${table}_$suffix")
       enc(df).coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/$table.parquet")
       dir.toString
@@ -90,12 +70,12 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
   }
 
   test("Tables.table reads the schema Spark infers from every encoding fixture") {
-    val ids = tempDir("graft_footer_ids")
+    val ids = tempDir("footer_ids")
     Seq((1, 7, "a b c")).toDF("doc_id", "n_chars", "text")
       .coalesce(1).write.parquet(s"$ids/documents.parquet")
     Seq((1, Array(1f, 2f))).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$ids/embeddings.parquet")
-    val dbl = tempDir("graft_footer_emb_double")
+    val dbl = tempDir("footer_emb_double")
     Seq((1L, Array(1.0, 2.0))).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dbl/embeddings.parquet")
     val dated = Seq(
@@ -173,7 +153,7 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
   }
 
   test("Tables.embeddings fails fast on a double re-encode") {
-    val dir = tempDir("graft_emb_double")
+    val dir = tempDir("emb_double")
     Seq((1L, Array(1.0, 2.0))).toDF("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val e = intercept[IllegalStateException](Tables.embeddings(spark, dir.toString))
@@ -202,7 +182,7 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
     // plausible narrowing) and pin the whole staged path: canonical read
     // schema, identical values, byte-identical synthesized media payloads,
     // and an identical slice-file stream round-trip.
-    val dir = tempDir("graft_docs_reenc")
+    val dir = tempDir("docs_reenc")
     Tables.documents(spark, Sf)
       .withColumn("doc_id", col("doc_id").cast("int"))
       .withColumn("n_chars", col("n_chars").cast("int"))
@@ -231,7 +211,7 @@ class TsEncodingSpec extends SparkSpecBase with BeforeAndAfterAll {
       java.util.Arrays.equals(r.payload, canonical(r.media_id)), s"payload ${r.media_id}"))
     // the streaming-index staged read path: a slice file written from the
     // canonicalized frame re-reads through the asserted LONG schema
-    val landing = tempDir("graft_reenc_landing")
+    val landing = tempDir("reenc_landing")
     docs.select(col("doc_id"), col("text")).coalesce(1)
       .write.mode("overwrite").parquet(s"$landing/b00.parquet")
     val stream = spark.readStream.schema("doc_id LONG, text STRING")

@@ -107,7 +107,7 @@ class WarmStateSpec extends SparkSpecBase {
     WarmState.resetForColdRerun()
   }
 
-  /** One child run serves both rows below: about a Spark start-up each. */
+  /** One child run serves the three rows below: about a Spark start-up each. */
   private lazy val child: Map[String, String] = {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
@@ -132,5 +132,14 @@ class WarmStateSpec extends SparkSpecBase {
     val dir = java.nio.file.Paths.get(child("exit_dir"))
     assert(dir.getFileName.toString.startsWith("graft_warmstate_child_exit"))
     assert(!java.nio.file.Files.exists(dir), s"$dir outlived its JVM")
+  }
+
+  test("each session's warehouse dir is deleted at JVM exit") {
+    val dirs = Seq("warehouse_first", "warehouse_live").map(k => java.nio.file.Paths.get(child(k)))
+    assert(dirs.distinct.size === 2, "each session build makes its own warehouse")
+    dirs.foreach { d =>
+      assert(d.getFileName.toString.startsWith("graft_warehouse"))
+      assert(!java.nio.file.Files.exists(d), s"$d outlived its JVM")
+    }
   }
 }
