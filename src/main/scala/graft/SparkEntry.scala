@@ -722,23 +722,16 @@ object SparkEntry {
     //    checkpoint and target cached per (query, dataset); reruns replay
     //    nothing and re-read the settled target.
     "q_stream_insert_ignore" -> ((s, d) => {
-      val root = stagedLanding("ins_ign_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
+      val root = settledSink(s, ("stream_ins_ign_mb", d)) { landing =>
         val ord = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         val base = System.currentTimeMillis()
-        writeSliceFile(ord.filter(col("o_orderkey") % 2 === 0),
-          dir.resolve("landing"), "b0.parquet", base)
-        writeSliceFile(ord.filter(col("o_orderkey") % 3 === 0),
-          dir.resolve("landing"), "b1.parquet", base + 2000L)
-      }
-      val stream = s.readStream
-        .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/landing")
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamInsertIgnore(stream,
-          s"$root/tgt", "o_orderkey", s"$root/ckpt"))
+        writeSliceFile(ord.filter(col("o_orderkey") % 2 === 0), landing, "b0.parquet", base)
+        writeSliceFile(ord.filter(col("o_orderkey") % 3 === 0), landing, "b1.parquet",
+          base + 2000L)
+      }(sliceStream(s, "o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")) {
+        (stream, root) => graft.sources.Sinks.streamInsertIgnore(stream,
+          s"$root/tgt", "o_orderkey", s"$root/ckpt")
       }
       s.read.parquet(s"$root/tgt")
     }),
@@ -750,14 +743,13 @@ object SparkEntry {
     //    staging dir per (query, dataset): a repeat run restarts from the
     //    committed checkpoint, replays nothing, and re-reads the snapshot.
     "q_stream_scd2" -> ((s, d) => {
-      val root = stagedLanding("scd2_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
+      val root = settledSink(s, ("stream_scd2_mb", d)) { landing =>
         val cust = Tables.customer(s, d)
         val base = System.currentTimeMillis()
         writeSliceFile(
           cust.select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
             .withColumn("eff", lit("1990-01-01 00:00:00").cast("timestamp_ntz")),
-          dir.resolve("landing"), "b0.parquet", base)
+          landing, "b0.parquet", base)
         writeSliceFile(
           cust.filter(col("c_custkey") % 7 === 0)
             .select(col("c_custkey"), col("c_name"),
@@ -766,15 +758,11 @@ object SparkEntry {
               .select((col("c_custkey") + 1000000L).as("c_custkey"),
                 concat(lit("NEW_"), col("c_name")).as("c_name"), col("c_mktsegment")))
             .withColumn("eff", lit("1996-06-01 00:00:00").cast("timestamp_ntz")),
-          dir.resolve("landing"), "b1.parquet", base + 2000L)
-      }
-      val stream = s.readStream
-        .schema("c_custkey LONG, c_name STRING, c_mktsegment STRING, eff TIMESTAMP_NTZ")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/landing")
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamScd2(stream, s"$root/dim",
-          "c_custkey", Seq("c_name", "c_mktsegment"), "eff", s"$root/ckpt"))
+          landing, "b1.parquet", base + 2000L)
+      }(sliceStream(s,
+        "c_custkey LONG, c_name STRING, c_mktsegment STRING, eff TIMESTAMP_NTZ")) {
+        (stream, root) => graft.sources.Sinks.streamScd2(stream, s"$root/dim",
+          "c_custkey", Seq("c_name", "c_mktsegment"), "eff", s"$root/ckpt")
       }
       s.read.parquet(s"$root/dim")
     }),
@@ -787,15 +775,11 @@ object SparkEntry {
     //    two maintenance paths.
     "q_stream_sketch_store" -> ((s, d) => {
       import graft.streaming.EventStreamJob
-      val root = stagedLanding("sketchstore_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
-        stageEventSlices(s, d, dir.resolve("landing"), StreamSlices)
-      }
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamSketchStore(
-          EventStreamJob.readEventStream(s, s"$root/landing",
-            maxFilesPerTrigger = Some(1)),
-          s"$root/store", s"$root/ckpt"))
+      val root = settledSink(s, ("stream_sketchstore_mb", d)) {
+        stageEventSlices(s, d, _, StreamSlices)
+      }(EventStreamJob.readEventStream(s, _, maxFilesPerTrigger = Some(1))) {
+        (stream, root) =>
+          graft.sources.Sinks.streamSketchStore(stream, s"$root/store", s"$root/ckpt")
       }
       Layouts.sketchStoreCheckedAt(s, d, s"$root/store")
     }),
@@ -806,8 +790,7 @@ object SparkEntry {
     //    SAME batch-probes-corpus query the statically-built index answers
     //    — one oracle (q_dedup_incremental's), two maintenance paths.
     "q_stream_band_index" -> ((s, d) => {
-      val root = stagedLanding("bandidx_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
+      val root = settledSink(s, ("stream_bandidx_mb", d)) { landing =>
         val corpus = Tables.documents(s, d)
           .filter(col("doc_id") % 5 =!= 0)
           .select(col("doc_id"), col("text"))
@@ -815,16 +798,10 @@ object SparkEntry {
         for (i <- 0 until StreamSlices) {
           writeSliceFile(
             corpus.filter(pmod(expr("doc_id div 5"), lit(StreamSlices)) === i),
-            dir.resolve("landing"), f"b$i%02d.parquet", base + i * 2000L)
+            landing, f"b$i%02d.parquet", base + i * 2000L)
         }
-      }
-      val stream = s.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/landing")
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamBandIndex(stream,
-          s"$root/store", s"$root/ckpt"))
+      }(sliceStream(s, "doc_id LONG, text STRING")) { (stream, root) =>
+        graft.sources.Sinks.streamBandIndex(stream, s"$root/store", s"$root/ckpt")
       }
       Dedup.incrementalNearDupProbeIndex(s, d, s"$root/store")
     }),
@@ -836,17 +813,11 @@ object SparkEntry {
     //    oracle with the centroid literals)
     "q_stream_vector_index" -> ((s, d) => {
       val cents = Similarity.trainedCentroids(s, d)
-      val root = stagedLanding("vecidx_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
-        stageVecSlices(
-          Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-          dir.resolve("landing"))
-      }
-      val stream = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1").parquet(s"$root/landing")
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamVectorIndex(stream, cents,
-          s"$root/store", s"$root/ckpt"))
+      val root = settledSink(s, ("stream_vecidx_mb", d)) {
+        stageVecSlices(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), _)
+      }(sliceStream(s, "vec_id LONG, embedding ARRAY<FLOAT>")) { (stream, root) =>
+        graft.sources.Sinks.streamVectorIndex(stream, cents,
+          s"$root/store", s"$root/ckpt")
       }
       s.read.parquet(s"$root/store")
         .groupBy(col("centroid_id"))
@@ -868,19 +839,12 @@ object SparkEntry {
       // — inside EVERY micro-batch's screen action. One checkpoint of the
       // evals×nprobe-row table pays it once per face invocation.
       val probes = Similarity.contaminationEvalProbes(s, d).localCheckpoint()
-      val root = stagedLanding("semcontam_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
-        stageVecSlices(
-          Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding"))
-            .filter(col("vec_id") >= 50),
-          dir.resolve("landing"))
-      }
-      val stream = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1").parquet(s"$root/landing")
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamSemanticContamination(
-          stream, cents, probes, 0.2, s"$root/store", s"$root/ckpt"))
+      val root = settledSink(s, ("stream_semcontam_mb", d)) {
+        stageVecSlices(Tables.embeddings(s, d)
+          .select(col("vec_id"), col("embedding")).filter(col("vec_id") >= 50), _)
+      }(sliceStream(s, "vec_id LONG, embedding ARRAY<FLOAT>")) { (stream, root) =>
+        graft.sources.Sinks.streamSemanticContamination(
+          stream, cents, probes, 0.2, s"$root/store", s"$root/ckpt")
       }
       Similarity.contaminationRollup(s.read.parquet(s"$root/store"))
     }),
@@ -892,16 +856,11 @@ object SparkEntry {
     //    The settled rollup must equal the batch rollup over the source.
     "q_stream_daily_mv" -> ((s, d) => {
       import graft.streaming.EventStreamJob
-      val root = stagedLanding("dailymv_mb", d) { dir =>
-        java.nio.file.Files.createDirectory(dir.resolve("landing"))
-        stageEventSlices(s, d, dir.resolve("landing"), StreamSlices,
-          overlapDupHours = 1.0)
-      }
-      withStreamScanSized(s, s"$root/landing") {
-        BenchPhases.settle(graft.sources.Sinks.streamDailyRollup(
-          EventStreamJob.readEventStream(s, s"$root/landing",
-            maxFilesPerTrigger = Some(1)),
-          s"$root/mv_landing", s"$root/rollup", s"$root/ckpt"))
+      val root = settledSink(s, ("stream_dailymv_mb", d)) {
+        stageEventSlices(s, d, _, StreamSlices, overlapDupHours = 1.0)
+      }(EventStreamJob.readEventStream(s, _, maxFilesPerTrigger = Some(1))) {
+        (stream, root) => graft.sources.Sinks.streamDailyRollup(stream,
+          s"$root/mv_landing", s"$root/rollup", s"$root/ckpt")
       }
       s.read.parquet(s"$root/rollup")
         .select(col("event_date").cast("timestamp_ntz").as("event_date"),
@@ -1267,13 +1226,31 @@ object SparkEntry {
       stage: java.nio.file.Path => Unit): String =
     WarmState.stagedDir((s"stream_$key", d))(dir => BenchPhases.timed("staging")(stage(dir)))
 
+  /** A sink face's stream: its landing staged once under `key` into
+    * `<root>/landing` (stamped `staging`), read by `read` one slice file per
+    * micro-batch, and settled through `sink(stream, root)` under the
+    * landing-sized scan split. Returns the root, which holds the sink's
+    * checkpoint and settled targets: a rerun over a kept staging resumes the
+    * committed checkpoint, replays nothing and re-reads the targets; a
+    * released one re-stages and replays every micro-batch.
+    */
+  private[graft] def settledSink(s: SparkSession, key: Product)(
+      stage: java.nio.file.Path => Unit)(read: String => DataFrame)(
+      sink: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val root = WarmState.stagedDir(key)(dir => BenchPhases.timed("staging")(
+      stage(java.nio.file.Files.createDirectory(dir.resolve("landing")))))
+    val landing = s"$root/landing"
+    withStreamScanSized(s, landing)(BenchPhases.settle(sink(read(landing), root)))
+    root
+  }
+
+  /** A parquet slice landing as a stream, one file per micro-batch. */
+  private def sliceStream(s: SparkSession, schemaDdl: String)(landing: String): DataFrame =
+    s.readStream.schema(schemaDdl).option("maxFilesPerTrigger", "1").parquet(landing)
+
   /** Number of time-slice files each streaming landing is staged as. */
   private[graft] val StreamSlices = 4
 
-  /** Write `df` as a single parquet file at `dir/name` with an explicit
-    * mtime — the file-stream source takes files oldest-mtime-first, so the
-    * mtimes ARE the batch order under `maxFilesPerTrigger=1`.
-    */
   /** Row-group size for staged slice files (8 MB vs the 128 MB parquet
     * default). A slice is ONE file — the batch-order contract under
     * `maxFilesPerTrigger=1` — and a single-row-group file is one scan task
@@ -1287,22 +1264,32 @@ object SparkEntry {
     */
   private[graft] val SliceRowGroupBytes: Long = 8L << 20
 
+  /** Write `df` as a single parquet file at `dir/name` with an explicit
+    * mtime — the file-stream source takes files oldest-mtime-first, so the
+    * mtimes ARE the batch order under `maxFilesPerTrigger=1`.
+    */
   private[graft] def writeSliceFile(df: DataFrame, dir: java.nio.file.Path,
-      name: String, mtimeMs: Long): Unit = {
+      name: String, mtimeMs: Long): Unit =
+    placeSlices(df.coalesce(1).write, dir, Seq(("", name, mtimeMs)))
+
+  /** Write with `writer` (slice-sized row groups) into a temp dir, then move
+    * the one parquet part file of each `(subdir, name, mtime)` slice to
+    * `dir/name` stamped with that mtime, and delete the temp dir.
+    */
+  private def placeSlices(writer: org.apache.spark.sql.DataFrameWriter[_],
+      dir: java.nio.file.Path, slices: Seq[(String, String, Long)]): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_slice_w")
-    df.coalesce(1).write.mode("overwrite")
-      .option("parquet.block.size", SliceRowGroupBytes.toString)
+    writer.mode("overwrite").option("parquet.block.size", SliceRowGroupBytes.toString)
       .parquet(tmp.toString)
-    val part = withPathStream(java.nio.file.Files.list(tmp))(
-      _.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get())
-    val target = dir.resolve(name)
-    java.nio.file.Files.move(part, target)
-    java.nio.file.Files.setLastModifiedTime(target,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    withPathStream(java.nio.file.Files.walk(tmp))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+    slices.foreach { case (sub, name, mtimeMs) =>
+      val part = withPathStream(java.nio.file.Files.list(tmp.resolve(sub)))(
+        _.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().get())
+      val target = dir.resolve(name)
+      java.nio.file.Files.move(part, target)
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+    }
+    graft.sources.WarmDirs.deleteRecursively(tmp.toString)
   }
 
   /** Stage a (vec_id, embedding)-shaped frame as [[StreamSlices]] slice
@@ -1382,23 +1369,9 @@ object SparkEntry {
         .filter(col("slice") < k - 1 && col("ts") >= nb - lit(ov))
         .withColumn("slice", col("slice") + 1))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_slice_w")
-    out.repartition(col("slice")).write.mode("overwrite")
-      .option("parquet.block.size", SliceRowGroupBytes.toString)
-      .partitionBy("slice").parquet(tmp.toString)
     val base = System.currentTimeMillis()
-    for (i <- 0 until k) {
-      val part = withPathStream(java.nio.file.Files.list(tmp.resolve(s"slice=$i")))(
-        _.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get())
-      val target = dir.resolve(f"slice_$i%02d.parquet")
-      java.nio.file.Files.move(part, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-    }
-    withPathStream(java.nio.file.Files.walk(tmp))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+    placeSlices(out.repartition(col("slice")).write.partitionBy("slice"), dir,
+      (0 until k).map(i => (s"slice=$i", f"slice_$i%02d.parquet", base + i * 2000L)))
     extraLast.zipWithIndex.foreach { case (df, i) =>
       writeSliceFile(df, dir, f"zz_sentinel_$i%02d.parquet", base + (k + i) * 2000L)
     }
@@ -1439,12 +1412,13 @@ object SparkEntry {
     * (pure function of the landing's bytes, which the per-(key, dataset)
     * memo reuses across runs in one session).
     */
-  private def streamStatePartitions(landing: String): Int = {
-    val bytes = withPathStream(java.nio.file.Files.list(
-      java.nio.file.Paths.get(landing)))(
+  private def streamStatePartitions(landing: String): Int =
+    math.max(4, math.min(32, (landingBytes(landing) / (4L << 20)).toInt))
+
+  /** Bytes staged in a landing dir — the volume both stream sizings read. */
+  private def landingBytes(landing: String): Long =
+    withPathStream(java.nio.file.Files.list(java.nio.file.Paths.get(landing)))(
       _.mapToLong(p => java.nio.file.Files.size(p)).sum())
-    math.max(4, math.min(32, (bytes / (4L << 20)).toInt))
-  }
 
   /** Scan-split target for a harness stream, SIZED TO ITS STAGED VOLUME
     * (the map-side twin of [[streamStatePartitions]], r16 verdict task 4).
@@ -1457,24 +1431,18 @@ object SparkEntry {
     * batch volume and scan width scale together while the BATCH COUNT (and
     * so per-trigger overhead) stays fixed at the slice-contract k.
     */
-  private def streamScanPartitionBytes(landing: String): Long = {
-    val bytes = withPathStream(java.nio.file.Files.list(
-      java.nio.file.Paths.get(landing)))(
-      _.mapToLong(p => java.nio.file.Files.size(p)).sum())
+  private def streamScanPartitionBytes(landing: String): Long =
     math.max(SliceRowGroupBytes,
-      math.min(128L << 20, bytes / StreamSlices / 32))
-  }
+      math.min(128L << 20, landingBytes(landing) / StreamSlices / 32))
 
   /** Run `body` (a stream start→settle) with the scan split sized to the
     * landing; restores the session default after, and stamps the chosen
     * value into the bench artifact so the sizing is auditable per face.
     */
   private def withStreamScanSized[T](s: SparkSession, landing: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.files.maxPartitionBytes")
     val target = streamScanPartitionBytes(landing)
     BenchPhases.add("scan_partition_mb", target.toDouble / (1L << 20))
-    s.conf.set("spark.sql.files.maxPartitionBytes", target.toString)
-    try body finally s.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    Tables.withConf(s, "spark.sql.files.maxPartitionBytes" -> target.toString)(body)
   }
 
   /** Run a streaming frame to completion (AvailableNow) into a uniquely-named
@@ -1491,16 +1459,15 @@ object SparkEntry {
   private def settledStream(s: SparkSession, df: DataFrame, base: String,
       mode: String, landing: String): DataFrame = {
     val name = s"${base}_${sinkSeq.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      streamStatePartitions(landing).toString)
-    try withStreamScanSized(s, landing) {
-      // settle() times start→termination under stream_wall (as the timed
-      // runAvailableNow call did) and folds progress incrementally, so
-      // >100-batch faces report true sums and the true state peak
-      BenchPhases.settle(
-        graft.streaming.EventStreamJob.startAvailableNow(df, name, mode))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    Tables.withConf(s, "spark.sql.shuffle.partitions" -> streamStatePartitions(landing).toString) {
+      withStreamScanSized(s, landing) {
+        // settle() times start→termination under stream_wall (as the timed
+        // runAvailableNow call did) and folds progress incrementally, so
+        // >100-batch faces report true sums and the true state peak
+        BenchPhases.settle(
+          graft.streaming.EventStreamJob.startAvailableNow(df, name, mode))
+      }
+    }
     val out = s.table(name)
     s.catalog.dropTempView(name)
     out

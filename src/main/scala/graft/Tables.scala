@@ -173,6 +173,18 @@ object Tables {
     */
   val CodegenCacheEntries = 4096
 
+  /** Run `body` with each session conf key set to its value, then put back
+    * what every key held before (unset again if it held nothing) — the one
+    * way a face narrows session conf to its own span, so no face plans
+    * under a value another face chose.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
   /** Apply session-conf overrides from a "k=v,k=v" spec — Bench AND
     * Verify pass `SPARK_GRAFT_CONF`, so a gate-branch demo (e.g. an
     * overridden `spark.graft.triangle.maxExactWedges`) runs its queries and

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * changes an answer, so a rebuild after a release yields the same result
   * (training is order-deterministic, so a re-trained model is
   * bit-identical) and only the cost is paid again. Constants derived from
-  * nothing but code (`Similarity.planeMatrices`) stay outside: they have no
+  * nothing but code (`Similarity.planeMatrix`) stay outside: they have no
   * cost worth re-paying.
   *
   * Keys are tuples whose first element names the state. A key that holds a

@@ -1150,11 +1150,10 @@ object Graphs {
     // Spark clamps BloomFilterAggregate sizing to the runtime-filter confs
     // (defaults 4M items / 64M bits); below them the sketch silently degrades
     // its fpp and the sizing math above is fiction (r6 ADVICE) — raise them
-    // to the computed size first.
-    def raise(key: String, needed: Long): Unit =
-      if (s.conf.get(key).toLong < needed) s.conf.set(key, needed.toString)
-    raise("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", nEdges)
-    raise("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", nBits)
+    // to the computed size for the build, and only for the build: every
+    // later plan's runtime filters keep the session's caps
+    def atLeast(key: String, needed: Long) =
+      key -> math.max(s.conf.get(key).toLong, needed).toString
     val dir = java.nio.file.Files.createTempDirectory("graft_triangle_bf")
     dir.toFile.deleteOnExit()
     val path = dir.resolve("sketch.bin")
@@ -1166,16 +1165,20 @@ object Graphs {
     // builder's parallelism so concurrent buffers stay ≤ ~2 GB — the build
     // is one CPU-light pass over the keys, so narrowing it costs little.
     val maxPartials = math.max(1L, math.min(8L, (2L << 30) / math.max(nBits / 8, 1L))).toInt
-    closing.coalesce(maxPartials)
-      .agg(call_function("graft_bloom_agg",
-        xxhash64(col("p"), col("q")), lit(nEdges), lit(nBits)).as("bf"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          java.nio.file.Files.write(java.nio.file.Paths.get(target),
-            it.next().getAs[Array[Byte]](0))
-          ()
+    graft.Tables.withConf(s,
+        atLeast("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", nEdges),
+        atLeast("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", nBits)) {
+      closing.coalesce(maxPartials)
+        .agg(call_function("graft_bloom_agg",
+          xxhash64(col("p"), col("q")), lit(nEdges), lit(nBits)).as("bf"))
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          if (it.hasNext) {
+            java.nio.file.Files.write(java.nio.file.Paths.get(target),
+              it.next().getAs[Array[Byte]](0))
+            ()
+          }
         }
-      }
+    }
     target
   }
 }

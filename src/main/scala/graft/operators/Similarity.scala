@@ -99,9 +99,10 @@ object Similarity {
 
   /** Deterministic pseudo-random hyperplane matrix, md5-derived (same formula
     * as [[Dedup.md5Hash60]] on "plane{p}~{i}" seed 0, scaled to [-1, 1)) —
-    * precomputed ONCE on the driver and shipped as literals. The memo is
-    * never reset: it derives from constants in microseconds, with no corpus
-    * state and nothing to re-pay, so it stays outside [[graft.WarmState]]. The per-row md5
+    * precomputed ONCE on the driver, as one [[LshMaxPlanes]]-row table
+    * whose first `planes` rows every caller takes, and shipped as literals.
+    * It derives from constants in microseconds, with no corpus state and
+    * nothing to re-pay, so it stays outside [[graft.WarmState]]. The per-row md5
     * of a row-independent constant (8 planes × 64 dims = 512 digests/row in
     * the naive expression) was pure wasted CPU; the values are identical, so
     * the DuckDB oracle (which recomputes them from md5 in SQL) still matches.
@@ -109,17 +110,16 @@ object Similarity {
     * count — so growing the count refines buckets: vectors sharing a
     * p2-plane bucket share every p1 < p2 bucket too (`LshPlanesSpec`).
     */
-  private val planeMatrices =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Array[Double]]]
+  private lazy val Planes: Array[Array[Double]] = {
+    val mdigest = java.security.MessageDigest.getInstance("MD5")
+    Array.tabulate(LshMaxPlanes, Dims) { (p, i) =>
+      val hex = mdigest.digest(s"plane$p~$i#0".getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString.take(15)
+      java.lang.Long.parseLong(hex, 16).toDouble / (1L << 59).toDouble - 1.0
+    }
+  }
   private[operators] def planeMatrix(planes: Int): Array[Array[Double]] =
-    planeMatrices.getOrElseUpdate(planes, {
-      val mdigest = java.security.MessageDigest.getInstance("MD5")
-      Array.tabulate(planes, Dims) { (p, i) =>
-        val hex = mdigest.digest(s"plane$p~$i#0".getBytes("UTF-8"))
-          .map(b => f"$b%02x").mkString.take(15)
-        java.lang.Long.parseLong(hex, 16).toDouble / (1L << 59).toDouble - 1.0
-      }
-    })
+    Planes.take(planes)
 
   /** Sign-random-projection bucket id (`planes` bits) for an embedding
     * column. Each projection is the native dot expression against a

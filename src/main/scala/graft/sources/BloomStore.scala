@@ -65,50 +65,44 @@ private[graft] object BloomStore {
     refs.sortBy(_.version).lastOption
   }
 
-  /** Distributed sketch build over a single-column `h: BIGINT` frame of
-    * xxhash64 key hashes (hashed exactly as `graft_bloom_might_file` probes
-    * will hash). Returns the serialized filter, or null on empty input.
+  /** Publish `bf` as the next sketch version, carrying the sizing it was
+    * created with: temp file + atomic rename, so a crash mid-write leaves an
+    * orphan temp file, never a torn sketch. The write is buffered
+    * (`writeTo` emits word-at-a-time — unbuffered, that is a syscall per 8
+    * bytes). A driver-side caller loads via [[load]] and probes/inserts the
+    * batch's xxhash64 longs with `mightContainLong`/`putLong` first — one
+    * hash scheme, so driver inserts and executor probes agree bit-for-bit.
     */
-  def aggSketch(keyHashes: DataFrame, capacity: Long, nBits: Long): Array[Byte] =
-    keyHashes
-      .agg(call_function("graft_bloom_agg", col("h"), lit(capacity), lit(nBits)))
-      .head().getAs[Array[Byte]](0)
-
-  /** Publish the next sketch version = `prior` (or empty) ∪ `batchBytes`
-    * (a serialized filter built with the SAME (capacity, bits) as `prior`,
-    * so the driver-side `mergeInPlace` — register-wise OR — is always
-    * compatible; null means an empty batch). The result lands via
-    * temp-file + atomic rename.
-    */
-  def publishMerged(targetPath: String, prior: Option[SketchRef],
-      batchBytes: Array[Byte], capacity: Long, nBits: Long, nKeys: Long): Unit = {
-    val merged = prior match {
-      case Some(ref) =>
-        val cur = load(ref)
-        if (batchBytes != null) cur.mergeInPlace(BloomFilter.readFrom(batchBytes))
-        cur
-      case None =>
-        if (batchBytes != null) BloomFilter.readFrom(batchBytes)
-        else BloomFilter.create(capacity, nBits)
-    }
+  def publish(targetPath: String, capacity: Long, nBits: Long,
+      bf: BloomFilter, nKeys: Long): Unit = {
     val d = dir(targetPath)
     Files.createDirectories(d)
     val version = latest(targetPath).map(_.version + 1).getOrElse(0L)
     val name = s"bloom-v$version-c$capacity-b$nBits-n$nKeys.bf"
     val tmp = Files.createTempFile(d, s".tmp-$name", "")
     val out = new java.io.BufferedOutputStream(Files.newOutputStream(tmp), 1 << 20)
-    try merged.writeTo(out) finally out.close()
+    try bf.writeTo(out) finally out.close()
     Files.move(tmp, d.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    resident.synchronized { resident.put(d.resolve(name).toString, merged); () }
+    resident.synchronized { resident.put(d.resolve(name).toString, bf); () }
   }
 
-  /** [[aggSketch]] + [[publishMerged]] in one call (bootstrap/rebuild
-    * paths, where the key frame can be history-sized — the distributed
-    * aggregate is the right tool there and the cost is one-time). */
+  /** Publish `prior` (or nothing) ∪ the keys of a single-column `h: BIGINT`
+    * frame of xxhash64 key hashes (hashed exactly as `graft_bloom_might_file`
+    * probes will hash), built by ONE distributed `graft_bloom_agg` at
+    * (`capacity`, `nBits`) — the sizing `prior` must share. The bootstrap
+    * and rebuild paths, where the key frame can be history-sized: the
+    * distributed aggregate is the right tool there and the cost is one-time.
+    */
   def writeMerged(targetPath: String, prior: Option[SketchRef],
-      keyHashes: DataFrame, capacity: Long, nBits: Long, nKeys: Long): Unit =
-    publishMerged(targetPath, prior, aggSketch(keyHashes, capacity, nBits),
-      capacity, nBits, nKeys)
+      keyHashes: DataFrame, capacity: Long, nBits: Long, nKeys: Long): Unit = {
+    val bytes = keyHashes
+      .agg(call_function("graft_bloom_agg", col("h"), lit(capacity), lit(nBits)))
+      .head().getAs[Array[Byte]](0)
+    // null means no input rows
+    val bf = Option(bytes).fold(BloomFilter.create(capacity, nBits))(b => BloomFilter.readFrom(b))
+    prior.foreach(p => bf.mergeInPlace(load(p)))
+    publish(targetPath, capacity, nBits, bf, nKeys)
+  }
 
   /** Driver-resident filters keyed by published file path, so the
     * steady-state loop (load vN → insert batch → publish vN+1) mutates ONE
@@ -136,33 +130,5 @@ private[graft] object BloomStore {
       resident.put(ref.file.toString, bf)
       bf
     }
-  }
-
-  /** Publish an already-updated (driver-side) filter as the next version
-    * carrying `prior`'s sizing — the steady-state fast path: the caller
-    * loads via [[load]], probes/inserts the batch's xxhash64 longs with
-    * `mightContainLong`/`putLong` (one hash scheme, so driver inserts and
-    * any executor probe agree bit-for-bit), then publishes here. Versioned
-    * temp-file + atomic rename, as everywhere; the write is buffered
-    * (`writeTo` emits word-at-a-time — unbuffered, that is a syscall per
-    * 8 bytes).
-    */
-  def publish(targetPath: String, prior: SketchRef, bf: BloomFilter,
-      nKeys: Long): Unit =
-    publishNew(targetPath, prior.capacity, prior.nBits, bf, nKeys)
-
-  /** [[publish]] without a prior ref — first version, or a re-sized
-    * rebuild; the caller supplies the sizing the filter was created with. */
-  def publishNew(targetPath: String, capacity: Long, nBits: Long,
-      bf: BloomFilter, nKeys: Long): Unit = {
-    val d = dir(targetPath)
-    Files.createDirectories(d)
-    val version = latest(targetPath).map(_.version + 1).getOrElse(0L)
-    val name = s"bloom-v$version-c$capacity-b$nBits-n$nKeys.bf"
-    val tmp = Files.createTempFile(d, s".tmp-$name", "")
-    val out = new java.io.BufferedOutputStream(Files.newOutputStream(tmp), 1 << 20)
-    try bf.writeTo(out) finally out.close()
-    Files.move(tmp, d.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    resident.synchronized { resident.put(d.resolve(name).toString, bf); () }
   }
 }

@@ -110,12 +110,18 @@ object JsonLanding {
     * contract).
     */
   def streamQuarantineReport(s: SparkSession, d: String): DataFrame = {
-    val src = stagedCorruptDir(s, d)
-    val root = graft.WarmState.stagedDir(("stream_quarantine", s, d)) { dir =>
-      graft.BenchPhases.settle(graft.sources.Sinks.streamQuarantine(
-        s.readStream.option("maxFilesPerTrigger", "1").text(src),
-        "doc_id LONG, lang STRING, n_chars LONG", "doc_id",
-        s"$dir/target", s"$dir/dlq", s"$dir/ckpt"))
+    val root = graft.SparkEntry.settledSink(s, ("stream_quarantine", s, d)) { landing =>
+      // the batch face's own mangled files, mtimes kept (the batch order)
+      val src = java.nio.file.Paths.get(stagedCorruptDir(s, d))
+      val files = java.nio.file.Files.list(src)
+      try files.filter(p => !p.getFileName.toString.matches("[_.].*")).forEach { p =>
+        java.nio.file.Files.copy(p, landing.resolve(p.getFileName),
+          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+        ()
+      } finally files.close()
+    }(s.readStream.option("maxFilesPerTrigger", "1").text(_)) { (stream, root) =>
+      Sinks.streamQuarantine(stream, "doc_id LONG, lang STRING, n_chars LONG", "doc_id",
+        s"$root/target", s"$root/dlq", s"$root/ckpt")
     }
     val good = s.read.parquet(s"$root/target")
       .agg(count(lit(1)).as("n_rows"), count(col("doc_id")).as("n_ids"),

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.util.Properties
 
 /** Write-side surface of the engine (SURVEY.md §2.1 S6/S7 generalized).
@@ -84,6 +85,21 @@ object Sinks {
         incoming.dropDuplicates(key).write.mode(SaveMode.Append).parquet(targetPath)
     }
 
+  /** Candidate-count ceiling for resolving sketch hits as pushed-down point
+    * lookups; above it (a replay re-offering a whole batch) the full exact
+    * anti-join is the correct resolution. */
+  private val PointLookupMax = 128
+
+  /** Row ceiling for the driver-side sketch path. An admission-controlled
+    * micro-batch (the steady state) stays far under it and takes the
+    * two-job driver loop; a bulk/backfill batch above it (the r11 100×
+    * probe: 5M rows/batch collected 2× slower than the plain anti-join)
+    * stays fully distributed — executor-side file probe, one bloom
+    * aggregation — and never ships batch-scale hash sets to the driver.
+    * Test-adjustable (like [[postAppendHook]]) so specs can drive the
+    * large-batch shape without materializing half a million rows. */
+  private[graft] var SmallBatchMaxRows = 1 << 19
+
   /** [[appendInsertIgnore]] with a MAINTAINED cross-batch Bloom sketch — the
     * cure for the one O(n²) shape in the streaming tier (SURVEY §13.12a):
     * the plain form re-reads the target's FULL key set every micro-batch, so
@@ -121,21 +137,6 @@ object Sinks {
     * per key at 1e-5 — 300 MB per 100M keys, the same ballpark the batch
     * [[graft.operators.IngestTransforms.bloomInsertIgnore]] documents.
     */
-  /** Candidate-count ceiling for resolving sketch hits as pushed-down point
-    * lookups; above it (a replay re-offering a whole batch) the full exact
-    * anti-join is the correct resolution. */
-  private val PointLookupMax = 128
-
-  /** Row ceiling for the driver-side sketch path. An admission-controlled
-    * micro-batch (the steady state) stays far under it and takes the
-    * two-job driver loop; a bulk/backfill batch above it (the r11 100×
-    * probe: 5M rows/batch collected 2× slower than the plain anti-join)
-    * stays fully distributed — executor-side file probe, one bloom
-    * aggregation — and never ships batch-scale hash sets to the driver.
-    * Test-adjustable (like [[postAppendHook]]) so specs can drive the
-    * large-batch shape without materializing half a million rows. */
-  private[graft] var SmallBatchMaxRows = 1 << 19
-
   def appendInsertIgnoreSketched(incoming: DataFrame, targetPath: String,
       key: String, fpp: Double = 1e-5, capacityHint: Long = 1L << 20,
       expand: DataFrame => DataFrame = identity): Unit =
@@ -161,215 +162,139 @@ object Sinks {
     * must be row-local per key (every output row of a key derives from
     * that key's input rows), so filtering before expanding ≡ expanding
     * before filtering.
+    *
+    * One pass decides every shape, in four steps:
+    *  1. ONE decision job: `limit(T+1).collect()` of the batch's key
+    *     hashes returns EVERY hash when the batch holds ≤ T rows
+    *     (CollectLimit executes incrementally, so this costs what the plain
+    *     collect cost) and T+1 rows when it does not. A small batch — the
+    *     admission-controlled hot path — keeps its hashes on the driver; a
+    *     bulk batch (load / backfill / replay of one) stays distributed and
+    *     pays ONE aggregation for its statistics instead (the r11 100×
+    *     probe measured the collect shape at 2× the plain anti-join's wall
+    *     on 5M-row batches).
+    *  2. the sketch step, BEFORE the append — the superset invariant holds
+    *     at every crash point: a first load creates the sketch; a steady
+    *     batch probes the PRE-merge sketch for candidates (rejected keys
+    *     are definitely absent from the target) and merges its keys into
+    *     the next version; a legacy sketchless target, or a sketch the
+    *     batch would outgrow, is rebuilt from the target's TRUE keys ∪ the
+    *     batch at 4× capacity (fpp would otherwise degrade silently —
+    *     slower, never wrong; amortized geometric, like a dynamic array).
+    *  3. one candidate ladder: zero candidates skip the history read; at
+    *     most [[PointLookupMax]] resolve as pushed-down point lookups on the
+    *     key column (parquet footer min/max skips non-matching row groups);
+    *     batch-scale candidates (a replay, or a rebuild) take the exact
+    *     anti-join, the correct and unavoidable resolution.
+    *  4. ONE append.
     */
   private def sketchedCore(incoming: DataFrame, targetPath: String,
       key: String, fpp: Double, capacityHint: Long, dedupBatch: Boolean,
       expand: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.util.sketch.BloomFilter
     val spark = incoming.sparkSession
     // read the (test-adjustable) gate ONCE per batch so both the limit
     // plan and the comparison see one value
     val smallMax = SmallBatchMaxRows
-    val targetExists = landedParquet(spark, targetPath).isDefined
-    val latest = if (targetExists) BloomStore.latest(targetPath) else None
-
+    val target = landedParquet(spark, targetPath)
+    val prior = if (target.isDefined) BloomStore.latest(targetPath) else None
+    val hashDf = incoming.select(xxhash64(col(key)).as("h"))
+    val hs = hashDf.limit(smallMax + 1).collect().map(_.getLong(0))
+    val small = hs.length <= smallMax
+    val distinct = if (small) hs.toSet else Set.empty[Long]
+    // the bulk shape's ONE aggregation: approx key count (sizing and
+    // accounting only — 5% inflated; an exact distinct shuffle over
+    // millions of hashes is not worth it) and, against a standing sketch,
+    // the approx DISTINCT candidate count (keys, not rows: a multi-row-per-
+    // key batch must not fall off the point-lookup path because its few
+    // candidate KEYS span many rows) via the executor-side probe of the
+    // published (immutable) sketch file, plus the batch's bloom bytes at
+    // the sketch's sizing
+    def probe(h: Column) = call_function("graft_bloom_might_file",
+      lit(prior.fold("")(_.file.toString)), h)
+    val bulk = if (small) None else Some(hashDf.agg(
+      approx_count_distinct(col("h")),
+      prior.fold(lit(0L))(_ => approx_count_distinct(when(probe(col("h")), col("h")))),
+      prior.fold(lit(null).cast("binary"))(cur =>
+        call_function("graft_bloom_agg", col("h"), lit(cur.capacity), lit(cur.nBits))))
+      .head())
+    val nBatchKeys = bulk.fold(distinct.size.toLong)(st =>
+      math.max(1L, (st.getLong(0) * 1.05).toLong))
+    // equal counts ⇒ no duplicate hashes ⇒ no duplicate keys: the write
+    // can skip the dedup shuffle (a true dup always collides; a cross-key
+    // hash collision only costs the harmless dedup)
+    val base =
+      if (!dedupBatch || small && distinct.size == hs.length) incoming
+      else incoming.dropDuplicates(key)
     // key-exact anti-join honoring the row-shape contract: dedup-within-
     // batch for the 1-row-per-key face, keep-all-rows for the multi-row one
-    def novelAgainst(batch: DataFrame, existing: DataFrame): DataFrame =
+    def exact(existing: DataFrame): DataFrame =
       if (dedupBatch)
-        graft.operators.IngestTransforms.insertIgnore(batch, existing, key)
+        graft.operators.IngestTransforms.insertIgnore(incoming, existing, key)
       else
-        batch.join(existing.select(key).dropDuplicates(key), Seq(key), "left_anti")
+        incoming.join(existing.select(key).dropDuplicates(key), Seq(key), "left_anti")
 
-    // exact fallback for the rare non-steady shapes (bootstrap of a legacy
-    // sketchless target; sketch outgrown): one narrow target-key scan, then
-    // (re)build the sketch from the target's TRUE keys ∪ the batch
-    def exactAndRebuild(batch: DataFrame, recordKeys: Long,
-        minCapacity: Long): Unit = {
-      val existing = spark.read.parquet(targetPath).select(key)
-      val cap = math.max(math.max(capacityHint, minCapacity), recordKeys)
-      BloomStore.writeMerged(targetPath, prior = None,
-        existing.select(xxhash64(col(key)).as("h"))
-          .union(batch.select(xxhash64(col(key)).as("h"))),
-        cap, BloomStore.optimalBits(cap, fpp), recordKeys)
-      expand(novelAgainst(batch, existing))
-        .write.mode(SaveMode.Append).parquet(targetPath)
-    }
-
-    (targetExists, latest) match {
-      case (false, _) =>
-        // first batch: establish the superset invariant BEFORE the first
-        // append ever lands. Same size-adaptive shape as the steady state:
-        // small batches build the sketch driver-side from the collected
-        // hashes; a bulk first load builds it with one distributed
-        // `graft_bloom_agg` aggregation instead.
-        val hashDf0 = incoming.select(xxhash64(col(key)).as("h"))
-        val hs = hashDf0.limit(smallMax + 1)
-          .collect().map(_.getLong(0))
-        if (hs.length > smallMax) {
-          // approx distinct is enough here: the estimate only sizes the
-          // sketch (inflated 5%, then 4× geometric headroom so the next
-          // bulk batch doesn't trigger an immediate outgrown-rebuild) and
-          // seeds the rebuild accounting; dedup of the batch itself is
-          // unconditional on the bulk shape — the exactness that
-          // `nd == n ⇒ skip the dedup shuffle` needs is not worth a full
-          // distinct shuffle over millions of hashes
-          val nd0 = math.max(1L,
-            (hashDf0.agg(approx_count_distinct(col("h")))
-              .head().getLong(0) * 1.05).toLong)
-          val cap = math.max(capacityHint, nd0 * 4)
-          BloomStore.writeMerged(targetPath, prior = None, hashDf0,
-            cap, BloomStore.optimalBits(cap, fpp), nd0)
-          val first = if (dedupBatch) incoming.dropDuplicates(key) else incoming
-          expand(first).write.mode(SaveMode.Append).parquet(targetPath)
-          return
-        }
-        val distinct = hs.toSet
-        val cap = math.max(capacityHint, distinct.size.toLong)
-        val bits = BloomStore.optimalBits(cap, fpp)
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(cap, bits)
-        distinct.foreach(bf.putLong)
-        BloomStore.publishNew(targetPath, cap, bits, bf, distinct.size.toLong)
-        val first =
-          if (!dedupBatch || distinct.size == hs.length) incoming
-          else incoming.dropDuplicates(key)
-        expand(first).write.mode(SaveMode.Append).parquet(targetPath)
-      case (true, None) =>
-        // legacy target without a sketch: bootstrap from its true keys.
-        // Count DISTINCT keys, not rows — the multi-row-per-key face (band
-        // index: 8 rows/doc) would otherwise oversize the sketch ~8× and
-        // skew the nKeys-based rebuild accounting.
-        val n = incoming.select(col(key)).distinct().count()
-        val nTarget =
-          spark.read.parquet(targetPath).select(key).distinct().count()
-        exactAndRebuild(incoming, recordKeys = nTarget + n,
-          minCapacity = nTarget + n)
-      case (true, Some(cur)) =>
-        // steady state. ONE decision job picks the shape by batch size:
-        // limit(T+1).collect() returns EVERY hash when the batch holds
-        // ≤ T rows (CollectLimit executes incrementally, so this costs
-        // what the plain collect cost) and T+1 rows when it does not.
-        //
-        // Small batch — the admission-controlled hot path: (1) the hashes
-        // are already on the driver; dedup, the probe, and the sketch
-        // update run driver-side against the loaded sketch — no per-batch
-        // target scan, no capacity-sized aggregation buffers shipping from
-        // every task; (2) ONE write job for the novel rows.
-        //
-        // Large batch (bulk load / backfill / replay of one): everything
-        // stays distributed — the probe is the executor-side
-        // `graft_bloom_might_file` against the published (immutable)
-        // sketch file, the update is one `graft_bloom_agg` aggregation at
-        // the current sizing — and the driver never materializes
-        // batch-scale hash sets (the r11 100× probe measured the collect
-        // shape at 2× the plain anti-join's wall on 5M-row batches).
-        val hashDf = incoming.select(xxhash64(col(key)).as("h"))
-        val hashArr = hashDf.limit(smallMax + 1)
-          .collect().map(_.getLong(0))
-        if (hashArr.length > smallMax) {
-          // ONE distributed agg over the batch's hashes: approx key count
-          // (sizing/accounting only — see the bulk first-batch note),
-          // approx DISTINCT candidate count (keys, not rows: a multi-row-
-          // per-key batch must not fall off the point-lookup path just
-          // because its few candidate KEYS span many rows) via the
-          // executor-side probe of the published (immutable) sketch file,
-          // and the batch's bloom bytes at the current sizing — so the
-          // scan is paid once, not once per statistic
-          val probe = call_function("graft_bloom_might_file",
-            lit(cur.file.toString), col("h"))
-          val st = hashDf.agg(
-            approx_count_distinct(col("h")).as("nd"),
-            approx_count_distinct(when(probe, col("h"))).as("nc"),
-            call_function("graft_bloom_agg", col("h"),
-              lit(cur.capacity), lit(cur.nBits)).as("bf")).head()
-          val (nBatchKeys, nCand) =
-            (math.max(1L, (st.getLong(0) * 1.05).toLong), st.getLong(1))
-          if (cur.nKeys + nBatchKeys > cur.capacity)
-            // discard the built bytes — the rare rebuild resizes anyway
-            exactAndRebuild(incoming,
-              recordKeys = cur.nKeys + nBatchKeys, minCapacity = cur.capacity * 4)
-          else {
-            // merge the batch's keys into the next version BEFORE the
-            // append — the superset invariant holds at every crash point,
-            // exactly as on the small path
-            BloomStore.publishMerged(targetPath, Some(cur),
-              st.getAs[Array[Byte]]("bf"),
-              cur.capacity, cur.nBits, cur.nKeys + nBatchKeys)
-            val base = if (dedupBatch) incoming.dropDuplicates(key) else incoming
-            val novel =
-              if (nCand == 0L) base // zero candidates: NO history read
-              else if (nCand <= PointLookupMax) {
-                val candKeys = incoming
-                  .filter(call_function("graft_bloom_might_file",
-                    lit(cur.file.toString), xxhash64(col(key))))
-                  .select(col(key)).distinct().collect().map(_.get(0)).toSeq
-                val found = spark.read.parquet(targetPath).select(key)
-                  .filter(col(key).isInCollection(candKeys))
-                  .distinct().collect().map(_.get(0)).toSet
-                if (found.isEmpty) base
-                else base.filter(col(key).isNull ||
-                  !col(key).isInCollection(found.toSeq))
-              } else {
-                // batch-scale candidates — a replay: the exact anti-join
-                // is the correct (and unavoidable) resolution
-                novelAgainst(base, spark.read.parquet(targetPath).select(key))
-              }
-            expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
-          }
-          return
-        }
-        val distinct = hashArr.toSet
-        val nBatchKeys = distinct.size.toLong
-        // equal counts ⇒ no duplicate hashes ⇒ no duplicate keys: the write
-        // can skip the dedup shuffle entirely (a true dup always collides;
-        // a cross-key hash collision only costs the harmless fallback)
-        val noInBatchDups = distinct.size == hashArr.length
-        if (cur.nKeys + nBatchKeys > cur.capacity)
-          // outgrown: rebuild at 4× (fpp would otherwise degrade silently
-          // — slower, never wrong; the rebuild keeps the zero-candidate
-          // fast path alive). Amortized geometric, like a dynamic array.
-          exactAndRebuild(incoming,
-            recordKeys = cur.nKeys + nBatchKeys, minCapacity = cur.capacity * 4)
-        else {
-          val bf = BloomStore.load(cur)
-          // probe the PRE-merge sketch: rejected keys are definitely
-          // absent from the target (superset invariant)
-          val candHashes = distinct.filter(bf.mightContainLong)
-          // then merge batch keys into the NEXT sketch version BEFORE the
-          // append — the invariant holds at every crash point
+    val novel = (target, prior) match {
+      case (None, _) => // first load: zero candidates by definition
+        if (small) {
+          val cap = math.max(capacityHint, nBatchKeys)
+          val bits = BloomStore.optimalBits(cap, fpp)
+          val bf = BloomFilter.create(cap, bits)
           distinct.foreach(bf.putLong)
-          BloomStore.publish(targetPath, cur, bf, cur.nKeys + nBatchKeys)
-          val base =
-            if (!dedupBatch || noInBatchDups) incoming
-            else incoming.dropDuplicates(key)
-          val novel =
-            if (candHashes.isEmpty) base // zero candidates: NO history read
-            else if (candHashes.size <= PointLookupMax) {
-              // a handful of false-positive hits: resolve them as pushed-
-              // down point lookups on the key column (parquet footer
-              // min/max skips non-matching row groups) instead of a full
-              // key-history anti-join
-              val candKeys = incoming
-                .filter(xxhash64(col(key)).isInCollection(candHashes.toSeq))
-                .select(col(key)).distinct().collect().map(_.get(0)).toSeq
-              val found = spark.read.parquet(targetPath).select(key)
-                .filter(col(key).isInCollection(candKeys))
-                .distinct().collect().map(_.get(0)).toSet
-              if (found.isEmpty) base
-              // null-safe: !isInCollection is NULL (filtered out) for
-              // null-key rows, but the exact anti-join keeps them — and all
-              // null keys share one xxhash64 (the seed), so a single sketch
-              // hit would otherwise silently drop every null-key row
-              else base.filter(col(key).isNull ||
-                !col(key).isInCollection(found.toSeq))
-            } else {
-              // candidate set is batch-scale — a replay: the full exact
-              // anti-join is the correct (and unavoidable) resolution
-              novelAgainst(base, spark.read.parquet(targetPath).select(key))
-            }
-          expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
+          BloomStore.publish(targetPath, cap, bits, bf, nBatchKeys)
+        } else {
+          // 4× geometric headroom, so the next bulk batch doesn't trigger
+          // an immediate outgrown rebuild
+          val cap = math.max(capacityHint, nBatchKeys * 4)
+          BloomStore.writeMerged(targetPath, None, hashDf,
+            cap, BloomStore.optimalBits(cap, fpp), nBatchKeys)
         }
+        base
+      case (Some(t), Some(cur)) if cur.nKeys + nBatchKeys <= cur.capacity =>
+        val bf = BloomStore.load(cur)
+        // candidate hashes on the driver (small), or the file probe (bulk)
+        val (nCand, candHashes) = bulk match {
+          case None =>
+            val cand = distinct.filter(bf.mightContainLong)
+            distinct.foreach(bf.putLong)
+            (cand.size.toLong, Some(cand))
+          case Some(st) =>
+            bf.mergeInPlace(BloomFilter.readFrom(st.getAs[Array[Byte]](2)))
+            (st.getLong(1), None)
+        }
+        BloomStore.publish(targetPath, cur.capacity, cur.nBits, bf,
+          cur.nKeys + nBatchKeys)
+        if (nCand == 0L) base // zero candidates: NO history read
+        else if (nCand <= PointLookupMax) {
+          val h = xxhash64(col(key))
+          val candKeys = incoming
+            .filter(candHashes.fold(probe(h))(c => h.isInCollection(c.toSeq)))
+            .select(col(key)).distinct().collect().map(_.get(0)).toSeq
+          val found = t.select(key).filter(col(key).isInCollection(candKeys))
+            .distinct().collect().map(_.get(0)).toSeq
+          if (found.isEmpty) base
+          // null-safe: !isInCollection is NULL (filtered out) for null-key
+          // rows, but the exact anti-join keeps them — and all null keys
+          // share one xxhash64 (the seed), so a single sketch hit would
+          // otherwise silently drop every null-key row
+          else base.filter(col(key).isNull || !col(key).isInCollection(found))
+        } else exact(t.select(key))
+      case (Some(t), cur) => // legacy sketchless target, or outgrown sketch
+        val existing = t.select(key)
+        // count DISTINCT target keys, not rows — the multi-row-per-key face
+        // (band index: 8 rows/doc) would otherwise oversize the sketch ~8×
+        val (recordKeys, minCapacity) = cur.fold {
+          val n = existing.distinct().count() + nBatchKeys
+          (n, n)
+        }(c => (c.nKeys + nBatchKeys, c.capacity * 4))
+        val cap = math.max(math.max(capacityHint, minCapacity), recordKeys)
+        BloomStore.writeMerged(targetPath, None,
+          existing.select(xxhash64(col(key)).as("h")).union(hashDf),
+          cap, BloomStore.optimalBits(cap, fpp), recordKeys)
+        exact(existing)
     }
+    expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
   }
 
   /** The reference's actual sink, Spark-native: Postgres row-at-a-time
@@ -458,22 +383,13 @@ object Sinks {
     *    the anti-join and the refresh — bounded by days-per-batch, not
     *    history (measured 74.8 → 38.7 s at the 100× replica).
     *
-    * Returns the started query; callers drive it (the default AvailableNow
-    * for cron-equivalent runs, processing-time triggers for continuous).
+    * Returns the started query; callers drive it to termination.
     */
   def streamInsertIgnore(stream: DataFrame, targetPath: String, key: String,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendInsertIgnoreSketched(batch, targetPath, key)
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      appendInsertIgnoreSketched(batch, targetPath, key)
+    }
 
   /** Test-only fault injection: invoked AFTER a micro-batch's append lands
     * but BEFORE foreachBatch returns (i.e. before the checkpoint commit) —
@@ -482,6 +398,22 @@ object Sinks {
     * code never sets it.
     */
   private[graft] var postAppendHook: Long => Unit = _ => ()
+
+  /** The one skeleton every `stream*` sink runs on: `perBatch` over each
+    * micro-batch of `stream`, checkpointed at `checkpointDir`, then
+    * [[postAppendHook]] before the commit. The trigger is `AvailableNow` —
+    * the reference's cron-batch model: process what has landed, then stop.
+    */
+  private def foreachBatchSink(stream: DataFrame, checkpointDir: String)(
+      perBatch: DataFrame => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        perBatch(batch)
+        postAppendHook(batchId)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   /** Streaming SCD Type-2 sink: each micro-batch merges into the versioned
     * dimension ([[graft.operators.Scd.scd2Merge]]) and the full updated
@@ -503,30 +435,22 @@ object Sinks {
     * because foreachBatch batches are serial within a query.
     */
   def streamScd2(stream: DataFrame, targetPath: String, key: String,
-      tracked: Seq[String], effCol: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val current = landedParquet(spark, targetPath).getOrElse { // first load
-          import org.apache.spark.sql.functions._
-          batch.limit(0).select(
-            (col(key) +: tracked.map(col)
-              :+ col(effCol).cast("timestamp_ntz").as("valid_from")
-              :+ lit(null).cast("timestamp_ntz").as("valid_to")
-              :+ lit(true).as("is_current")): _*)
-        }
-        val merged = graft.operators.Scd
-          .scd2Merge(current, batch, key, tracked, effCol)
-          .localCheckpoint() // sever the lineage from the files being replaced
-        merged.write.mode(SaveMode.Overwrite).parquet(targetPath)
-        postAppendHook(batchId)
+      tracked: Seq[String], effCol: String, checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      val spark = batch.sparkSession
+      val current = landedParquet(spark, targetPath).getOrElse { // first load
+        import org.apache.spark.sql.functions._
+        batch.limit(0).select(
+          (col(key) +: tracked.map(col)
+            :+ col(effCol).cast("timestamp_ntz").as("valid_from")
+            :+ lit(null).cast("timestamp_ntz").as("valid_to")
+            :+ lit(true).as("is_current")): _*)
       }
-      .trigger(trigger)
-      .start()
+      val merged = graft.operators.Scd
+        .scd2Merge(current, batch, key, tracked, effCol)
+        .localCheckpoint() // sever the lineage from the files being replaced
+      merged.write.mode(SaveMode.Overwrite).parquet(targetPath)
+    }
 
   /** Streaming maintenance of the HLL sketch store
     * ([[graft.operators.Layouts]]): each micro-batch folds its events into
@@ -545,29 +469,21 @@ object Sinks {
     * identical store (proven in LayoutsSpec).
     */
   def streamSketchStore(stream: DataFrame, storePath: String,
-      checkpointDir: String, lgK: Int = 14,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch.sparkSession
-        val delta = batch
-          .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-          .agg(hll_sketch_agg(col("user_id"), lgK).as("user_sketch"))
-        val current = landedParquet(spark, storePath).getOrElse(delta.limit(0))
-        val merged = current.unionByName(delta)
-          .groupBy(col("day"), col("event_type"))
-          .agg(hll_union_agg(col("user_sketch"), allowDifferentLgConfigK = false)
-            .as("user_sketch"))
-          .localCheckpoint() // sever lineage from the files being replaced
-        merged.write.mode(SaveMode.Overwrite).parquet(storePath)
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      checkpointDir: String, lgK: Int = 14): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      import org.apache.spark.sql.functions._
+      val spark = batch.sparkSession
+      val delta = batch
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(hll_sketch_agg(col("user_id"), lgK).as("user_sketch"))
+      val current = landedParquet(spark, storePath).getOrElse(delta.limit(0))
+      val merged = current.unionByName(delta)
+        .groupBy(col("day"), col("event_type"))
+        .agg(hll_union_agg(col("user_sketch"), allowDifferentLgConfigK = false)
+          .as("user_sketch"))
+        .localCheckpoint() // sever lineage from the files being replaced
+      merged.write.mode(SaveMode.Overwrite).parquet(storePath)
+    }
 
   /** Streaming-maintained DAILY ROLLUP materialized view — the
     * serve-from-aggregates pattern every event pipeline converges on:
@@ -595,53 +511,45 @@ object Sinks {
     * those day directories.
     */
   def streamDailyRollup(stream: DataFrame, landingPath: String,
-      rollupPath: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch.sparkSession
-        // landing is DAY-PARTITIONED so the refresh prunes to affected
-        // days at planning time — at 100 TB the refresh reads the touched
-        // day directories, never the table (measured 74.8 s → 38.7 s at
-        // the 100× replica vs an unpartitioned landing; the remaining cost
-        // is the partitioned append itself)
-        val withDate = batch.withColumn("event_date", to_date(col("ts")))
-        // the affected-day set is bounded (days per batch), so a driver
-        // literal IN-list buys STATIC partition pruning — the trained-
-        // centroids precedent for tiny, bounded driver-side model state
-        val days = batch.select(to_date(col("ts")).as("event_date")).distinct()
-          .collect().map(_.getDate(0)).toSeq
-        // the dedup anti-join also reads only the affected days: replays
-        // re-offer IDENTICAL rows (same ts ⇒ same day partition), so keys
-        // outside the batch's days cannot collide — without the prune this
-        // read grows O(total landing) per batch, defeating the layout
-        val novel = landedParquet(spark, landingPath) match {
-          case Some(landed) =>
-            val existing = landed
-              .filter(col("event_date").isInCollection(days))
-              .select("event_id")
-            graft.operators.IngestTransforms.insertIgnore(withDate, existing, "event_id")
-          case None => withDate.dropDuplicates("event_id") // first load
-        }
-        novel.write.mode(SaveMode.Append)
-          .partitionBy("event_date").parquet(landingPath)
-        // refresh reads the landing and writes the ROLLUP — disjoint paths,
-        // so no lineage-severing checkpoint is needed here (unlike the
-        // self-overwriting streamScd2/streamSketchStore round-trips)
-        val refreshed = spark.read.parquet(landingPath)
-          .filter(col("event_date").isInCollection(days))
-          .groupBy(col("event_date"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-        overwritePartitionsDynamic(refreshed, rollupPath, Seq("event_date"))
-        postAppendHook(batchId)
+      rollupPath: String, checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      import org.apache.spark.sql.functions._
+      val spark = batch.sparkSession
+      // landing is DAY-PARTITIONED so the refresh prunes to affected
+      // days at planning time — at 100 TB the refresh reads the touched
+      // day directories, never the table (measured 74.8 s → 38.7 s at
+      // the 100× replica vs an unpartitioned landing; the remaining cost
+      // is the partitioned append itself)
+      val withDate = batch.withColumn("event_date", to_date(col("ts")))
+      // the affected-day set is bounded (days per batch), so a driver
+      // literal IN-list buys STATIC partition pruning — the trained-
+      // centroids precedent for tiny, bounded driver-side model state
+      val days = batch.select(to_date(col("ts")).as("event_date")).distinct()
+        .collect().map(_.getDate(0)).toSeq
+      // the dedup anti-join also reads only the affected days: replays
+      // re-offer IDENTICAL rows (same ts ⇒ same day partition), so keys
+      // outside the batch's days cannot collide — without the prune this
+      // read grows O(total landing) per batch, defeating the layout
+      val novel = landedParquet(spark, landingPath) match {
+        case Some(landed) =>
+          val existing = landed
+            .filter(col("event_date").isInCollection(days))
+            .select("event_id")
+          graft.operators.IngestTransforms.insertIgnore(withDate, existing, "event_id")
+        case None => withDate.dropDuplicates("event_id") // first load
       }
-      .trigger(trigger)
-      .start()
+      novel.write.mode(SaveMode.Append)
+        .partitionBy("event_date").parquet(landingPath)
+      // refresh reads the landing and writes the ROLLUP — disjoint paths,
+      // so no lineage-severing checkpoint is needed here (unlike the
+      // self-overwriting streamScd2/streamSketchStore round-trips)
+      val refreshed = spark.read.parquet(landingPath)
+        .filter(col("event_date").isInCollection(days))
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      overwritePartitionsDynamic(refreshed, rollupPath, Seq("event_date"))
+    }
 
   /** Streaming dead-letter queue — the error-handling face of the
     * streaming tier ([[graft.sources.JsonLanding.quarantineReport]]'s
@@ -663,25 +571,17 @@ object Sinks {
     * exact check runs only on replays and false-positive hits.
     */
   def streamQuarantine(lines: DataFrame, schemaDdl: String, idCol: String,
-      targetPath: String, dlqPath: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    lines.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        val parsed = batch
-          .withColumn("_p", from_json(col("value"), schemaDdl, Map.empty[String, String]))
-        val good = parsed.filter(col(s"_p.$idCol").isNotNull).select(col("_p.*"))
-        val bad = parsed.filter(col(s"_p.$idCol").isNull)
-          .select(col("value").as("raw"), md5(col("value")).as("raw_key"))
-        appendInsertIgnoreSketched(good, targetPath, idCol)
-        appendInsertIgnoreSketched(bad, dlqPath, "raw_key")
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      targetPath: String, dlqPath: String, checkpointDir: String): StreamingQuery =
+    foreachBatchSink(lines, checkpointDir) { batch =>
+      import org.apache.spark.sql.functions._
+      val parsed = batch
+        .withColumn("_p", from_json(col("value"), schemaDdl, Map.empty[String, String]))
+      val good = parsed.filter(col(s"_p.$idCol").isNotNull).select(col("_p.*"))
+      val bad = parsed.filter(col(s"_p.$idCol").isNull)
+        .select(col("value").as("raw"), md5(col("value")).as("raw_key"))
+      appendInsertIgnoreSketched(good, targetPath, idCol)
+      appendInsertIgnoreSketched(bad, dlqPath, "raw_key")
+    }
 
   /** Streaming maintenance of the IVF vector index — the embeddings
     * analogue of [[streamBandIndex]]'s daily-crawl loop: each micro-batch
@@ -698,21 +598,13 @@ object Sinks {
     * append — exactly as in a production IVF index.
     */
   def streamVectorIndex(stream: DataFrame, centroids: Array[Array[Double]],
-      storePath: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch itself carries vec_id, so novelty probes the raw scan;
-        // the centroid-assignment argmax runs once, over novel rows only
-        appendInsertIgnoreSketched(batch, storePath, "vec_id",
-          expand = b => graft.operators.Similarity.assignCells(b, centroids))
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      storePath: String, checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      // the batch itself carries vec_id, so novelty probes the raw scan;
+      // the centroid-assignment argmax runs once, over novel rows only
+      appendInsertIgnoreSketched(batch, storePath, "vec_id",
+        expand = b => graft.operators.Similarity.assignCells(b, centroids))
+    }
 
   /** Streaming semantic-contamination screen — the decontamination twin of
     * [[streamVectorIndex]], because incremental corpus ingestion is exactly
@@ -738,21 +630,13 @@ object Sinks {
     */
   def streamSemanticContamination(stream: DataFrame,
       centroids: Array[Array[Double]], evalProbes: DataFrame,
-      threshold: Double, storePath: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendInsertIgnoreSketchedRows(batch, storePath, "vec_id",
-          expand = b => graft.operators.Similarity
-            .screenCandidates(b, centroids, evalProbes)
-            .filter(org.apache.spark.sql.functions.col("cosine") >= threshold))
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      threshold: Double, storePath: String, checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      appendInsertIgnoreSketchedRows(batch, storePath, "vec_id",
+        expand = b => graft.operators.Similarity
+          .screenCandidates(b, centroids, evalProbes)
+          .filter(org.apache.spark.sql.functions.col("cosine") >= threshold))
+    }
 
   /** Streaming maintenance of the MinHash-LSH band index
     * ([[graft.operators.Dedup]]): each micro-batch of (doc_id, text) docs
@@ -772,30 +656,22 @@ object Sinks {
     * commit lost) replays to nothing (SinksSpec).
     */
   def streamBandIndex(stream: DataFrame, storePath: String,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // novelty probes the raw doc batch; shingling + minhash banding run
-        // once, over novel docs only, inside the single write action.
-        // The explicit repartition fans the CPU-heavy minhash across the
-        // session width (r16 task 4): the expand otherwise inherits the
-        // batch SCAN's partitioning, and text compresses ~4:1 in parquet,
-        // so byte-sized scan splits leave a 100×-replica batch's ~160 s of
-        // signature CPU on a handful of tasks (the q_stream_enrich lesson
-        // applied to the one stream whose map side is compute, not I/O —
-        // a 100k-row text shuffle costs far less than the skew it cures).
-        appendInsertIgnoreSketchedRows(batch, storePath, "doc_id",
-          expand = b => graft.operators.Dedup.docBands(
-            graft.operators.Dedup.keyedShingles(
-              b.repartition(org.apache.spark.sql.functions.col("doc_id")))))
-        postAppendHook(batchId)
-      }
-      .trigger(trigger)
-      .start()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchSink(stream, checkpointDir) { batch =>
+      // novelty probes the raw doc batch; shingling + minhash banding run
+      // once, over novel docs only, inside the single write action.
+      // The explicit repartition fans the CPU-heavy minhash across the
+      // session width (r16 task 4): the expand otherwise inherits the
+      // batch SCAN's partitioning, and text compresses ~4:1 in parquet,
+      // so byte-sized scan splits leave a 100×-replica batch's ~160 s of
+      // signature CPU on a handful of tasks (the q_stream_enrich lesson
+      // applied to the one stream whose map side is compute, not I/O —
+      // a 100k-row text shuffle costs far less than the skew it cures).
+      appendInsertIgnoreSketchedRows(batch, storePath, "doc_id",
+        expand = b => graft.operators.Dedup.docBands(
+          graft.operators.Dedup.keyedShingles(
+            b.repartition(org.apache.spark.sql.functions.col("doc_id")))))
+    }
 
   def writeJdbcInsertIgnore(incoming: DataFrame, url: String, table: String,
       key: String, props: Properties = new Properties(),

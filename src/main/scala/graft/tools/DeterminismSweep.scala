@@ -57,10 +57,9 @@ object DeterminismSweep {
       try {
         val a = canonicalHash(fn(spark, sfDir))
         isolate()
-        spark.conf.set("spark.sql.shuffle.partitions", altParts)
-        val b =
-          try canonicalHash(fn(spark, sfDir))
-          finally spark.conf.set("spark.sql.shuffle.partitions", "32")
+        val b = Tables.withConf(spark, "spark.sql.shuffle.partitions" -> altParts) {
+          canonicalHash(fn(spark, sfDir))
+        }
         isolate()
         val ok = a == b
         if (!ok) mismatches ::= name

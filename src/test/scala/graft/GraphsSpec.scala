@@ -112,6 +112,18 @@ class GraphsSpec extends SparkSpecBase {
       sketchWedgeFactor = 0) == 4L)                           // forced sketch file
   }
 
+  test("forced sketch path leaves the session's runtime bloom caps as it found them") {
+    // the sketch raises Spark's runtime-filter caps to its own size for the
+    // build only; a later face must plan under the caps the session set
+    val key = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    spark.conf.set(key, "1")
+    try {
+      assert(count(k4, broadcastMaxEdges = 0, sketchWedgeFactor = 0) == 4L)
+      assert(spark.conf.get(key) == "1", "the sketch build leaked its cap")
+    } finally spark.conf.unset(key)
+  }
+
   test("approx triangle: p=1 degenerates to exact, estimate deterministic and near exact") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     // invPLog2 = 0 ⇒ keep-bound 2^60 > any md5 prefix ⇒ every edge kept,

@@ -240,6 +240,80 @@ class SinksSpec extends SparkSpecBase {
       "outgrown sketch must be rebuilt with enlarged capacity")
   }
 
+  test("appendInsertIgnoreSketched: Spark jobs per batch shape are pinned") {
+    // every shape of the sketched insert-ignore, counted in Spark jobs: the
+    // listener bus is asynchronous and in order, so a tagged marker action
+    // before and after each batch brackets exactly that batch's jobs
+    val sc = spark.sparkContext
+    val Marker = "graft.spec.jobMarker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(Marker)))
+          .getOrElse("job"))
+    }
+    def mark(tag: String): Unit = {
+      sc.setLocalProperty(Marker, tag)
+      try spark.range(1).collect() finally sc.setLocalProperty(Marker, null)
+    }
+    def jobs(body: => Unit): Int = {
+      mark("start")
+      body
+      mark("end")
+      val events = Iterator.continually(
+        seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && e != "end").toSeq
+      assert(events.contains("start"), "marker jobs never reached the listener")
+      events.dropWhile(_ != "start").count(_ == "job")
+    }
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"), lit("x").as("v"))
+    val root = tempDir("sk_jobs")
+    val saved = Sinks.SmallBatchMaxRows
+    sc.addSparkListener(listener)
+    val counts = try {
+      val small = s"$root/small"
+      val legacy = s"$root/legacy"
+      val grow = s"$root/grow"
+      val bulk = s"$root/bulk"
+      val smallShapes = Seq(
+        "small first load" -> jobs(Sinks.appendInsertIgnoreSketched(
+          Seq((1L, "a"), (2L, "b"), (2L, "b2")).toDF("id", "v"), small, "id")),
+        "small steady, all new" -> jobs(Sinks.appendInsertIgnoreSketched(
+          Seq((3L, "c"), (4L, "d")).toDF("id", "v"), small, "id")),
+        "small steady, point lookups" -> jobs(Sinks.appendInsertIgnoreSketched(
+          Seq((2L, "dup"), (5L, "e")).toDF("id", "v"), small, "id")),
+        "small legacy bootstrap" -> jobs {
+          Sinks.appendInsertIgnore(rows(0, 3), legacy, "id")
+          Sinks.appendInsertIgnoreSketched(rows(2, 5), legacy, "id")
+        },
+        "small outgrown rebuild" -> jobs {
+          Sinks.appendInsertIgnoreSketched(rows(0, 3), grow, "id", capacityHint = 4)
+          Sinks.appendInsertIgnoreSketched(rows(2, 8), grow, "id", capacityHint = 4)
+        })
+      Sinks.SmallBatchMaxRows = 8
+      smallShapes ++ Seq(
+        "bulk first load" -> jobs(Sinks.appendInsertIgnoreSketched(rows(0, 200), bulk, "id")),
+        "bulk steady, all new" -> jobs(Sinks.appendInsertIgnoreSketched(rows(200, 240), bulk, "id")),
+        "bulk steady, point lookups" -> jobs(Sinks.appendInsertIgnoreSketched(rows(230, 260), bulk, "id")),
+        "bulk replay, exact anti-join" -> jobs(Sinks.appendInsertIgnoreSketched(rows(0, 200), bulk, "id")))
+    } finally {
+      Sinks.SmallBatchMaxRows = saved
+      sc.removeSparkListener(listener)
+    }
+    assert(spark.read.parquet(s"$root/bulk").select("id").as[Long].collect().sorted.toSeq
+      == (0L until 260L), "the pinned shapes must stay exact")
+    assert(counts.toMap == Map(
+      "small first load" -> 2,
+      "small steady, all new" -> 2,
+      "small steady, point lookups" -> 4,
+      "small legacy bootstrap" -> 11,
+      "small outgrown rebuild" -> 9,
+      "bulk first load" -> 6,
+      "bulk steady, all new" -> 5,
+      "bulk steady, point lookups" -> 9,
+      "bulk replay, exact anti-join" -> 7), counts.mkString("jobs per shape: ", ", ", ""))
+  }
+
   test("streamInsertIgnore: replayed stream appends nothing (exactly-once)") {
     // landing dir with duplicate keys in the arriving data — the
     // at-least-once shape (part files sit directly in the dir: the file
