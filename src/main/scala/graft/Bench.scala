@@ -43,6 +43,10 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val perQueryTimeout = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "300").toLong
     val globalBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "3000").toLong
+    // SPARK_GRAFT_ONLY=q_a,q_b — run a subset in an otherwise-identical
+    // session (clean-session attribution of queries that are slow only in
+    // full runs, or one face in a fresh JVM; not used by the driver)
+    val only = SparkEntry.selectFaces(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // generic session-conf overrides ("k=v,k=v") so gate-branch demos,
@@ -69,10 +73,6 @@ object Bench {
     val benchStart = System.nanoTime()
     def remainingSec: Long = globalBudget - (System.nanoTime() - benchStart) / 1000000000L
 
-    // SPARK_GRAFT_ONLY=q_a,q_b — run a subset in an otherwise-identical
-    // session (clean-session attribution of queries that are slow only in
-    // full runs, or one face in a fresh JVM; not used by the driver)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String], Boolean, Option[Map[String, Double]]) = {
       val budget = math.min(perQueryTimeout, math.max(remainingSec, 0L))

@@ -30,6 +30,21 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
+  /** The faces a comma-separated name filter selects (`SPARK_GRAFT_ONLY`,
+    * Verify's third argument): names trimmed, an absent or blank spec
+    * selects every face (None). A name no face carries is refused —
+    * naming every such name — before any face runs, so a typo cannot
+    * pass as a green, empty run.
+    */
+  def selectFaces(spec: Option[String]): Option[Set[String]] =
+    spec.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+      .map { names =>
+        val unknown = names.diff(queries.keySet)
+        if (unknown.nonEmpty) throw new IllegalArgumentException(
+          s"unknown face(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
+        names
+      }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- reference parity (SURVEY.md §2.1–2.5; posts→orders, comments→lineitem)
     "q_yesterday_post_ids" -> ((s, d) =>

@@ -19,7 +19,7 @@ object Verify {
     val outDir = args(1)
     // optional third arg: comma-separated query-name filter (dev-only — the
     // driver always runs the full set)
-    val only = args.lift(2).map(_.split(",").toSet)
+    val only = SparkEntry.selectFaces(args.lift(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

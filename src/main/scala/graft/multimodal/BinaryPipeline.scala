@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
@@ -738,6 +738,28 @@ object BinaryPipeline {
     }
   }
 
+  /** Character 4-grams of a decoded `content` column (none below 4 chars). */
+  private def contentGrams4: Column = expr(
+    "CASE WHEN length(content) >= 4 " +
+      "THEN transform(sequence(1, length(content) - 3), i -> substring(content, i, 4)) " +
+      "ELSE CAST(array() AS ARRAY<STRING>) END")
+
+  /** Media fingerprint → pairs tail of the media near-dup faces: SimHash
+    * each decoded (media_id, content) row over `grams`, then band, verify
+    * and gate through [[graft.operators.Dedup.simhashNearDupPairs]] under
+    * `pipeline`'s name; output (media_a, media_b, hamming).
+    */
+  private def contentNearDupPairs(decoded: DataFrame, grams: Column,
+      pipeline: String, maxHamming: Int): DataFrame = {
+    val fps = graft.operators.Dedup
+      .simhashLongOver(decoded, "media_id", grams)
+      .withColumnRenamed("media_id", "id")
+    graft.operators.Dedup
+      .simhashNearDupPairs(fps, pipeline, maxHamming)
+      .withColumnRenamed("doc_a", "media_a")
+      .withColumnRenamed("doc_b", "media_b")
+  }
+
   /** Perceptual-hash-style near-duplicate MEDIA pairs: decode each payload
     * (per-partition decoder shape, headers validated), fingerprint the
     * decoded CONTENT with a 60-bit SimHash over its character 4-grams, and
@@ -764,17 +786,7 @@ object BinaryPipeline {
             java.nio.charset.StandardCharsets.UTF_8))
       }
     }.toDF("media_id", "content")
-    val grams = expr(
-      "CASE WHEN length(content) >= 4 " +
-        "THEN transform(sequence(1, length(content) - 3), i -> substring(content, i, 4)) " +
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val fps = graft.operators.Dedup
-      .simhashLongOver(decoded, "media_id", grams)
-      .withColumnRenamed("media_id", "id")
-    graft.operators.Dedup
-      .simhashNearDupPairs(fps, "mediaNearDupPairs", maxHamming)
-      .withColumnRenamed("doc_a", "media_a")
-      .withColumnRenamed("doc_b", "media_b")
+    contentNearDupPairs(decoded, contentGrams4, "mediaNearDupPairs", maxHamming)
   }
 
   /** Driver face over the synthetic media table. */
@@ -1324,17 +1336,7 @@ object BinaryPipeline {
         (r.media_id, sb.toString)
       }
     }.toDF("media_id", "content")
-    val grams = expr(
-      "CASE WHEN length(content) >= 4 " +
-        "THEN transform(sequence(1, length(content) - 3), i -> substring(content, i, 4)) " +
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val fps = graft.operators.Dedup
-      .simhashLongOver(decoded, "media_id", grams)
-      .withColumnRenamed("media_id", "id")
-    graft.operators.Dedup
-      .simhashNearDupPairs(fps, "audioNearDupPairs", maxHamming)
-      .withColumnRenamed("doc_a", "media_a")
-      .withColumnRenamed("doc_b", "media_b")
+    contentNearDupPairs(decoded, contentGrams4, "audioNearDupPairs", maxHamming)
   }
 
   // ---------------------------------------------- audio spectral fingerprint
@@ -1437,14 +1439,8 @@ object BinaryPipeline {
         }
       }
     }.toDF("media_id", "content")
-    val grams = expr(
-      "transform(sequence(1, length(content) - 3), i -> substring(content, i, 4))")
-    val fps = graft.operators.Dedup
-      .simhashLongOver(decoded, "media_id", grams)
-      .withColumnRenamed("media_id", "id")
-    graft.operators.Dedup
-      .simhashNearDupPairs(fps, "audioSpectralPairs", maxHamming)
-      .withColumnRenamed("doc_a", "media_a")
-      .withColumnRenamed("doc_b", "media_b")
+    contentNearDupPairs(decoded, expr(
+      "transform(sequence(1, length(content) - 3), i -> substring(content, i, 4))"),
+      "audioSpectralPairs", maxHamming)
   }
 }

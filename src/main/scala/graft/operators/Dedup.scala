@@ -20,6 +20,27 @@ import org.apache.spark.sql.functions._
   * (band, bandKey) — tiny keys, heavily reduced data — instead of the O(n²)
   * all-pairs join a naive design would need.
   *
+  * Near-duplicate kernels — each written once, every face calls it:
+  *  - [[keyedShingles]] (shingle sets + exact set keys): every MinHash and
+  *    n-gram face, the streaming band index ([[graft.sources.Sinks]]);
+  *  - [[repsOf]] (one representative per distinct set): the MinHash rep
+  *    graph, both incremental faces, the banding sweep;
+  *  - [[signatures]] + [[bandRows]] (16-hash MinHash, b×r banding): the
+  *    rep graph, the incremental faces, the band index, the sweep;
+  *  - [[cappedJoin]] (population-capped sub-bucket join, with
+  *    [[cappedBandPairs]] for band tables): the rep graph, the incremental
+  *    faces, the sweep, the n-gram posting join, the SimHash band join;
+  *  - [[verifiedPairs]] (exact Jaccard verify): the rep graph, the
+  *    incremental faces, the n-gram `maxDf` re-verify;
+  *  - [[gatePairVolume]] (pair-volume gate): `minhashLshPairs`, every
+  *    SimHash enumeration (text and media);
+  *  - [[expandMembers]] (rep pairs → doc pairs): `minhashLshPairs`,
+  *    `ngramJaccardPairs`, `lshRecall`'s truth;
+  *  - [[simhashCounts]] (majority vote): `simhash`, `simhashPairs` and its
+  *    siblings, the media faces;
+  *  - [[probeTail]]: `incrementalNearDup` and `incrementalNearDupProbeIndex`;
+  *  - [[jaccardBand]] + [[recallBy]]: the recall faces.
+  *
   * Checkpoint lifetime: a pair pipeline `localCheckpoint`s the inputs its
   * lazy result reads; they live until the face boundary
   * ([[IterCheckpoint.releaseAll]]) or until the ContextCleaner reclaims
@@ -71,8 +92,38 @@ object Dedup {
     */
   val Bands = 8
 
-  /** Per-doc MinHash signature as 16 columns h0..h15: explode shingles to
-    * postings, hash each once per seed, take per-doc minima in ONE aggregation.
+  /** The key of every band-row table. */
+  private val BandKey = Seq("band", "band_key")
+
+  /** Keyed shingle front: (doc_id, carry…, sset, key…) for a frame with
+    * `doc_id` and `text` — the distinct 3-shingle set of every doc that
+    * has one, plus one order-normalized exact set-identity key per `keys`
+    * entry: md5 over the entry's prefix columns and the sorted set.
+    * Shingles never contain NUL, so a key is collision-free up to md5.
+    * The lang-blocked faces put `lang` in the prefix: two identical texts
+    * under different langs are never compared, so they must not share a
+    * group.
+    */
+  private[graft] def keyedShingles(docs: DataFrame, carry: Seq[Column] = Nil,
+      keys: Seq[(String, Seq[Column])] = Seq("skey" -> Nil)): DataFrame = {
+    val sets = docs.select((col("doc_id") +: carry) :+ shingles3(col("text")).as("sset"): _*)
+      .filter(size(col("sset")) > 0)
+    keys.foldLeft(sets) { case (df, (name, prefix)) =>
+      df.withColumn(name,
+        md5(concat_ws("\u0000", prefix.map(array(_)) :+ array_sort(col("sset")): _*)))
+    }
+  }
+
+  /** Rep collapse: one representative per distinct set of a keyed table,
+    * (skey, rid, sset) with rid = the set's min doc_id (reproducible;
+    * Jaccard is order-independent, so any member's array would do).
+    */
+  private def repsOf(keyed: DataFrame): DataFrame =
+    keyed.groupBy(col("skey"))
+      .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
+
+  /** MinHash signature h0..h15 per `keys` group: explode `set` to
+    * postings, hash each once per seed, take the minima in ONE aggregation.
     *
     * Why not `array_min(transform(sset, ...))` per seed over an array column:
     * Catalyst's projection collapse inlines the shingle-generation subtree
@@ -81,20 +132,161 @@ object Dedup {
     * round 1. The aggregation form hashes each shingle exactly 16 times,
     * gets map-side partial aggregation, and the shuffle rows are 16 longs —
     * no arrays.
+    *
+    * The postings re-spread on the first key first: the 16-hash partial
+    * aggregation is the pipeline's CPU hot spot, and its parallelism must
+    * not be hostage to the input's partition count (one smallish parquet
+    * file, or a checkpointed table's few partitions, would be one task
+    * hashing the whole corpus — profiled as exactly that).
     */
-  def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    val postings = Tables.documents(s, d)
-      .select(col("doc_id"), explode(shingles3(col("text"))).as("shingle"))
-      // the 16-hash partial aggregation is the pipeline's CPU hot spot; its
-      // parallelism must not be hostage to the scan's partition count (one
-      // smallish parquet file = ONE partition = one task hashing the whole
-      // corpus — profiled as exactly that). A narrow (long, string) shuffle
-      // buys corpus-wide parallelism.
-      .repartition(col("doc_id"))
-    val mins = (0 until NumHashes).map(k =>
-      min(md5Hash60(col("shingle"), lit(k))).as(s"h$k"))
-    postings.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+  private def signatures(rows: DataFrame, set: Column, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    val mins = (0 until NumHashes).map(i =>
+      min(md5Hash60(col("shingle"), lit(i))).as(s"h$i"))
+    rows.select(k :+ explode(set).as("shingle"): _*)
+      .repartition(k.head)
+      .groupBy(k: _*).agg(mins.head, mins.tail: _*)
   }
+
+  /** b×r banding: (keys…, band, band_key) rows of a signature table, band
+    * i keyed by md5 over hashes h(i·r) … h(i·r + r − 1). The production
+    * tiling is [[Bands]] × 2; [[lshBandingSweep]] walks the others.
+    */
+  private def bandRows(sigs: DataFrame, keys: Seq[String], bands: Int = Bands,
+      rows: Int = NumHashes / Bands): DataFrame =
+    sigs.select(keys.map(col) :+ posexplode(array((0 until bands).map(i =>
+        md5(concat_ws(",",
+          (0 until rows).map(j => col(s"h${i * rows + j}").cast("string")): _*))): _*)): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "band_key")
+
+  /** (rid, band, band_key) LSH band rows of a representative-set table —
+    * at 100 TB exactly the corpus index a deployment materializes.
+    */
+  private def repBands(reps: DataFrame): DataFrame =
+    bandRows(signatures(reps, col("sset"), "rid"), Seq("rid"))
+
+  /** (doc_id, skey, band, band_key) PER-DOCUMENT band rows — the append-only
+    * index layout the STREAMING maintenance lands in storage
+    * ([[graft.sources.Sinks.streamBandIndex]]): a batch's docs band
+    * independently of every other batch (no cross-batch rep bookkeeping —
+    * identical ssets get identical band keys wherever they arrive), and the
+    * probe collapses to rep level at read time.
+    */
+  private[graft] def docBands(keyed: DataFrame): DataFrame =
+    bandRows(signatures(keyed, col("sset"), "doc_id", "skey"), Seq("doc_id", "skey"))
+
+  /** Population-capped sub-bucket join of `rows` on `keys`: a group larger
+    * than `cap` splits into g = ceil(pop / cap) sub-buckets, side A lands
+    * in bucket hash(id) mod g, side B is replicated to all g, so no reducer
+    * sees more than ~cap×m candidate rows. Recall-exact: every pair of the
+    * group still meets exactly once, in the bucket its A row landed in.
+    *
+    * Output: keys, ba, `id_a`/`id_b` and each `carry` column suffixed the
+    * same way. A self-join (no `probe`) keeps each unordered pair once, at
+    * id_a < id_b (the mirror meeting fails it); with `probe`, side A is the
+    * rows where it holds and side B the rest. `pop` is the group
+    * population, by default a count window over `keys`.
+    */
+  private def cappedJoin(rows: DataFrame, keys: Seq[String], id: String,
+      cap: Int, pop: Option[Column] = None, carry: Seq[String] = Nil,
+      probe: Option[Column] = None): DataFrame = {
+    val k = keys.map(col)
+    val sized = rows.withColumn("g", ceil(
+      pop.getOrElse(count(lit(1)).over(Window.partitionBy(k: _*))) / lit(cap)).cast("int"))
+    def side(s: String) = (id +: carry).map(c => col(c).as(s"${c}_$s"))
+    val (rowsA, rowsB) = probe.fold((sized, sized))(p => (sized.filter(p), sized.filter(!p)))
+    val a = rowsA.select(k ++ (pmod(xxhash64(col(id)), col("g")).cast("int").as("ba") +: side("a")): _*)
+    val b = rowsB.select(k ++ side("b") :+ explode(sequence(lit(0), col("g") - 1)).as("ba"): _*)
+    val joined = a.join(b, keys :+ "ba")
+    if (probe.isEmpty) joined.filter(col(s"${id}_a") < col(s"${id}_b")) else joined
+  }
+
+  /** Distinct (rid_a, rid_b) candidate pairs of a (rid, band, band_key)
+    * band table through the capped join: a self-join, or with `probe` the
+    * probe rows against the rest.
+    */
+  private[graft] def cappedBandPairs(banded: DataFrame, hotBandCap: Int,
+      probe: Option[Column] = None): DataFrame =
+    cappedJoin(banded, BandKey, "rid", hotBandCap, probe = probe)
+      .select(col("rid_a"), col("rid_b")).distinct()
+
+  /** `cols` of `frame` renamed with the pair-side suffix `_a` or `_b`. */
+  private def pairSide(frame: DataFrame, side: String, cols: String*): DataFrame =
+    frame.select(cols.map(c => col(c).as(s"${c}_$side")): _*)
+
+  /** Exact Jaccard verify: candidate pairs (`id_a`, `id_b`) joined to each
+    * side's set (`sset_a`, `sset_b`), kept with `keep` and their exact
+    * |A∩B| / |A∪B| where that reaches `threshold`.
+    */
+  private def verifiedPairs(cand: DataFrame, id: String, setsA: DataFrame,
+      setsB: DataFrame, threshold: Double, keep: String*): DataFrame =
+    cand.join(setsA, Seq(s"${id}_a")).join(setsB, Seq(s"${id}_b"))
+      .select(keep.map(col) :+
+        (size(array_intersect(col("sset_a"), col("sset_b"))).cast("double") /
+          size(array_union(col("sset_a"), col("sset_b")))).as("jaccard"): _*)
+      .filter(col("jaccard") >= threshold)
+
+  /** Pair-volume gate of an enumerating face: the EXACT output
+    * cardinality Σ m_a·m_b over the verified group pairs (`key_a`,
+    * `key_b`) plus Σ C(m,2) over every group of `sizes` (key, m) — intra
+    * pairs emit regardless of banding — in ONE action (two head() calls
+    * paid two job-scheduling roundtrips per gated face). Past
+    * [[pairRowsBudget]] the face refuses with the sizing, after freeing
+    * `held` so a refusal pins no checkpoint.
+    */
+  private def gatePairVolume(pairs: DataFrame, sizes: DataFrame, key: String,
+      pipeline: String, held: DataFrame*): Unit = {
+    val gate = pairs
+      .join(pairSide(sizes, "a", key, "m"), Seq(s"${key}_a"))
+      .join(pairSide(sizes, "b", key, "m"), Seq(s"${key}_b"))
+      .agg(coalesce(sum(col("m_a") * col("m_b")), lit(0L)).as("cross_rows"),
+        count(lit(1)).as("f"))
+      .crossJoin(sizes
+        .agg(coalesce(sum(expr("(m * (m - 1)) div 2")), lit(0L)).as("intra_rows"),
+          count(lit(1)).as("g")))
+      .head()
+    val predicted = gate.getLong(0) + gate.getLong(2)
+    val budget = pairRowsBudget(pairs.sparkSession)
+    if (predicted > budget) {
+      IterCheckpoint.free(held: _*)
+      throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
+        gate.getLong(3), pipeline)
+    }
+  }
+
+  /** Member expansion: doc pairs (doc_a < doc_b, jaccard) of verified rep
+    * pairs (skey_a, skey_b, jaccard) over the keyed member table. Cross-set
+    * pairs are ordered per row (set order says nothing of doc order);
+    * every intra-set pair emits at Jaccard exactly 1.0 — identical sets,
+    * and the oracle's |S∩S| / |S∪S| division yields exactly 1.0 too.
+    */
+  private def expandMembers(keyed: DataFrame, repPairs: DataFrame): DataFrame = {
+    val members = keyed.select(col("skey"), col("doc_id"))
+    val cross = repPairs
+      .join(members.select(col("skey").as("skey_a"), col("doc_id").as("id_a")), Seq("skey_a"))
+      .join(members.select(col("skey").as("skey_b"), col("doc_id").as("id_b")), Seq("skey_b"))
+      .select(least(col("id_a"), col("id_b")).as("doc_a"),
+        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
+    val intra = members.select(col("skey"), col("doc_id").as("doc_a"))
+      .join(members.select(col("skey"), col("doc_id").as("doc_b")), Seq("skey"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
+    cross.unionByName(intra)
+  }
+
+  /** Recall rollup of a truth ⟕ found frame (`hit` non-null where found). */
+  private def recallBy(joined: DataFrame, keys: String*): DataFrame =
+    joined.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_found"),
+        (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
+
+  /** True-Jaccard band label of the recall faces. */
+  private def jaccardBand(j: Column): Column =
+    when(j >= 0.9, lit("0.90-1.00"))
+      .when(j >= 0.7, lit("0.70-0.90"))
+      .when(j >= 0.5, lit("0.50-0.70"))
+      .otherwise(lit("0.35-0.50"))
 
   /** MinHash+LSH near-duplicate pairs: band the signature (8 bands × 2 rows),
     * self-join on band key for candidates, then verify with exact Jaccard on
@@ -113,13 +305,11 @@ object Dedup {
     * signatures and bands ⇒ every intra-group pair is a candidate with
     * Jaccard exactly 1.0; a cross-group pair's band collision and Jaccard
     * depend only on the two set values, which the representatives carry.
-    * The band self-join is population-capped like simhash's (oversized
-    * (band, band_key) groups sub-bucketed — recall-exact, see there).
     *
     * Scale shape: the keyed set table is materialized ONCE via eager
     * localCheckpoint (persist() would exclude the plan from AQE — the
     * clusterLabels lesson) and feeds signatures, verification and both
-    * expansions; the band join carries only (band_key, rep_id); candidate
+    * expansions; the band join carries only (band_key, rid); candidate
     * pairs are deduped before sets are joined back, so each distinct set
     * crosses the wire once per surviving pair side, not once per duplicate
     * document. Checkpoint lifetime as in [[Dedup]]; same for
@@ -130,86 +320,20 @@ object Dedup {
     * re-shuffles every posting of every candidate doc to compute overlaps the
     * array intersection gets for free off the materialized sets — at the
     * measured candidate density the array verify is the cheaper side.
+    *
+    * The doc-pair member expansion is Θ(Σ m_a·m_b + Σ C(m,2)) BY CONTRACT —
+    * on a duplication-dense corpus that output volume, not any join or
+    * shuffle, is the wall (the r19 300× replica predicted ~280 M member
+    * pairs where the rep graph holds ~10⁴ rows). So, exactly like its
+    * SimHash twin [[simhashNearDupPairs]], the expansion is volume-gated
+    * ([[PairRowsConfKey]]); consumers that never need doc pairs (cluster
+    * labels and everything downstream of them, [[dedupClustersRep]]) stay
+    * on the rep graph and have no quadratic term at all.
     */
-  /** (rid, band, band_key) LSH band rows of a representative-set table —
-    * the signature+banding stage shared by [[minhashLshPairs]] (self-join)
-    * and [[incrementalNearDup]] (batch-probes-corpus); at 100 TB this is
-    * exactly the corpus index a deployment materializes to storage.
-    * Postings re-spread on rid before the 16-hash partial agg (same reason
-    * as [[minhashSignatures]]: a checkpointed table's few partitions must
-    * not serialize the hash stage).
-    */
-  private def repBands(reps: DataFrame): DataFrame = {
-    val postings = reps.select(col("rid"), explode(col("sset")).as("shingle"))
-      .repartition(col("rid"))
-    val mins = (0 until NumHashes).map(k =>
-      min(md5Hash60(col("shingle"), lit(k))).as(s"h$k"))
-    postings.groupBy(col("rid")).agg(mins.head, mins.tail: _*)
-      .select(col("rid"),
-        posexplode(array((0 until Bands).map(b =>
-          md5(concat_ws(",",
-            col(s"h${2 * b}").cast("string"),
-            col(s"h${2 * b + 1}").cast("string")))): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_key")
-  }
-
-  /** Distinct candidate pairs of a (rid, band, band_key) band table via the
-    * population-capped self-join — the hot-band sub-bucketing shared by
-    * [[minhashLshPairs]] and the banding sweep (identical construction to
-    * [[simhashPairs]]'s): oversized (band, band_key) groups split into g
-    * sub-buckets, one side hashed, the other replicated ×g, so no reducer
-    * sees more than ~cap×m candidate rows. Recall-exact: every colliding
-    * pair still meets in exactly the sub-bucket the hashed side landed in.
-    */
-  private[graft] def cappedBandPairs(banded: DataFrame,
-      hotBandCap: Int): DataFrame = {
-    val popln = Window.partitionBy(col("band"), col("band_key"))
-    val sized = banded
-      .withColumn("g", ceil(count(lit(1)).over(popln) / lit(hotBandCap)).cast("int"))
-    val a = sized.select(col("band"), col("band_key"),
-      pmod(xxhash64(col("rid")), col("g")).cast("int").as("ba"), col("rid").as("rid_a"))
-    val b = sized.select(col("band"), col("band_key"), col("rid").as("rid_b"),
-      explode(sequence(lit(0), col("g") - 1)).as("ba"))
-    a.join(b, Seq("band", "band_key", "ba"))
-      .filter(col("rid_a") < col("rid_b"))
-      .select(col("rid_a"), col("rid_b"))
-      .distinct()
-  }
-
-  /** (doc_id, sset, skey) for a (doc_id, text) frame: distinct 3-shingle
-    * set + its order-normalized exact identity key. The shared front of
-    * every minhash face (shingles never contain NUL, so skey is
-    * collision-free up to md5).
-    */
-  private[graft] def keyedShingles(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), shingles3(col("text")).as("sset"))
-      .filter(size(col("sset")) > 0)
-      .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-
-  /** (doc_id, skey, band, band_key) PER-DOCUMENT band rows — the append-only
-    * index layout the STREAMING maintenance lands in storage
-    * ([[graft.sources.Sinks.streamBandIndex]]): a batch's docs band
-    * independently of every other batch (no cross-batch rep bookkeeping —
-    * identical ssets get identical band keys wherever they arrive), and the
-    * probe collapses to rep level at read time. Same signature aggregation
-    * as [[repBands]].
-    */
-  private[graft] def docBands(keyed: DataFrame): DataFrame = {
-    val postings = keyed.select(col("doc_id"), col("skey"),
-      explode(col("sset")).as("shingle"))
-      .repartition(col("doc_id"))
-    val mins = (0 until NumHashes).map(k =>
-      min(md5Hash60(col("shingle"), lit(k))).as(s"h$k"))
-    postings.groupBy(col("doc_id"), col("skey")).agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), col("skey"),
-        posexplode(array((0 until Bands).map(b =>
-          md5(concat_ws(",",
-            col(s"h${2 * b}").cast("string"),
-            col(s"h${2 * b + 1}").cast("string")))): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_key")
+  def minhashLshPairs(s: SparkSession, d: String,
+      hotBandCap: Int = HotBandCap): DataFrame = {
+    val g = minhashRepGraph(s, d, hotBandCap)
+    minhashLshPairsOver(g, g.keyed, g.reps)
   }
 
   /** Checkpointed shared front of every MinHash face: the keyed shingle
@@ -217,7 +341,7 @@ object Dedup {
     * pair graph (band join + exact Jaccard over representative sets).
     * Everything here is distinct-set-bounded at any duplication density —
     * the doc-level quadratic lives only in the enumeration face that
-    * explicitly asks for it (and now gates it, see [[minhashLshPairs]]).
+    * explicitly asks for it (and gates it, see [[minhashLshPairs]]).
     */
   private[graft] final case class MinhashRepGraph(
       keyed: DataFrame, reps: DataFrame, repPairs: DataFrame)
@@ -228,122 +352,43 @@ object Dedup {
     */
   private[graft] def minhashRepGraph(s: SparkSession, d: String,
       hotBandCap: Int): MinhashRepGraph = {
-    // (doc_id, sset, skey): skey = exact set identity, order-normalized.
-    // Shingles never contain NUL, so the join is collision-free up to md5.
     // shingle + representative build stamped: a bench record's face
     // decomposition then splits p_shingle_ckpt (corpus tokenize/collapse —
     // built once, read by banding AND member expansion) from the
     // consumer's own stamps (p_pairs_ckpt in clusterLabels)
     val keyed = graft.BenchPhases.timed("p_shingle_ckpt")(
-      Tables.documents(s, d)
-        .select(col("doc_id"), shingles3(col("text")).as("sset"))
-        .filter(size(col("sset")) > 0)
-        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-        .localCheckpoint())
+      keyedShingles(Tables.documents(s, d)).localCheckpoint())
     minhashRepGraphKeyed(keyed, hotBandCap)
   }
 
   /** [[minhashRepGraph]] over a CHECKPOINTED (doc_id, sset, skey) keyed
-    * table the caller already owns — r20 factoring so [[lshRecall]] feeds
-    * BOTH its fronts from ONE corpus tokenize/shingle pass instead of
-    * running it twice (once per front). Only `reps` is checkpointed here.
+    * table the caller already owns, so [[lshRecall]] feeds both its fronts
+    * from ONE corpus shingle pass. Only `reps` is checkpointed here.
     */
   private[graft] def minhashRepGraphKeyed(keyed: DataFrame,
       hotBandCap: Int): MinhashRepGraph = {
-    // one representative per distinct set (min doc_id for reproducibility;
-    // Jaccard is order-independent so any member's array would do)
-    val reps = graft.BenchPhases.timed("p_shingle_ckpt")(
-      keyed.groupBy(col("skey"))
-        .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
-        .localCheckpoint())
-    val banded = repBands(reps)
-    val cand = cappedBandPairs(banded, hotBandCap)
+    val reps = graft.BenchPhases.timed("p_shingle_ckpt")(repsOf(keyed).localCheckpoint())
     // verify on representative sets; carry rids for the label graph and
     // both skeys for the member expansion
-    val repPairs = cand
-      .join(reps.select(col("rid").as("rid_a"), col("skey").as("skey_a"),
-        col("sset").as("set_a")), Seq("rid_a"))
-      .join(reps.select(col("rid").as("rid_b"), col("skey").as("skey_b"),
-        col("sset").as("set_b")), Seq("rid_b"))
-      .select(col("rid_a"), col("rid_b"), col("skey_a"), col("skey_b"),
-        (size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
-          size(array_union(col("set_a"), col("set_b")))).as("jaccard"))
-      .filter(col("jaccard") >= 0.35)
+    def sets(side: String) = pairSide(reps, side, "rid", "skey", "sset")
+    val repPairs = verifiedPairs(cappedBandPairs(repBands(reps), hotBandCap), "rid",
+      sets("a"), sets("b"), 0.35, "rid_a", "rid_b", "skey_a", "skey_b")
     MinhashRepGraph(keyed, reps, repPairs)
   }
 
-  /** Doc-pair ENUMERATION face. The member expansion is Θ(Σ m_a·m_b +
-    * Σ C(m,2)) BY CONTRACT — on a duplication-dense corpus that output
-    * volume, not any join or shuffle, is the wall (the r19 300× replica
-    * predicted ~280 M member pairs where the rep graph holds ~10⁴ rows;
-    * `q_contamination_closure` burned its 420 s window on exactly this
-    * expansion before r20 moved every label consumer to
-    * [[dedupClustersRep]]). So, exactly like its SimHash twin
-    * [[simhashNearDupPairs]], the expansion is volume-gated: the verified
-    * rep pairs are checkpointed (the band join was going to run exactly
-    * once anyway), the EXACT output cardinality Σ m_a·m_b + Σ C(m,2) is
-    * computed in one aggregate over those pairs plus the per-set member
-    * counts, and the expansion only runs if it fits [[PairRowsConfKey]]
-    * (default [[DefaultMaxPairRows]]) — fail-fast with the sizing in the
-    * refusal instead of a window-burning enumeration. Consumers that never
-    * need doc pairs (cluster labels and everything downstream of them)
-    * stay on the rep graph and have no quadratic term at all.
-    */
-  def minhashLshPairs(s: SparkSession, d: String,
-      hotBandCap: Int = HotBandCap): DataFrame = {
-    val g = minhashRepGraph(s, d, hotBandCap)
-    minhashLshPairsOver(s, g, g.keyed, g.reps)
-  }
-
   /** Gate + enumeration tail of [[minhashLshPairs]] over an already-built
-    * rep graph — r20 factoring so [[lshRecall]] can feed it a front built
-    * from the shared shingle base. `front` are the checkpointed frames a
-    * refusal frees along with the rep pairs; any the caller keeps (the
-    * shared base) must NOT be in it.
+    * rep graph. `front` are the checkpointed frames a refusal frees along
+    * with the rep pairs; any the caller keeps (a shared base) must NOT be
+    * in it.
     */
-  private[graft] def minhashLshPairsOver(s: SparkSession, g: MinhashRepGraph,
+  private[graft] def minhashLshPairsOver(g: MinhashRepGraph,
       front: DataFrame*): DataFrame = {
     // materialize the verified rep pairs ONCE: the gate's sizing aggregate
     // and the member expansion both read them
     val repPairs = g.repPairs.localCheckpoint()
-    val members = g.keyed.select(col("skey"), col("doc_id"))
-    val sizes = g.keyed.groupBy(col("skey")).agg(count(lit(1)).as("m"))
-    // EXACT predicted output: Σ m_a·m_b over verified cross-set rep pairs
-    // + Σ C(m,2) over every set (intra pairs emit regardless of banding —
-    // identical sets are Jaccard-1.0 duplicates by identity)
-    // both sizing aggregates in ONE action (r20) — same fusion as
-    // [[simhashNearDupPairs]]'s gate
-    val gate = repPairs
-      .join(sizes.select(col("skey").as("skey_a"), col("m").as("m_a")), Seq("skey_a"))
-      .join(sizes.select(col("skey").as("skey_b"), col("m").as("m_b")), Seq("skey_b"))
-      .agg(coalesce(sum(col("m_a") * col("m_b")), lit(0L)).as("cross_rows"),
-        count(lit(1)).as("f"))
-      .crossJoin(sizes
-        .agg(coalesce(sum(expr("(m * (m - 1)) div 2")), lit(0L)).as("intra_rows"),
-          count(lit(1)).as("g")))
-      .head()
-    val predicted = gate.getLong(0) + gate.getLong(2)
-    val budget = pairRowsBudget(s)
-    if (predicted > budget) {
-      // refusal leaves no pinned generation behind (the simhash/triangle
-      // gate discipline): release the checkpoints before throwing
-      IterCheckpoint.free(front :+ repPairs: _*)
-      throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
-        gate.getLong(3), "minhashLshPairs")
-    }
-    // cross-set doc pairs: representative order does not imply doc order
-    val cross = repPairs
-      .join(members.select(col("skey").as("skey_a"), col("doc_id").as("id_a")), Seq("skey_a"))
-      .join(members.select(col("skey").as("skey_b"), col("doc_id").as("id_b")), Seq("skey_b"))
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
-    // intra-set doc pairs: identical sets ⇒ Jaccard exactly 1.0 (the oracle's
-    // |S∩S| / |S∪S| division yields exactly 1.0 too)
-    val intra = members.select(col("skey"), col("doc_id").as("doc_a"))
-      .join(members.select(col("skey"), col("doc_id").as("doc_b")), Seq("skey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
+    gatePairVolume(repPairs, g.keyed.groupBy(col("skey")).agg(count(lit(1)).as("m")),
+      "skey", "minhashLshPairs", front :+ repPairs: _*)
+    expandMembers(g.keyed, repPairs)
   }
 
   /** INCREMENTAL near-dup: probe a NEW batch of documents against the
@@ -372,44 +417,17 @@ object Dedup {
     */
   def incrementalNearDup(s: SparkSession, d: String, threshold: Double = 0.35,
       hotBandCap: Int = HotBandCap): DataFrame = {
-    val isBatch = col("doc_id") % 5 === 0
-    val keyed = Tables.documents(s, d)
-      .select(col("doc_id"), shingles3(col("text")).as("sset"), isBatch.as("in_batch"))
-      .filter(size(col("sset")) > 0)
-      .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-      .localCheckpoint()
-    def repsOf(side: Boolean) = keyed.filter(col("in_batch") === side)
-      .groupBy(col("skey"))
-      .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
-      .localCheckpoint()
-    val bReps = repsOf(true)
-    val cReps = repsOf(false)
-    val banded = repBands(bReps).withColumn("probe", lit(true))
-      .unionByName(repBands(cReps).withColumn("probe", lit(false)))
-    val popln = Window.partitionBy(col("band"), col("band_key"))
-    val sized = banded
-      .withColumn("g", ceil(count(lit(1)).over(popln) / lit(hotBandCap)).cast("int"))
-    val a = sized.filter(col("probe")).select(col("band"), col("band_key"),
-      pmod(xxhash64(col("rid")), col("g")).cast("int").as("ba"), col("rid").as("brid"))
-    val b = sized.filter(!col("probe")).select(col("band"), col("band_key"),
-      col("rid").as("crid"), explode(sequence(lit(0), col("g") - 1)).as("ba"))
-    val cand = a.join(b, Seq("band", "band_key", "ba"))
-      .select(col("brid"), col("crid")).distinct()
-    val repPairs = cand
-      .join(bReps.select(col("rid").as("brid"), col("skey").as("skey_b"),
-        col("sset").as("set_b")), Seq("brid"))
-      .join(cReps.select(col("rid").as("crid"), col("skey").as("skey_c"),
-        col("sset").as("set_c")), Seq("crid"))
-      .select(col("skey_b"), col("skey_c"),
-        (size(array_intersect(col("set_b"), col("set_c"))).cast("double") /
-          size(array_union(col("set_b"), col("set_c")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val membersB = keyed.filter(col("in_batch"))
-      .select(col("skey").as("skey_b"), col("doc_id").as("batch_doc"))
-    val membersC = keyed.filter(!col("in_batch"))
-      .select(col("skey").as("skey_c"), col("doc_id").as("corpus_doc"))
-    repPairs.join(membersB, Seq("skey_b")).join(membersC, Seq("skey_c"))
-      .select(col("batch_doc"), col("corpus_doc"), col("jaccard"))
+    val keyed = keyedShingles(Tables.documents(s, d),
+      Seq((col("doc_id") % 5 === 0).as("in_batch"))).localCheckpoint()
+    val batch = keyed.filter(col("in_batch"))
+    val corpus = keyed.filter(!col("in_batch"))
+    val bReps = repsOf(batch).localCheckpoint()
+    val cReps = repsOf(corpus).localCheckpoint()
+    probeTail(batch, bReps, repBands(cReps),
+      _ => pairSide(cReps, "b", "rid", "skey", "sset"), "skey_b",
+      _.join(corpus.select(col("skey").as("skey_b"), col("doc_id").as("corpus_doc")),
+        Seq("skey_b")),
+      threshold, hotBandCap)
   }
 
   /** [[incrementalNearDup]] against a MATERIALIZED band index — the fully
@@ -433,47 +451,45 @@ object Dedup {
       storePath: String, threshold: Double = 0.35,
       hotBandCap: Int = HotBandCap): DataFrame = {
     val idx = s.read.parquet(storePath)
-    val bKeyed = keyedShingles(Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text"))).localCheckpoint()
-    val bReps = bKeyed.groupBy(col("skey"))
-      .agg(min(col("doc_id")).as("rid"), min_by(col("sset"), col("doc_id")).as("sset"))
+    val bKeyed = keyedShingles(Tables.documents(s, d).filter(col("doc_id") % 5 === 0))
       .localCheckpoint()
+    val bReps = repsOf(bKeyed).localCheckpoint()
     // rep-level corpus rows from the stored index: min member per distinct
     // set (all members of a skey carry identical band rows)
-    val cIdx = idx.groupBy(col("skey"), col("band"), col("band_key"))
+    val cBands = idx.groupBy(col("skey"), col("band"), col("band_key"))
       .agg(min(col("doc_id")).as("rid"))
-    val banded = repBands(bReps).withColumn("probe", lit(true))
-      .unionByName(cIdx.select(col("rid"), col("band"), col("band_key"))
-        .withColumn("probe", lit(false)))
-    val popln = Window.partitionBy(col("band"), col("band_key"))
-    val sized = banded
-      .withColumn("g", ceil(count(lit(1)).over(popln) / lit(hotBandCap)).cast("int"))
-    val a = sized.filter(col("probe")).select(col("band"), col("band_key"),
-      pmod(xxhash64(col("rid")), col("g")).cast("int").as("ba"), col("rid").as("brid"))
-    val b = sized.filter(!col("probe")).select(col("band"), col("band_key"),
-      col("rid").as("crid"), explode(sequence(lit(0), col("g") - 1)).as("ba"))
-    val cand = a.join(b, Seq("band", "band_key", "ba"))
-      .select(col("brid"), col("crid")).distinct()
-    // verify: batch sets ride the rep table; corpus candidate sets are
-    // point-fetched from documents by rep doc id (content lookup, not scan)
-    val cRepSets = Tables.documents(s, d)
-      .join(cand.select(col("crid")).distinct(), col("doc_id") === col("crid"))
-      .select(col("crid"), shingles3(col("text")).as("set_c"))
-    val repPairs = cand
-      .join(bReps.select(col("rid").as("brid"), col("skey").as("skey_b"),
-        col("sset").as("set_b")), Seq("brid"))
-      .join(cRepSets, Seq("crid"))
-      .select(col("skey_b"), col("crid"),
-        (size(array_intersect(col("set_b"), col("set_c"))).cast("double") /
-          size(array_union(col("set_b"), col("set_c")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val membersB = bKeyed.select(col("skey").as("skey_b"), col("doc_id").as("batch_doc"))
+      .select(col("rid"), col("band"), col("band_key"))
     // rep id → its set's members, both straight from the index
-    val cridSkey = idx.groupBy(col("skey")).agg(min(col("doc_id")).as("crid"))
+    val cridSkey = idx.groupBy(col("skey")).agg(min(col("doc_id")).as("rid_b"))
     val membersC = idx.select(col("skey"), col("doc_id").as("corpus_doc")).distinct()
-    repPairs.join(membersB, Seq("skey_b"))
-      .join(cridSkey, Seq("crid"))
-      .join(membersC, Seq("skey"))
+    probeTail(bKeyed, bReps, cBands,
+      // corpus candidate sets are point-fetched from documents by rep doc
+      // id (content lookup, not scan)
+      cand => Tables.documents(s, d)
+        .join(cand.select(col("rid_b")).distinct(), col("doc_id") === col("rid_b"))
+        .select(col("rid_b"), shingles3(col("text")).as("sset_b")),
+      "rid_b", _.join(cridSkey, Seq("rid_b")).join(membersC, Seq("skey")),
+      threshold, hotBandCap)
+  }
+
+  /** Probe tail of the incremental faces: the batch reps' bands meet the
+    * corpus band rows `cBands` (rid, band, band_key) in the capped probe
+    * join, candidates (rid_a batch, rid_b corpus) verify against the
+    * corpus sets `cSets(cand)` (rid_b, sset_b, …), and each verified
+    * (skey_a, `cKey`) pair expands to (batch_doc, corpus_doc, jaccard) —
+    * batch members by skey, corpus members by `cMembers`.
+    */
+  private def probeTail(bKeyed: DataFrame, bReps: DataFrame, cBands: DataFrame,
+      cSets: DataFrame => DataFrame, cKey: String,
+      cMembers: DataFrame => DataFrame, threshold: Double,
+      hotBandCap: Int): DataFrame = {
+    val banded = repBands(bReps).withColumn("probe", lit(true))
+      .unionByName(cBands.withColumn("probe", lit(false)))
+    val cand = cappedBandPairs(banded, hotBandCap, Some(col("probe")))
+    val repPairs = verifiedPairs(cand, "rid", pairSide(bReps, "a", "rid", "skey", "sset"),
+      cSets(cand), threshold, "skey_a", cKey)
+    cMembers(repPairs.join(
+      bKeyed.select(col("skey").as("skey_a"), col("doc_id").as("batch_doc")), Seq("skey_a")))
       .select(col("batch_doc"), col("corpus_doc"), col("jaccard"))
   }
 
@@ -496,47 +512,38 @@ object Dedup {
     * Two defenses against the corpus-scale stop-shingle ("in the way")
     * funneling df² pair rows through ONE shuffle key:
     *
-    *  - Always on, recall-exact: the posting self-join is population-capped
-    *    exactly like the simhash/minhash band joins — a (lang, shingle) group
-    *    with df > `hotShingleCap` is split into ceil(df / cap) sub-buckets
-    *    keyed by a hash of side A's set key, side B replicated per
-    *    sub-bucket. Each matching posting pair still meets exactly once (at
-    *    ba = bucket(skey_a); the mirror meeting fails skey_a < skey_b), so
-    *    the per-pair COUNT the Jaccard is built from is unchanged —
-    *    `DedupClustersSpec` checks cap=2 ≡ cap=∞ adversarially. Per-task
-    *    work drops from df² to cap × df with df/cap-way parallelism; the
-    *    total Σ df² row volume is unchanged but spread across reducers.
+    *  - Always on, recall-exact: the posting self-join is the
+    *    population-capped join of the band faces ([[cappedJoin]]) keyed on
+    *    (lang, shingle), side A bucketed by its set key — the per-pair
+    *    COUNT the Jaccard is built from is unchanged (`DedupClustersSpec`
+    *    checks cap=2 ≡ cap=∞ adversarially). Per-task work drops from df²
+    *    to cap × df with df/cap-way parallelism; the total Σ df² row volume
+    *    is unchanged but spread across reducers.
     *
     *  - Opt-in, recall-lossy, work-bounding: `maxDf = Some(m)` drops
     *    shingles with df > m from the index entirely (candidate generation
     *    only), eliminating — not just spreading — their df² term. Emitted
     *    pairs are then re-verified against the full representative sets
-    *    (array intersect/union, the [[minhashLshPairs]] verify shape), so
-    *    every output Jaccard is still EXACT over all shingles including the
-    *    dropped ones; what is lost is only pairs whose entire overlap lies
-    *    in dropped stop-shingles (they produce no candidate). The number of
-    *    dropped shingles is logged so the loss surface is visible.
+    *    (the [[minhashLshPairs]] verify), so every output Jaccard is still
+    *    EXACT over all shingles including the dropped ones; what is lost is
+    *    only pairs whose entire overlap lies in dropped stop-shingles (they
+    *    produce no candidate). The number of dropped shingles is logged so
+    *    the loss surface is visible.
+    *
+    * Distinct-set collapse, exactly as in [[minhashLshPairs]]: the inverted
+    * index's Σ freq² work multiplies by m² per m-duplicate group when run
+    * per document (measured 22 s standalone at a 10× replica of sf0.1).
     */
   def ngramJaccardPairs(s: SparkSession, d: String, threshold: Double = 0.2,
       hotShingleCap: Int = HotBandCap, maxDf: Option[Long] = None): DataFrame = {
-    // Distinct-set collapse, exactly as in [[minhashLshPairs]]: the inverted
-    // index's Σ freq² work multiplies by m² per m-duplicate group when run
-    // per document (measured 22 s standalone at a 10× replica of sf0.1).
-    // The set key includes lang because the blocking does — two identical
-    // texts under different langs are never compared, so they must not
-    // share a group.
-    val keyed = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-      .filter(size(col("sset")) > 0)
-      .withColumn("skey",
-        md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
-      .localCheckpoint()
+    val keyed = keyedShingles(Tables.documents(s, d), Seq(col("lang")),
+      Seq("skey" -> Seq(col("lang")))).localCheckpoint()
     // the rep table is read by postings + (maxDf only) the verify join and
     // the drop count; only that path materializes it
     val repsCk = maxDf.map(_ => ngramReps(keyed).localCheckpoint())
     val repPairs = ngramRepPairs(repsCk.getOrElse(ngramReps(keyed)), threshold,
       hotShingleCap, maxDf)
-    ngramExpandPairs(keyed, repPairs)
+    expandMembers(keyed, repPairs)
   }
 
   /** One representative per distinct set of a CHECKPOINTED (doc_id, lang,
@@ -550,11 +557,10 @@ object Dedup {
 
   /** Rep-level verified pairs (skey_a, skey_b, jaccard) over an
     * [[ngramReps]] table — the exact inverted-index front of
-    * [[ngramJaccardPairs]] WITHOUT the member expansion (r20 factoring:
-    * [[lshRecall]] shares one corpus shingle pass between this front and the
-    * MinHash front, and [[lshBandingSweep]] consumes truth at REP level, so
-    * neither re-runs the shingle pass nor, for the sweep, the doc-pair
-    * expansion). The caller owns every checkpoint's lifetime.
+    * [[ngramJaccardPairs]] WITHOUT the member expansion ([[lshRecall]]
+    * shares one corpus shingle pass between this front and the MinHash
+    * front, and [[lshBandingSweep]] consumes truth at REP level). The
+    * caller owns every checkpoint's lifetime.
     */
   private[graft] def ngramRepPairs(reps: DataFrame, threshold: Double,
       hotShingleCap: Int, maxDf: Option[Long]): DataFrame = {
@@ -577,21 +583,11 @@ object Dedup {
         counted.filter(col("df") <= m)
       case None => counted
     }
-    // population cap — same sub-bucket construction as [[simhashPairs]]'s
-    // band join: A lands in bucket hash(skey_a) mod g, B replicated to all g
-    val sized = indexed
-      .withColumn("g", ceil(col("df") / lit(hotShingleCap)).cast("int"))
-    val a = sized.select(col("lang"), col("shingle"),
-      pmod(xxhash64(col("skey")), col("g")).cast("int").as("ba"),
-      col("skey").as("skey_a"), col("n").as("n_a"))
-    val b = sized.select(col("lang"), col("shingle"),
-      col("skey").as("skey_b"), col("n").as("n_b"),
-      explode(sequence(lit(0), col("g") - 1)).as("ba"))
     // rep pairs are canonicalized by skey; doc order is applied after the
     // expansion (skey order says nothing about doc_id order)
-    val matched = a.join(b, Seq("lang", "shingle", "ba"))
-      .filter(col("skey_a") < col("skey_b") &&
-        col("n_a") * 5 >= col("n_b") * 4 && col("n_b") * 5 >= col("n_a") * 4)
+    val matched = cappedJoin(indexed, Seq("lang", "shingle"), "skey", hotShingleCap,
+        pop = Some(col("df")), carry = Seq("n"))
+      .filter(col("n_a") * 5 >= col("n_b") * 4 && col("n_b") * 5 >= col("n_a") * 4)
     maxDf match {
       case None =>
         // exact count path: every shared shingle contributes exactly one row
@@ -605,35 +601,23 @@ object Dedup {
         // dropped shingles undercount the join, so the count is only a
         // candidate signal — re-verify each candidate pair against the FULL
         // sets so the emitted Jaccard is exact over every shingle
-        matched.select(col("skey_a"), col("skey_b")).distinct()
-          .join(reps.select(col("skey").as("skey_a"), col("sset").as("set_a")), Seq("skey_a"))
-          .join(reps.select(col("skey").as("skey_b"), col("sset").as("set_b")), Seq("skey_b"))
-          .select(col("skey_a"), col("skey_b"),
-            (size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
-              size(array_union(col("set_a"), col("set_b")))).as("jaccard"))
-          .filter(col("jaccard") >= threshold)
+        def sets(side: String) = pairSide(reps, side, "skey", "sset")
+        verifiedPairs(matched.select(col("skey_a"), col("skey_b")).distinct(), "skey",
+          sets("a"), sets("b"), threshold, "skey_a", "skey_b")
     }
   }
 
-  /** Doc-pair member expansion (cross + intra) of rep-level pairs over the
-    * keyed member table — the enumeration tail of [[ngramJaccardPairs]].
+  /** The corpus shingle pass [[lshRecall]] and [[lshBandingSweep]] share,
+    * checkpointed: the plain set key (MinHash/banding front) and the
+    * lang-blocked `skey_lang` (the exact truth front) off ONE tokenize.
     */
-  private def ngramExpandPairs(keyed: DataFrame, repPairs: DataFrame): DataFrame = {
-    val members = keyed.select(col("skey"), col("doc_id"))
-    val cross = repPairs
-      .join(members.select(col("skey").as("skey_a"), col("doc_id").as("id_a")), Seq("skey_a"))
-      .join(members.select(col("skey").as("skey_b"), col("doc_id").as("id_b")), Seq("skey_b"))
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"), col("jaccard"))
-    // same-set pairs (same lang by key construction): c = n_a = n_b ⇒ the
-    // oracle's c/(n_a + n_b − c) is exactly 1.0; the ±20% size band is a
-    // self-comparison and always passes
-    val intra = members.select(col("skey"), col("doc_id").as("doc_a"))
-      .join(members.select(col("skey"), col("doc_id").as("doc_b")), Seq("skey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
-  }
+  private def dualKeyed(s: SparkSession, d: String): DataFrame =
+    keyedShingles(Tables.documents(s, d), Seq(col("lang")),
+      Seq("skey" -> Nil, "skey_lang" -> Seq(col("lang")))).localCheckpoint()
+
+  /** The lang-blocked keyed view of a [[dualKeyed]] base. */
+  private def langKeyed(base: DataFrame): DataFrame =
+    base.select(col("doc_id"), col("lang"), col("sset"), col("skey_lang").as("skey"))
 
   /** MEASURED MinHash-LSH recall per true-Jaccard band — the dedup analog of
     * the ANN `q_ann_recall` face (SURVEY §13.1), and the number the banding
@@ -647,42 +631,21 @@ object Dedup {
     * ~1.0 by J=0.8 — the measured numbers pin the implementation to the
     * theory (LshRecallSpec), exactly what an unmeasured index hides.
     *
-    * Scale shape: both inputs are the already-scale-proven faces; the join
-    * and rollup add two narrow hash shuffles on (doc_a, doc_b) longs.
+    * Scale shape: both inputs are the already-scale-proven faces over ONE
+    * corpus shingle pass ([[dualKeyed]]); the join and rollup add two
+    * narrow hash shuffles on (doc_a, doc_b) longs.
     */
   def lshRecall(s: SparkSession, d: String): DataFrame = {
-    // ONE corpus tokenize/shingle pass (r20): the old shape ran shingles3
-    // over every document twice — once inside ngramJaccardPairs (lang-keyed
-    // truth) and once inside minhashLshPairs (plain-keyed LSH front). The
-    // shared base carries BOTH set-identity keys; each front reads the
-    // checkpoint narrowly. Downstream expressions are verbatim the
-    // standalone faces', so both sides' outputs are bit-identical.
-    val base = graft.BenchPhases.timed("p_shingle_ckpt")(
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-        .filter(size(col("sset")) > 0)
-        .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-        .withColumn("skey_lang",
-          md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
-        .localCheckpoint())
-    val nKeyed = base.select(col("doc_id"), col("lang"), col("sset"),
-      col("skey_lang").as("skey"))
-    val truthPairs = ngramRepPairs(ngramReps(nKeyed), threshold = 0.35, HotBandCap, None)
-    val truth = ngramExpandPairs(nKeyed, truthPairs)
+    val base = graft.BenchPhases.timed("p_shingle_ckpt")(dualKeyed(s, d))
+    val nKeyed = langKeyed(base)
+    val truth = expandMembers(nKeyed,
+      ngramRepPairs(ngramReps(nKeyed), threshold = 0.35, HotBandCap, None))
     val g = minhashRepGraphKeyed(
       base.select(col("doc_id"), col("sset"), col("skey")), HotBandCap)
-    val found = minhashLshPairsOver(s, g)
+    val found = minhashLshPairsOver(g)
       .select(col("doc_a"), col("doc_b"), lit(1).as("hit"))
-    truth
-      .withColumn("jband",
-        when(col("jaccard") >= 0.9, lit("0.90-1.00"))
-          .when(col("jaccard") >= 0.7, lit("0.70-0.90"))
-          .when(col("jaccard") >= 0.5, lit("0.50-0.70"))
-          .otherwise(lit("0.35-0.50")))
-      .join(found, Seq("doc_a", "doc_b"), "left")
-      .groupBy(col("jband"))
-      .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_found"),
-        (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
+    recallBy(truth.withColumn("jband", jaccardBand(col("jaccard")))
+      .join(found, Seq("doc_a", "doc_b"), "left"), "jband")
   }
 
   /** The (bands × rows-per-band) points swept by [[lshBandingSweep]] —
@@ -734,58 +697,29 @@ object Dedup {
     // band self-joins, p_truth = the exact inverted-index baseline)
     val (base, reps, sigs) =
       graft.BenchPhases.timed("p_signatures") {
-        // ONE corpus tokenize/shingle pass (r20): the base carries both the
-        // plain set key (minhash/banding front) and the lang-blocked key
-        // (the exact truth front) — the old shape tokenized the corpus a
-        // second time inside ngramJaccardPairs
-        val k0 = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), shingles3(col("text")).as("sset"))
-          .filter(size(col("sset")) > 0)
-          .withColumn("skey", md5(concat_ws("\u0000", array_sort(col("sset")))))
-          .withColumn("skey_lang",
-            md5(concat_ws("\u0000", array(col("lang")), array_sort(col("sset")))))
-          .localCheckpoint()
-        val r0 = k0.groupBy(col("skey"))
-          .agg(min(col("doc_id")).as("rid"),
-            min_by(col("sset"), col("doc_id")).as("sset"))
-          .localCheckpoint()
-        val postings = r0.select(col("rid"), explode(col("sset")).as("shingle"))
-          .repartition(col("rid"))
-        val minsAgg = (0 until NumHashes).map(k =>
-          min(md5Hash60(col("shingle"), lit(k))).as(s"h$k"))
-        val s0 = postings.groupBy(col("rid")).agg(minsAgg.head, minsAgg.tail: _*)
-          .localCheckpoint()
-        (k0, r0, s0)
+        val k0 = dualKeyed(s, d)
+        val r0 = repsOf(k0).localCheckpoint()
+        (k0, r0, signatures(r0, col("sset"), "rid").localCheckpoint())
       }
     // candAll feeds two consumers (the cost aggregate and the truth join);
     // checkpointed so the four band self-joins run once, not twice (r14
     // review) — candidate pairs are rep-level and tiny
     val candAll = graft.BenchPhases.timed("p_candidates")(
       configs.map { case (b, r) =>
-        val banded = sigs.select(col("rid"),
-          posexplode(array((0 until b).map(i =>
-            md5(concat_ws(",",
-              (0 until r).map(j => col(s"h${i * r + j}").cast("string")): _*))): _*)))
-          .withColumnRenamed("pos", "band")
-          .withColumnRenamed("col", "band_key")
-        cappedBandPairs(banded, HotBandCap)
+        cappedBandPairs(bandRows(sigs, Seq("rid"), b, r), HotBandCap)
           .withColumn("bands", lit(b)).withColumn("rows_per_band", lit(r))
       }.reduce(_.unionByName(_)).localCheckpoint())
     val cost = candAll.groupBy(col("bands"), col("rows_per_band"))
       .agg(count(lit(1)).as("n_cand_pairs"))
     // the truth baseline is the face's dominant term at 100× — checkpointed
     // under its own stamp so the record carries the truth-vs-candidates
-    // split instead of prose. r20: truth maps to reps at REP level — ngram
+    // split instead of prose. Truth maps to reps at REP level — ngram
     // rep pairs (lang-blocked) land on plain-set reps through the
     // FUNCTIONAL skey_lang → skey → rid mapping (every member of a
-    // lang-set group shares one sset, hence one rid), where the old shape
-    // expanded rep pairs to doc pairs inside ngramJaccardPairs only for
-    // the distinct() here to re-collapse them: a Θ(members²)-row detour at
-    // any duplication density, and a second corpus tokenize to boot.
-    val nKeyed = base.select(col("doc_id"), col("lang"), col("sset"),
-      col("skey_lang").as("skey"))
+    // lang-set group shares one sset, hence one rid), so no Θ(members²)
+    // doc-pair detour is ever expanded only to be re-collapsed here.
     val truthRep = graft.BenchPhases.timed("p_truth") {
-      val tp = ngramRepPairs(ngramReps(nKeyed), threshold, HotBandCap, None)
+      val tp = ngramRepPairs(ngramReps(langKeyed(base)), threshold, HotBandCap, None)
       val langMap = base.groupBy(col("skey_lang"))
         .agg(min(col("skey")).as("skey"))
         .join(reps.select(col("skey"), col("rid")), Seq("skey"))
@@ -801,17 +735,11 @@ object Dedup {
         .localCheckpoint()
     }
     import s.implicits._
-    truthRep.crossJoin(broadcast(configs.toDF("bands", "rows_per_band")))
+    recallBy(truthRep.crossJoin(broadcast(configs.toDF("bands", "rows_per_band")))
       .join(candAll.withColumn("hit", lit(1)),
         Seq("bands", "rows_per_band", "rid_a", "rid_b"), "left_outer")
-      .withColumn("jband",
-        when(col("jaccard") >= 0.9, lit("0.90-1.00"))
-          .when(col("jaccard") >= 0.7, lit("0.70-0.90"))
-          .when(col("jaccard") >= 0.5, lit("0.50-0.70"))
-          .otherwise(lit("0.35-0.50")))
-      .groupBy(col("bands"), col("rows_per_band"), col("jband"))
-      .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_found"),
-        (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
+      .withColumn("jband", jaccardBand(col("jaccard"))),
+      "bands", "rows_per_band", "jband")
       .join(cost, Seq("bands", "rows_per_band"))
   }
 
@@ -835,23 +763,17 @@ object Dedup {
   /** Output-volume budget for the ENUMERATING near-dup faces (r15 verdict
     * task 3): the doc-pair listing is Θ(Σ m_a·m_b) by contract, and on a
     * duplication-dense corpus that output volume — not any join or shuffle —
-    * is the wall (measured ~12M emitted pairs/s on the adversarial 100×
-    * replica, where the enumeration burned its whole 420 s window). The
-    * pair mass is computable EXACTLY from the verified fingerprint pairs
-    * and the group sizes in one cheap aggregate (the `simhashPairStats`
-    * shape), so the plan predicts its output and refuses before expanding
-    * a row — fail-fast with the sizing numbers instead of a timeout that
-    * records nothing. Default 2×10⁹ rows ≈ a few minutes of pure output at
-    * the measured rate — far past the point where [[simhashPairStats]] /
-    * [[dedupClusters]] are the right faces, yet admitting every healthy
-    * corpus (sf0.1 enumerates ~0.7M).
-    */
-  /** Output-volume budget for enumerating pair faces. The default is a
-    * CONTRACT number, not a magic constant: enumeration output streams at
-    * a measured ~12 M pairs/s end-to-end (SURVEY §10.2), so 2×10⁹ rows ≈
-    * 167 s of pure output — sized against the 420 s probe window with
-    * headroom for the band join. BENCH_BUDGET.md "Round-17 contract knobs"
-    * is the auditable row (rate, window, refusal shape).
+    * is the wall. The pair mass is computable EXACTLY from the verified
+    * group pairs and the group sizes in one cheap aggregate
+    * ([[gatePairVolume]]), so the plan predicts its output and refuses
+    * before expanding a row — fail-fast with the sizing numbers instead of
+    * a timeout that records nothing. The default is a CONTRACT number, not
+    * a magic constant: enumeration output streams at a measured ~12 M
+    * pairs/s end-to-end (SURVEY §10.2), so 2×10⁹ rows ≈ 167 s of pure
+    * output — sized against the 420 s probe window with headroom for the
+    * band join, yet admitting every healthy corpus (sf0.1 enumerates
+    * ~0.7M). BENCH_BUDGET.md "Round-17 contract knobs" is the auditable row
+    * (rate, window, refusal shape).
     */
   val PairRowsConfKey = "spark.graft.simhash.maxPairRows"
   val DefaultMaxPairRows: Long = 2000000000L
@@ -882,42 +804,49 @@ object Dedup {
         s"$PairRowsConfKey, or collapse exact dups first")
     with graft.DesignedRefusal
 
-  /** SimHash fingerprint (60-bit, md5-derived token hashes, emitted as a
-    * bit-string so the oracle avoids 64-bit shift overflow). Majority vote per
-    * bit over the distinct token set.
+  /** SimHash majority-vote counts over a per-row gram array: (id, n,
+    * b59..b0) — the gram count and, per bit, how many distinct grams'
+    * md5-derived 60-bit hashes set it. The fingerprint core of the text
+    * faces and of the media faces ([[graft.multimodal.BinaryPipeline]]).
     *
-    * Aggregation form for the same reason as [[minhashSignatures]]: a per-row
-    * `filter(th, ...)` per bit position inlines the tokenization subtree 60×
-    * (round-1 "plan too large"). Here each token is hashed once and the 60
+    * Aggregation form for the same reason as [[signatures]]: a per-row
+    * `filter(th, ...)` per bit position inlines the gram subtree 60×
+    * (round-1 "plan too large"). Here each gram is hashed once and the 60
     * bit-counts are plain conditional sums — map-side partial aggregation,
-    * 61-long shuffle rows. `explode_outer` keeps zero-token docs (all-'0'
+    * 61-long shuffle rows. `explode_outer` keeps zero-gram rows (all-zero
     * fingerprint), matching the oracle's empty-list majority vote.
     */
-  /** Per-doc majority-vote bit counts: b59..b0 one-counts + token count. */
-  private def simhashCounted(s: SparkSession, d: String): DataFrame = {
-    val hashed = Tables.documents(s, d)
-      .select(col("doc_id"),
-        explode_outer(array_distinct(TextAnalysis.tokens(col("text")))).as("tok"))
-      .withColumn("h", md5Hash60(col("tok"), lit(0)))
+  private def simhashCounts(rows: DataFrame, idCol: String, grams: Column): DataFrame = {
+    val hashed = rows.select(col(idCol), explode_outer(array_distinct(grams)).as("g"))
+      .withColumn("hv", md5Hash60(col("g"), lit(0)))
     val bitCounts = (SimHashBits - 1 to 0 by -1).map(b =>
-      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(0)).as(s"b$b"))
-    hashed.groupBy(col("doc_id")).agg(count(col("tok")).as("n"), bitCounts: _*)
+      sum(when(col("hv").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(0)).as(s"b$b"))
+    hashed.groupBy(col(idCol)).agg(count(col("g")).as("n"), bitCounts: _*)
   }
 
-  def simhash(s: SparkSession, d: String): DataFrame = {
-    val bits = (SimHashBits - 1 to 0 by -1).map(b =>
-      when(col(s"b$b") * 2 > col("n"), lit("1")).otherwise(lit("0")))
-    simhashCounted(s, d).select(col("doc_id"), concat(bits: _*).as("simhash"))
-  }
+  /** Per bit, most-significant (59) first: `one(b)` where more than half
+    * the grams set bit b, else `zero(b)`. */
+  private def majority(one: Int => Column, zero: Int => Column): Seq[Column] =
+    (SimHashBits - 1 to 0 by -1).map(b =>
+      when(col(s"b$b") * 2 > col("n"), one(b)).otherwise(zero(b)))
 
-  /** Same fingerprint packed into one LONG (bit 59 = most-significant of the
-    * bit-string form) — hamming distance becomes `bit_count(a ^ b)`.
+  /** SimHash fingerprint of each document over its distinct tokens,
+    * emitted as a bit-string so the oracle avoids 64-bit shift overflow. */
+  def simhash(s: SparkSession, d: String): DataFrame =
+    simhashCounts(Tables.documents(s, d), "doc_id", TextAnalysis.tokens(col("text")))
+      .select(col("doc_id"), concat(majority(_ => lit("1"), _ => lit("0")): _*).as("simhash"))
+
+  /** The same fingerprint over an arbitrary per-row gram array, packed into
+    * one LONG (bit 59 = most-significant of the bit-string form) — hamming
+    * distance becomes `bit_count(a ^ b)`.
     */
-  private def simhashLong(s: SparkSession, d: String): DataFrame = {
-    val packed = (SimHashBits - 1 to 0 by -1).map(b =>
-      when(col(s"b$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-    simhashCounted(s, d).select(col("doc_id"), packed.reduce(_ + _).as("h"))
-  }
+  private[graft] def simhashLongOver(rows: DataFrame, idCol: String,
+      grams: Column): DataFrame =
+    simhashCounts(rows, idCol, grams)
+      .select(col(idCol), majority(b => lit(1L << b), _ => lit(0L)).reduce(_ + _).as("h"))
+
+  private def simhashLong(s: SparkSession, d: String): DataFrame =
+    simhashLongOver(Tables.documents(s, d), "doc_id", TextAnalysis.tokens(col("text")))
 
   /** SimHash near-duplicate pairs: block on 4 substrings of 15 bits (any
     * identical quarter makes a candidate — guarantees recall for hamming ≤ 3
@@ -936,102 +865,62 @@ object Dedup {
     * collision and hamming depend only on the two fingerprint values.
     */
   def simhashPairs(s: SparkSession, d: String, maxHamming: Int = 6,
-      hotBandCap: Int = HotBandCap): DataFrame = {
-    // (doc_id, h) — two longs per row; the fingerprint table feeds the
-    // distinct-band join AND both expansion sides, so materialize it ONCE —
-    // via eager localCheckpoint, not persist(): a cached plan is excluded
-    // from AQE runtime re-planning, which demotes every downstream join of
-    // this query to static sort-merge (the clusterLabels lesson; measured
-    // 21s → seconds at sf0.1)
-    // grouped to (h, ids[]) BEFORE the checkpoint: the distinct-fingerprint
-    // band input is then a free projection, and — decisive at replica scale —
-    // the doc expansion becomes "join F pair rows against D array rows, THEN
-    // explode" instead of pushing F×m_a×m_b rows through join machinery. The
-    // 30× probe measured the per-doc expansion joins at 198 s for ~216M
-    // output rows (sort-merge against the stats-less checkpoint leaf, skewed
-    // by hot fingerprints); the array form emits the same rows from a
-    // codegen'd explode at memory-bandwidth speed. The shuffle rows here
-    // carry the member array — m longs per DISTINCT fingerprint, the same
-    // bytes the m separate rows carried, in fewer rows. Assumption shared
-    // with every pair-materializing output: duplicate-group sizes are
-    // bounded (a group of 10⁶ exact copies makes any doc-pair listing
-    // absurd by volume regardless of algorithm — run [[exactDedup]] /
-    // [[dedupClusters]] first at that shape).
+      hotBandCap: Int = HotBandCap): DataFrame =
     simhashNearDupPairs(
       simhashLong(s, d).withColumnRenamed("doc_id", "id"),
       "simhashPairs", maxHamming, hotBandCap)
-  }
-
-  /** 60-bit packed SimHash over an ARBITRARY per-row gram array — the
-    * fingerprint core of [[simhashPairs]] opened up so other modalities
-    * (e.g. decoded media content, [[graft.multimodal.BinaryPipeline]])
-    * reuse the identical majority-vote/md5 machinery. Same aggregation
-    * form and empty-gram semantics (all-zero fingerprint) as
-    * [[simhashCounted]].
-    */
-  private[graft] def simhashLongOver(rows: DataFrame, idCol: String,
-      grams: Column): DataFrame = {
-    val hashed = rows.select(col(idCol), explode_outer(array_distinct(grams)).as("g"))
-      .withColumn("hv", md5Hash60(col("g"), lit(0)))
-    val bitCounts = (SimHashBits - 1 to 0 by -1).map(b =>
-      sum(when(col("hv").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(0)).as(s"b$b"))
-    val counted = hashed.groupBy(col(idCol)).agg(count(col("g")).as("n"), bitCounts: _*)
-    val packed = (SimHashBits - 1 to 0 by -1).map(b =>
-      when(col(s"b$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-    counted.select(col(idCol), packed.reduce(_ + _).as("h"))
-  }
 
   /** Banded near-dup pairs over any (id, h) fingerprint table: the
     * distinct-fingerprint collapse + capped quarter-band join + grouped
     * expansion pipeline of [[simhashPairs]], entity-agnostic. Output
     * columns keep the historical doc_a/doc_b names; callers rename.
     *
-    * Volume-gated (r15 verdict task 3): the verified fingerprint pairs are
-    * checkpointed (F rows, three longs — the band join was going to run
-    * exactly once anyway; materializing it lets the gate reuse it), the
-    * EXACT output cardinality Σ m_a·m_b + Σ C(m,2) is computed in one
-    * aggregate over those F rows plus the group sizes, and the expansion
-    * only runs if it fits [[PairRowsConfKey]] (default
-    * [[DefaultMaxPairRows]]). The gate job's cost is the band join — the
-    * cheap stage at every measured scale (5.3 s where enumeration burned
-    * 420+ s) — so healthy corpora pay ~nothing and pathological ones fail
-    * in band-join time with the sizing recorded.
+    * The (doc_id, h) table feeds the distinct-band join AND both expansion
+    * sides, so it is grouped to (h, ids[]) and materialized ONCE — via
+    * eager localCheckpoint, not persist(): a cached plan is excluded from
+    * AQE runtime re-planning, which demotes every downstream join to
+    * static sort-merge (the clusterLabels lesson; measured 21s → seconds
+    * at sf0.1). Grouping BEFORE the checkpoint makes the distinct-band
+    * input a free projection and — decisive at replica scale — the doc
+    * expansion "join F pair rows against D array rows, THEN explode"
+    * instead of pushing F×m_a×m_b rows through join machinery (the 30×
+    * probe measured the per-doc expansion joins at 198 s for ~216M output
+    * rows). Assumption shared with every pair-materializing output:
+    * duplicate-group sizes are bounded (a group of 10⁶ exact copies makes
+    * any doc-pair listing absurd by volume regardless of algorithm — run
+    * [[exactDedup]] / [[dedupClusters]] first at that shape).
+    *
+    * Volume-gated (r15 verdict task 3, [[gatePairVolume]]): the verified
+    * fingerprint pairs are checkpointed (F rows, three longs — the band
+    * join was going to run exactly once anyway; materializing it lets the
+    * gate reuse it), and the expansion only runs if its exact output fits
+    * [[PairRowsConfKey]]. The gate job's cost is the band join — the cheap
+    * stage at every measured scale (5.3 s where enumeration burned 420+ s)
+    * — so healthy corpora pay ~nothing and pathological ones fail in
+    * band-join time with the sizing recorded.
     */
   private[graft] def simhashNearDupPairs(fps: DataFrame, pipeline: String,
       maxHamming: Int = 6, hotBandCap: Int = HotBandCap): DataFrame = {
-    val s = fps.sparkSession
     val groups = fps.groupBy(col("h")).agg(collect_list(col("id")).as("ids"))
       .localCheckpoint()
     val fpairs = simhashFingerprintPairs(groups.select(col("h")), maxHamming, hotBandCap)
       .localCheckpoint()
-    val sizes = groups.select(col("h"), size(col("ids")).cast("long").as("m"))
-    // both sizing aggregates in ONE action (r20): each is a 1-row frame off
-    // the same checkpointed inputs, and two head() calls paid two full
-    // job-scheduling roundtrips per gated face
-    val gate = fpairs
-      .join(sizes.select(col("h").as("h_a"), col("m").as("m_a")), Seq("h_a"))
-      .join(sizes.select(col("h").as("h_b"), col("m").as("m_b")), Seq("h_b"))
-      .agg(coalesce(sum(col("m_a") * col("m_b")), lit(0L)).as("cross_rows"),
-        count(lit(1)).as("f"))
-      .crossJoin(sizes
-        .agg(coalesce(sum(expr("(m * (m - 1)) div 2")), lit(0L)).as("intra_rows"),
-          count(lit(1)).as("g")))
-      .head()
-    val predicted = gate.getLong(0) + gate.getLong(2)
-    val budget = pairRowsBudget(s)
-    if (predicted > budget) {
-      // refusal leaves no pinned generation behind (the triangle gate's
-      // clean-free discipline): release both checkpoints before throwing
-      IterCheckpoint.free(groups, fpairs)
-      throw PairVolumeBudgetExceeded(predicted, budget, gate.getLong(1),
-        gate.getLong(3), pipeline)
-    }
+    gatePairVolume(fpairs, groups.select(col("h"), size(col("ids")).cast("long").as("m")),
+      "h", pipeline, groups, fpairs)
     simhashExpand(groups, fpairs)
   }
 
   /** Banded self-join over DISTINCT fingerprints (`hs`: one `h` per row) →
     * verified fingerprint pairs (h_a < h_b, hamming ≤ maxHamming). Factored
     * out of [[simhashPairs]] so the stage can be timed/tested in isolation.
+    *
+    * Hot-band cap ([[cappedJoin]]): a low-entropy quarter (e.g. the
+    * all-zero band of short docs) can funnel m distinct fingerprints → m²/2
+    * candidates through ONE reducer — the scale-killer at 100 TB corpus
+    * sizes. Oversized band groups split into sub-buckets keyed by a hash of
+    * the fingerprint, recall-exact, oracle unchanged; replication cost is g×
+    * only for the few oversized groups (g = 1 leaves singleton rows
+    * untouched).
     */
   private[graft] def simhashFingerprintPairs(hs: DataFrame, maxHamming: Int,
       hotBandCap: Int): DataFrame = {
@@ -1042,25 +931,6 @@ object Dedup {
         shiftright(col("h"), 45 - 15 * q).bitwiseAND(lit(0x7fffL))): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_key")
-    // Hot-band cap: a low-entropy quarter (e.g. the all-zero band of short
-    // docs) can funnel m distinct fingerprints → m²/2 candidates through ONE
-    // reducer — the scale-killer at 100 TB corpus sizes. Split every band
-    // group into ceil(m / HotBandCap) sub-buckets keyed by a hash of the
-    // OTHER fingerprint bits: side A lands in its own sub-bucket, side B is
-    // replicated to all of them, so each unordered pair still meets exactly
-    // once (at ba = bucket(h_a); the mirror meeting fails h_a < h_b) —
-    // recall-exact, oracle unchanged. Per-task work drops from m² to
-    // cap × m with parallelism m/cap; replication cost is g× only for the
-    // few oversized groups (g = 1 leaves singleton rows untouched).
-    val popln = Window.partitionBy(col("band"), col("band_key"))
-    val sized = banded
-      .withColumn("g", ceil(count(lit(1)).over(popln) / lit(hotBandCap)).cast("int"))
-    val a = sized
-      .select(col("band"), col("band_key"),
-        pmod(xxhash64(col("h")), col("g")).cast("int").as("ba"), col("h").as("h_a"))
-    val b = sized
-      .select(col("band"), col("band_key"), col("h").as("h_b"),
-        explode(sequence(lit(0), col("g") - 1)).as("ba"))
     // hamming = popcount(xor) — one codegen'd instruction per candidate.
     // A fingerprint pair colliding in several bands would duplicate; instead
     // of a distinct() (a full extra shuffle of every surviving pair) each
@@ -1074,8 +944,8 @@ object Dedup {
       (col("band") === q) && (0 until q).map(quarterDiffers)
         .foldLeft(lit(true))(_ && _))
       .reduce(_ || _)
-    a.join(b, Seq("band", "band_key", "ba"))
-      .filter(col("h_a") < col("h_b") && firstMatchingBand)
+    cappedJoin(banded, BandKey, "h", hotBandCap)
+      .filter(firstMatchingBand)
       .withColumn("hamming", bit_count(xor))
       .filter(col("hamming") <= maxHamming)
       .select(col("h_a"), col("h_b"), col("hamming"))

@@ -854,26 +854,31 @@ object Graphs {
       IterCheckpoint.free(edg, ori) // refuse cleanly: no leaks
       throw TriangleWedgeBudgetExceeded(nWedges, maxWedges, nEdges)
     }
-    System.err.println(s"[graft.graphs] triangle path=" +
-      (if (bc) "broadcast"
-       else if (nWedges > sketchWedgeFactor * nEdges) "bloom-pruned"
-       else "plain-shuffle") +
-      s" m=$nEdges wedges=$nWedges")
-    // spill-budget gate (header above): only the shuffle paths materialize
-    // wedge-scale state on disk — the broadcast edge-iterator streams every
-    // intersection map-side and is bounded by executor MEMORY, which the
-    // admission cap already owns
+    val path = trianglePath(s, nEdges, nWedges, bc, sketchWedgeFactor, edg, ori)
+    System.err.println(s"[graft.graphs] triangle path=$path m=$nEdges wedges=$nWedges")
+    triangleCountPlan(edg, ori, nEdges, nWedges, bc, sketchWedgeFactor)
+  }
+
+  /** The exact count's path label — "broadcast", "bloom-pruned" or
+    * "plain-shuffle" — after the spill-budget gate (header above): only the
+    * shuffle paths materialize wedge-scale state on disk (the broadcast
+    * edge-iterator streams every intersection map-side and is bounded by
+    * executor MEMORY, which the admission cap already owns). A refusal
+    * frees `held` first, so it leaks no checkpoint.
+    */
+  private def trianglePath(s: SparkSession, nEdges: Long, nWedges: Long,
+      bc: Boolean, sketchWedgeFactor: Long, held: DataFrame*): String = {
+    val bloomPruned = nWedges > sketchWedgeFactor * nEdges
+    val path = if (bc) "broadcast" else if (bloomPruned) "bloom-pruned" else "plain-shuffle"
     if (!bc) {
-      val bloomPruned = nWedges > sketchWedgeFactor * nEdges
       val predicted = predictedWedgeSpillBytes(nEdges, nWedges, bloomPruned)
       val available = availableScratchBytes(s)
       if (predicted > available * ScratchFraction) {
-        IterCheckpoint.free(edg, ori) // refuse cleanly: no leaks
-        throw WedgeSpillBudgetExceeded(predicted, available, nEdges, nWedges,
-          if (bloomPruned) "bloom-pruned" else "plain-shuffle")
+        IterCheckpoint.free(held: _*)
+        throw WedgeSpillBudgetExceeded(predicted, available, nEdges, nWedges, path)
       }
     }
-    triangleCountPlan(edg, ori, nEdges, nWedges, bc, sketchWedgeFactor)
+    path
   }
 
   /** The counting plan over ALREADY-materialized canonical edges `edg` and
@@ -1086,24 +1091,13 @@ object Graphs {
     val (nTri, nSampled, sampleOk) =
       if (nEdges == 0) (0L, 0L, true)
       else if (ip == 0) {
-        // the spill gate the standalone exact face runs (shuffle paths
-        // only) — the chooser admits by wedge budget, not by scratch
-        if (!bc) {
-          val bloomPruned = wedges > SketchWedgeFactor * nEdges
-          val predicted = predictedWedgeSpillBytes(nEdges, wedges, bloomPruned)
-          val available = availableScratchBytes(s)
-          if (predicted > available * ScratchFraction) {
-            IterCheckpoint.free(edg) // refuse cleanly
-            throw WedgeSpillBudgetExceeded(predicted, available, nEdges,
-              wedges, if (bloomPruned) "bloom-pruned" else "plain-shuffle")
-          }
-        }
+        // the spill gate the standalone exact face runs — the chooser
+        // admits by wedge budget, not by scratch
+        val path = trianglePath(s, nEdges, wedges, bc, SketchWedgeFactor, edg)
         val ori = timed("tri_auto", "orient_ckpt")(orientByDegree(edg, bc).localCheckpoint())
         exactOri = Some(ori)
-        System.err.println(s"[graft.graphs] triangle path=" +
-          (if (bc) "broadcast"
-           else if (wedges > SketchWedgeFactor * nEdges) "bloom-pruned"
-           else "plain-shuffle") + s" m=$nEdges wedges=$wedges (auto reuse)")
+        System.err.println(
+          s"[graft.graphs] triangle path=$path m=$nEdges wedges=$wedges (auto reuse)")
         val c = triangleCountPlan(edg, ori, nEdges, wedges, bc,
           SketchWedgeFactor).head().getLong(0)
         (c, c, true)
@@ -1154,11 +1148,9 @@ object Graphs {
     // later plan's runtime filters keep the session's caps
     def atLeast(key: String, needed: Long) =
       key -> math.max(s.conf.get(key).toLong, needed).toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_triangle_bf")
-    dir.toFile.deleteOnExit()
-    val path = dir.resolve("sketch.bin")
-    path.toFile.deleteOnExit()
-    val target = path.toString
+    val dir = graft.WarmState.deleteAtExit(
+      java.nio.file.Files.createTempDirectory("graft_triangle_bf"))
+    val target = dir.resolve("sketch.bin").toString
     // every partial-aggregation task allocates a FULL nBits/8-byte buffer;
     // at 100×-dense (120M edges → ~145 MB each) 32 concurrent partials
     // GC-locker-thrash the JVM to death (measured, round 10). Cap the

@@ -157,9 +157,8 @@ object Retrieval {
     * Per-query results are IDENTICAL to running [[hybridRrf]] once per
     * query (RetrievalSpec pins it): both arms exclude the query's own id,
     * rank on the same (score desc, id asc) order, and fuse the same ranks.
-    * The tscore expression tree is copied verbatim from
-    * [[TextAnalysis.bm25Search]] — same lit constants, same op order — so
-    * the doubles (and therefore the ranks) cannot drift between faces.
+    * Both faces score through [[TextAnalysis.bm25Postings]], so the
+    * doubles (and therefore the ranks) cannot drift between faces.
     */
   def hybridRrfBatch(s: SparkSession, d: String,
       queries: Seq[(Long, Seq[String])] = BatchQueries,
@@ -176,28 +175,7 @@ object Retrieval {
     val allTerms = qtRows.map(_._3).distinct
 
     // ---- lexical arm: one postings pass, shared across queries
-    val docs = Tables.documents(s, d)
-    // r21: dl checkpointed once, like the single bm25 face — it feeds the
-    // stats aggregate AND the scoring join, which re-ran the full-corpus
-    // tokenize pass behind it
-    val dl = docs.select(col("doc_id"),
-      size(TextAnalysis.tokens(col("text"))).cast("long").as("dl")).localCheckpoint()
-    val post = TextAnalysis.postings(s, d)
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    // tscore: verbatim [[TextAnalysis.bm25Search]] expression tree; df rides
-    // the same count window as the single face (r20) instead of a second
-    // full postings pass
-    val scoredPost = post.filter(col("term").isin(allTerms: _*))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        (col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5))
-      .withColumn("tscore",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    val scoredPost = TextAnalysis.bm25Postings(s, d, allTerms, k1, b)
     val lexScore = scoredPost
       .join(broadcast(qterms), Seq("term"))
       .filter(col("doc_id") =!= col("query_id"))

@@ -547,25 +547,6 @@ object TextAnalysis {
       .filter(col("n_matched") === terms.length)
       .select(col("doc_id"), col("total_tf"))
 
-  /** BM25-shaped ranked retrieval (disjunctive — any matched term scores):
-    * per-term score `idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` summed
-    * over the query terms, top-k docs. Two departures from textbook BM25,
-    * both deliberate:
-    *
-    *  - idf is the RATIONAL Robertson form WITHOUT the log,
-    *    `(N−df+0.5)/(df+0.5)` — same monotonicity in df, but a pure IEEE
-    *    div/add chain both engines compute bit-identically, where `ln` is a
-    *    libm call with cross-engine last-ulp drift (the [[tfidfTopK]]
-    *    decision applied again);
-    *  - the per-doc sum over matched terms is a FIXED-ORDER sum of
-    *    per-term conditional aggregates (one `sum(when(term=t))` column per
-    *    query term, added left-to-right), not `sum()` over rows — float
-    *    addition order must not depend on shuffle arrival.
-    *
-    * Scale shape: df/N/avgdl are vocab- and scalar-sized broadcasts off the
-    * posting table; the scoring slice is query-terms-only; the final top-k
-    * is an order+limit that fuses to TakeOrderedAndProject.
-    */
   /** Trigram-indexed SUBSTRING search — how `LIKE '%phrase%'` avoids a full
     * scan at 100 TB (the pg_trgm / Google-Code-Search / Zoekt design): a
     * character-trigram posting table (tri → doc, distinct per doc) is built
@@ -624,9 +605,13 @@ object TextAnalysis {
       .select(col("doc_id"))
   }
 
-  def bm25Search(s: SparkSession, d: String,
-      terms: Seq[String] = Seq("vector", "merge"), k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  /** BM25 term scores: the postings of `terms` with `tscore` =
+    * `idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` — the one scoring tree
+    * [[bm25Search]] and [[Retrieval.hybridRrfBatch]] sum, so the doubles
+    * (and therefore the ranks) cannot drift between faces.
+    */
+  private[graft] def bm25Postings(s: SparkSession, d: String, terms: Seq[String],
+      k1: Double, b: Double): DataFrame = {
     val docs = Tables.documents(s, d)
     // r21: dl fed the corpus-stats aggregate AND the scoring join — the
     // full-corpus tokenize pass behind it ran twice (audit documents=3,
@@ -645,7 +630,7 @@ object TextAnalysis {
     // one row per (doc, term), so the window count over `term` IS the
     // document frequency, and filtering to the query terms first changes
     // nothing (df counts rows of that term only).
-    val scored = post.filter(col("term").isin(terms: _*))
+    post.filter(col("term").isin(terms: _*))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
@@ -655,6 +640,31 @@ object TextAnalysis {
         col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
           (col("tf").cast("double") +
             lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+  }
+
+  /** BM25-shaped ranked retrieval (disjunctive — any matched term scores):
+    * per-term score `idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` summed
+    * over the query terms, top-k docs. Two departures from textbook BM25,
+    * both deliberate:
+    *
+    *  - idf is the RATIONAL Robertson form WITHOUT the log,
+    *    `(N−df+0.5)/(df+0.5)` — same monotonicity in df, but a pure IEEE
+    *    div/add chain both engines compute bit-identically, where `ln` is a
+    *    libm call with cross-engine last-ulp drift (the [[tfidfTopK]]
+    *    decision applied again);
+    *  - the per-doc sum over matched terms is a FIXED-ORDER sum of
+    *    per-term conditional aggregates (one `sum(when(term=t))` column per
+    *    query term, added left-to-right), not `sum()` over rows — float
+    *    addition order must not depend on shuffle arrival.
+    *
+    * Scale shape: df/N/avgdl are vocab- and scalar-sized broadcasts off the
+    * posting table; the scoring slice is query-terms-only; the final top-k
+    * is an order+limit that fuses to TakeOrderedAndProject.
+    */
+  def bm25Search(s: SparkSession, d: String,
+      terms: Seq[String] = Seq("vector", "merge"), k: Int = 20,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val scored = bm25Postings(s, d, terms, k1, b)
     // fixed-order cross-term sum: one conditional aggregate per query term,
     // added left-to-right — never a row-order-dependent float sum()
     val perTerm = terms.zipWithIndex.map { case (t, i) =>

@@ -48,7 +48,7 @@ object DeterminismSweep {
       try graft.operators.IterCheckpoint.releaseAll(spark)
       catch { case _: Throwable => () }
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = SparkEntry.selectFaces(sys.env.get("SPARK_GRAFT_ONLY"))
     var mismatches = List.empty[String]
     var errors = List.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)

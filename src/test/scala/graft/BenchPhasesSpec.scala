@@ -197,4 +197,15 @@ class BenchPhasesSpec extends AnyFunSuite {
     assert(Tables.applyConfOverrides(s, "", "spec").isEmpty)
   }
 
+  test("face filter: names trimmed, blank selects all, unknown names refused") {
+    assert(SparkEntry.selectFaces(Some(" q_simhash , q_dedup_exact,")) ===
+      Some(Set("q_simhash", "q_dedup_exact")))
+    assert(SparkEntry.selectFaces(None).isEmpty)
+    assert(SparkEntry.selectFaces(Some(" , ")).isEmpty)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectFaces(Some("q_simhash,q_simhsh,q_nope")))
+    assert(e.getMessage.contains("q_nope, q_simhsh"), e.getMessage)
+    assert(!e.getMessage.contains("q_simhash,"), e.getMessage)
+  }
+
 }

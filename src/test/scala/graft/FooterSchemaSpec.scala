@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** [[Tables.parquetSchema]] reads a table's schema from its parquet footer
   * on the driver. It must give exactly the schema Spark's own inference
@@ -40,33 +37,6 @@ class FooterSchemaSpec extends SparkSpecBase {
   test("a missing table fails at construction, naming its path") {
     val e = intercept[Exception](Tables.table(spark, Sf, "no_such_table"))
     assert(e.getMessage.contains(s"$Sf/no_such_table.parquet"), e.getMessage)
-  }
-
-  /** Jobs submitted under a job group while `body` runs. The marker job
-    * runs after `body`; the listener queue delivers in order, so once the
-    * marker's start has arrived every earlier job start has too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (group, markerGroup) = ("footer-spec-construct", "footer-spec-marker")
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`markerGroup`) => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "construct")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(markerGroup, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(30, TimeUnit.SECONDS), "marker job never delivered")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("the job counter sees a construction-time job") {

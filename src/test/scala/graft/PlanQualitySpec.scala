@@ -566,4 +566,28 @@ class PlanQualitySpec extends SparkSpecBase {
       }
     }
   }
+
+  test("dedup tier faces keep their construction jobs and held checkpoints") {
+    // per face: Spark jobs its construction runs (checkpoints, gates) and
+    // the persistent RDDs it leaves for the face boundary to release —
+    // the work the shared near-duplicate kernels must not change
+    val expect = Map(
+      "q_dedup_minhash_lsh" -> (15, 3),
+      "q_dedup_incremental" -> (5, 3),
+      "q_dedup_clusters" -> (19, 3),
+      "q_ngram_jaccard" -> (1, 1),
+      "q_dedup_recall" -> (15, 3),
+      "q_dedup_banding_sweep" -> (29, 5),
+      "q_simhash_pairs" -> (12, 2),
+      "q_simhash_pair_stats" -> (8, 2),
+      "q_media_neardup" -> (12, 2))
+    val got = expect.keys.map { face =>
+      operators.IterCheckpoint.releaseAll(spark)
+      val jobs = jobsDuring(q(face))
+      val held = spark.sparkContext.getPersistentRDDs.size
+      operators.IterCheckpoint.releaseAll(spark)
+      face -> (jobs, held)
+    }.toMap
+    assert(got == expect)
+  }
 }

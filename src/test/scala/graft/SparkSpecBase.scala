@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +23,33 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     val url = getClass.getResource(path)
     require(url != null, s"missing test fixture $path")
     url.getPath
+  }
+
+  /** Jobs submitted under a job group while `body` runs. The marker job
+    * runs after `body`; the listener queue delivers in order, so once the
+    * marker's start has arrived every earlier job start has too. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val (group, markerGroup) = ("spec-construct", "spec-marker")
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`markerGroup`) => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "construct")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(markerGroup, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(30, TimeUnit.SECONDS), "marker job never delivered")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
