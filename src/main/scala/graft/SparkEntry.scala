@@ -4391,8 +4391,8 @@ object SparkEntry {
     * computes against bit-identical centroids. [[Similarity.trainedCentroids]]
     * memoizes per (dataset, nlist, iters): the query run and this generator
     * see the SAME model instance, which is what makes the hash-compare fair.
-    */
-  /** Each generator group runs under its OWN try (r6 ADVICE: a failure in
+    *
+    * Each generator group runs under its OWN try (r6 ADVICE: a failure in
     * the LSH plane derivation used to silently drop the unrelated pagerank
     * oracle too): returns (oracles, per-query generator errors). A failed
     * group degrades exactly its own queries to the driver's rows-only check,

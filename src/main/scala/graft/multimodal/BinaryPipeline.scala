@@ -972,10 +972,6 @@ object BinaryPipeline {
     }
   }
 
-  /** Synthesize the MJPEG video table (REAL MP4 container, REAL JPEG
-    * frames) over the video-residue doc ids — the second pass is
-    * kind-pruned at the source like [[syntheticRealMedia]]'s.
-    */
   /** MJPEG fixture population: the EVEN video ids. ImageIO's per-call
     * overhead (~2-3 ms/frame: stream + reader setup, not pixels) makes
     * frame volume the cost knob — half the videos ≈ 200k frames at 100×
@@ -984,6 +980,10 @@ object BinaryPipeline {
     */
   val MjpegResidue = 2L
 
+  /** Synthesize the MJPEG video table (REAL MP4 container, REAL JPEG
+    * frames) over the video-residue doc ids — the second pass is
+    * kind-pruned at the source like [[syntheticRealMedia]]'s.
+    */
   def syntheticMjpegMedia(spark: SparkSession, dir: String,
       timers: CodecTimers = CodecTimers.Disabled): Dataset[MediaRecord] = {
     import spark.implicits._

@@ -739,12 +739,6 @@ object Analytics {
         |GROUP BY c_mktsegment""".stripMargin)
   }
 
-  /** IN over an aggregated subquery (the fourth face of the subquery
-    * family, next to EXISTS / NOT EXISTS / NOT IN): customers with ≥ 3
-    * orders, per market segment. Catalyst rewrites the IN to a LEFT SEMI
-    * join against the grouped subquery — the HAVING aggregate runs ONCE
-    * over orders, then one key shuffle; never a membership probe per row.
-    */
   /** TPC-H Q2-class correlated MIN lookup: for each (filtered) part, its
     * minimum unit price over all line items and the lowest supplier key
     * achieving that minimum — the "cheapest supplier per part" shape Q2
@@ -811,6 +805,12 @@ object Analytics {
         |LIMIT 100""".stripMargin)
   }
 
+  /** IN over an aggregated subquery (the fourth face of the subquery
+    * family, next to EXISTS / NOT EXISTS / NOT IN): customers with ≥ 3
+    * orders, per market segment. Catalyst rewrites the IN to a LEFT SEMI
+    * join against the grouped subquery — the HAVING aggregate runs ONCE
+    * over orders, then one key shuffle; never a membership probe per row.
+    */
   def inSubqueryFrequentBuyers(s: SparkSession, d: String): DataFrame = {
     sqlViews(s, d)
     s.sql(

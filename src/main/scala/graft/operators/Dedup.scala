@@ -1105,24 +1105,6 @@ object Dedup {
         (count(col("hit")).cast("double") / count(lit(1))).as("recall"))
   }
 
-  /** Cluster assignment over a verified near-duplicate pair list: every
-    * document gets `cluster_id` = the smallest doc_id reachable through the
-    * pair graph (connected components); documents in no pair keep their own
-    * id. This — not the all-pairs list — is what a 100 TB training-data
-    * pipeline materializes: pair output is quadratic in cluster size, cluster
-    * ids are linear, and "keep one doc per cluster" downstream is a trivial
-    * `filter(doc_id === cluster_id)`.
-    *
-    * Algorithm: min-label propagation (hash-to-min) to fixpoint. Each round
-    * is ONE narrow (long, long) shuffle — labels flood along edges and the
-    * component minimum wins; rounds needed = eccentricity of the minimum
-    * node ≤ component diameter (near-dup clusters are dense, so 2–3 rounds
-    * in practice). Every round is `localCheckpoint`ed: iterative self-joins
-    * without lineage truncation re-execute the base plan 2^rounds times (the
-    * ThreadGraph lesson). The convergence probe is a LIMIT-1 existence check,
-    * not a collect. For graphs with huge diameters swap in pointer doubling
-    * ([[graft.operators.ThreadGraph]]); near-dup graphs never need it.
-    */
   /** Core of [[dedupClusters]]: label every node that appears in `pairs`
     * (columns doc_a, doc_b) with the minimum doc_id of its connected
     * component. Exposed separately so synthetic graphs are unit-testable.
@@ -1219,6 +1201,25 @@ object Dedup {
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
 
+  /** Cluster assignment over a verified near-duplicate pair list: every
+    * document gets `cluster_id` = the smallest doc_id reachable through the
+    * pair graph (connected components); documents in no pair keep their own
+    * id. This — not the all-pairs list — is what a 100 TB training-data
+    * pipeline materializes: pair output is quadratic in cluster size, cluster
+    * ids are linear, and "keep one doc per cluster" downstream is a trivial
+    * `filter(doc_id === cluster_id)`.
+    *
+    * Algorithm: min-label propagation (hash-to-min) to fixpoint. Each round
+    * is ONE narrow (long, long) shuffle — labels flood along edges and the
+    * component minimum wins; rounds needed = eccentricity of the minimum
+    * node ≤ component diameter (near-dup clusters are dense, so 2–3 rounds
+    * in practice). Every round is `localCheckpoint`ed: iterative self-joins
+    * without lineage truncation re-execute the base plan 2^rounds times (the
+    * ThreadGraph lesson). Convergence is read off the label sum each
+    * round's checkpoint job observes ([[clusterLabels]]), not a collect.
+    * For graphs with huge diameters swap in pointer doubling
+    * ([[graft.operators.ThreadGraph]]); near-dup graphs never need it.
+    */
   def dedupClusters(s: SparkSession, d: String, pairs: DataFrame,
       maxRounds: Int = 16): DataFrame =
     Tables.documents(s, d).select(col("doc_id"))

@@ -34,10 +34,6 @@ object EventWindows {
       .agg(count(lit(1)).as("n"), sum(dec(col("value"))).cast("double").as("sum_value"))
       .select(col("window.start").as("win_start"), col("n"), col("sum_value"))
 
-  /** Session windows with a 30-minute gap, per user. Batch `session_window`
-    * emits [min(ts), max(ts)+gap); the oracle recomputes sessions with the
-    * classic gaps-and-islands (lag + cumulative flag sum) construction.
-    */
   /** Session inactivity gap (micros): sessions close 30 minutes after their
     * last event, so every session_end ≤ max event ts + this. The
     * `session_window` gap string below DERIVES from this constant — one
@@ -46,6 +42,10 @@ object EventWindows {
   val SessionGapMicros: Long = 30L * 60 * 1000000
   private val SessionGapStr: String = s"${SessionGapMicros / 60000000L} minutes"
 
+  /** Session windows with a 30-minute gap, per user. Batch `session_window`
+    * emits [min(ts), max(ts)+gap); the oracle recomputes sessions with the
+    * classic gaps-and-islands (lag + cumulative flag sum) construction.
+    */
   def sessionize(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(session_window(col("ts"), SessionGapStr), col("user_id"))

@@ -739,32 +739,6 @@ object Graphs {
     2L * rows * WedgeSpillRowBytes
   }
 
-  /** Core algorithm over any canonical (`u < v`, distinct) edge list —
-    * factored out so `GraphsSpec` can pin the count on handcrafted graphs
-    * and force each execution path.
-    *
-    * The oriented DAG is eagerly localCheckpointed ONCE and feeds all four
-    * consumers (both wedge sides, the closing probe, the gate statistics) —
-    * the edge-build (lineitem self-join + distinct + degree joins) runs one
-    * time instead of three. Checkpoint leaves carry no statistics, so the
-    * round-5 measurement ("checkpoint oriented → wedge/closing joins lose
-    * their broadcasts → 13 s → 31 s") is answered with EXPLICIT hints: the
-    * gate job measures the exact edge count and wedge volume, and those
-    * measured numbers — not Catalyst's absent stats — pick the plan:
-    *
-    *  - `m ≤ broadcastMaxEdges`: broadcast both the wedge build side and the
-    *    closing probe — wedges are generated, probed, and counted in ONE
-    *    map-side stage; no wedge ever shuffles and no sketch is built (at
-    *    sf0.1 density the sketch was ~6 s of pure overhead — the round-6
-    *    ceiling breach; r6 verdict task 1).
-    *  - dense beyond the cap AND wedges > [[SketchWedgeFactor]]·m: shuffle
-    *    joins with a Bloom prune of the wedges IN the wedge-join stage, so
-    *    only triangles + fp·wedges reach the closing exchange (6.7e9 wedges
-    *    on the 10×-densified sf0.1 replica — un-pruned it ran past 300 s).
-    *    The no-false-negative property keeps the count exact.
-    *  - big but sparse (wedges ~ m): plain shuffle joins; the sketch would
-    *    prune nothing worth its build pass.
-    */
   /** Degree-orient a canonical edge list: every edge points from its
     * (degree, id)-smaller endpoint to the larger. Factored from
     * [[triangleCountEdges]] so [[triangleCountAuto]]'s sizing probe builds
@@ -798,6 +772,32 @@ object Graphs {
       .agg(coalesce(expr("sum(od * (od - 1)) div 2"), lit(0L)).as("wedges"))
       .head().getLong(0)
 
+  /** Core algorithm over any canonical (`u < v`, distinct) edge list —
+    * factored out so `GraphsSpec` can pin the count on handcrafted graphs
+    * and force each execution path.
+    *
+    * The oriented DAG is eagerly localCheckpointed ONCE and feeds all four
+    * consumers (both wedge sides, the closing probe, the gate statistics) —
+    * the edge-build (lineitem self-join + distinct + degree joins) runs one
+    * time instead of three. Checkpoint leaves carry no statistics, so the
+    * round-5 measurement ("checkpoint oriented → wedge/closing joins lose
+    * their broadcasts → 13 s → 31 s") is answered with EXPLICIT hints: the
+    * gate job measures the exact edge count and wedge volume, and those
+    * measured numbers — not Catalyst's absent stats — pick the plan:
+    *
+    *  - `m ≤ broadcastMaxEdges`: broadcast both the wedge build side and the
+    *    closing probe — wedges are generated, probed, and counted in ONE
+    *    map-side stage; no wedge ever shuffles and no sketch is built (at
+    *    sf0.1 density the sketch was ~6 s of pure overhead — the round-6
+    *    ceiling breach; r6 verdict task 1).
+    *  - dense beyond the cap AND wedges > [[SketchWedgeFactor]]·m: shuffle
+    *    joins with a Bloom prune of the wedges IN the wedge-join stage, so
+    *    only triangles + fp·wedges reach the closing exchange (6.7e9 wedges
+    *    on the 10×-densified sf0.1 replica — un-pruned it ran past 300 s).
+    *    The no-false-negative property keeps the count exact.
+    *  - big but sparse (wedges ~ m): plain shuffle joins; the sketch would
+    *    prune nothing worth its build pass.
+    */
   def triangleCountEdges(edges: DataFrame,
       broadcastMaxEdges: Long = BroadcastRowCap,
       sketchWedgeFactor: Long = SketchWedgeFactor,

@@ -135,19 +135,6 @@ object Profiling {
     ordersReport.unionByName(lineitemRules).unionByName(fk)
   }
 
-  /** Cross-table referential-integrity audit: every FK relation of the star
-    * schema in one report — (relation, child rows, orphan rows, distinct
-    * missing keys). [[qualityReport]] checks ONE relation as a rule; this
-    * is the schema-wide sweep a warehouse runs after every load, and the
-    * first thing to consult when a join "loses" rows.
-    *
-    * Scale shape per relation: the child side collapses to DISTINCT-key
-    * counts first (one partial-agg shuffle on a long key — orphan detection
-    * never rescans child rows per parent), then anti-joins the parent key
-    * set — broadcast for dimension parents, hash for the fact-sized orders
-    * parent. Row counts ride along as per-key sums, so the report costs no
-    * second scan of any child.
-    */
   /** One relation's orphan stats — separated so detection is unit-testable
     * on frames WITH violations (the driver corpus is referentially clean,
     * so the all-zero report alone can't prove the detector works).
@@ -182,6 +169,19 @@ object Profiling {
         col("n_orphans"), col("n_missing_keys"))
   }
 
+  /** Cross-table referential-integrity audit: every FK relation of the star
+    * schema in one report — (relation, child rows, orphan rows, distinct
+    * missing keys). [[qualityReport]] checks ONE relation as a rule; this
+    * is the schema-wide sweep a warehouse runs after every load, and the
+    * first thing to consult when a join "loses" rows.
+    *
+    * Scale shape per relation: the child side collapses to DISTINCT-key
+    * counts first (one partial-agg shuffle on a long key — orphan detection
+    * never rescans child rows per parent), then anti-joins the parent key
+    * set — broadcast for dimension parents, hash for the fact-sized orders
+    * parent. Row counts ride along as per-key sums, so the report costs no
+    * second scan of any child.
+    */
   def refIntegrity(s: SparkSession, d: String): DataFrame = {
     import graft.Tables
     def rel(name: String, child: DataFrame, ckey: String,

@@ -20,6 +20,33 @@ import org.apache.spark.sql.functions._
   * funnel over the whole corpus×queries product. The LSH variant buckets the
   * corpus by sign-random-projection so each probe only scans its bucket — the
   * 100 TB path where brute force would scan everything.
+  *
+  * ANN kernels — each written once, every face calls it:
+  *  - [[probeQueries]] (the vec_id < 10 probe side with its norm `qn`) and
+  *    [[neighborSide]] (the candidate side with `nn`): the exact scans, both
+  *    LSH faces, PQ, every shortlist rerank;
+  *  - [[scanScored]] (exact scan): `bruteForceTopK`, `filteredTopK` (the
+  *    same body plus a corpus filter), `pqTopK` (over the reconstructions);
+  *  - [[bucketScored]] (LSH bucket join): `lshTopK`, [[multiProbeScoredTagged]];
+  *  - [[multiProbeScoredTagged]] (multi-probe probe build):
+  *    `lshMultiProbeTopK` at its flip count, `annRecallSweep` at 8;
+  *  - [[crossCentroids]] (trained-centroid literal crossing):
+  *    `ivfTopKTrained`, `ivfPqTopK`, `semanticDedupAllPairs`,
+  *    `contaminationEvalProbesRankedOver`, `assignCells` (and through it
+  *    [[graft.sources.Sinks.streamVectorIndex]]);
+  *  - [[argmaxCell]] (argmax cell assignment): every crossing above but the
+  *    eval probes, and `ivfTopK`'s first-16-rows crossing;
+  *  - [[rankCells]] (per-query probe-cell ranking): every IVF face, the
+  *    contamination eval probes;
+  *  - [[cellCandidates]] (IVF candidate join) and [[ivfScored]] (plus the
+  *    exact rerank): `ivfTopK` at its nprobe, `annRecallSweep` at 8,
+  *    `ivfTopKTrained`; `ivfPqTopK` takes the candidates only;
+  *  - [[pqIndex]] (PQ codes and reconstruction): `pqTopK`, `ivfPqTopK`;
+  *  - [[scoreCandidates]] (exact shortlist rerank): `pqRerankTopK` at its
+  *    shortlist, `annRecallSweep` at 100, `ivfPqTopK`'s ADC (over the
+  *    reconstructions) and its rerank;
+  *  - [[topKPerQuery]] (two-stage top-k): every top-k face and every swept
+  *    knob.
   */
 object Similarity {
 
@@ -157,21 +184,38 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rnk"), col("cosine"))
   }
 
+  /** The probe-query side every top-k face ranks for: the ten probe
+    * vectors (vec_id < 10) as (query_id, qvec, qn). */
+  private def probeQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+      .withColumn("qn", norm(col("qvec")))
+
+  /** The candidate side: every vector as (neighbor_id, nvec, nn). */
+  private def neighborSide(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
+      .withColumn("nn", norm(col("nvec")))
+
+  /** Cosine of a probe query against a candidate — norms precomputed once
+    * per vector (not once per pair); same IEEE values. */
+  private def pairCosine: Column = dot(col("qvec"), col("nvec")) / (col("qn") * col("nn"))
+
+  /** The exact scan: every (neighbor_id, nvec, nn) candidate scored against
+    * every broadcast probe query, self excluded. */
+  private def scanScored(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", pairCosine)
+
+  /** Exact top-k of the probe queries over the corpus rows `corpusFilter`
+    * keeps. */
+  private def exactTopK(emb: DataFrame, corpusFilter: Column, k: Int): DataFrame =
+    topKPerQuery(scanScored(neighborSide(emb.filter(corpusFilter)), probeQueries(emb)), k)
+
   /** Brute-force exact cosine top-k: queries = vec_id < 10, corpus = all
     * vectors (self excluded). Baseline for the ANN variants.
     */
-  def bruteForceTopK(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-    val corpus = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-      .withColumn("nn", norm(col("nvec")))
-    // norms precomputed once per vector (not once per pair); same IEEE values
-    val scored = corpus.join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
-  }
+  def bruteForceTopK(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    exactTopK(Tables.embeddings(s, d), lit(true), k)
 
   /** Metadata-FILTERED exact cosine top-k — the "filtered vector search"
     * production shape: the attribute predicate restricts candidates BEFORE
@@ -183,18 +227,16 @@ object Similarity {
     * attribute-partitioned vector layouts at 100 TB, where the same
     * predicate becomes partition pruning.
     */
-  def filteredTopK(s: SparkSession, d: String, label: Int = 1, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-    val corpus = emb.filter(col("label") === label)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-      .withColumn("nn", norm(col("nvec")))
-    val scored = corpus.join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
-  }
+  def filteredTopK(s: SparkSession, d: String, label: Int = 1, k: Int = 5): DataFrame =
+    exactTopK(Tables.embeddings(s, d), col("label") === label, k)
+
+  /** LSH bucket join: every corpus vector in a probed bucket (`pbucket`)
+    * scored against its probe query, self excluded. */
+  private def bucketScored(emb: DataFrame, planes: Int, probes: DataFrame): DataFrame =
+    neighborSide(emb).withColumn("bucket", lshBucket(col("nvec"), planes))
+      .join(broadcast(probes), col("bucket") === col("pbucket"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", pairCosine)
 
   /** LSH-bucketed ANN: probes only scan their own bucket, then exact cosine
     * rerank within the bucket. Approximate (recall < 1 across bucket
@@ -205,17 +247,9 @@ object Similarity {
     */
   def lshTopK(s: SparkSession, d: String, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, d)
-      .withColumn("bucket", lshBucket(col("embedding"), lshPlanes(s, d)))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"), col("bucket"))
-      .withColumn("qn", norm(col("qvec")))
-    val corpus = emb.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("nvec"), col("bucket"))
-      .withColumn("nn", norm(col("nvec")))
-    val scored = corpus.join(broadcast(queries), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
+    val planes = lshPlanes(s, d)
+    topKPerQuery(bucketScored(emb, planes, probeQueries(emb)
+      .withColumn("pbucket", lshBucket(col("qvec"), planes))), k)
   }
 
   /** Planes whose hyperplane the query sits closest to (smallest |proj|)
@@ -250,42 +284,8 @@ object Similarity {
     * probe construction itself).
     */
   def lshMultiProbeTopK(s: SparkSession, d: String, k: Int = 5,
-      flipPlanes: Int = MultiProbeFlipPlanes): DataFrame = {
-    val planes = lshPlanes(s, d)
-    val fp = math.min(flipPlanes, planes)
-    val m = planeMatrix(planes)
-    val emb = Tables.embeddings(s, d)
-    val corpus = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-      .withColumn("nn", norm(col("nvec")))
-      .withColumn("bucket", lshBucket(col("nvec"), planes))
-    val projCols = (0 until planes).map { p =>
-      dot(col("qvec"), array(m(p).map(lit).toSeq: _*)).as(s"proj$p")
-    }
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-      .withColumn("bucket", lshBucket(col("qvec"), planes))
-    val withProj = q.select(Seq(col("query_id"), col("qvec"), col("qn"),
-      col("bucket")) ++ projCols: _*)
-      // plane ids ordered by margin: struct sort on (|proj|, plane) — the
-      // plane id tiebreak makes the order total on both engines
-      .withColumn("pids", expr(
-        s"transform(slice(array_sort(array(${(0 until planes).map(p =>
-          s"struct(abs(proj$p) AS m, $p AS p)").mkString(", ")})), 1, $fp), x -> x.p)"))
-      .select(col("query_id"), col("qvec"), col("qn"), col("bucket"), col("pids"))
-    val probes = withProj
-      .select(col("query_id"), col("qvec"), col("qn"), col("bucket"), col("pids"),
-        explode(sequence(lit(0), lit((1 << fp) - 1))).as("mask"))
-      .withColumn("pbucket", expr(
-        s"bucket ^ aggregate(sequence(0, ${fp - 1}), 0L, (acc, j) -> acc + " +
-          "CASE WHEN (mask >> j) & 1 = 1 THEN shiftleft(1L, element_at(pids, j + 1)) " +
-          "ELSE 0L END)"))
-      .select(col("query_id"), col("qvec"), col("qn"), col("pbucket"))
-    val scored = corpus.join(broadcast(probes), col("bucket") === col("pbucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
-  }
+      flipPlanes: Int = MultiProbeFlipPlanes): DataFrame =
+    topKPerQuery(multiProbeScoredTagged(s, d, flipPlanes), k)
 
   val IvfCentroids = 16
   val IvfProbe = 4
@@ -322,35 +322,63 @@ object Similarity {
     * centroids, cell-keyed candidate join, two-stage top-k — is unchanged.
     */
   def ivfTopK(s: SparkSession, d: String, k: Int = 5,
-      nprobe: Int = IvfProbe): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-    val cents = e.filter(col("vec_id") < IvfCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"),
-        col("nrm").as("cnrm"))
-    val crossed = e.crossJoin(broadcast(cents))
-      .withColumn("ccos", dot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm")))
-    // best cell per vector: max (ccos, -centroid_id) — ties to the lowest id
-    val assign = crossed.groupBy(col("vec_id"))
+      nprobe: Int = IvfProbe): DataFrame =
+    topKPerQuery(ivfScoredTagged(s, d, nprobe), k)
+
+  /** A (vec_id, embedding) frame with its norm `nrm`. */
+  private def withNorm(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding")).withColumn("nrm", norm(col("embedding")))
+
+  /** Trained-centroid literal crossing: every (vec_id, embedding, nrm) row
+    * against every centroid of the fitted matrix (broadcast as plan
+    * literals), with the cosine `ccos` to each. */
+  private def crossCentroids(e: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    e.select(col("vec_id"), col("embedding"), col("nrm"), posexplode(centroidsLit(centroids)))
+      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
+      .withColumn("ccos",
+        dot(col("embedding"), col("cvec")) / (col("nrm") * norm(col("cvec"))))
+
+  /** The centroid matrix as one nested plan literal. */
+  private def centroidsLit(centroids: Array[Array[Double]]): Column =
+    array(centroids.map(c => array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
+
+  /** Argmax cell assignment over a crossing: max (ccos, -centroid_id) per
+    * vector — ties to the lowest id; `max_by` is map-side combinable, no
+    * window funnel. */
+  private def argmaxCell(crossed: DataFrame): DataFrame =
+    crossed.groupBy(col("vec_id"))
       .agg(max_by(col("centroid_id"),
         struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
-    val probes = crossed.filter(col("vec_id") < 10)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
+
+  /** Per-query probe-cell ranking: `rn` = each cell's rank for its vector,
+    * by (ccos DESC, centroid_id ASC). */
+  private def rankCells(crossed: DataFrame): DataFrame =
+    crossed.withColumn("rn", row_number().over(
+      Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
+
+  /** IVF candidate join: each probe query's cells ranked ≤ `nprobe` (the
+    * rank kept as `probe_rn`) joined to the members `assign` places in
+    * them, self excluded. A vector sits in exactly one cell, so each
+    * (query, neighbor) appears at most once. */
+  private def cellCandidates(crossed: DataFrame, assign: DataFrame, nprobe: Int): DataFrame =
+    rankCells(crossed.filter(col("vec_id") < 10))
       .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val scored = probes
-      .join(assign.filter(col("vec_id") >= 0), Seq("centroid_id"))
+      .select(col("vec_id").as("query_id"), col("centroid_id"), col("rn").as("probe_rn"))
+      .join(assign, Seq("centroid_id"))
       .filter(col("vec_id") =!= col("query_id"))
+      .withColumnRenamed("vec_id", "neighbor_id")
+
+  /** IVF candidate join and exact rerank over the crossing of `e` with its
+    * coarse quantizer. The callers differ only in their crossing (the first
+    * [[IvfCentroids]] rows or the trained literals). */
+  private def ivfScored(e: DataFrame, crossed: DataFrame, nprobe: Int): DataFrame =
+    cellCandidates(crossed, argmaxCell(crossed), nprobe)
       .join(e.select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("nrm").as("qn")), Seq("query_id"))
-      .join(e.select(col("vec_id"), col("embedding").as("nvec"),
-        col("nrm").as("nn")), Seq("vec_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    topKPerQuery(scored, k)
-  }
+      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"),
+        col("nrm").as("nn")), Seq("neighbor_id"))
+      .withColumn("cosine", pairCosine)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("probe_rn"))
 
   /** Spherical k-means (Lloyd's) coarse-quantizer training for IVF.
     *
@@ -444,15 +472,6 @@ object Similarity {
     else if (a < b) -1 else if (a > b) 1 else 0
   }
 
-  /** IVF search against TRAINED centroids ([[trainIvfCentroids]]): same
-    * dataflow as [[ivfTopK]] — broadcast centroid literals, `max_by` cell
-    * assignment, probe-cells candidate join, exact-cosine rerank — but the
-    * quantizer is the fitted model, so cells are balanced by the data's
-    * actual geometry instead of by luck of the first nlist rows. Rows-only
-    * in the oracle harness: a fitted model is not expressible in one SQL
-    * statement (the search-side plan is identical to the oracle-checked
-    * [[ivfTopK]]).
-    */
   /** The fitted coarse-quantizer for a dataset, trained once and memoized
     * in [[graft.WarmState]]: [[ivfTopKTrained]] (the query) and the
     * generated oracle SQL ([[graft.SparkEntry.oracleSqlDynamicSafe]]) must
@@ -493,50 +512,22 @@ object Similarity {
     * lowest centroid id). Pure per-row work: no shuffle beyond the
     * per-id partial-aggregating argmax.
     */
-  def assignCells(emb: DataFrame, centroids: Array[Array[Double]],
-      idCol: String = "vec_id"): DataFrame = {
-    val centsLit = array(centroids.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    emb.select(col(idCol), col("embedding"), posexplode(centsLit))
-      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
-      .withColumn("ccos",
-        dot(col("embedding"), col("cvec")) / (norm(col("embedding")) * norm(col("cvec"))))
-      .groupBy(col(idCol))
-      .agg(max_by(col("centroid_id"),
-        struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
-  }
+  def assignCells(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    argmaxCell(crossCentroids(withNorm(emb), centroids))
 
+  /** IVF search against TRAINED centroids ([[trainIvfCentroids]]): same
+    * dataflow as [[ivfTopK]] — broadcast centroid literals, `max_by` cell
+    * assignment, probe-cells candidate join, exact-cosine rerank — but the
+    * quantizer is the fitted model, so cells are balanced by the data's
+    * actual geometry instead of by luck of the first nlist rows. Rows-only
+    * in the oracle harness: a fitted model is not expressible in one SQL
+    * statement (the search-side plan is identical to the oracle-checked
+    * [[ivfTopK]]).
+    */
   def ivfTopKTrained(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, d)
     val trained = trainedCentroids(s, d, IvfCentroids, iters = 3)
-    val e = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-    val centsLit = array(trained.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    val crossed = e.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(centsLit))
-      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
-      .withColumn("ccos",
-        dot(col("embedding"), col("cvec")) / (col("nrm") * norm(col("cvec"))))
-      .drop("cvec")
-    val assign = crossed.groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"),
-        struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
-    val probes = crossed.filter(col("vec_id") < 10)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("rn") <= IvfProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-    val scored = probes
-      .join(assign, Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(e.select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        col("nrm").as("qn")), Seq("query_id"))
-      .join(e.select(col("vec_id"), col("embedding").as("nvec"),
-        col("nrm").as("nn")), Seq("vec_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    topKPerQuery(scored, k)
+    val e = withNorm(Tables.embeddings(s, d))
+    topKPerQuery(ivfScored(e, crossCentroids(e, trained), IvfProbe), k)
   }
 
   /** Measured recall@k of every approximate ANN face against the exact
@@ -592,7 +583,8 @@ object Similarity {
     import graft.BenchPhases
     val exact = BenchPhases.timed("p_truth")(
       bruteForceTopK(s, d, k).select(col("query_id"), col("neighbor_id")).localCheckpoint())
-    val mp = BenchPhases.timed("p_mp_scored")(multiProbeScoredTagged(s, d).localCheckpoint())
+    val mp = BenchPhases.timed("p_mp_scored")(
+      multiProbeScoredTagged(s, d, flipPlanes = 8).localCheckpoint())
     val ivf = BenchPhases.timed("p_ivf_scored")(
       ivfScoredTagged(s, d, maxProbe = 8).localCheckpoint())
     val pq = BenchPhases.timed("p_pq_scored")(
@@ -607,9 +599,13 @@ object Similarity {
     recallOverSpine(s, exact, k, methods)
   }
 
-  /** The sweep's pre-restructure composition — one full pipeline per swept
-    * knob. Kept ONLY as the spec's equality reference ([[annRecallSweep]]
-    * must return the identical row set); never a bench face.
+  /** The sweep's per-knob composition — each swept knob's face built at
+    * its own depth. The knob faces are themselves the top-k of the tagged
+    * kernel the sweep checkpoints, so equality with [[annRecallSweep]]
+    * proves the tag filter: the top-knob build filtered to knob `p` is the
+    * build at `p`. Only the oracle checks the default knobs against
+    * independent code. Kept ONLY as the spec's equality reference; never a
+    * bench face.
     */
   private[graft] def annRecallSweepDirect(s: SparkSession, d: String,
       k: Int = 5): DataFrame =
@@ -624,34 +620,33 @@ object Similarity {
       "pq_rerank_s50" -> pqRerankTopK(s, d, k, shortlist = 50),
       "pq_rerank_s100" -> pqRerankTopK(s, d, k, shortlist = 100)))
 
-  /** Multi-probe candidates scored ONCE at the top flip count, each row
-    * tagged `min_fp` = the smallest flip count whose probe set reaches it.
-    * The probe masks of flip count f are exactly the masks over the first
-    * f entries of the margin-sorted plane list — the list is sorted the
-    * same way at every f ([[lshMultiProbeTopK]]'s total (|proj|, plane)
-    * order) — so min_fp = position of a mask's highest set bit + 1 (0 for
-    * the unflipped home bucket), and `min_fp <= f` reproduces flip-count
-    * f's candidate set exactly. Buckets partition the corpus and distinct
-    * masks give distinct buckets, so each (query, neighbor) appears at
-    * most once — the tag is unambiguous.
+  /** Multi-probe candidates at `flipPlanes` flip planes (capped at the
+    * plane count), each row tagged `min_fp` = the smallest flip count
+    * whose probe set reaches it. The probe masks of flip count f are
+    * exactly the masks over the first f entries of the margin-sorted plane
+    * list — the list is sorted the same way at every f (the total (|proj|,
+    * plane) order) — so min_fp = position of a mask's highest set bit + 1
+    * (0 for the unflipped home bucket), and `min_fp <= f` reproduces flip
+    * count f's candidate set exactly. Buckets partition the corpus and
+    * distinct masks give distinct buckets, so each (query, neighbor)
+    * appears at most once — the tag is unambiguous. [[lshMultiProbeTopK]]
+    * ranks it at its own flip count; [[annRecallSweep]] scores it once at
+    * the top knob and filters the tag per swept point.
     */
-  private def multiProbeScoredTagged(s: SparkSession, d: String): DataFrame = {
+  private def multiProbeScoredTagged(s: SparkSession, d: String,
+      flipPlanes: Int): DataFrame = {
     val planes = lshPlanes(s, d)
-    val fp = math.min(8, planes)
+    val fp = math.min(flipPlanes, planes)
     val m = planeMatrix(planes)
     val emb = Tables.embeddings(s, d)
-    val corpus = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-      .withColumn("nn", norm(col("nvec")))
-      .withColumn("bucket", lshBucket(col("nvec"), planes))
     val projCols = (0 until planes).map { p =>
       dot(col("qvec"), array(m(p).map(lit).toSeq: _*)).as(s"proj$p")
     }
-    val q = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
+    val withProj = probeQueries(emb)
       .withColumn("bucket", lshBucket(col("qvec"), planes))
-    val withProj = q.select(Seq(col("query_id"), col("qvec"), col("qn"),
-      col("bucket")) ++ projCols: _*)
+      .select(Seq(col("query_id"), col("qvec"), col("qn"), col("bucket")) ++ projCols: _*)
+      // plane ids ordered by margin: struct sort on (|proj|, plane) — the
+      // plane id tiebreak makes the order total on both engines
       .withColumn("pids", expr(
         s"transform(slice(array_sort(array(${(0 until planes).map(p =>
           s"struct(abs(proj$p) AS m, $p AS p)").mkString(", ")})), 1, $fp), x -> x.p)"))
@@ -671,70 +666,52 @@ object Similarity {
           "CASE WHEN (mask >> j) & 1 = 1 THEN shiftleft(1L, element_at(pids, j + 1)) " +
           "ELSE 0L END)"))
       .select(col("query_id"), col("qvec"), col("qn"), col("pbucket"), col("min_fp"))
-    corpus.join(broadcast(probes), col("bucket") === col("pbucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
+    bucketScored(emb, planes, probes)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("min_fp"))
   }
 
-  /** IVF candidates scored ONCE at the top probe depth, tagged `probe_rn` =
-    * the probed cell's rank for that query. A corpus vector sits in exactly
-    * one cell, so each (query, neighbor) appears at most once and
-    * `probe_rn <= p` is exactly nprobe-p's candidate set ([[ivfTopK]]'s
-    * dataflow with the rank carried through the candidate join).
+  /** IVF candidates scored at probe depth `maxProbe` over the first
+    * [[IvfCentroids]] vectors as the coarse quantizer, tagged `probe_rn` =
+    * the probed cell's rank for that query, so `probe_rn <= p` is exactly
+    * nprobe-p's candidate set. [[ivfTopK]] ranks it at its own nprobe;
+    * [[annRecallSweep]] scores it once at the top knob.
     */
   private def ivfScoredTagged(s: SparkSession, d: String,
       maxProbe: Int): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
+    val e = withNorm(Tables.embeddings(s, d))
     val cents = e.filter(col("vec_id") < IvfCentroids)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"),
         col("nrm").as("cnrm"))
     val crossed = e.crossJoin(broadcast(cents))
       .withColumn("ccos", dot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm")))
-    val assign = crossed.groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"),
-        struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
-    val probes = crossed.filter(col("vec_id") < 10)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("rn") <= maxProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"),
-        col("rn").as("probe_rn"))
-    probes
-      .join(assign.filter(col("vec_id") >= 0), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(e.select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        col("nrm").as("qn")), Seq("query_id"))
-      .join(e.select(col("vec_id"), col("embedding").as("nvec"),
-        col("nrm").as("nn")), Seq("vec_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cosine"), col("probe_rn"))
+    ivfScored(e, crossed, maxProbe)
   }
 
-  /** PQ-rerank candidates scored ONCE at the top shortlist: the ADC pass
-    * ranks to `maxShortlist` (that rank IS `arnk` — shorter shortlists are
-    * its prefixes), then the exact rerank cosine is computed once for the
-    * whole shortlist; `arnk <= s` is exactly shortlist-s's rerank input
-    * ([[pqRerankTopK]]'s two stages with the ADC rank carried through).
+  /** PQ-rerank candidates at shortlist `maxShortlist`: the ADC pass ranks
+    * to `maxShortlist` (that rank IS `arnk` — shorter shortlists are its
+    * prefixes), then the exact rerank cosine is computed for the whole
+    * shortlist; `arnk <= s` is exactly shortlist-s's rerank input.
+    * [[pqRerankTopK]] ranks it at its own shortlist; [[annRecallSweep]]
+    * scores it once at the top knob.
     */
   private def pqRerankScoredTagged(s: SparkSession, d: String,
       maxShortlist: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val short = pqTopK(s, d, maxShortlist)
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("arnk"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-    short
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-        .withColumn("nn", norm(col("nvec"))), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
+    scoreCandidates(short, neighborSide(emb), probeQueries(emb))
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("arnk"))
   }
+
+  /** Exact shortlist rerank: candidate (query_id, neighbor_id) rows scored
+    * against the broadcast probe queries, the candidate's vector from
+    * `vecs` (neighbor_id, nvec, nn) — the raw vectors, or the PQ
+    * reconstructions for an ADC pass. */
+  private def scoreCandidates(cands: DataFrame, vecs: DataFrame,
+      queries: DataFrame): DataFrame =
+    cands.join(vecs, Seq("neighbor_id"))
+      .join(broadcast(queries), Seq("query_id"))
+      .withColumn("cosine", pairCosine)
 
   /** Shared recall spine: |approx top-k ∩ exact top-k| / k per (method,
     * query), with a queries × methods spine so empty result sets appear
@@ -828,18 +805,8 @@ object Similarity {
     */
   private def semanticDedupAllPairs(emb: DataFrame,
       centroids: Array[Array[Double]], threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-    val centsLit = array(centroids.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    val crossed = e.select(col("vec_id"), col("nrm"), col("embedding"),
-        posexplode(centsLit))
-      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
-      .withColumn("ccos",
-        dot(col("embedding"), col("cvec")) / (col("nrm") * norm(col("cvec"))))
-    val assign = crossed.groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"),
-        struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
+    val e = withNorm(emb)
+    val assign = argmaxCell(crossCentroids(e, centroids))
     // r20: materialize the assignment table ONCE — the m subtree fed both
     // pair-join sides AND the final verdict join, so the O(nlist)-per-row
     // centroid argmax and the embedding scan ran three times (two extra
@@ -949,9 +916,7 @@ object Similarity {
   private def contaminationEvalProbesRanked(s: SparkSession, d: String,
       evalMaxVecId: Long): DataFrame =
     contaminationEvalProbesRankedOver(
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", norm(col("embedding")))
-        .filter(col("vec_id") < evalMaxVecId),
+      withNorm(Tables.embeddings(s, d)).filter(col("vec_id") < evalMaxVecId),
       trainedCentroids(s, d, IvfCentroids, iters = 3))
 
   /** [[contaminationEvalProbesRanked]] over an arbitrary (vec_id,
@@ -960,19 +925,23 @@ object Similarity {
     * second eval-filtered corpus scan; expressions verbatim.
     */
   private def contaminationEvalProbesRankedOver(evals: DataFrame,
-      trained: Array[Array[Double]]): DataFrame = {
-    val centsLit = array(trained.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    evals
-      .select(col("vec_id"), col("embedding"), col("nrm"), posexplode(centsLit))
-      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
-      .withColumn("ccos",
-        dot(col("embedding"), col("cvec")) / (col("nrm") * norm(col("cvec"))))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
+      trained: Array[Array[Double]]): DataFrame =
+    rankCells(crossCentroids(evals, trained))
       .select(col("vec_id").as("eval_id"), col("centroid_id"),
         col("embedding").as("qvec"), col("nrm").as("qn"), col("rn"))
-  }
+
+  /** The screen's per-row centroid-cosine array — THE blocking decision's
+    * first half, factored (r21) so the fused recall/sweep faces compute the
+    * IDENTICAL assignment the production screen does. */
+  private def screenCcosArr(centroids: Array[Array[Double]]): Column =
+    transform(centroidsLit(centroids), c =>
+      dot(col("embedding"), c) / (col("nrm") * sqrt(dot(c, c))))
+
+  /** The screen's argmax cell over a materialized `ccos_arr` column —
+    * first-index-on-exact-ties, identical to the search faces' (ccos DESC,
+    * centroid_id ASC) rule. */
+  private def screenArgmaxCell: Column =
+    (array_position(col("ccos_arr"), array_max(col("ccos_arr"))) - 1).cast("int")
 
   /** CORPUS side + probe match over an arbitrary (vec_id, embedding) frame:
     * shuffle-free end to end — the centroids are plan LITERALS, so the
@@ -992,22 +961,6 @@ object Similarity {
     * vector's input row and the static probe side), which is exactly the
     * sketched-sink `expand` contract the streaming face rides.
     */
-  /** The screen's per-row centroid-cosine array — THE blocking decision's
-    * first half, factored (r21) so the fused recall/sweep faces compute the
-    * IDENTICAL assignment the production screen does. */
-  private def screenCcosArr(centroids: Array[Array[Double]]): Column = {
-    val centsLit = array(centroids.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    transform(centsLit, c =>
-      dot(col("embedding"), c) / (col("nrm") * sqrt(dot(c, c))))
-  }
-
-  /** The screen's argmax cell over a materialized `ccos_arr` column —
-    * first-index-on-exact-ties, identical to the search faces' (ccos DESC,
-    * centroid_id ASC) rule. */
-  private def screenArgmaxCell: Column =
-    (array_position(col("ccos_arr"), array_max(col("ccos_arr"))) - 1).cast("int")
-
   private[graft] def screenCandidates(corpus: DataFrame,
       centroids: Array[Array[Double]], probes: DataFrame): DataFrame = {
     // a ranked probe side (the sweep) keeps its `rn` on the output row
@@ -1038,9 +991,7 @@ object Similarity {
     */
   private def contaminationEvalSlice(s: SparkSession, d: String,
       evalMaxVecId: Long): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-      .filter(col("vec_id") < evalMaxVecId)
+    withNorm(Tables.embeddings(s, d)).filter(col("vec_id") < evalMaxVecId)
       .localCheckpoint()
 
   /** ONE corpus pass serving truth AND screen for the recall/sweep faces
@@ -1067,9 +1018,7 @@ object Similarity {
         col("rn"))
     val evalV = evals.select(col("vec_id").as("eval_id"),
       col("embedding").as("qvec"), col("nrm").as("qn"))
-    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") >= evalMaxVecId)
-      .withColumn("nrm", norm(col("embedding")))
+    withNorm(Tables.embeddings(s, d).filter(col("vec_id") >= evalMaxVecId))
       .withColumn("ccos_arr", screenCcosArr(trained))
       .withColumn("centroid_id", screenArgmaxCell)
       .join(broadcast(evalV))
@@ -1080,6 +1029,10 @@ object Similarity {
         "left_outer")
       .select(col("vec_id"), col("eval_id"), col("cosine"), col("rn"))
   }
+
+  /** The swept nprobe points — one constant so the Scala face and the
+    * generated oracle SQL enumerate the SAME frontier. */
+  val ContamSweepProbes: Seq[Int] = Seq(2, 4, 8, 12, 16)
 
   /** Recall-vs-cost FRONTIER of the semantic-contamination screen (r13
     * verdict task 1 — the round's one `weak`): the shipped nprobe default
@@ -1107,10 +1060,6 @@ object Similarity {
     * RERUNNING this face at its own geometry, which is the point of
     * shipping the frontier as a face rather than a number in a doc.
     */
-  /** The swept nprobe points — one constant so the Scala face and the
-    * generated oracle SQL enumerate the SAME frontier. */
-  val ContamSweepProbes: Seq[Int] = Seq(2, 4, 8, 12, 16)
-
   def semanticContaminationSweep(s: SparkSession, d: String,
       evalMaxVecId: Long = 50, threshold: Double = 0.2,
       nprobes: Seq[Int] = ContamSweepProbes): DataFrame = {
@@ -1290,8 +1239,7 @@ object Similarity {
   }
 
   private[graft] def pqBooksLit(books: Array[Array[Array[Double]]]): Column =
-    array(books.map(mb => array(mb.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)).toIndexedSeq: _*)
+    array(books.map(centroidsLit).toIndexedSeq: _*)
 
   /** Nearest codebook entry per (vector, subspace): L2² argmin, ties to the
     * lowest code — `max_by` over (-d2, -code) is the partial-aggregable
@@ -1346,7 +1294,18 @@ object Similarity {
     */
   def pqTopK(s: SparkSession, d: String, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val books = trainedPqCodebooks(s, d)
+    val index = pqIndex(s, emb, trainedPqCodebooks(s, d))
+    topKPerQuery(scanScored(index, probeQueries(emb)), k)
+      .withColumnRenamed("cosine", "approx_cosine")
+  }
+
+  /** The compressed index: each corpus vector's PQ codes ([[pqAssign]])
+    * and the m-ordered reassembly of their codebook entries, as a
+    * candidate side (neighbor_id, nvec = the reconstruction, nn = its
+    * norm). The m-sorted reassembly fixes the fold order, so scores over
+    * it are the oracle's doubles. */
+  private def pqIndex(s: SparkSession, emb: DataFrame,
+      books: Array[Array[Array[Double]]]): DataFrame = {
     val cbFrame = s.range(1)
       .select(posexplode(pqBooksLit(books))).withColumnRenamed("pos", "m")
       .select(col("m"), posexplode(col("col")))
@@ -1354,19 +1313,12 @@ object Similarity {
     val sub = emb.select(col("vec_id"),
         posexplode(array((0 until PqM).map(m => subvecD(col("embedding"), lit(m))): _*)))
       .withColumnRenamed("pos", "m").withColumnRenamed("col", "sv")
-    val codes = pqAssign(sub, books)
-    val recon = codes.join(broadcast(cbFrame), Seq("m", "code"))
+    pqAssign(sub, books).join(broadcast(cbFrame), Seq("m", "code"))
       .groupBy(col("vec_id"))
       .agg(flatten(transform(array_sort(collect_list(struct(col("m"), col("csub")))),
-        x => x.getField("csub"))).as("rv"))
-      .withColumn("rn", sqrt(dot(col("rv"), col("rv"))))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-    val scored = recon.select(col("vec_id").as("neighbor_id"), col("rv"), col("rn"))
-      .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qvec"), col("rv")) / (col("qn") * col("rn")))
-    topKPerQuery(scored, k).withColumnRenamed("cosine", "approx_cosine")
+        x => x.getField("csub"))).as("nvec"))
+      .select(col("vec_id").as("neighbor_id"), col("nvec"))
+      .withColumn("nn", norm(col("nvec")))
   }
 
   val PqShortlist = 50
@@ -1391,55 +1343,14 @@ object Similarity {
     val emb = Tables.embeddings(s, d)
     val trained = trainedCentroids(s, d, IvfCentroids, iters = 3)
     val books = trainedPqCodebooks(s, d)
-    val e = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-    val centsLit = array(trained.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
-    val crossed = e.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(centsLit))
-      .withColumnRenamed("pos", "centroid_id").withColumnRenamed("col", "cvec")
-      .withColumn("ccos",
-        dot(col("embedding"), col("cvec")) / (col("nrm") * norm(col("cvec"))))
-      .drop("cvec")
-    val assign = crossed.groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"),
-        struct(col("ccos"), -col("centroid_id"))).as("centroid_id"))
-    val probes = crossed.filter(col("vec_id") < 10)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("rn") <= IvfProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"))
-    // the compressed index: PQ codes + reconstruction per corpus vector
-    val cbFrame = s.range(1)
-      .select(posexplode(pqBooksLit(books))).withColumnRenamed("pos", "m")
-      .select(col("m"), posexplode(col("col")))
-      .withColumnRenamed("pos", "code").withColumnRenamed("col", "csub")
-    val sub = emb.select(col("vec_id"),
-        posexplode(array((0 until PqM).map(m => subvecD(col("embedding"), lit(m))): _*)))
-      .withColumnRenamed("pos", "m").withColumnRenamed("col", "sv")
-    val recon = pqAssign(sub, books).join(broadcast(cbFrame), Seq("m", "code"))
-      .groupBy(col("vec_id"))
-      .agg(flatten(transform(array_sort(collect_list(struct(col("m"), col("csub")))),
-        x => x.getField("csub"))).as("rv"))
-      .withColumn("rn", sqrt(dot(col("rv"), col("rv"))))
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        col("nrm").as("qn"))
+    val crossed = crossCentroids(withNorm(emb), trained)
+    val queries = probeQueries(emb)
     // cell-bounded candidates, ADC-scored from codes alone
-    val adc = probes.join(assign, Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(recon, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine", dot(col("qvec"), col("rv")) / (col("qn") * col("rn")))
-      .withColumnRenamed("vec_id", "neighbor_id")
+    val adc = scoreCandidates(
+      cellCandidates(crossed, argmaxCell(crossed), IvfProbe), pqIndex(s, emb, books), queries)
     val short = topKPerQuery(adc, shortlist).select(col("query_id"), col("neighbor_id"))
     // exact rerank touches raw vectors for the shortlist only
-    val scored = short
-      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"),
-        col("nrm").as("nn")), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
+    topKPerQuery(scoreCandidates(short, neighborSide(emb), queries), k)
   }
 
   /** The production PQ recipe: ADC over codes produces a SHORTLIST
@@ -1452,18 +1363,6 @@ object Similarity {
     * the shortlist size is THE recall/IO knob.
     */
   def pqRerankTopK(s: SparkSession, d: String, k: Int = 5,
-      shortlist: Int = PqShortlist): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val short = pqTopK(s, d, shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      .withColumn("qn", norm(col("qvec")))
-    val scored = short
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
-        .withColumn("nn", norm(col("nvec"))), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine", dot(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    topKPerQuery(scored, k)
-  }
+      shortlist: Int = PqShortlist): DataFrame =
+    topKPerQuery(pqRerankScoredTagged(s, d, shortlist), k)
 }

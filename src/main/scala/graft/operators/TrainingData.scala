@@ -386,27 +386,6 @@ object TrainingData {
       .filter(col("rk") <= k)
   }
 
-  /** Train/eval SPLIT LEAKAGE via near-dup clusters — the contamination mode
-    * [[contamination]]'s n-gram screen (train vs an external benchmark) does
-    * NOT cover: the corpus's own held-out split. [[hashSplit]] assigns docs
-    * independently, so two near-duplicate documents routinely land on
-    * opposite sides of the boundary, and every such val/test doc is an eval
-    * item the model has effectively seen — eval loss reads training
-    * memorization. Standard practice (Gopher/MassiveText, The Pile v2
-    * analyses) is therefore to split by DEDUP CLUSTER, not by document;
-    * this face is the audit that says how much a doc-level split leaks.
-    *
-    * Emits every val/test doc whose [[Dedup.dedupClustersRep]] cluster also
-    * contains ≥1 train doc, with the offending train-member count — the
-    * rows a pipeline either drops from eval or re-splits by cluster id.
-    *
-    * Scale shape: pure composition of scale-proven faces. Cluster labels ⋈
-    * split assignment is a doc_id-keyed narrow join (the split side is a
-    * shuffle-free projection); the train-member rollup is one partial-agg
-    * shuffle on cluster_id, and the final join is cluster-keyed on the
-    * leaked subset only (near-dup clusters spanning the split are rare next
-    * to the corpus, and val+test is ≤10% of it by construction).
-    */
   /** Per-source domain-mixture weights — the DoReMi/Pile-style knob a
     * training run turns when composing its sampling distribution: each
     * source's weight rewards uniqueness (distinct exact texts over docs —
@@ -438,6 +417,27 @@ object TrainingData {
         floor(lit(1000000.0) * col("n_uniq_texts") * col("n_good_len") /
           (col("n_docs") * col("n_docs"))).cast("long"))
 
+  /** Train/eval SPLIT LEAKAGE via near-dup clusters — the contamination mode
+    * [[contamination]]'s n-gram screen (train vs an external benchmark) does
+    * NOT cover: the corpus's own held-out split. [[hashSplit]] assigns docs
+    * independently, so two near-duplicate documents routinely land on
+    * opposite sides of the boundary, and every such val/test doc is an eval
+    * item the model has effectively seen — eval loss reads training
+    * memorization. Standard practice (Gopher/MassiveText, The Pile v2
+    * analyses) is therefore to split by DEDUP CLUSTER, not by document;
+    * this face is the audit that says how much a doc-level split leaks.
+    *
+    * Emits every val/test doc whose [[Dedup.dedupClustersRep]] cluster also
+    * contains ≥1 train doc, with the offending train-member count — the
+    * rows a pipeline either drops from eval or re-splits by cluster id.
+    *
+    * Scale shape: pure composition of scale-proven faces. Cluster labels ⋈
+    * split assignment is a doc_id-keyed narrow join (the split side is a
+    * shuffle-free projection); the train-member rollup is one partial-agg
+    * shuffle on cluster_id, and the final join is cluster-keyed on the
+    * leaked subset only (near-dup clusters spanning the split are rare next
+    * to the corpus, and val+test is ≤10% of it by construction).
+    */
   def splitLeakage(s: SparkSession, d: String): DataFrame = {
     // r21: the labeled frame fed the per-cluster train count AND the
     // non-train probe side — the whole cluster-labeling + split join ran

@@ -129,8 +129,8 @@ object Federation {
     * per (session, dataset). Only the columns the fact queries touch are
     * loaded; real migrations prune at this step for the same reason the
     * reads do: the wire is the bottleneck.
-    */
-  /** Phase-stamped like the stream landings: the fact staging loads the
+    *
+    * Phase-stamped like the stream landings: the fact staging loads the
     * WHOLE orders table into in-heap Derby, and at the 100× replica that is
     * ~95% of the face's cold window — without the `staging` stamp a reader
     * cannot tell the 8-connection range scan (~15 s) from the stand-in

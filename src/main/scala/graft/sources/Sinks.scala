@@ -297,27 +297,6 @@ object Sinks {
     expand(novel).write.mode(SaveMode.Append).parquet(targetPath)
   }
 
-  /** The reference's actual sink, Spark-native: Postgres row-at-a-time
-    * `INSERT ... ON CONFLICT DO NOTHING` (`posts_pipeline.py:53-59`) becomes
-    * dedup-within-batch + anti-join against the target table's current keys
-    * (read back over the same JDBC connection, key column only), then ONE
-    * batched `df.write.jdbc` append. A missing target is created by the
-    * append itself (Spark's JDBC `SaveMode.Append` creates absent tables).
-    *
-    * Semantics match [[appendInsertIgnore]] exactly — re-running the same
-    * batch appends nothing (integration-tested against embedded Derby in
-    * `SinksSpec`). Contract: the anti-join guards against keys present
-    * BEFORE this batch; concurrent writers racing the same key still need
-    * the database's own conflict clause (the staging-table MERGE the README
-    * documents) — same caveat the reference's per-row loop has between its
-    * SELECT and INSERT.
-    *
-    * Scale shape: only the key column crosses the wire on the read side
-    * (column pruning is pushed into the JDBC SELECT); the write is batched
-    * (`batchsize`) and parallel per partition — `incoming`'s partition count
-    * is the write concurrency, so `coalesce` upstream if the database can't
-    * take that many connections.
-    */
   /** Compacted write: lay the output down as ~`rowsPerFile`-row parquet
     * files, key-clustered — the small-files defense every long-running
     * 100 TB pipeline needs (a thousand executors each flushing per-task
@@ -673,6 +652,27 @@ object Sinks {
             b.repartition(org.apache.spark.sql.functions.col("doc_id")))))
     }
 
+  /** The reference's actual sink, Spark-native: Postgres row-at-a-time
+    * `INSERT ... ON CONFLICT DO NOTHING` (`posts_pipeline.py:53-59`) becomes
+    * dedup-within-batch + anti-join against the target table's current keys
+    * (read back over the same JDBC connection, key column only), then ONE
+    * batched `df.write.jdbc` append. A missing target is created by the
+    * append itself (Spark's JDBC `SaveMode.Append` creates absent tables).
+    *
+    * Semantics match [[appendInsertIgnore]] exactly — re-running the same
+    * batch appends nothing (integration-tested against embedded Derby in
+    * `SinksSpec`). Contract: the anti-join guards against keys present
+    * BEFORE this batch; concurrent writers racing the same key still need
+    * the database's own conflict clause (the staging-table MERGE the README
+    * documents) — same caveat the reference's per-row loop has between its
+    * SELECT and INSERT.
+    *
+    * Scale shape: only the key column crosses the wire on the read side
+    * (column pruning is pushed into the JDBC SELECT); the write is batched
+    * (`batchsize`) and parallel per partition — `incoming`'s partition count
+    * is the write concurrency, so `coalesce` upstream if the database can't
+    * take that many connections.
+    */
   def writeJdbcInsertIgnore(incoming: DataFrame, url: String, table: String,
       key: String, props: Properties = new Properties(),
       batchSize: Int = 10000): Unit = {

@@ -237,13 +237,6 @@ object EventStreamJob extends Serializable {
       }
   }
 
-  /** Stream-stream interval join: purchases joined to the same user's views
-    * from the preceding hour. Both sides carry watermarks and the join
-    * condition bounds event time on both ends, so state is provably
-    * evictable — the requirements Spark imposes for stream-stream inner
-    * joins. The batch face is the identical join predicate on static frames
-    * (asserted equal in `EventStreamSpec`).
-    */
   /** View-side watermark slack of the stream-stream joins, overridable per
     * session (`spark.graft.stream.viewWatermark`). State ∝ slack is THE
     * stream-join sizing lever at 100 TB: the join holds every view row
@@ -300,6 +293,13 @@ object EventStreamJob extends Serializable {
     }
   }
 
+  /** Stream-stream interval join: purchases joined to the same user's views
+    * from the preceding hour. Both sides carry watermarks and the join
+    * condition bounds event time on both ends, so state is provably
+    * evictable — the requirements Spark imposes for stream-stream inner
+    * joins. The batch face is the identical join predicate on static frames
+    * (asserted equal in `EventStreamSpec`).
+    */
   def purchaseViewJoinStream(events: DataFrame): DataFrame = {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),

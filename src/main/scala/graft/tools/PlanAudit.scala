@@ -16,8 +16,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * encodes: "inspected the code" is not "captured the plan" — duplicated
   * subtrees (one frame feeding two consumers) only show up here.
   *
-  * Usage: runMain graft.tools.PlanAudit <sfDir> [nameFilter] [--executed]
-  * (the filter and the flag in either order)
+  * Usage: runMain graft.tools.PlanAudit <sfDir> [faces] [--executed]
+  * (the filter and the flag in either order; `faces` is a comma list of
+  * exact face names, read by [[graft.SparkEntry.selectFaces]], which
+  * refuses an unknown name before any face is built)
   * Output (stdout, one line per face):
   *   <name>  exch=<n> gen=<n> scans{table=count,...}  dup=<tables scanned >1>
   *
@@ -31,6 +33,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object PlanAudit {
   private[tools] def nameFilter(args: Array[String]): Option[String] =
     args.drop(1).find(_ != "--executed")
+
+  /** The faces a run audits, sorted: every face without a filter, else
+    * exactly the named ones. */
+  private[tools] def faces(args: Array[String]): Seq[String] = {
+    val only = graft.SparkEntry.selectFaces(nameFilter(args))
+    graft.SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+  }
 
   private val scanRe = "Location: [A-Za-z]+FileIndex \\[[^\\]]*?([A-Za-z0-9_.-]+\\.parquet)".r
   private def audit(p: String): (Map[String, Int], Int, Int) = {
@@ -77,11 +86,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val executed = args.contains("--executed")
-    val filt = nameFilter(args)
+    val names = faces(args)
     val s = Tables.sessionBuilder("local[32]", "32").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => filt.forall(n.contains))
     names.foreach { n =>
       try {
         def build = graft.SparkEntry.queries(n)(s, dir)

@@ -23,8 +23,8 @@ object ProbeZOrder {
     val total = base.count()
     val nf = Layouts.zFilesFor(total)
     val rowsPerFile = math.max(1L, (total + nf - 1) / nf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zprobe")
-    dir.toFile.deleteOnExit()
+    val dir = graft.WarmState.deleteAtExit(
+      java.nio.file.Files.createTempDirectory("graft_zprobe"))
     graft.sources.Sinks.writeCompacted(
       base.withColumn("zv", Layouts.zValue(col("zx"), col("zy"))),
       dir.toString, "zv", rowsPerFile, total)

@@ -567,9 +567,32 @@ class PlanQualitySpec extends SparkSpecBase {
     }
   }
 
+  /** Spark jobs a face's construction runs (checkpoints, gates) and the
+    * persistent RDDs it leaves for the face boundary to release. Spark's
+    * RDD registry holds its entries weakly, so a GC would drop a checkpoint
+    * nothing reads any more, or the built frame's own once the frame is
+    * dropped, before the count: every RDD the registry holds when a
+    * construction job starts is kept reachable, with the frame, until it is
+    * counted. */
+  private def constructionWork(face: String): (Int, Int) = {
+    val sc = spark.sparkContext
+    operators.IterCheckpoint.releaseAll(spark)
+    val kept = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val keep = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(kept.add)
+    }
+    sc.addSparkListener(keep)
+    var built: DataFrame = null
+    val jobs = try jobsDuring { built = q(face) } finally sc.removeSparkListener(keep)
+    val held = sc.getPersistentRDDs.size
+    java.lang.ref.Reference.reachabilityFence(built)
+    java.lang.ref.Reference.reachabilityFence(kept)
+    operators.IterCheckpoint.releaseAll(spark)
+    (jobs, held)
+  }
+
   test("dedup tier faces keep their construction jobs and held checkpoints") {
-    // per face: Spark jobs its construction runs (checkpoints, gates) and
-    // the persistent RDDs it leaves for the face boundary to release —
     // the work the shared near-duplicate kernels must not change
     val expect = Map(
       "q_dedup_minhash_lsh" -> (15, 3),
@@ -581,13 +604,24 @@ class PlanQualitySpec extends SparkSpecBase {
       "q_simhash_pairs" -> (12, 2),
       "q_simhash_pair_stats" -> (8, 2),
       "q_media_neardup" -> (12, 2))
-    val got = expect.keys.map { face =>
-      operators.IterCheckpoint.releaseAll(spark)
-      val jobs = jobsDuring(q(face))
-      val held = spark.sparkContext.getPersistentRDDs.size
-      operators.IterCheckpoint.releaseAll(spark)
-      face -> (jobs, held)
-    }.toMap
+    assert(expect.keys.map(face => face -> constructionWork(face)).toMap == expect)
+  }
+
+  test("ANN tier faces keep their construction jobs and held checkpoints") {
+    // the work the shared ANN kernels must not change, measured once a
+    // first build has trained and memoized each face's models, so the
+    // figures do not depend on the order the suite runs the faces in
+    val expect = Map(
+      "q_ann_ivf_trained" -> (0, 0),
+      "q_ann_pq_rerank" -> (0, 0),
+      "q_ann_ivfpq" -> (0, 0),
+      "q_ann_recall_sweep" -> (22, 4),
+      "q_semantic_dedup" -> (5, 2),
+      "q_semantic_contamination_recall" -> (1, 1),
+      "q_semantic_contamination_sweep" -> (1, 1),
+      "q_stream_vector_index" -> (1, 0),
+      "q_stream_semantic_contam" -> (3, 1))
+    val got = expect.keys.map { face => q(face); face -> constructionWork(face) }.toMap
     assert(got == expect)
   }
 }

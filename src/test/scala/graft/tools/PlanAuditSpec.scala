@@ -8,6 +8,14 @@ class PlanAuditSpec extends graft.SparkSpecBase {
     assert(PlanAudit.nameFilter(Array("sf")).isEmpty)
   }
 
+  test("the name filter selects exact faces and refuses an unknown one") {
+    assert(PlanAudit.faces(Array("sf", "q_simhash", "--executed")) == Seq("q_simhash"))
+    assert(PlanAudit.faces(Array("sf", "q_simhash_recall,q_simhash")) ==
+      Seq("q_simhash", "q_simhash_recall"))
+    assert(PlanAudit.faces(Array("sf")).size == graft.SparkEntry.queries.size)
+    intercept[IllegalArgumentException](PlanAudit.faces(Array("sf", "q_simhsh")))
+  }
+
   test("execLines holds every action the body ran once it returns") {
     (1 to 20).foreach { i =>
       val (ck, lines) = PlanAudit.execLines(spark)(
