@@ -1540,27 +1540,6 @@ object SparkEntry {
   // range(a,b) is stop-exclusive (Spark sequence(a,b) is inclusive);
   // date_trunc returns DATE (cast back to TIMESTAMP).
 
-  /** Shared by q_scd2_customers (batch merge) and q_stream_scd2 (streaming
-    * sink): both must land exactly this versioned dimension.
-    */
-  private val Scd2OracleSql: String =
-    """WITH upd AS (SELECT c_custkey, c_name, c_mktsegment || '_V2' AS c_mktsegment
-      |             FROM customer WHERE c_custkey % 7 = 0),
-      |nw AS (SELECT c_custkey + 1000000 AS c_custkey, 'NEW_' || c_name AS c_name,
-      |              c_mktsegment
-      |       FROM customer WHERE c_custkey % 11 = 0)
-      |SELECT c_custkey, c_name, c_mktsegment,
-      |  TIMESTAMP '1990-01-01 00:00:00' AS valid_from,
-      |  CASE WHEN c_custkey % 7 = 0 THEN TIMESTAMP '1996-06-01 00:00:00' END AS valid_to,
-      |  (c_custkey % 7 <> 0) AS is_current
-      |FROM customer
-      |UNION ALL
-      |SELECT c_custkey, c_name, c_mktsegment,
-      |  TIMESTAMP '1996-06-01 00:00:00', NULL, TRUE FROM upd
-      |UNION ALL
-      |SELECT c_custkey, c_name, c_mktsegment,
-      |  TIMESTAMP '1996-06-01 00:00:00', NULL, TRUE FROM nw""".stripMargin
-
   /** Python-str.split()-faithful tokenization, shared by several oracles. */
   private def sqlTokens(textCol: String): String = {
     val stripped = s"regexp_replace($textCol, '^\\s+|\\s+$$', '', 'g')"
@@ -1654,31 +1633,49 @@ object SparkEntry {
   private def sqlDot(a: String, b: String): String =
     s"list_reduce(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
 
+  /** A double as a DuckDB DOUBLE literal. SCIENTIFIC notation, not
+    * Double.toString: DuckDB types plain decimal literals DECIMAL and
+    * unifies a list literal's elements to one common scale, so values whose
+    * shortest repr needs a larger scale get ROUNDED (one-ulp codebook drift,
+    * caught by the q_ann_pq hash). E-notation literals are typed DOUBLE
+    * outright; %.17e round-trips every double.
+    */
+  private def sqlDoubleLit(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.17e", Double.box(v))
+
   /** The shared BM25 tscore expression (mirror of TextAnalysis.bm25Search,
     * k1=1.2, b=0.75) over a row carrying tf/df/dl and the stats CTE's
     * n_docs/avgdl. Float constants COMPUTED Scala-side (k1+1) serialize
-    * %.17e so both engines score with the same doubles.
+    * through [[sqlDoubleLit]] so both engines score with the same doubles.
     */
   private def sqlBm25Tscore: String = {
-    def fm(v: Double) = String.format(java.util.Locale.ROOT, "%.17e", Double.box(v))
     val (k1, b) = (1.2, 0.75)
     s"""((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5))
-       |      * (CAST(tf AS DOUBLE) * ${fm(k1 + 1.0)})
+       |      * (CAST(tf AS DOUBLE) * ${sqlDoubleLit(k1 + 1.0)})
        |      / (CAST(tf AS DOUBLE)
-       |         + ${fm(k1)} * (${fm(1.0 - b)} + ${fm(b)} * dl / avgdl))""".stripMargin
+       |         + ${sqlDoubleLit(k1)} * (${sqlDoubleLit(1.0 - b)} + ${sqlDoubleLit(b)} * dl / avgdl))""".stripMargin
   }
 
-  /** The tf/df/dl/stats CTE prefix every BM25-shaped oracle starts from. */
-  private def sqlBm25Base: String = {
-    val toks = sqlTokens("text")
+  /** Lower-cased whitespace tokens (`terms`) and their per-doc counts (`tf`). */
+  private val sqlTermFreqs =
     s"""terms AS (
-       |  SELECT doc_id, lower(unnest($toks)) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
+       |  SELECT doc_id, lower(unnest(${sqlTokens("text")})) AS term FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2)""".stripMargin
+
+  /** The tf/df/dl/stats CTE prefix every BM25-shaped oracle starts from,
+    * ending in `scored`: the BM25 tscore of each (doc, term) whose term is
+    * in `termIn`. */
+  private def sqlBm25Scored(termIn: String): String =
+    s"""$sqlTermFreqs,
        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |dl AS (SELECT doc_id, CAST(len($toks) AS BIGINT) AS dl FROM documents),
+       |dl AS (SELECT doc_id, CAST(len(${sqlTokens("text")}) AS BIGINT) AS dl FROM documents),
        |stats AS (SELECT count(*) AS n_docs,
-       |            CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl)""".stripMargin
-  }
+       |            CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+       |scored AS (
+       |  SELECT tf.doc_id, tf.term,
+       |    $sqlBm25Tscore AS tscore
+       |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
+       |  WHERE tf.term IN ($termIn))""".stripMargin
 
   /** The single-query BM25 CTE chain ending in `bmtop(doc_id, score)` — the
     * top-`limit` docs by (score DESC, doc_id) for `terms` (defaults shared
@@ -1689,12 +1686,7 @@ object SparkEntry {
   private def sqlBm25Ctes(limit: Int,
       terms: Seq[String] = Retrieval.DefaultTerms): String = {
     require(terms.length == 2, "two-term fixed-order sum (s_0 + s_1)")
-    s"""$sqlBm25Base,
-       |scored AS (
-       |  SELECT tf.doc_id, tf.term,
-       |    $sqlBm25Tscore AS tscore
-       |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
-       |  WHERE tf.term IN ('${terms(0)}', '${terms(1)}')),
+    s"""${sqlBm25Scored(s"'${terms(0)}', '${terms(1)}'")},
        |bmagg AS (
        |  SELECT doc_id,
        |    sum(CASE WHEN term = '${terms(0)}' THEN tscore END) AS s_0,
@@ -1721,55 +1713,365 @@ object SparkEntry {
        |  (x, y) -> x + y)""".stripMargin
   }
 
+  /** MinHash LSH candidate pairs verified at Jaccard >= 0.35: shingles,
+    * `NumHashes` md5 minhashes, `Bands` two-row band keys, then the band
+    * self-join. `a`/`b` name the pair's columns and `on` narrows the join
+    * (which side may pair with which).
+    */
+  private def sqlMinhashJoin(a: String, b: String, on: String): String =
+    s"""WITH sh AS ($sqlShingles),
+       |sig AS (
+       |  SELECT doc_id, sset, list_transform(range(0, ${Dedup.NumHashes}), k ->
+       |    list_min(list_transform(sset, s -> ${sqlMd5Hash60("s", "k")}))) AS sig
+       |  FROM sh),
+       |bands AS (
+       |  SELECT doc_id, sset, r.b AS band,
+       |    md5(concat(CAST(sig[2*r.b+1] AS VARCHAR), ',', CAST(sig[2*r.b+2] AS VARCHAR))) AS band_key
+       |  FROM sig, range(0, ${Dedup.Bands}) r(b)),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS $a, b.doc_id AS $b,
+       |    CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
+       |      (len(a.sset) + len(b.sset) - len(list_intersect(a.sset, b.sset))) AS jaccard
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.band_key = b.band_key$on)
+       |SELECT $a, $b, jaccard FROM cand WHERE jaccard >= 0.35""".stripMargin
+
   /** Mirror of Dedup.minhashLshPairs — shared by the pair query's oracle and
     * the cluster query's oracle (which clusters exactly these pairs).
     */
   private val sqlMinhashPairs =
-    s"""WITH sh AS ($sqlShingles),
-       |sig AS (
-       |  SELECT doc_id, sset, list_transform(range(0, ${Dedup.NumHashes}), k ->
-       |    list_min(list_transform(sset, s -> ${sqlMd5Hash60("s", "k")}))) AS sig
-       |  FROM sh),
-       |bands AS (
-       |  SELECT doc_id, sset, r.b AS band,
-       |    md5(concat(CAST(sig[2*r.b+1] AS VARCHAR), ',', CAST(sig[2*r.b+2] AS VARCHAR))) AS band_key
-       |  FROM sig, range(0, ${Dedup.Bands}) r(b)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |    CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
-       |      (len(a.sset) + len(b.sset) - len(list_intersect(a.sset, b.sset))) AS jaccard
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b, jaccard FROM cand WHERE jaccard >= 0.35""".stripMargin
+    sqlMinhashJoin("doc_a", "doc_b", " AND a.doc_id < b.doc_id")
 
-  /** Shared by q_dedup_incremental (statically-built index) and
-    * q_stream_band_index (streaming-maintained index): both probe the
-    * batch docs against the corpus band index and must land the same pairs.
+  /** Connected components of the MinHash pairs, written independently of
+    * Spark's min-label propagation: transitive closure by recursive CTE
+    * (UNION's set semantics terminate cycles), the component minimum as the
+    * label (`labels`).
     */
-  private lazy val IncrementalNearDupOracleSql: String =
-    s"""WITH sh AS ($sqlShingles),
-       |sig AS (
-       |  SELECT doc_id, sset, list_transform(range(0, ${Dedup.NumHashes}), k ->
-       |    list_min(list_transform(sset, s -> ${sqlMd5Hash60("s", "k")}))) AS sig
-       |  FROM sh),
-       |bands AS (
-       |  SELECT doc_id, sset, r.b AS band,
-       |    md5(concat(CAST(sig[2*r.b+1] AS VARCHAR), ',', CAST(sig[2*r.b+2] AS VARCHAR))) AS band_key
-       |  FROM sig, range(0, ${Dedup.Bands}) r(b)),
+  private val sqlPairClosure =
+    s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
+       |edges AS (
+       |  SELECT doc_a AS u, doc_b AS v FROM pairs
+       |  UNION SELECT doc_b, doc_a FROM pairs),
+       |reach(u, v) AS (
+       |  SELECT u, v FROM edges
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       |labels AS (
+       |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)""".stripMargin
+
+  /** [[sqlPairClosure]] + `clu(doc_id, cluster_id)` over every document,
+    * a singleton labelled with its own id. */
+  private val sqlClusters =
+    s"""$sqlPairClosure,
+       |clu AS (
+       |  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
+       |    CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
+       |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id)""".stripMargin
+
+  /** Exact same-language shingle-set pairs at Jaccard >= 0.35 over
+    * `from(doc_id, lang, sset, n)`, sizes within 4:5 of each other — the
+    * q_ngram_jaccard definition at the LSH threshold. */
+  private def sqlJaccardTruth(from: String): String =
+    s"""truth AS (
+       |  SELECT doc_a, doc_b, jaccard FROM (
+       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |      CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
+       |        (a.n + b.n - len(list_intersect(a.sset, b.sset))) AS jaccard
+       |    FROM $from a JOIN $from b
+       |      ON a.lang = b.lang AND a.doc_id < b.doc_id
+       |     AND a.n * 5 >= b.n * 4 AND b.n * 5 >= a.n * 4)
+       |  WHERE jaccard >= 0.35)""".stripMargin
+
+  /** The lowest-doc_id row of each fingerprint in `kept`. */
+  private def sqlFirstPerFingerprint(cols: String): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
+       |  FROM kept)
+       |WHERE rn = 1""".stripMargin
+
+  /** The q_hash_split assignment of `from`'s rows, hashed on `key`. */
+  private def sqlHashSplit(cols: String, key: String, from: String): String =
+    s"""SELECT $cols, u,
+       |  CASE WHEN u < 0.9 THEN 'train'
+       |       WHEN u < CAST(0.9 AS DOUBLE) + CAST(0.05 AS DOUBLE) THEN 'val'
+       |       ELSE 'test' END AS split
+       |FROM (SELECT $cols,
+       |        CAST(${sqlMd5Hash60(s"CAST($key AS VARCHAR)", "0")} AS DOUBLE)
+       |          / 1152921504606846976.0 AS u
+       |      FROM $from)""".stripMargin
+
+  /** `g(doc_id, gh)`: each doc's distinct md5-hashed word 5-grams, for docs
+    * of at least 5 tokens (`tok`). */
+  private val sqlGram5Hashes = {
+    val gram5 = "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]"
+    s"""tok AS (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents),
+       |g AS (SELECT doc_id,
+       |        unnest(list_distinct(list_transform(range(1, len(t) - 3),
+       |          i -> ${sqlMd5Hash60(gram5, "0")}))) AS gh
+       |      FROM tok WHERE len(t) >= 5)""".stripMargin
+  }
+
+  /** `toks(doc_id, t)`: the non-empty pieces of `text` split on \s+. */
+  private val sqlSplitToks =
+    """toks AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
+      |  FROM documents)""".stripMargin
+
+  /** SimHash quarter-band keys: 4 bands of 15 bits over `from`'s simhash. */
+  private def sqlSimhashBands(cols: String, from: String): String =
+    s"""bands AS (
+       |  SELECT $cols, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
+       |  FROM $from, range(0, 4) r(q))""".stripMargin
+
+  private val sqlHamming =
+    """CAST(len(list_filter(range(1, 61),
+      |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming""".stripMargin
+
+  /** The SimHash pair tail over `sh(<id>, simhash)`: any equal quarter band
+    * makes a candidate, verified at hamming <= 6. Emits `<p>_a, <p>_b,
+    * hamming` where `<p>` is `id` less its `_id`. */
+  private def sqlSimhashPairs(id: String): String = {
+    val p = id.stripSuffix("_id")
+    s"""${sqlSimhashBands(s"$id, simhash", "sh")},
        |cand AS (
-       |  SELECT DISTINCT a.doc_id AS batch_doc, b.doc_id AS corpus_doc,
-       |    CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
-       |      (len(a.sset) + len(b.sset) - len(list_intersect(a.sset, b.sset))) AS jaccard
+       |  SELECT DISTINCT a.$id AS ${p}_a, b.$id AS ${p}_b,
+       |    a.simhash AS sim_a, b.simhash AS sim_b
        |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key
-       |   AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0)
-       |SELECT batch_doc, corpus_doc, jaccard FROM cand WHERE jaccard >= 0.35""".stripMargin
+       |    ON a.band = b.band AND a.band_key = b.band_key AND a.$id < b.$id)
+       |SELECT ${p}_a, ${p}_b, hamming FROM (
+       |  SELECT ${p}_a, ${p}_b, $sqlHamming
+       |  FROM cand)
+       |WHERE hamming <= 6""".stripMargin
+  }
+
+  /** Per-user 30-minute sessions over `events`: `brk` opens a session at a
+    * user's first event or after a gap of 30 minutes or more, `sid` numbers
+    * them. `cols` are the columns carried through. */
+  private def sqlSessionIds(cols: String): String =
+    s"""WITH x AS (
+       |  SELECT $cols,
+       |    CASE WHEN lag(ts) OVER w IS NULL
+       |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
+       |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+       |y AS (
+       |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+       |  FROM x)""".stripMargin
+
+  /** Each purchase with the same user's views in the hour up to it; `join`
+    * is JOIN, or LEFT JOIN to keep the never-matched purchases. */
+  private def sqlViewsBeforePurchase(join: String): String =
+    s"""SELECT p.event_id AS purchase_id, p.user_id,
+       |  CAST(p.ts AS TIMESTAMP) AS p_ts,
+       |  v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
+       |  p.value AS purchase_value
+       |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+       |$join (SELECT * FROM events WHERE event_type = 'view') v
+       |  ON v.user_id = p.user_id
+       | AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 1 HOUR""".stripMargin
+
+  /** The signup → view → click → purchase funnel: chained
+    * earliest-qualifying-event mins per user, lag sums in exact BIGINT
+    * micros (epoch_us of the micros-truncated timestamp on both sides).
+    * `withinUs` also bounds each stage to that many micros after the
+    * previous stage's time. */
+  private def sqlFunnel(withinUs: Option[Long]): String = {
+    def within(prev: String) =
+      withinUs.fold("")(us => s"\n         AND e.us <= $prev.t + $us")
+    s"""WITH e AS (SELECT user_id, event_type,
+       |            epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+       |s1 AS (SELECT user_id, min(us) AS t FROM e
+       |       WHERE event_type = 'signup' GROUP BY 1),
+       |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS pt
+       |       FROM e JOIN s1 USING (user_id)
+       |       WHERE e.event_type = 'view' AND e.us >= s1.t${within("s1")} GROUP BY 1),
+       |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS pt
+       |       FROM e JOIN s2 USING (user_id)
+       |       WHERE e.event_type = 'click' AND e.us >= s2.t${within("s2")} GROUP BY 1),
+       |s4 AS (SELECT e.user_id, min(e.us) AS t, min(s3.t) AS pt
+       |       FROM e JOIN s3 USING (user_id)
+       |       WHERE e.event_type = 'purchase' AND e.us >= s3.t${within("s3")} GROUP BY 1)
+       |SELECT CAST(1 AS BIGINT) AS stage, 'signup' AS event_type,
+       |       count(*) AS n_users, CAST(0 AS BIGINT) AS sum_lag_us FROM s1
+       |UNION ALL SELECT 2, 'view', count(*),
+       |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s2
+       |UNION ALL SELECT 3, 'click', count(*),
+       |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s3
+       |UNION ALL SELECT 4, 'purchase', count(*),
+       |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s4""".stripMargin
+  }
+
+  /** The `e` vector CTE: every embedding with its squared norm. */
+  private val sqlVecs =
+    s"e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings)"
+
+  /** [[sqlVecs]] plus each vector's [[sqlLshBucket]]. */
+  private def sqlLshVecs(planes: Int): String =
+    s"""e AS (SELECT vec_id, embedding, ${sqlLshBucket(planes)} AS bucket,
+       |    ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings)""".stripMargin
+
+  /** Top-5 neighbors per query of `from` by `score` DESC, neighbor_id
+    * tiebreak — the tail every ANN oracle ends with. */
+  private def sqlTop5(from: String, score: String = "cosine"): String =
+    s"""SELECT query_id, neighbor_id, rnk, $score FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY $score DESC, neighbor_id) AS rnk FROM $from)
+       |WHERE rnk <= 5""".stripMargin
+
+  /** Exact scan: queries 0..9 against every other vector of `e` (narrowed
+    * by `filter`), cosine-ranked to the top 5. */
+  private def sqlScanTop5(filter: String): String =
+    s"""pairs AS (
+       |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+       |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
+       |  FROM e q JOIN e n ON q.vec_id < 10 AND n.vec_id <> q.vec_id$filter)
+       |${sqlTop5("pairs")}""".stripMargin
+
+  /** The trained-centroid crossing over `e`: the fitted centroids as
+    * [[sqlDoubleLit]] literals (`c`), their squared norms (`cn`), and every
+    * vector's cosine to every centroid (`crossed`). */
+  private def sqlTrainedCrossing(cents: Array[Array[Double]]): String = {
+    val centsLit = cents.map(_.map(sqlDoubleLit).mkString("[", ", ", "]"))
+      .mkString("[", ", ", "]")
+    s"""c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
+       |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
+       |cn AS (SELECT centroid_id, cvec,
+       |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
+       |       FROM c),
+       |crossed AS (
+       |  SELECT e.vec_id, cn.centroid_id,
+       |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
+       |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
+       |  FROM e CROSS JOIN cn)""".stripMargin
+  }
+
+  /** Argmax cell per vector of `crossed` (ccos DESC, centroid_id tiebreak);
+    * `trainFrom` keeps only vectors with vec_id at or above it. */
+  private def sqlAssign(trainFrom: Option[Int] = None): String = {
+    val train = trainFrom.fold("")(n => s"\n    WHERE vec_id >= $n")
+    s"""assign AS (
+       |  SELECT vec_id, centroid_id FROM (
+       |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed$train) WHERE rn = 1)""".stripMargin
+  }
+
+  /** The `nprobe` nearest cells of each query vector (vec_id below
+    * `below`), the query id named `alias`. */
+  private def sqlProbes(alias: String, below: Int, nprobe: Int): String =
+    s"""probes AS (
+       |  SELECT vec_id AS $alias, centroid_id FROM (
+       |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY ccos DESC, centroid_id) AS rn
+       |    FROM crossed WHERE vec_id < $below) WHERE rn <= $nprobe)""".stripMargin
+
+  /** Trained IVF cells: the crossing, every vector's cell, and each of
+    * queries 0..9 probing its `IvfProbe` nearest. */
+  private def sqlTrainedIvfCells(cents: Array[Array[Double]]): String =
+    s"""${sqlTrainedCrossing(cents)},
+       |${sqlAssign()},
+       |${sqlProbes("query_id", 10, Similarity.IvfProbe)}""".stripMargin
+
+  /** IVF candidate join + exact rerank: the members of each probed cell
+    * scored by exact cosine, top 5 kept. */
+  private val sqlIvfRerank =
+    s"""pairs AS (
+       |  SELECT p.query_id, a.vec_id AS neighbor_id,
+       |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
+       |  FROM probes p
+       |  JOIN assign a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.query_id
+       |  JOIN e q ON q.vec_id = p.query_id
+       |  JOIN e n ON n.vec_id = a.vec_id)
+       |${sqlTop5("pairs")}""".stripMargin
+
+  /** recall@5 per (method, query) of `approx` against `exact`, over a
+    * spine of every method x query so a method that finds nothing reads 0.
+    * `methods` is the spine's VALUES body. */
+  private def sqlRecallRollup(methods: String): String =
+    s"""hits AS (
+       |  SELECT a.method, a.query_id, count(*) AS n_hits
+       |  FROM approx a JOIN exact e USING (query_id, neighbor_id)
+       |  GROUP BY 1, 2),
+       |spine AS (
+       |  SELECT m.method, q.query_id
+       |  FROM (SELECT DISTINCT query_id FROM exact) q
+       |  CROSS JOIN (VALUES $methods) m(method))
+       |SELECT spine.method, spine.query_id,
+       |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+       |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5 AS recall
+       |FROM spine LEFT JOIN hits h
+       |  ON h.method = spine.method AND h.query_id = spine.query_id""".stripMargin
+
+  /** The co-order regime probe: `inc` (distinct parts per order) and `cnt`,
+    * each pair's support among the orders sampled at
+    * `Graphs.RegimeProbeMod`. */
+  private def sqlRegimeProbe: String =
+    s"""WITH inc AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+       |cnt AS (
+       |  SELECT count(*) AS ns
+       |  FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
+       |  WHERE a.ok % ${Graphs.RegimeProbeMod} = 0
+       |  GROUP BY a.pk, b.pk)""".stripMargin
+
+  /** The `Graphs.HeavyPairCandidates` heaviest co-order pairs among the
+    * orders whose key is a multiple of `mod`, (ns DESC, u, v) tiebreak. */
+  private def sqlHeavyPairCand(mod: String): String =
+    s"""cand AS (
+       |  SELECT u, v FROM (
+       |    SELECT a.pk AS u, b.pk AS v, count(*) AS ns
+       |    FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
+       |    WHERE a.ok % $mod = 0
+       |    GROUP BY 1, 2
+       |    ORDER BY ns DESC, u, v
+       |    LIMIT ${Graphs.HeavyPairCandidates}))""".stripMargin
+
+  /** `m`: each doc's media fixture in closed form (kind, image dims and
+    * pixel sum, audio frames and sample, video dims), plus `extra` columns. */
+  private def sqlMediaFixtures(extra: String): String =
+    s"""m AS (SELECT doc_id,
+       |    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
+       |      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+       |    doc_id % 61 + 4 AS iw, doc_id % 37 + 4 AS ih,
+       |    (doc_id * 37) % 256 + (doc_id * 59) % 256 + (doc_id * 83) % 256 AS prgb,
+       |    doc_id % 800 + 50 AS af, doc_id % 2000 - 1000 AS av,
+       |    doc_id % 640 + 1 AS vw, doc_id % 480 + 1 AS vh$extra
+       |  FROM documents)""".stripMargin
 
   private val decQty = "CAST(l_quantity AS DECIMAL(18,2))"
   private val decRevenue =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))"
 
-  def oracleSql: Map[String, String] = Map(
+  /** Faces checked by another face's oracle: a second execution path
+    * (streaming, salted, bucketed) that must land exactly the rows of the
+    * face it names.
+    */
+  private val OracleTwins: Seq[(String, String)] = Seq(
+    // the settled stream equals the batch face: streaming is a delivery
+    // mechanism, not new semantics (q_stream_sessions is the
+    // sentinel-flushed fMGWS stream; q_stream_anomaly the custom-state run)
+    "q_stream_sessions" -> "q_window_session",
+    "q_stream_tumbling" -> "q_window_tumbling",
+    "q_stream_anomaly" -> "q_rolling_anomaly",
+    "q_stream_sketch_store" -> "q_sketch_store",
+    "q_stream_quarantine" -> "q_json_quarantine",
+    // batch merge vs micro-batched sink: the same versioned dimension
+    "q_stream_scd2" -> "q_scd2_customers",
+    // the streaming-maintained band index answers the identical
+    // batch-probes-corpus question
+    "q_stream_band_index" -> "q_dedup_incremental",
+    // the salted two-stage path equals the plain group-by exactly (decimal
+    // partial sums are associative), as the merged base+delta does
+    "q_salted_sum" -> "q_incremental_agg",
+    // one join, three physical paths: plain shuffle, salted
+    // (q_salted_join), co-bucketed (q_bucketed_join)
+    "q_bucketed_join" -> "q_salted_join")
+
+  def oracleSql: Map[String, String] = {
+    val own = ownOracleSql
+    own ++ OracleTwins.map { case (twin, of) => twin -> own(of) }
+  }
+
+  private def ownOracleSql: Map[String, String] = Map(
     "q_yesterday_post_ids" ->
       """SELECT o_orderkey AS post_id, o_orderdate AS date_gmt FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1995-03-15'
@@ -2112,13 +2414,6 @@ object SparkEntry {
         |    AS max_key_share
         |FROM c""".stripMargin,
 
-    // the salted two-stage path must equal the plain group-by exactly —
-    // decimal partial sums are associative, so the oracle IS the plain agg
-    "q_salted_sum" ->
-      s"""SELECT l_returnflag,
-         |  CAST(sum($decQty) AS DOUBLE) AS sum_qty, count(*) AS n
-         |FROM lineitem GROUP BY 1""".stripMargin,
-
     "q_union_nations" ->
       """SELECT DISTINCT c_nationkey AS nationkey FROM customer
         |UNION SELECT DISTINCT s_nationkey FROM supplier""".stripMargin,
@@ -2164,13 +2459,6 @@ object SparkEntry {
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2""".stripMargin,
 
-    // the streaming face must settle to exactly the batch aggregation —
-    // same oracle as q_window_tumbling, checked against the streaming run
-    "q_stream_tumbling" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start, event_type,
-        |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
     // the doubled stream must settle to exactly one row per event_id —
     // event_ids are unique in the table, so the oracle is the plain table
     "q_stream_dedup" ->
@@ -2185,46 +2473,15 @@ object SparkEntry {
         |SELECT e.event_id, e.user_id, c.cohort_day, e.event_type, e.value
         |FROM events e JOIN cohort c ON e.user_id = c.user_id""".stripMargin,
 
-    // the sentinel-flushed fMGWS stream must settle to exactly the batch
-    // session set — same oracle as q_window_session
-    "q_stream_sessions" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM x)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM y GROUP BY user_id, sid""".stripMargin,
-
     // the settled stream-stream inner join must equal the batch interval
     // join — the micros cast mirrors the stream's nanos→micros normalization
     "q_stream_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-        |  CAST(p.ts AS TIMESTAMP) AS p_ts,
-        |  v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
-        |  p.value AS purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON v.user_id = p.user_id
-        | AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 1 HOUR""".stripMargin,
+      sqlViewsBeforePurchase("JOIN"),
 
     // the OUTER face: same predicate, plus every never-matched purchase
     // with a NULL view — the rows the watermark finalizes
     "q_stream_left_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-        |  CAST(p.ts AS TIMESTAMP) AS p_ts,
-        |  v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
-        |  p.value AS purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-        |  ON v.user_id = p.user_id
-        | AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 1 HOUR""".stripMargin,
+      sqlViewsBeforePurchase("LEFT JOIN"),
 
     "q_window_sliding" ->
       """WITH b AS (SELECT TIMESTAMP '1970-01-01' + INTERVAL 1 SECOND *
@@ -2236,33 +2493,17 @@ object SparkEntry {
         |GROUP BY win_start""".stripMargin,
 
     "q_window_session" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM x)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM y GROUP BY user_id, sid""".stripMargin,
+      s"""${sqlSessionIds("user_id, ts, value")}
+         |SELECT user_id, min(ts) AS session_start,
+         |  max(ts) + INTERVAL 30 MINUTE AS session_end,
+         |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         |FROM y GROUP BY user_id, sid""".stripMargin,
 
     // sweep-line over the session intervals: ends (-1) order before
     // starts (+1) at equal instants (end-exclusive); the RANGE-frame
     // peer-grouped running sum has the same max as the row-granular one
     "q_max_concurrency" ->
-      """WITH x AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |y AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM x),
+      s"""${sqlSessionIds("user_id, ts")},
         |ses AS (
         |  SELECT min(ts) AS session_start, max(ts) + INTERVAL 30 MINUTE AS session_end
         |  FROM y GROUP BY user_id, sid),
@@ -2328,31 +2569,6 @@ object SparkEntry {
          |  AND n*qc - sc*sc > 0
          |  AND (n-1)*(c*n - sc)*(c*n - sc) > 9 * n * (n*qc - sc*sc)""".stripMargin,
 
-    // identical to q_rolling_anomaly: the streaming custom-state run must
-    // land exactly the batch window's anomalies (one oracle, two modes)
-    "q_stream_anomaly" ->
-      s"""WITH x AS (
-         |  SELECT event_id, user_id, ts, value,
-         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-         |  FROM events),
-         |f AS (
-         |  SELECT event_id, user_id, ts, value, c,
-         |    CAST(count(*) OVER w AS BIGINT) AS n,
-         |    CAST(sum(c) OVER w AS BIGINT) AS sc,
-         |    CAST(sum(c*c) OVER w AS BIGINT) AS qc
-         |  FROM x
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-         |    ROWS BETWEEN ${EventWindows.AnomalyFrame} PRECEDING AND 1 PRECEDING))
-         |SELECT event_id, user_id, ts, value,
-         |  CAST(c*n - sc AS DOUBLE) /
-         |    sqrt(CAST(n*qc - sc*sc AS DOUBLE) * CAST(n AS DOUBLE) /
-         |      CAST(n - 1 AS DOUBLE)) AS zscore
-         |FROM f
-         |WHERE n >= ${EventWindows.AnomalyMinN}
-         |  AND n*qc - sc*sc > 0
-         |  AND (n-1)*(c*n - sc)*(c*n - sc) > 9 * n * (n*qc - sc*sc)""".stripMargin,
-
     // per-user TWAP: exact cents×micros integer accumulation, one fixed
     // double division chain at the end
     "q_time_weighted" ->
@@ -2392,55 +2608,12 @@ object SparkEntry {
     // exact BIGINT micros (epoch_us of the micros-truncated timestamp on
     // both sides)
     "q_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |            epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |       WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS pt
-        |       FROM e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'view' AND e.us >= s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS pt
-        |       FROM e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.us >= s2.t GROUP BY 1),
-        |s4 AS (SELECT e.user_id, min(e.us) AS t, min(s3.t) AS pt
-        |       FROM e JOIN s3 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.us >= s3.t GROUP BY 1)
-        |SELECT CAST(1 AS BIGINT) AS stage, 'signup' AS event_type,
-        |       count(*) AS n_users, CAST(0 AS BIGINT) AS sum_lag_us FROM s1
-        |UNION ALL SELECT 2, 'view', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s2
-        |UNION ALL SELECT 3, 'click', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s3
-        |UNION ALL SELECT 4, 'purchase', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s4""".stripMargin,
+      sqlFunnel(withinUs = None),
 
     // same chain with each stage additionally bounded to 1h (3.6e9 us)
     // after the previous stage's time
     "q_funnel_windowed" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |            epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |s1 AS (SELECT user_id, min(us) AS t FROM e
-        |       WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.us) AS t, min(s1.t) AS pt
-        |       FROM e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'view' AND e.us >= s1.t
-        |         AND e.us <= s1.t + 3600000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.us) AS t, min(s2.t) AS pt
-        |       FROM e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.us >= s2.t
-        |         AND e.us <= s2.t + 3600000000 GROUP BY 1),
-        |s4 AS (SELECT e.user_id, min(e.us) AS t, min(s3.t) AS pt
-        |       FROM e JOIN s3 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.us >= s3.t
-        |         AND e.us <= s3.t + 3600000000 GROUP BY 1)
-        |SELECT CAST(1 AS BIGINT) AS stage, 'signup' AS event_type,
-        |       count(*) AS n_users, CAST(0 AS BIGINT) AS sum_lag_us FROM s1
-        |UNION ALL SELECT 2, 'view', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s2
-        |UNION ALL SELECT 3, 'click', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s3
-        |UNION ALL SELECT 4, 'purchase', count(*),
-        |       coalesce(CAST(sum(t - pt) AS BIGINT), 0) FROM s4""".stripMargin,
+      sqlFunnel(withinUs = Some(3600000000L)),
 
     "q_dedup_exact" ->
       """SELECT min(doc_id) AS doc_id,
@@ -2454,26 +2627,13 @@ object SparkEntry {
     // corpus-side (sides disjoint, so no ordering tiebreak); the Spark
     // side's distinct-set collapse and band-population capping are
     // optimizations proven recall-exact against exactly this semantics
-    "q_dedup_incremental" -> IncrementalNearDupOracleSql,
+    "q_dedup_incremental" -> sqlMinhashJoin("batch_doc", "corpus_doc",
+      "\n   AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0"),
 
-    // the STREAMING-maintained band index must answer the identical
-    // batch-probes-corpus question — one oracle, two maintenance paths
-    "q_stream_band_index" -> IncrementalNearDupOracleSql,
-
-    // independent implementation of connected components: transitive closure
-    // by recursive CTE (UNION's set semantics terminate cycles), then the
-    // component minimum as the label — versus Spark's min-label propagation
+    // independent implementation of connected components ([[sqlPairClosure]])
+    // versus Spark's min-label propagation
     "q_dedup_clusters" ->
-      s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)
+      s"""$sqlPairClosure
          |SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
          |  CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
          |FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id""".stripMargin,
@@ -2482,20 +2642,7 @@ object SparkEntry {
     // then a window argmax (Spark side is a max_by aggregation — different
     // mechanism, same selection, exact tie-break on (n_tokens DESC, doc_id))
     "q_dedup_keep_best" ->
-      s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-         |clu AS (
-         |  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-         |    CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
-         |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id),
+      s"""$sqlClusters,
          |tok AS (
          |  SELECT doc_id, ${sqlWordCount("text")} AS n_tokens FROM documents),
          |sel AS (
@@ -2528,15 +2675,7 @@ object SparkEntry {
       s"""WITH base AS (
          |  SELECT doc_id, lang, sset, len(sset) AS n
          |  FROM ($sqlShingles) WHERE len(sset) > 0),
-         |truth AS (
-         |  SELECT doc_a, doc_b, jaccard FROM (
-         |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |      CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
-         |        (a.n + b.n - len(list_intersect(a.sset, b.sset))) AS jaccard
-         |    FROM base a JOIN base b
-         |      ON a.lang = b.lang AND a.doc_id < b.doc_id
-         |     AND a.n * 5 >= b.n * 4 AND b.n * 5 >= a.n * 4)
-         |  WHERE jaccard >= 0.35),
+         |${sqlJaccardTruth("base")},
          |lsh AS ($sqlMinhashPairs),
          |binned AS (
          |  SELECT CASE WHEN t.jaccard >= 0.9 THEN '0.90-1.00'
@@ -2582,15 +2721,7 @@ object SparkEntry {
          |cost AS (
          |  SELECT bands, rows_per_band, count(*) AS n_cand_pairs
          |  FROM cand GROUP BY 1, 2),
-         |truth AS (
-         |  SELECT doc_a, doc_b, jaccard FROM (
-         |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |      CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE) /
-         |        (a.n + b.n - len(list_intersect(a.sset, b.sset))) AS jaccard
-         |    FROM keyed a JOIN keyed b
-         |      ON a.lang = b.lang AND a.doc_id < b.doc_id
-         |     AND a.n * 5 >= b.n * 4 AND b.n * 5 >= a.n * 4)
-         |  WHERE jaccard >= 0.35),
+         |${sqlJaccardTruth("keyed")},
          |truthrep AS (
          |  SELECT DISTINCT least(ra.rid, rb.rid) AS rid_a,
          |    greatest(ra.rid, rb.rid) AS rid_b, t.jaccard
@@ -2621,20 +2752,7 @@ object SparkEntry {
     "q_simhash" -> sqlSimhashDocs,
 
     "q_simhash_pairs" ->
-      s"""WITH sh AS ($sqlSimhashDocs),
-         |bands AS (
-         |  SELECT doc_id, simhash, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
-         |  FROM sh, range(0, 4) r(q)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    a.simhash AS sim_a, b.simhash AS sim_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, hamming FROM (
-         |  SELECT doc_a, doc_b, CAST(len(list_filter(range(1, 61),
-         |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming
-         |  FROM cand)
-         |WHERE hamming <= 6""".stripMargin,
+      s"WITH sh AS ($sqlSimhashDocs),\n${sqlSimhashPairs("doc_id")}",
 
     // Fingerprint-pair stats: same quarter-band candidate join as
     // q_simhash_pairs but aggregated per fingerprint pair — n_pairs is the
@@ -2647,16 +2765,13 @@ object SparkEntry {
          |  SELECT simhash, count(*) AS m, min(doc_id) AS id1,
          |    (list_sort(list(doc_id)))[2] AS id2
          |  FROM sh GROUP BY simhash),
-         |bands AS (
-         |  SELECT simhash, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
-         |  FROM g, range(0, 4) r(q)),
+         |${sqlSimhashBands("simhash", "g")},
          |fp AS (
          |  SELECT DISTINCT a.simhash AS sim_a, b.simhash AS sim_b
          |  FROM bands a JOIN bands b
          |    ON a.band = b.band AND a.band_key = b.band_key AND a.simhash < b.simhash),
          |fph AS (
-         |  SELECT sim_a, sim_b, CAST(len(list_filter(range(1, 61),
-         |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming
+         |  SELECT sim_a, sim_b, $sqlHamming
          |  FROM fp),
          |cross_stats AS (
          |  SELECT f.sim_a, f.sim_b, f.hamming,
@@ -2705,19 +2820,7 @@ object SparkEntry {
          |      ELSE CAST([] AS VARCHAR[]) END), t -> ${sqlMd5Hash60("t", "0")}) AS th
          |  FROM documents),
          |sh AS (SELECT media_id, $sqlSimhashExpr AS simhash FROM g),
-         |bands AS (
-         |  SELECT media_id, simhash, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
-         |  FROM sh, range(0, 4) r(q)),
-         |cand AS (
-         |  SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-         |    a.simhash AS sim_a, b.simhash AS sim_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key AND a.media_id < b.media_id)
-         |SELECT media_a, media_b, hamming FROM (
-         |  SELECT media_a, media_b, CAST(len(list_filter(range(1, 61),
-         |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming
-         |  FROM cand)
-         |WHERE hamming <= 6""".stripMargin,
+         |${sqlSimhashPairs("media_id")}""".stripMargin,
 
     // audio per-channel features: the WAV fixture's closed forms replayed
     // from `documents` (text is pure ASCII so chars ARE the PCM-encoded
@@ -2764,19 +2867,7 @@ object SparkEntry {
          |      ELSE CAST([] AS VARCHAR[]) END), t -> ${sqlMd5Hash60("t", "0")}) AS th
          |  FROM q),
          |sh AS (SELECT media_id, $sqlSimhashExpr AS simhash FROM g),
-         |bands AS (
-         |  SELECT media_id, simhash, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
-         |  FROM sh, range(0, 4) r(q)),
-         |cand AS (
-         |  SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-         |    a.simhash AS sim_a, b.simhash AS sim_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key AND a.media_id < b.media_id)
-         |SELECT media_a, media_b, hamming FROM (
-         |  SELECT media_a, media_b, CAST(len(list_filter(range(1, 61),
-         |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming
-         |  FROM cand)
-         |WHERE hamming <= 6""".stripMargin,
+         |${sqlSimhashPairs("media_id")}""".stripMargin,
 
     // SPECTRAL audio near-dup: samples rebuilt from text (channel-0 closed
     // form), then the IDENTICAL integer DFT — the twiddle table below is
@@ -2819,44 +2910,17 @@ object SparkEntry {
          |      t -> ${sqlMd5Hash60("t", "0")}) AS th
          |  FROM q),
          |sh AS (SELECT media_id, $sqlSimhashExpr AS simhash FROM g),
-         |bands AS (
-         |  SELECT media_id, simhash, r.q AS band, substring(simhash, r.q*15+1, 15) AS band_key
-         |  FROM sh, range(0, 4) r(q)),
-         |cand AS (
-         |  SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-         |    a.simhash AS sim_a, b.simhash AS sim_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_key = b.band_key AND a.media_id < b.media_id)
-         |SELECT media_a, media_b, hamming FROM (
-         |  SELECT media_a, media_b, CAST(len(list_filter(range(1, 61),
-         |    i -> substring(sim_a, i, 1) <> substring(sim_b, i, 1))) AS BIGINT) AS hamming
-         |  FROM cand)
-         |WHERE hamming <= 6""".stripMargin
+         |${sqlSimhashPairs("media_id")}""".stripMargin
     },
 
     "q_ann_cosine" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-         |pairs AS (
-         |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-         |  FROM e q JOIN e n ON q.vec_id < 10 AND n.vec_id <> q.vec_id)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-         |WHERE rnk <= 5""".stripMargin,
+      s"WITH $sqlVecs,\n${sqlScanTop5("")}",
 
     // filtered vector search: same scoring, candidates restricted by the
     // metadata predicate BEFORE ranking
     "q_ann_filtered" ->
       s"""WITH e AS (SELECT vec_id, embedding, label, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-         |pairs AS (
-         |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-         |  FROM e q JOIN e n ON q.vec_id < 10 AND n.vec_id <> q.vec_id AND n.label = 1)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-         |WHERE rnk <= 5""".stripMargin,
+         |${sqlScanTop5(" AND n.label = 1")}""".stripMargin,
 
     "q_ann_ivf" -> sqlIvf(graft.operators.Similarity.IvfProbe),
 
@@ -2911,10 +2975,7 @@ object SparkEntry {
          |kept AS (
          |  SELECT * FROM scored
          |  WHERE n_tokens >= 5 AND stopword_ratio >= 0.05 AND punct_ratio <= 0.2)
-         |SELECT doc_id, lang, n_tokens, stopword_ratio FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-         |  FROM kept)
-         |WHERE rn = 1""".stripMargin
+         |${sqlFirstPerFingerprint("doc_id, lang, n_tokens, stopword_ratio")}""".stripMargin
     },
 
     // the composed filter stack: quality gates + dup-2-gram gate + per-lang
@@ -2945,10 +3006,7 @@ object SparkEntry {
          |  WHERE n_tokens >= 5 AND stopword_ratio >= 0.05 AND punct_ratio <= 0.2
          |    AND dup_2gram_ratio <= 0.3
          |    AND n_chars >= p05 AND n_chars <= p95)
-         |SELECT doc_id, lang, n_tokens, n_chars FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-         |  FROM kept)
-         |WHERE rn = 1""".stripMargin
+         |${sqlFirstPerFingerprint("doc_id, lang, n_tokens, n_chars")}""".stripMargin
     },
 
     "q_repetition_score" -> {
@@ -2978,34 +3036,13 @@ object SparkEntry {
     // explicit CASTs force DuckDB through the identical double addition,
     // so both engines compare against the same bit pattern. (A 0.95
     // literal would be wrong the same way.)
-    "q_hash_split" ->
-      s"""SELECT doc_id, u,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < CAST(0.9 AS DOUBLE) + CAST(0.05 AS DOUBLE) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM (SELECT doc_id,
-         |        CAST(${sqlMd5Hash60("CAST(doc_id AS VARCHAR)", "0")} AS DOUBLE)
-         |          / 1152921504606846976.0 AS u
-         |      FROM documents)""".stripMargin,
+    "q_hash_split" -> sqlHashSplit("doc_id", "doc_id", "documents"),
 
     // split leakage: the q_dedup_clusters recursive-CTE labels composed
     // with the q_hash_split assignment — val/test docs sharing a cluster
     // with >=1 train doc
     "q_split_leakage" ->
-      s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-         |clu AS (
-         |  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-         |    CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
-         |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id),
+      s"""$sqlClusters,
          |sp AS (
          |  SELECT doc_id,
          |    CASE WHEN u < 0.9 THEN 'train'
@@ -3029,54 +3066,14 @@ object SparkEntry {
     // CLUSTER id with the q_hash_split boundary scheme — a cluster cannot
     // straddle splits by construction
     "q_cluster_split" ->
-      s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-         |clu AS (
-         |  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-         |    CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
-         |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id)
-         |SELECT doc_id, cluster_id, u,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < CAST(0.9 AS DOUBLE) + CAST(0.05 AS DOUBLE) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM (SELECT doc_id, cluster_id,
-         |        CAST(${sqlMd5Hash60("CAST(cluster_id AS VARCHAR)", "0")} AS DOUBLE)
-         |          / 1152921504606846976.0 AS u
-         |      FROM clu)""".stripMargin,
+      s"$sqlClusters\n${sqlHashSplit("doc_id, cluster_id", "cluster_id", "clu")}",
 
     // decontamination closure: the q_contamination hit set (plus clusters
     // containing an eval doc) expanded through the recursive cluster
     // labels to every training member
-    "q_contamination_closure" -> {
-      val t = sqlTokens("text")
-      val gram5 = "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]"
-      s"""WITH RECURSIVE pairs AS ($sqlMinhashPairs),
-         |edges AS (
-         |  SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |labels AS (
-         |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-         |clu AS (
-         |  SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-         |    CAST(coalesce(l.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
-         |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id),
-         |tok AS (SELECT doc_id, $t AS t FROM documents),
-         |g AS (SELECT doc_id,
-         |        unnest(list_distinct(list_transform(range(1, len(t) - 3),
-         |          i -> ${sqlMd5Hash60(gram5, "0")}))) AS gh
-         |      FROM tok WHERE len(t) >= 5),
+    "q_contamination_closure" ->
+      s"""$sqlClusters,
+         |$sqlGram5Hashes,
          |hits AS (
          |  SELECT DISTINCT tr.doc_id
          |  FROM g tr
@@ -3089,8 +3086,7 @@ object SparkEntry {
          |FROM clu c
          |JOIN hitclusters hc ON c.cluster_id = hc.cluster_id
          |LEFT JOIN hits h ON h.doc_id = c.doc_id
-         |WHERE c.doc_id >= 50""".stripMargin
-    },
+         |WHERE c.doc_id >= 50""".stripMargin,
 
     // mixture weights: exact ints + one floor'd double division per row —
     // floor (not CAST) because DuckDB's double->BIGINT cast rounds while
@@ -3107,22 +3103,15 @@ object SparkEntry {
         |    (n_docs * n_docs)) AS BIGINT) AS weight_ppm
         |FROM m""".stripMargin,
 
-    "q_contamination" -> {
-      val t = sqlTokens("text")
-      val gram5 = "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]"
-      s"""WITH tok AS (SELECT doc_id, $t AS t FROM documents),
-         |g AS (SELECT doc_id,
-         |        unnest(list_distinct(list_transform(range(1, len(t) - 3),
-         |          i -> ${sqlMd5Hash60(gram5, "0")}))) AS gh
-         |      FROM tok WHERE len(t) >= 5)
+    "q_contamination" ->
+      s"""WITH $sqlGram5Hashes
          |SELECT tr.doc_id, count(DISTINCT tr.gh) AS n_shared_grams,
          |  count(DISTINCT ev.eval_id) AS n_eval_docs
          |FROM g tr
          |JOIN (SELECT gh, doc_id AS eval_id FROM g WHERE doc_id < 50) ev
          |  ON tr.gh = ev.gh
          |WHERE tr.doc_id >= 50
-         |GROUP BY tr.doc_id""".stripMargin
-    },
+         |GROUP BY tr.doc_id""".stripMargin,
 
     // the oracle computes the NAIVE global cumulative sum; the Spark side's
     // two-stage bucketed prefix sum must land on identical numbers
@@ -3173,11 +3162,8 @@ object SparkEntry {
 
     // linear idf (N/df): transcendental-free so the score is the identical
     // IEEE (double * int) / int chain in both engines (see tfidfTopK scaladoc)
-    "q_tfidf_topk" -> {
-      val toks = sqlTokens("text")
-      s"""WITH terms AS (
-         |  SELECT doc_id, lower(unnest($toks)) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
+    "q_tfidf_topk" ->
+      s"""WITH $sqlTermFreqs,
          |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
          |n AS (SELECT count(*) AS n_docs FROM documents)
          |SELECT doc_id, term, tf, df, score, rnk FROM (
@@ -3186,8 +3172,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY tf.doc_id
          |      ORDER BY CAST(tf.tf AS DOUBLE) * n.n_docs / df.df DESC, tf.term) AS rnk
          |  FROM tf JOIN df USING (term) CROSS JOIN n)
-         |WHERE rnk <= 3""".stripMargin
-    },
+         |WHERE rnk <= 3""".stripMargin,
 
     "q_vocab_topk" -> {
       val toks = sqlTokens("text")
@@ -3205,15 +3190,11 @@ object SparkEntry {
         |FROM documents
         |WHERE strpos(lower(text), 'hash join') > 0""".stripMargin,
 
-    "q_bool_search" -> {
-      val toks = sqlTokens("text")
-      s"""WITH terms AS (
-         |  SELECT doc_id, lower(unnest($toks)) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2)
+    "q_bool_search" ->
+      s"""WITH $sqlTermFreqs
          |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS total_tf
          |FROM tf WHERE term IN ('vector', 'merge')
-         |GROUP BY doc_id HAVING count(*) = 2""".stripMargin
-    },
+         |GROUP BY doc_id HAVING count(*) = 2""".stripMargin,
 
     // mirror of TextAnalysis.bm25Search: rational Robertson idf (no libm
     // ln), identical IEEE op tree, fixed-order cross-term sum. The float
@@ -3273,12 +3254,7 @@ object SparkEntry {
       val termIn = qs.flatMap(_._2).distinct.map(t => s"'$t'").mkString(", ")
       val qidIn = qs.map(_._1).mkString(", ")
       s"""WITH qterms(query_id, ti, term) AS (SELECT * FROM (VALUES $qtVals)),
-         |$sqlBm25Base,
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term,
-         |    $sqlBm25Tscore AS tscore
-         |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
-         |  WHERE tf.term IN ($termIn)),
+         |${sqlBm25Scored(termIn)},
          |lexagg AS (
          |  SELECT q.query_id, s.doc_id,
          |    sum(CASE WHEN q.ti = 0 THEN tscore END) AS s_0,
@@ -3831,14 +3807,7 @@ object SparkEntry {
     // deterministic
     "q_co_order_heavy_topk" ->
       s"""WITH inc AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |cand AS (
-         |  SELECT u, v FROM (
-         |    SELECT a.pk AS u, b.pk AS v, count(*) AS ns
-         |    FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
-         |    WHERE a.ok % ${Graphs.HeavyPairSampleMod} = 0
-         |    GROUP BY 1, 2
-         |    ORDER BY ns DESC, u, v
-         |    LIMIT ${Graphs.HeavyPairCandidates}))
+         |${sqlHeavyPairCand(Graphs.HeavyPairSampleMod.toString)}
          |SELECT c.u, c.v, count(*) AS n_orders
          |FROM cand c
          |JOIN inc a ON a.pk = c.u
@@ -3881,12 +3850,7 @@ object SparkEntry {
     // pair-count distribution, decide exact-fallback vs sampled rate —
     // chooser replicated as the same integer CASE ladder
     "q_co_order_regime" ->
-      s"""WITH inc AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |cnt AS (
-         |  SELECT count(*) AS ns
-         |  FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
-         |  WHERE a.ok % ${Graphs.RegimeProbeMod} = 0
-         |  GROUP BY a.pk, b.pk),
+      s"""$sqlRegimeProbe,
          |probe AS (
          |  SELECT CAST(coalesce(max(ns), 0) AS BIGINT) AS max_sampled,
          |    CAST(coalesce(sum(CASE WHEN ns >= ${Graphs.RegimeDetectMin}
@@ -3904,12 +3868,7 @@ object SparkEntry {
     // chosen_mod otherwise (both branches written out; the decision's
     // scalar subquery selects one)
     "q_co_order_auto" ->
-      s"""WITH inc AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |cnt AS (
-         |  SELECT count(*) AS ns
-         |  FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
-         |  WHERE a.ok % ${Graphs.RegimeProbeMod} = 0
-         |  GROUP BY a.pk, b.pk),
+      s"""$sqlRegimeProbe,
          |decision AS (
          |  SELECT ${sqlChosenMod("CAST(coalesce(max(ns), 0) AS BIGINT)")} AS chosen_mod
          |  FROM cnt),
@@ -3919,14 +3878,7 @@ object SparkEntry {
          |  GROUP BY 1, 2
          |  ORDER BY n_orders DESC, u, v
          |  LIMIT 20),
-         |cand AS (
-         |  SELECT u, v FROM (
-         |    SELECT a.pk AS u, b.pk AS v, count(*) AS ns
-         |    FROM inc a JOIN inc b ON a.ok = b.ok AND a.pk < b.pk
-         |    WHERE a.ok % (SELECT chosen_mod FROM decision) = 0
-         |    GROUP BY 1, 2
-         |    ORDER BY ns DESC, u, v
-         |    LIMIT ${Graphs.HeavyPairCandidates})),
+         |${sqlHeavyPairCand("(SELECT chosen_mod FROM decision)")},
          |sampled_topk AS (
          |  SELECT c.u, c.v, count(*) AS n_orders
          |  FROM cand c
@@ -3962,15 +3914,7 @@ object SparkEntry {
     // of value (id%2000-1000); video = the 12-byte stub header + utf-8
     // text, frames = every 4th 64-byte chunk (ceil(ceil(len/64)/4))
     "q_media_features" ->
-      """WITH m AS (SELECT doc_id,
-        |    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |    doc_id % 61 + 4 AS iw, doc_id % 37 + 4 AS ih,
-        |    (doc_id * 37) % 256 + (doc_id * 59) % 256 + (doc_id * 83) % 256 AS prgb,
-        |    doc_id % 800 + 50 AS af, doc_id % 2000 - 1000 AS av,
-        |    doc_id % 640 + 1 AS vw, doc_id % 480 + 1 AS vh,
-        |    octet_length(encode(text)) AS clen
-        |  FROM documents)
+      s"""WITH ${sqlMediaFixtures(",\n    octet_length(encode(text)) AS clen")}
         |SELECT kind, count(*) AS n,
         |  CAST(sum(CASE kind WHEN 'image' THEN iw WHEN 'video' THEN vw ELSE 0 END) AS BIGINT) AS sum_width,
         |  CAST(sum(CASE kind WHEN 'image' THEN ih WHEN 'video' THEN vh ELSE 0 END) AS BIGINT) AS sum_height,
@@ -3987,14 +3931,7 @@ object SparkEntry {
     // evaluates (audio has no resize: dims 0 on both engines). CASE guards
     // the division so the audio branch never evaluates 32/0.
     "q_media_pipeline" ->
-      """WITH m AS (SELECT doc_id,
-        |    CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |    doc_id % 61 + 4 AS iw, doc_id % 37 + 4 AS ih,
-        |    (doc_id * 37) % 256 + (doc_id * 59) % 256 + (doc_id * 83) % 256 AS prgb,
-        |    doc_id % 800 + 50 AS af, doc_id % 2000 - 1000 AS av,
-        |    doc_id % 640 + 1 AS vw, doc_id % 480 + 1 AS vh
-        |  FROM documents),
+      s"""WITH ${sqlMediaFixtures("")},
         |r AS (SELECT kind,
         |    CASE kind WHEN 'image' THEN iw WHEN 'video' THEN vw ELSE 0 END AS w,
         |    CASE kind WHEN 'image' THEN ih WHEN 'video' THEN vh ELSE 0 END AS h,
@@ -4096,7 +4033,23 @@ object SparkEntry {
     // full SCD2 result set built declaratively: every current row either
     // stays open (key not in the update batch) or is closed at the batch's
     // effective time with a reopened _V2 version; new keys open directly
-    "q_scd2_customers" -> Scd2OracleSql,
+    "q_scd2_customers" ->
+      """WITH upd AS (SELECT c_custkey, c_name, c_mktsegment || '_V2' AS c_mktsegment
+        |             FROM customer WHERE c_custkey % 7 = 0),
+        |nw AS (SELECT c_custkey + 1000000 AS c_custkey, 'NEW_' || c_name AS c_name,
+        |              c_mktsegment
+        |       FROM customer WHERE c_custkey % 11 = 0)
+        |SELECT c_custkey, c_name, c_mktsegment,
+        |  TIMESTAMP '1990-01-01 00:00:00' AS valid_from,
+        |  CASE WHEN c_custkey % 7 = 0 THEN TIMESTAMP '1996-06-01 00:00:00' END AS valid_to,
+        |  (c_custkey % 7 <> 0) AS is_current
+        |FROM customer
+        |UNION ALL
+        |SELECT c_custkey, c_name, c_mktsegment,
+        |  TIMESTAMP '1996-06-01 00:00:00', NULL, TRUE FROM upd
+        |UNION ALL
+        |SELECT c_custkey, c_name, c_mktsegment,
+        |  TIMESTAMP '1996-06-01 00:00:00', NULL, TRUE FROM nw""".stripMargin,
 
     // both as-of states derived from the source table + the %7/%11 rules:
     // pre-change = exactly the original dimension; post-change adds the
@@ -4112,9 +4065,6 @@ object SparkEntry {
         |  (SELECT count(*) FROM customer WHERE c_custkey % 7 = 0),
         |  (SELECT count(*) FROM customer WHERE c_custkey % 11 = 0)
         |FROM customer""".stripMargin,
-    // the streaming sink lands the identical versioned dimension — one
-    // oracle, two execution paths (batch merge vs micro-batched sink)
-    "q_stream_scd2" -> Scd2OracleSql,
 
     // one scan, long format; casts to VARCHAR happen AFTER min/max on the
     // native type on both engines
@@ -4128,16 +4078,6 @@ object SparkEntry {
            |FROM documents""".stripMargin
       Seq("doc_id", "lang", "source", "n_chars").map(leg).mkString("\nUNION ALL\n")
     },
-
-    // the bucketed layout must be value-identical to the plain join — one
-    // oracle (the q_salted_join semantics), three physical paths: plain
-    // shuffle (oracle), salted (q_salted_join), co-bucketed (this)
-    "q_bucketed_join" ->
-      """SELECT o_orderstatus,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  count(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
 
     // oracle recomputes from the UNPARTITIONED events parquet — pruning must
     // change the IO, never the answer
@@ -4214,15 +4154,6 @@ object SparkEntry {
         |FROM orders
         |GROUP BY 1""".stripMargin,
 
-    // the streaming-maintained store must answer exactly like the
-    // batch-built one — same oracle as q_sketch_store
-    "q_stream_sketch_store" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users,
-        |  TRUE AS within_bound
-        |FROM events
-        |WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-08' AND DATE '2024-01-21'
-        |GROUP BY 1""".stripMargin,
-
     // the settled streaming rollup must equal the batch rollup over the
     // source (overlap-replayed rows deduped by the landing's anti-join;
     // every partition refresh recomputed from the settled landing)
@@ -4295,16 +4226,6 @@ object SparkEntry {
         |SELECT 'quarantined', count(*), CAST(0 AS BIGINT), CAST(NULL AS BIGINT)
         |FROM documents WHERE doc_id % 7 = 3""".stripMargin,
 
-    // one oracle, two execution modes: the settled stream stores must
-    // answer exactly the batch quarantine report
-    "q_stream_quarantine" ->
-      """SELECT 'parsed' AS disposition, count(*) AS n_rows,
-        |  count(*) AS n_ids, sum(n_chars) AS sum_chars
-        |FROM documents WHERE doc_id % 7 <> 3
-        |UNION ALL
-        |SELECT 'quarantined', count(*), CAST(0 AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM documents WHERE doc_id % 7 = 3""".stripMargin,
-
     "q_ref_integrity" -> {
       def rel(name: String, child: String, ckey: String,
           parent: String, pkey: String) =
@@ -4333,10 +4254,7 @@ object SparkEntry {
     // left fold (list(... ORDER BY pos) + list_reduce ≡ Spark's
     // sort_array + aggregate with 0.0 seed: 0.0 + t1 == t1 exactly)
     "q_bigram_fluency" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH $sqlSplitToks,
         |uni AS (SELECT u.w, count(*) AS c_uni
         |        FROM toks, LATERAL UNNEST(t) AS u(w) GROUP BY 1),
         |v AS (SELECT count(*) AS vocab_n FROM uni),
@@ -4361,10 +4279,7 @@ object SparkEntry {
     // windows, md5 over the space-rejoined span (k = 8 appears as the
     // literals 7 = k−1 and 8)
     "q_substring_dup" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH $sqlSplitToks,
         |sp AS (
         |  SELECT DISTINCT doc_id,
         |    md5(array_to_string(list_slice(t, u.i, u.i + 7), ' ')) AS h
@@ -4386,9 +4301,9 @@ object SparkEntry {
     * just 16×64 doubles, so Verify serializes it into the oracle as
     * literals) and the LSH-bucketed queries (the plane COUNT is derived from
     * the corpus size; the plane values themselves stay md5-derivable in
-    * SQL). `Double.toString` emits the shortest decimal that round-trips,
-    * and DuckDB parses decimal literals to the nearest double, so the oracle
-    * computes against bit-identical centroids. [[Similarity.trainedCentroids]]
+    * SQL). [[sqlDoubleLit]] writes each double so that DuckDB parses it
+    * back to the same bits, so the oracle computes against bit-identical
+    * centroids. [[Similarity.trainedCentroids]]
     * memoizes per (dataset, nlist, iters): the query run and this generator
     * see the SAME model instance, which is what makes the hash-compare fair.
     *
@@ -4507,13 +4422,7 @@ object SparkEntry {
   private def pqIndexSql(s: SparkSession, d: String): String = {
     val books = Similarity.trainedPqCodebooks(s, d)
     val (mN, kN, sub) = (Similarity.PqM, Similarity.PqK, Similarity.PqSubDim)
-    // SCIENTIFIC notation, not Double.toString: DuckDB types plain decimal
-    // literals DECIMAL and unifies a list literal's elements to one common
-    // scale — values whose shortest repr needs a larger scale get ROUNDED
-    // (one-ulp codebook drift, caught by the q_ann_pq hash). E-notation
-    // literals are typed DOUBLE outright; %.17e round-trips every double.
-    val cbLit = books.map(_.map(_.map(v =>
-        String.format(java.util.Locale.ROOT, "%.17e", Double.box(v)))
+    val cbLit = books.map(_.map(_.map(sqlDoubleLit)
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")).mkString("[", ", ", "]")
     // `pairs` (the full-corpus ADC scan) belongs only to the standalone PQ
     // faces — IVF-PQ replaces it with the cell-bounded candidate set.
@@ -4521,7 +4430,7 @@ object SparkEntry {
          |  SELECT CAST(rm.i - 1 AS INTEGER) AS m, CAST(rk.i - 1 AS INTEGER) AS code,
          |    t.cbs[rm.i][rk.i] AS csub
          |  FROM (SELECT $cbLit AS cbs) t, range(1, ${mN + 1}) rm(i), range(1, ${kN + 1}) rk(i)),
-         |e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
+         |$sqlVecs,
          |sv AS (
          |  SELECT vec_id, CAST(rm.i - 1 AS INTEGER) AS m,
          |    list_transform(range(1, ${sub + 1}),
@@ -4560,12 +4469,13 @@ object SparkEntry {
     * rerank — the production two-stage recipe, shortlist parameterized so
     * the recall sweep reuses the exact statement the standalone face is
     * checked against. */
-  private def sqlPqRerank(core: String, shortlist: Int): String =
+  private def sqlPqRerank(core: String, shortlist: Int,
+      from: String = "pairs"): String =
     s"""$core,
        |short AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY approx_cosine DESC, neighbor_id) AS rn FROM pairs)
+       |      ORDER BY approx_cosine DESC, neighbor_id) AS rn FROM $from)
        |  WHERE rn <= $shortlist),
        |exactp AS (
        |  SELECT s.query_id, s.neighbor_id,
@@ -4573,10 +4483,7 @@ object SparkEntry {
        |  FROM short s
        |  JOIN e q ON q.vec_id = s.query_id
        |  JOIN e n ON n.vec_id = s.neighbor_id)
-       |SELECT query_id, neighbor_id, rnk, cosine FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM exactp)
-       |WHERE rnk <= 5""".stripMargin
+       |${sqlTop5("exactp")}""".stripMargin
 
   /** Mirror of [[graft.operators.Similarity.pqTopK]] over the SAME fitted
     * codebooks (memoized — query run and generator see one model instance,
@@ -4590,72 +4497,28 @@ object SparkEntry {
   private def pqOracles(s: SparkSession, d: String): Map[String, String] = {
     val pqIndex = pqIndexSql(s, d)
     val core = pqPairsCoreSql(s, d)
-    // the trained coarse quantizer's CTEs (mirrors centroidOracles' trained
-    // IVF assign/probe dataflow) — the cell bound IVF-PQ composes with
     val cents = Similarity.trainedCentroids(s, d)
-    val centsLit = cents.map(_.map(v =>
-        String.format(java.util.Locale.ROOT, "%.17e", Double.box(v)))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val ivfCtes =
-      s"""c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-         |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-         |cn AS (SELECT centroid_id, cvec,
-         |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-         |       FROM c),
-         |crossed AS (
-         |  SELECT e.vec_id, cn.centroid_id,
-         |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-         |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-         |  FROM e CROSS JOIN cn),
-         |assign AS (
-         |  SELECT vec_id, centroid_id FROM (
-         |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed) WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, centroid_id FROM (
-         |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, centroid_id) AS rn
-         |    FROM crossed WHERE vec_id < 10) WHERE rn <= ${Similarity.IvfProbe})""".stripMargin
     Map(
-      "q_ann_pq" ->
-        s"""$core
-           |SELECT query_id, neighbor_id, rnk, approx_cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY approx_cosine DESC, neighbor_id) AS rnk FROM pairs)
-           |WHERE rnk <= 5""".stripMargin,
+      "q_ann_pq" -> s"$core\n${sqlTop5("pairs", "approx_cosine")}",
 
       // ADC shortlist + exact cosine rerank over raw vectors — the
       // production two-stage recipe ([[sqlPqRerank]], shared with the sweep)
       "q_ann_pq_rerank" -> sqlPqRerank(core, Similarity.PqShortlist),
 
-      // IVF-PQ: trained-cell probes bound the candidates, ADC over codes
-      // scores them, exact rerank of the shortlist — the FAISS default
-      // composition, every stage mirrored
-      "q_ann_ivfpq" ->
+      // IVF-PQ: trained-cell probes (the q_ann_ivf_trained cells) bound the
+      // candidates, ADC over codes scores them, exact rerank of the
+      // shortlist — the FAISS default composition, every stage mirrored
+      "q_ann_ivfpq" -> sqlPqRerank(
         s"""WITH $pqIndex,
-           |$ivfCtes,
+           |${sqlTrainedIvfCells(cents)},
            |adc AS (
            |  SELECT p.query_id, a.vec_id AS neighbor_id,
            |    ${sqlDot("q.embedding", "n.rv")} / (sqrt(q.nrm2) * sqrt(n.rnrm2)) AS approx_cosine
            |  FROM probes p
            |  JOIN assign a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.query_id
            |  JOIN rn2 n ON n.vec_id = a.vec_id
-           |  JOIN e q ON q.vec_id = p.query_id),
-           |short AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY approx_cosine DESC, neighbor_id) AS rn FROM adc)
-           |  WHERE rn <= ${Similarity.PqShortlist}),
-           |exactp AS (
-           |  SELECT s.query_id, s.neighbor_id,
-           |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |  FROM short s
-           |  JOIN e q ON q.vec_id = s.query_id
-           |  JOIN e n ON n.vec_id = s.neighbor_id)
-           |SELECT query_id, neighbor_id, rnk, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM exactp)
-           |WHERE rnk <= 5""".stripMargin)
+           |  JOIN e q ON q.vec_id = p.query_id)""".stripMargin,
+        Similarity.PqShortlist, "adc"))
   }
 
   /** Mirror of [[graft.operators.Similarity.annRecall]]: recall@5 of each
@@ -4693,20 +4556,8 @@ object SparkEntry {
          |  UNION ALL SELECT 'pq', query_id, neighbor_id FROM a_pq
          |  UNION ALL SELECT 'pq_rerank', query_id, neighbor_id FROM a_pqr
          |  UNION ALL SELECT 'ivf_pq', query_id, neighbor_id FROM a_ivfpq),
-         |hits AS (
-         |  SELECT a.method, a.query_id, count(*) AS n_hits
-         |  FROM approx a JOIN exact e USING (query_id, neighbor_id)
-         |  GROUP BY 1, 2),
-         |spine AS (
-         |  SELECT m.method, q.query_id
-         |  FROM (SELECT DISTINCT query_id FROM exact) q
-         |  CROSS JOIN (VALUES ('lsh'), ('lsh_multiprobe'), ('ivf'),
-         |    ('ivf_trained'), ('pq'), ('pq_rerank'), ('ivf_pq')) m(method))
-         |SELECT spine.method, spine.query_id,
-         |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5 AS recall
-         |FROM spine LEFT JOIN hits h
-         |  ON h.method = spine.method AND h.query_id = spine.query_id""".stripMargin)
+         |${sqlRecallRollup("('lsh'), ('lsh_multiprobe'), ('ivf'),\n    " +
+              "('ivf_trained'), ('pq'), ('pq_rerank'), ('ivf_pq')")}""".stripMargin)
   }
 
   /** Mirror of [[graft.operators.Similarity.annRecallSweep]]: the same
@@ -4741,19 +4592,7 @@ object SparkEntry {
          |$ctes,
          |approx AS (
          |  $union),
-         |hits AS (
-         |  SELECT a.method, a.query_id, count(*) AS n_hits
-         |  FROM approx a JOIN exact e USING (query_id, neighbor_id)
-         |  GROUP BY 1, 2),
-         |spine AS (
-         |  SELECT m.method, q.query_id
-         |  FROM (SELECT DISTINCT query_id FROM exact) q
-         |  CROSS JOIN (VALUES $values) m(method))
-         |SELECT spine.method, spine.query_id,
-         |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 5 AS recall
-         |FROM spine LEFT JOIN hits h
-         |  ON h.method = spine.method AND h.query_id = spine.query_id""".stripMargin)
+         |${sqlRecallRollup(values)}""".stripMargin)
   }
 
   /** Graph-derived PageRank scale (overflow guard): the query run derives
@@ -4795,23 +4634,12 @@ object SparkEntry {
     val planes = Similarity.lshPlanes(s, d)
     Map(
       "q_ann_lsh" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlLshBucket(planes)} AS bucket,
-           |    ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |pairs AS (
-           |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-           |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |  FROM e q JOIN e n ON q.vec_id < 10 AND n.vec_id <> q.vec_id
-           |    AND q.bucket = n.bucket)
-           |SELECT query_id, neighbor_id, rnk, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-           |WHERE rnk <= 5""".stripMargin,
+        s"WITH ${sqlLshVecs(planes)},\n${sqlScanTop5("\n    AND q.bucket = n.bucket")}",
 
       "q_ann_multiprobe" -> sqlMultiProbe(planes),
 
       "q_embed_neardup" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlLshBucket(planes)} AS bucket,
-           |    ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings)
+        s"""WITH ${sqlLshVecs(planes)}
            |SELECT vec_a, vec_b, cosine FROM (
            |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            |    ${sqlDot("a.embedding", "b.embedding")} / (sqrt(a.nrm2) * sqrt(b.nrm2)) AS cosine
@@ -4823,33 +4651,16 @@ object SparkEntry {
     * count — static but parameterized, so the recall sweep's nprobe rows
     * reuse the exact statement the standalone face is checked against. */
   private def sqlIvf(nprobe: Int): String =
-    s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
+    s"""WITH $sqlVecs,
        |c AS (SELECT vec_id AS centroid_id, embedding AS cvec, nrm2 AS cnrm2
        |      FROM e WHERE vec_id < 16),
        |crossed AS (
        |  SELECT e.vec_id, c.centroid_id,
        |    ${sqlDot("e.embedding", "c.cvec")} / (sqrt(e.nrm2) * sqrt(c.cnrm2)) AS ccos
        |  FROM e CROSS JOIN c),
-       |assign AS (
-       |  SELECT vec_id, centroid_id FROM (
-       |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed) WHERE rn = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, centroid_id FROM (
-       |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY ccos DESC, centroid_id) AS rn
-       |    FROM crossed WHERE vec_id < 10) WHERE rn <= $nprobe),
-       |pairs AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-       |  FROM probes p
-       |  JOIN assign a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.query_id
-       |  JOIN e q ON q.vec_id = p.query_id
-       |  JOIN e n ON n.vec_id = a.vec_id)
-       |SELECT query_id, neighbor_id, rnk, cosine FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-       |WHERE rnk <= 5""".stripMargin
+       |${sqlAssign()},
+       |${sqlProbes("query_id", 10, nprobe)},
+       |$sqlIvfRerank""".stripMargin
 
   /** Mirror of [[graft.operators.Similarity.lshMultiProbeTopK]]: per-plane
     * query projections, flip planes = the `fp` lowest-|proj| plane ids
@@ -4863,8 +4674,7 @@ object SparkEntry {
     val planeVal = "((CAST(" +
       "CAST(concat('0x', substring(md5('plane' || CAST(r.p AS VARCHAR) || '~' || CAST(i-1 AS VARCHAR) || '#0'), 1, 15)) AS BIGINT)" +
       " AS DOUBLE) / 576460752303423488.0) - 1.0)"
-    s"""WITH e AS (SELECT vec_id, embedding, ${sqlLshBucket(planes)} AS bucket,
-       |    ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
+    s"""WITH ${sqlLshVecs(planes)},
        |q AS (SELECT vec_id AS query_id, embedding, bucket, nrm2 FROM e WHERE vec_id < 10),
        |proj AS (
        |  SELECT query_id, r.p AS p,
@@ -4887,94 +4697,52 @@ object SparkEntry {
        |  FROM probes p
        |  JOIN e n ON n.bucket = p.pbucket AND n.vec_id <> p.query_id
        |  JOIN e qe ON qe.vec_id = p.query_id)
-       |SELECT query_id, neighbor_id, rnk, cosine FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-       |WHERE rnk <= 5""".stripMargin
+       |${sqlTop5("pairs")}""".stripMargin
   }
 
   private def centroidOracles(s: SparkSession, d: String): Map[String, String] = {
     val cents = Similarity.trainedCentroids(s, d)
-    // %.17e, not Double.toString — same DECIMAL-unification drift guard as
-    // the PQ codebook literals (these faces rerank with exact cosines so a
-    // one-ulp centroid drift only matters on an assignment tie, but exact
-    // parity costs nothing)
-    val centsLit = cents.map(_.map(v =>
-        String.format(java.util.Locale.ROOT, "%.17e", Double.box(v)))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
+    val crossed = s"WITH $sqlVecs,\n${sqlTrainedCrossing(cents)}"
+    val cells = s"$crossed,\n${sqlAssign()}"
+    // the contamination screen: train side (vec_id >= 50) takes its argmax
+    // cell, eval side (vec_id < 50) probes its nearest
+    val contamCells = s"$crossed,\n${sqlAssign(trainFrom = Some(50))}"
+    val contamProbes =
+      s"$contamCells,\n${sqlProbes("eval_id", 50, Similarity.ContamProbe)}"
+    // the blocked train x eval pairs, exact cosines kept at tau = 0.2
+    def screened(name: String, cols: String) =
+      s"""$name AS (
+         |  SELECT $cols FROM (
+         |    SELECT a.vec_id, p.eval_id,
+         |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
+         |    FROM probes p
+         |    JOIN assign a ON a.centroid_id = p.centroid_id
+         |    JOIN e q ON q.vec_id = p.eval_id
+         |    JOIN e n ON n.vec_id = a.vec_id)
+         |  WHERE cosine >= 0.2)""".stripMargin
+    // brute-force train x eval pairs at tau, no cells
+    val truth =
+      s"""truth AS (
+         |  SELECT * FROM (
+         |    SELECT n.vec_id, q.vec_id AS eval_id,
+         |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
+         |    FROM e n CROSS JOIN e q
+         |    WHERE n.vec_id >= 50 AND q.vec_id < 50)
+         |  WHERE cosine >= 0.2)""".stripMargin
     val base = Map(
       // mirror of Similarity.ivfTopKTrained: literal trained centroids, then
       // the exact q_ann_ivf search dataflow (assign all vectors via
       // ccos-desc/centroid-asc argmax, probe 4 cells per query, exact-cosine
       // rerank, top-5 with neighbor_id tiebreak)
       "q_ann_ivf_trained" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed) WHERE rn = 1),
-           |probes AS (
-           |  SELECT vec_id AS query_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn
-           |    FROM crossed WHERE vec_id < 10) WHERE rn <= ${Similarity.IvfProbe}),
-           |pairs AS (
-           |  SELECT p.query_id, a.vec_id AS neighbor_id,
-           |    ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |  FROM probes p
-           |  JOIN assign a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.query_id
-           |  JOIN e q ON q.vec_id = p.query_id
-           |  JOIN e n ON n.vec_id = a.vec_id)
-           |SELECT query_id, neighbor_id, rnk, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, neighbor_id) AS rnk FROM pairs)
-           |WHERE rnk <= 5""".stripMargin,
+        s"WITH $sqlVecs,\n${sqlTrainedIvfCells(cents)},\n$sqlIvfRerank",
 
       // embedding-space decontamination: same e/c/cn/crossed dataflow over
-      // the SAME fitted model; train side (vec_id >= 50) takes its argmax
-      // cell, eval side (vec_id < 50) probes its 4 nearest, exact cosines
-      // verified at tau = 0.2, rolled up per contaminated training vector
+      // the SAME fitted model, exact cosines verified at tau = 0.2, rolled
+      // up per contaminated training vector
       "q_semantic_contamination" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed
-           |    WHERE vec_id >= 50) WHERE rn = 1),
-           |probes AS (
-           |  SELECT vec_id AS eval_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn
-           |    FROM crossed WHERE vec_id < 50) WHERE rn <= ${Similarity.ContamProbe}),
-           |hits AS (
-           |  SELECT * FROM (
-           |    SELECT a.vec_id, p.eval_id,
-           |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |    FROM probes p
-           |    JOIN assign a ON a.centroid_id = p.centroid_id
-           |    JOIN e q ON q.vec_id = p.eval_id
-           |    JOIN e n ON n.vec_id = a.vec_id)
-           |  WHERE cosine >= 0.2),
+        s"""$contamProbes,
+           |${screened("hits", "*")},
            |sel AS (
            |  SELECT vec_id, eval_id, cosine,
            |    count(*) OVER (PARTITION BY vec_id) AS n_eval_hits,
@@ -4989,43 +4757,9 @@ object SparkEntry {
       // pairs at tau (no cells), found = the same blocked pair set the
       // screen verifies, banded by exact cosine
       "q_semantic_contamination_recall" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed
-           |    WHERE vec_id >= 50) WHERE rn = 1),
-           |probes AS (
-           |  SELECT vec_id AS eval_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn
-           |    FROM crossed WHERE vec_id < 50) WHERE rn <= ${Similarity.ContamProbe}),
-           |found AS (
-           |  SELECT vec_id, eval_id FROM (
-           |    SELECT a.vec_id, p.eval_id,
-           |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |    FROM probes p
-           |    JOIN assign a ON a.centroid_id = p.centroid_id
-           |    JOIN e q ON q.vec_id = p.eval_id
-           |    JOIN e n ON n.vec_id = a.vec_id)
-           |  WHERE cosine >= 0.2),
-           |truth AS (
-           |  SELECT * FROM (
-           |    SELECT n.vec_id, q.vec_id AS eval_id,
-           |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |    FROM e n CROSS JOIN e q
-           |    WHERE n.vec_id >= 50 AND q.vec_id < 50)
-           |  WHERE cosine >= 0.2),
+        s"""$contamProbes,
+           |${screened("found", "vec_id, eval_id")},
+           |$truth,
            |banded AS (
            |  SELECT CASE WHEN t.cosine >= 0.4 THEN '0.40+'
            |              WHEN t.cosine >= 0.3 THEN '0.30-0.40'
@@ -5042,22 +4776,7 @@ object SparkEntry {
       // swept nprobe points; per (nprobe, band) recall vs the brute truth
       // plus the scored-candidate count (the cost axis)
       "q_semantic_contamination_sweep" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed
-           |    WHERE vec_id >= 50) WHERE rn = 1),
+        s"""$contamCells,
            |probes AS (
            |  SELECT vec_id AS eval_id, centroid_id, row_number() OVER (
            |    PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
@@ -5074,13 +4793,7 @@ object SparkEntry {
            |  CROSS JOIN nps np
            |  WHERE p.rn <= np.nprobe),
            |cost AS (SELECT nprobe, count(*) AS n_scored FROM cand GROUP BY nprobe),
-           |truth AS (
-           |  SELECT * FROM (
-           |    SELECT n.vec_id, q.vec_id AS eval_id,
-           |      ${sqlDot("q.embedding", "n.embedding")} / (sqrt(q.nrm2) * sqrt(n.nrm2)) AS cosine
-           |    FROM e n CROSS JOIN e q
-           |    WHERE n.vec_id >= 50 AND q.vec_id < 50)
-           |  WHERE cosine >= 0.2),
+           |$truth,
            |banded AS (
            |  SELECT np.nprobe,
            |    CASE WHEN t.cosine >= 0.4 THEN '0.40+'
@@ -5099,21 +4812,7 @@ object SparkEntry {
       // whole corpus against the SAME frozen model: same e/c/cn/crossed/
       // assign dataflow as the trained-IVF oracle, rolled up per cell
       "q_stream_vector_index" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed) WHERE rn = 1)
+        s"""$cells
            |SELECT centroid_id, count(*) AS n_vecs,
            |  CAST(sum(vec_id) AS BIGINT) AS sum_vec_id,
            |  min(vec_id) AS min_vec_id
@@ -5126,21 +4825,7 @@ object SparkEntry {
       // with ANY smaller-id neighbor over threshold is dropped, whether or
       // not that neighbor was itself dropped)
       "q_semantic_dedup" ->
-        s"""WITH e AS (SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm2 FROM embeddings),
-           |c AS (SELECT CAST(r.i - 1 AS INTEGER) AS centroid_id, m.cents[r.i] AS cvec
-           |      FROM (SELECT $centsLit AS cents) m, range(1, ${cents.length + 1}) r(i)),
-           |cn AS (SELECT centroid_id, cvec,
-           |         list_reduce(list_transform(range(1, 65), i -> cvec[i] * cvec[i]), (x, y) -> x + y) AS cnrm2
-           |       FROM c),
-           |crossed AS (
-           |  SELECT e.vec_id, cn.centroid_id,
-           |    list_reduce(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * cn.cvec[i]), (x, y) -> x + y)
-           |      / (sqrt(e.nrm2) * sqrt(cn.cnrm2)) AS ccos
-           |  FROM e CROSS JOIN cn),
-           |assign AS (
-           |  SELECT vec_id, centroid_id FROM (
-           |    SELECT vec_id, centroid_id, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ccos DESC, centroid_id) AS rn FROM crossed) WHERE rn = 1),
+        s"""$cells,
            |m AS (SELECT a.vec_id, a.centroid_id, e.embedding, e.nrm2
            |      FROM assign a JOIN e USING (vec_id)),
            |dropped AS (

@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   *  - [[jaccardBand]] + [[recallBy]]: the recall faces.
   *
   * Checkpoint lifetime: a pair pipeline `localCheckpoint`s the inputs its
-  * lazy result reads; they live until the face boundary
+  * lazy result reads, and frees with [[IterCheckpoint.free]] any it
+  * checkpointed only to build another; the rest live until the face boundary
   * ([[IterCheckpoint.releaseAll]]) or until the ContextCleaner reclaims
   * them once the returned frame is unreachable. Calling a pipeline again
   * never invalidates an earlier call's frame; a pipeline that refuses its
@@ -333,7 +334,7 @@ object Dedup {
   def minhashLshPairs(s: SparkSession, d: String,
       hotBandCap: Int = HotBandCap): DataFrame = {
     val g = minhashRepGraph(s, d, hotBandCap)
-    minhashLshPairsOver(g, g.keyed, g.reps)
+    minhashLshPairsOver(g, g.keyed)
   }
 
   /** Checkpointed shared front of every MinHash face: the keyed shingle
@@ -377,15 +378,17 @@ object Dedup {
   }
 
   /** Gate + enumeration tail of [[minhashLshPairs]] over an already-built
-    * rep graph. `front` are the checkpointed frames a refusal frees along
-    * with the rep pairs; any the caller keeps (a shared base) must NOT be
-    * in it.
+    * rep graph. It frees `g.reps` once the rep pairs are materialized
+    * (nothing reads the reps after). `front` are the checkpointed frames a
+    * refusal frees along with the rep pairs; any the caller keeps (a shared
+    * base) must NOT be in it.
     */
   private[graft] def minhashLshPairsOver(g: MinhashRepGraph,
       front: DataFrame*): DataFrame = {
     // materialize the verified rep pairs ONCE: the gate's sizing aggregate
     // and the member expansion both read them
     val repPairs = g.repPairs.localCheckpoint()
+    IterCheckpoint.free(g.reps)
     gatePairVolume(repPairs, g.keyed.groupBy(col("skey")).agg(count(lit(1)).as("m")),
       "skey", "minhashLshPairs", front :+ repPairs: _*)
     expandMembers(g.keyed, repPairs)
@@ -709,6 +712,7 @@ object Dedup {
         cappedBandPairs(bandRows(sigs, Seq("rid"), b, r), HotBandCap)
           .withColumn("bands", lit(b)).withColumn("rows_per_band", lit(r))
       }.reduce(_.unionByName(_)).localCheckpoint())
+    IterCheckpoint.free(sigs)
     val cost = candAll.groupBy(col("bands"), col("rows_per_band"))
       .agg(count(lit(1)).as("n_cand_pairs"))
     // the truth baseline is the face's dominant term at 100× — checkpointed
@@ -734,6 +738,8 @@ object Dedup {
         .distinct()
         .localCheckpoint()
     }
+    // the returned frame reads only candAll and truthRep
+    IterCheckpoint.free(base, reps)
     import s.implicits._
     recallBy(truthRep.crossJoin(broadcast(configs.toDF("bands", "rows_per_band")))
       .join(candAll.withColumn("hit", lit(1)),
@@ -1046,6 +1052,7 @@ object Dedup {
       .filter(col("id") > col("id1"))
       .groupBy(col("h")).agg(min(col("id")).as("id2"))
     val stats = base.join(second, Seq("h"), "left").localCheckpoint()
+    IterCheckpoint.free(fps)
     // packed nonnegative 60-bit long -> the q_simhash bit-string form; two
     // builtins, not 60 when/concat branches (r13 review simplification)
     def bits(c: Column): Column = lpad(bin(c), SimHashBits, "0")

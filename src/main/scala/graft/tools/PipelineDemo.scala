@@ -12,7 +12,8 @@ object PipelineDemo {
     val s = Tables.sessionBuilder("local[4]", "4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     val fixtures = "src/test/resources/fixtures"
-    val out = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
+    val out = graft.WarmState.deleteAtExit(
+      java.nio.file.Files.createTempDirectory("graft_pipeline")).toString
 
     val n1 = PipelineJobs.runPostsJob(s,
       Seq(s"$fixtures/posts/posts_batch.json"), s"$out/posts")

@@ -26,7 +26,8 @@ object SketchProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(mode: String): Seq[Double] = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_skprobe_$mode")
+      val root = graft.WarmState.deleteAtExit(
+        java.nio.file.Files.createTempDirectory(s"graft_skprobe_$mode"))
       val landing = root.resolve("landing").toString
       for (i <- 0 until nBatches)
         spark.range(i * rows, (i + 1) * rows)

@@ -57,11 +57,12 @@ class AnnSweepSpec extends SparkSpecBase {
   }
 
   test("shared-artifact sweep equals the direct per-knob composition (r19)") {
-    // the r19 restructure scores each knob family ONCE at its top knob and
-    // derives every swept point as a tag filter — this pin is the proof
-    // that the nested-candidate-set argument holds row-for-row against
-    // nine independently-built pipelines (including n_hits, not just the
-    // monotonicity the other tests check)
+    // the sweep scores each knob family ONCE at its top knob and derives
+    // every swept point as a tag filter; the direct side builds each knob
+    // face at its own depth over the same tagged kernels, so this pin
+    // proves the tag filter row-for-row (n_hits included, not just the
+    // monotonicity the other tests check). Only the DuckDB oracle checks
+    // the default knobs against independently written code.
     val direct = Similarity.annRecallSweepDirect(spark, Sf)
       .select("method", "query_id", "n_hits")
       .as[(String, Long, Long)].collect().toSet

@@ -593,16 +593,17 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("dedup tier faces keep their construction jobs and held checkpoints") {
-    // the work the shared near-duplicate kernels must not change
+    // the work the shared near-duplicate kernels must not change; a face
+    // holds only the checkpoints its returned frame reads
     val expect = Map(
-      "q_dedup_minhash_lsh" -> (15, 3),
+      "q_dedup_minhash_lsh" -> (15, 2),
       "q_dedup_incremental" -> (5, 3),
       "q_dedup_clusters" -> (19, 3),
       "q_ngram_jaccard" -> (1, 1),
-      "q_dedup_recall" -> (15, 3),
-      "q_dedup_banding_sweep" -> (29, 5),
+      "q_dedup_recall" -> (15, 2),
+      "q_dedup_banding_sweep" -> (29, 2),
       "q_simhash_pairs" -> (12, 2),
-      "q_simhash_pair_stats" -> (8, 2),
+      "q_simhash_pair_stats" -> (8, 1),
       "q_media_neardup" -> (12, 2))
     assert(expect.keys.map(face => face -> constructionWork(face)).toMap == expect)
   }
